@@ -70,6 +70,8 @@ def main(argv=None) -> int:
                     help="overwrite files even if manually modified "
                          "(K4 guarded overwrite, FileUtils.scala:70-98)")
     args = ap.parse_args(argv)
+    if args.command == "schema" and args.enum_cardinality < 0:
+        ap.error("--enum-cardinality must be >= 0")
 
     if args.command == "ddl":
         return _ddl_command(args)

@@ -23,6 +23,11 @@ operations:
 Measured on the synthetic validation doc mix (nested object, ~14
 leaves): 1.6x over ``accumulate`` (see BENCH/REGRESSION_r04.md).
 
+``fold_keyed(texts, keys, ctx)`` wraps it in the per-batch parse ->
+top-level gate -> unique-document collapse that every distributed
+inference path runs (law pinned against a per-row reference by
+tests/test_core_roundtrip.py::test_fold_keyed_equals_per_row_reference).
+
 DOMAIN: commutative contexts with the enum machinery off
 (``ctx.enum_disabled``) — exactly the distributed inference/validation
 default (SchemaContext.make(0)). Enum candidates count value
@@ -43,7 +48,7 @@ enum-free merge is pointwise associative + commutative.
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Optional
 
 import ipaddress
 from datetime import datetime
@@ -76,6 +81,112 @@ def fold_docs(acc: dict, docs: list, ctx: SchemaContext) -> dict:
         return acc
     _fold_column(acc, docs, ctx)
     return acc
+
+
+def fold_keyed(texts, keys, ctx: SchemaContext,
+               ctx_by_key: Optional[dict] = None
+               ) -> tuple[dict, dict, list]:
+    """Parse, gate and fold one batch of JSON texts into per-key states —
+    the executor half of the reference lifecycle (derive per document,
+    merge as a monoid, SchemaGuruRDD.scala:45-102), shared by every
+    inference path (global and keyed inference, the validation scan,
+    the keyed schema stream).
+
+    ``texts`` is a pandas Series (or numpy array) of str-or-None;
+    ``keys`` one of the same length, or None for one global key. NULL
+    keys and the global key are both the key ``None``. ``ctx_by_key``
+    optionally maps a key to the context its documents fold under
+    (per-segment ``quantity``, SchemaCommand.scala:118-146); other keys
+    use ``ctx``.
+
+    Returns ``(states, counts, errors)``:
+
+      * ``states``: {key: fresh task-private accumulator}, for keys
+        with at least one valid document;
+      * ``counts``: {key: [n_ok, n_err]}, for every key in the batch;
+      * ``errors``: [(position, message)] in row order, one per failing
+        row — ``"null content"``, ``"invalid JSON: ..."`` (the stdlib
+        parser's message, see json_fast) or ``gate_error_message``.
+
+    Each distinct text is parsed once (``pd.factorize``). Enum-off
+    contexts then collapse rows on a fused (key, text) ``np.unique``:
+    a document seen n >= 2 times under one key folds twice, because the
+    monoid stabilizes after one self-merge (test_merge_self_stabilizes),
+    and each key's documents fold in one ``fold_docs`` pass. Enum-on
+    contexts fold each key's documents in row order instead: the
+    reference's enum merge is order-sensitive (SchemaWithEnum.scala:
+    57-70), and the collapse reorders documents."""
+    import numpy as np
+    import pandas as pd
+
+    from schema_guru_spark.core import json_fast
+    from schema_guru_spark.core.accumulate import gate_error_message
+
+    codes, uniques = pd.factorize(texts, use_na_sentinel=True)
+    # per text code + 1 (0 = NULL content): the gated document, or None
+    # and the row's error message
+    docs: list = [None]
+    msgs: list = ["null content"]
+    parse = json_fast.loads
+    for text in uniques:
+        try:
+            value = parse(text)
+        except (ValueError, TypeError) as e:
+            docs.append(None)
+            msgs.append(f"invalid JSON: {e}")
+            continue
+        if isinstance(value, (dict, list)):
+            docs.append(value)
+            msgs.append(None)
+        else:
+            docs.append(None)
+            msgs.append(gate_error_message(value))
+    tcodes = codes.astype(np.int64) + 1
+    if keys is None:
+        key_vals: list = [None]
+        kcodes = np.zeros(len(tcodes), dtype=np.int64)
+    else:
+        kc, kuniques = pd.factorize(keys, use_na_sentinel=True)
+        key_vals = [None, *kuniques.tolist()]
+        kcodes = kc.astype(np.int64) + 1
+    width = len(docs)
+    fused = kcodes * width + tcodes
+
+    if ctx.enum_disabled:
+        ukeys, ucounts = np.unique(fused, return_counts=True)
+        groups = zip(ukeys.tolist(), ucounts.tolist())
+    else:
+        groups = ((f, 1) for f in fused.tolist())
+    counts: dict = {}
+    key_docs: dict = {}
+    for f, cnt in groups:
+        k, t = divmod(f, width)
+        key = key_vals[k]
+        c = counts.get(key)
+        if c is None:
+            c = counts[key] = [0, 0]
+        doc = docs[t]
+        if doc is None:
+            c[1] += cnt
+            continue
+        c[0] += cnt
+        batch = key_docs.get(key)
+        if batch is None:
+            batch = key_docs[key] = []
+        batch.append(doc)
+        if cnt > 1:
+            batch.append(doc)
+
+    states = {
+        key: fold_docs({}, batch, ctx if ctx_by_key is None
+                       else ctx_by_key.get(key, ctx))
+        for key, batch in key_docs.items()
+    }
+    bad = np.array([m is not None for m in msgs])
+    pos = np.flatnonzero(bad[tcodes])
+    errors = [(p, msgs[t])
+              for p, t in zip(pos.tolist(), tcodes[pos].tolist())]
+    return states, counts, errors
 
 
 def _fold_column(acc: dict, vals: list, ctx: SchemaContext) -> None:

@@ -82,6 +82,13 @@ class SchemaContext:
     derive_length: bool = True
     strict_reference_product: bool = False
 
+    def __post_init__(self) -> None:
+        # a negative cutoff would render like 0 yet keep the enum
+        # machinery half-live; refuse it (CLI / web-form values land here)
+        if self.enum_cardinality < 0:
+            raise ValueError(f"enum_cardinality must be >= 0, got "
+                             f"{self.enum_cardinality}")
+
     @cached_property
     def enum_disabled(self) -> bool:
         """True when no enum machinery can ever produce a candidate

@@ -15,8 +15,10 @@ under orjson where stdlib returns an exact Python int — orjson does
 not raise, so the fallback cannot catch it. Out of scope by reference
 semantics: schema-guru encases all integer ranges into Int64
 (Helpers.scala:156-163), so values past int64 were never representable
-in the output schema anyway. The pure kernel path (core/microschema
-derive_text) stays on stdlib json.
+in the output schema anyway. Every distributed inference path (batch,
+validation scan and keyed stream) parses through here, via
+core/accumulate_batch.fold_keyed; only the single-document kernel
+entry point (core/microschema derive_text) stays on stdlib json.
 """
 
 from __future__ import annotations

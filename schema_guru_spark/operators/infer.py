@@ -36,30 +36,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from schema_guru_spark.core.context import SchemaContext
-from schema_guru_spark.core.json_fast import loads as fast_loads
-from schema_guru_spark.core.microschema import ZERO, derive, dumps, loads, merge
+from schema_guru_spark.core.microschema import ZERO, dumps, loads, merge
 from schema_guru_spark.core.transforms import apply_transforms, extract_keys
 from schema_guru_spark.core.levenshtein import get_duplicates
 
 _OUT_SCHEMA = ("kind string, payload string, n_ok bigint, n_err bigint, "
                "pid int")
 _STATE_KIND, _VIOLATION_KIND = "s", "v"
-
-
-def _enum_order_sensitive(ctx: SchemaContext) -> bool:
-    """True when the enum machinery is live. The reference's enum merge
-    checks size on the CONCATENATION before distinct
-    (SchemaWithEnum.scala:57-70, pinned by
-    test_concat_size_check_precedes_distinct), which is neither
-    commutative nor associative — merging partial states in task-
-    completion order would make the inferred enums depend on the
-    scheduler. Such contexts fold their partial states in PARTITION
-    ORDER on the driver instead of through the combine tree: the result
-    is deterministic for a fixed input partitioning (the reference's
-    own Spark job folds the same non-commutative merge through
-    RDD.aggregate with no ordering guarantee at all,
-    SchemaGuruRDD.scala:44-60)."""
-    return ctx.enum_cardinality > 0 or bool(ctx.enum_sets)
 
 
 def _require_commutative(ctx: SchemaContext) -> None:
@@ -78,97 +61,33 @@ def _require_commutative(ctx: SchemaContext) -> None:
 
 def _derive_partial(ctx: SchemaContext, column: str):
     """Build the mapInPandas function: per-task derive+fold, single pass,
-    violations streamed out as rows.
-
-    Unique-document fast path: each batch is ``pd.factorize``d
-    (order-preserving, C-speed) and each DISTINCT document is parsed and
-    derived exactly once. A document seen n >= 2 times contributes
-    ``s ⊕ s`` — the monoid stabilizes after one self-merge (bounds and
-    flags are idempotent), so this is bit-identical to folding all
-    n copies (law pinned by test_merge_self_stabilizes) — for ENUM-OFF
-    contexts. Enum-bearing contexts fold in row order instead: the
-    collapse reorders documents (first-appearance, duplicates adjacent)
-    and the enum merge is order-sensitive. Real-world JSON-bearing
-    corpora are heavily duplicated, so the collapse cuts the per-doc
-    Python work from O(rows) to O(distinct)."""
+    violations streamed out as rows. Each Arrow batch goes through the
+    shared keyed kernel (``core.accumulate_batch.fold_keyed``, one
+    global key: parse once per distinct document, gate, collapse,
+    fold); batch states merge into the task's state in batch order. For
+    enum-bearing contexts a batch boundary thus acts like a partition
+    boundary: row order within a batch, batch order within a task."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
         from pyspark import TaskContext
 
-        from schema_guru_spark.core.accumulate import gate_error_message
-        from schema_guru_spark.core.accumulate_batch import fold_docs
+        from schema_guru_spark.core.accumulate_batch import fold_keyed
 
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
-        enum_on = _enum_order_sensitive(ctx)
-        acc: dict = {}  # task-private (accumulate mutates in place)
+        acc = ZERO
         n_ok = 0
         n_err = 0
         for pdf in batches:
-            errs = []
-            codes, uniques = pd.factorize(pdf[column], use_na_sentinel=True)
-            valid: list = []
-            if enum_on:
-                # ROW-ORDER fold: the enum merge is order-sensitive, so
-                # the unique-doc collapse below (first-appearance order,
-                # duplicates made adjacent) would change inferred enums
-                # within the partition. Parse each distinct text once,
-                # but fold every row in its original position.
-                parsed: list = []
-                for text in uniques:
-                    try:
-                        parsed.append((fast_loads(text), None))
-                    except (ValueError, TypeError) as e:
-                        parsed.append((None, f"invalid JSON: {e}"))
-                for code in codes.tolist():
-                    if code < 0:
-                        n_err += 1
-                        errs.append("null content")
-                        continue
-                    value, msg = parsed[code]
-                    if msg is not None:
-                        n_err += 1
-                        errs.append(msg)
-                    elif isinstance(value, (dict, list)):
-                        valid.append(value)
-                        n_ok += 1
-                    else:
-                        n_err += 1
-                        errs.append(gate_error_message(value))
-            else:
-                counts = np.bincount(codes[codes >= 0],
-                                     minlength=len(uniques)).tolist()
-                n_null = int((codes < 0).sum())
-                if n_null:
-                    n_err += n_null
-                    errs.extend(["null content"] * n_null)
-                # parse + top-level gate per distinct doc; the fold
-                # itself runs once per batch as a columnar pass
-                # (accumulate_batch: fold == sequential accumulate,
-                # law-pinned). A doc seen n >= 2 times enters the batch
-                # twice (monoid stabilizes after one self-merge —
-                # test_merge_self_stabilizes).
-                for text, cnt in zip(uniques, counts):
-                    try:
-                        value = fast_loads(text)
-                    except (ValueError, TypeError) as e:
-                        n_err += cnt
-                        errs.extend([f"invalid JSON: {e}"] * cnt)
-                        continue
-                    if isinstance(value, (dict, list)):
-                        valid.append(value)
-                        if cnt > 1:
-                            valid.append(value)
-                        n_ok += cnt
-                    else:
-                        n_err += cnt
-                        errs.extend([gate_error_message(value)] * cnt)
-            if valid:
-                fold_docs(acc, valid, ctx)
-            if errs:
+            states, counts, errors = fold_keyed(pdf[column], None, ctx)
+            acc = merge(acc, states.get(None, ZERO), ctx)
+            ok, err = counts.get(None, (0, 0))
+            n_ok += ok
+            n_err += err
+            if errors:
                 yield pd.DataFrame({
-                    "kind": _VIOLATION_KIND, "payload": errs,
+                    "kind": _VIOLATION_KIND,
+                    "payload": [msg for _, msg in errors],
                     "n_ok": 0, "n_err": 1, "pid": pid,
                 })
         yield pd.DataFrame({
@@ -279,7 +198,18 @@ def infer_json_column(df: DataFrame, column: str, ctx: SchemaContext,
     """
     _require_commutative(ctx)
     spark = df.sparkSession
-    enum_on = _enum_order_sensitive(ctx)
+    # With the enum machinery live (not ctx.enum_disabled), the
+    # reference's enum merge checks size on the CONCATENATION before
+    # distinct (SchemaWithEnum.scala:57-70, pinned by
+    # test_concat_size_check_precedes_distinct): neither commutative
+    # nor associative, so merging partial states in task-completion
+    # order would make inferred enums depend on the scheduler. Such
+    # contexts fold their partial states in PARTITION ORDER on the
+    # driver instead of through the combine tree: deterministic for a
+    # fixed input partitioning (the reference's own Spark job folds the
+    # same merge through RDD.aggregate with no ordering guarantee at
+    # all, SchemaGuruRDD.scala:44-60).
+    enum_on = not ctx.enum_disabled
     src = df.select(column)
     if not enum_on:
         # widening repartitions rows round-robin, which would make an
@@ -303,9 +233,9 @@ def infer_json_column(df: DataFrame, column: str, ctx: SchemaContext,
 
     rows = states.collect()
     if enum_on:
-        # the enum merge is order-sensitive (see _enum_order_sensitive):
-        # no combine tree (a tree fold of a non-associative merge varies
-        # with its shape), one driver-side fold in partition order —
+        # the enum merge is order-sensitive (see above): no combine
+        # tree (a tree fold of a non-associative merge varies with its
+        # shape), one driver-side fold in partition order —
         # P tiny state rows, so driver cost is O(partitions), same as
         # the final fold below
         rows = sorted(rows, key=lambda r: r["pid"])
@@ -317,99 +247,8 @@ def infer_json_column(df: DataFrame, column: str, ctx: SchemaContext,
     return InferResult(acc, n_ok, n_err, violations, _cached=raw)
 
 
-def _fold_keyed_batch(accs: dict, counts: dict, pdf: pd.DataFrame,
-                      key_col: str, column: str, ctx: SchemaContext,
-                      loads_fn=fast_loads,
-                      ctx_by_key: Optional[dict] = None) -> None:
-    """Fold one Arrow batch into per-key accumulators — the keyed twin
-    of the global derive pass's unique-document fast path (see
-    ``_derive_partial``): documents are ``pd.factorize``d so each
-    DISTINCT text is parsed and derived exactly once per batch,
-    multiplicities folding in via the one-self-merge stabilization law
-    (``s ⊕ s`` is the fixed point — test_merge_self_stabilizes). Cuts
-    the per-doc Python work from O(rows) to O(distinct (key, doc)) on
-    duplicate-heavy corpora, which JSON-bearing code repos are.
-
-    ``loads_fn`` is injectable so tests can count parse calls.
-    ``ctx_by_key`` (optional) maps a key to the context its documents
-    fold under — the reference's segmented mode derives each segment
-    with that segment's own valid-doc count as ``quantity``
-    (SchemaCommand.scala:146, produce() per segment), which gates the
-    base64 pattern suggestion at derive time.
-    """
-    from schema_guru_spark.core.accumulate import accumulate_doc
-
-    def _ctx_for(key):
-        if ctx_by_key is None:
-            return ctx
-        return ctx_by_key.get(key, ctx)
-
-    codes, uniques = pd.factorize(pdf[column], use_na_sentinel=True)
-    parsed: list = []
-    for text in uniques:
-        try:
-            value = loads_fn(text)
-            if value is None:
-                raise ValueError("null content")
-            parsed.append((value, False))
-        except (ValueError, TypeError):
-            parsed.append((None, True))
-    if _enum_order_sensitive(ctx):
-        # ROW-ORDER fold per key: the (key, doc) collapse below
-        # reorders a key's documents (first-appearance, duplicates
-        # adjacent), which changes order-sensitive enum merges. Parsing
-        # is still once per distinct text; only the fold is per row.
-        for key, code in zip(pdf[key_col].to_numpy(), codes.tolist()):
-            if key is not None and pd.isna(key):
-                key = None
-            st = accs.get(key)
-            if st is None:
-                st = accs[key] = {}
-                counts[key] = [0, 0]
-            if code < 0:
-                counts[key][1] += 1
-                continue
-            value, bad = parsed[code]
-            if bad:
-                counts[key][1] += 1
-                continue
-            try:
-                accumulate_doc(st, value, _ctx_for(key))
-                counts[key][0] += 1
-            except ValueError:
-                counts[key][1] += 1
-        return
-    sub = pd.DataFrame({"k": pdf[key_col].to_numpy(), "c": codes})
-    # dropna=False: a NULL key is still a key (matches the row-loop
-    # behavior this fast path replaced)
-    grouped = sub.groupby(["k", "c"], sort=False, dropna=False).size()
-    for (key, code), cnt in grouped.items():
-        if key is not None and pd.isna(key):
-            key = None
-        cnt = int(cnt)
-        st = accs.get(key)
-        if st is None:
-            st = accs[key] = {}
-            counts[key] = [0, 0]
-        if code < 0:   # factorize NA sentinel: null content rows
-            counts[key][1] += cnt
-            continue
-        value, bad = parsed[code]
-        if bad:
-            counts[key][1] += cnt
-            continue
-        try:
-            kctx = _ctx_for(key)
-            accumulate_doc(st, value, kctx)
-            if cnt > 1:
-                accumulate_doc(st, value, kctx)
-            counts[key][0] += cnt
-        except ValueError:
-            counts[key][1] += cnt
-
-
 def infer_json_column_by_key(df: DataFrame, column: str, key_col: str,
-                             ctx: SchemaContext, n_salts: int = 8,
+                             ctx: SchemaContext,
                              quantity_by_key: Optional[dict] = None
                              ) -> DataFrame:
     """Per-key (segmented) schema inference — G1/A8 of SURVEY.md §2.
@@ -422,8 +261,6 @@ def infer_json_column_by_key(df: DataFrame, column: str, key_col: str,
     shuffled every row once.) Phase 2 shuffles only the states:
     groupBy(key) merges <= #tasks rows per key, so a mega-key costs the
     same as any other — skew cannot concentrate data movement.
-    ``n_salts`` is retained for API compatibility; map-side combine
-    makes salting unnecessary.
 
     Map-side state is O(distinct keys present in the task) — for
     segmentation-style keys (bounded cardinality) a few accumulators
@@ -448,23 +285,31 @@ def infer_json_column_by_key(df: DataFrame, column: str, key_col: str,
     def phase1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
+        from schema_guru_spark.core.accumulate_batch import fold_keyed
+
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
         accs: dict = {}
         counts: dict = {}
         for pdf in batches:
-            _fold_keyed_batch(accs, counts, pdf, key_col, column, ctx,
-                              ctx_by_key=ctx_by_key)
-        if accs:
+            states, batch_counts, _ = fold_keyed(
+                pdf[column], pdf[key_col], ctx, ctx_by_key)
+            for k, st in states.items():
+                accs[k] = merge(accs.get(k, ZERO), st, ctx)
+            for k, (ok, err) in batch_counts.items():
+                c = counts.setdefault(k, [0, 0])
+                c[0] += ok
+                c[1] += err
+        if counts:
             yield pd.DataFrame(
-                [(k, dumps(a), counts[k][0], counts[k][1], pid)
-                 for k, a in accs.items()],
+                [(k, dumps(accs.get(k, ZERO)), ok, err, pid)
+                 for k, (ok, err) in counts.items()],
                 columns=[key_col, "payload", "n_ok", "n_err", "pid"])
 
     def phase2(key, pdf: pd.DataFrame) -> pd.DataFrame:
         # partial states arrive in grouped-shuffle order; fold them in
         # scan-partition order so enum-bearing contexts (order-sensitive
-        # merge, see _enum_order_sensitive) stay deterministic for a
+        # merge, see infer_json_column) stay deterministic for a
         # fixed input partitioning — <= #tasks rows per key, so the sort
         # is O(tasks log tasks) on tiny rows
         pdf = pdf.sort_values("pid")
@@ -482,7 +327,7 @@ def infer_json_column_by_key(df: DataFrame, column: str, key_col: str,
         })
 
     src = df.select(key_col, column)
-    if not _enum_order_sensitive(ctx):
+    if ctx.enum_disabled:
         # same rule as infer_json_column: enum-bearing contexts keep the
         # input layout so the per-key pid-ordered fold in phase2 is a
         # function of the input alone

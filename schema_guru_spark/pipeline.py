@@ -48,8 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from schema_guru_spark.core.context import SchemaContext
-from schema_guru_spark.core.json_fast import loads as fast_loads
-from schema_guru_spark.core.microschema import ZERO, derive, dumps, loads, merge, render
+from schema_guru_spark.core.microschema import ZERO, dumps, loads, merge, render
 from schema_guru_spark.core.transforms import apply_transforms
 from schema_guru_spark.operators import constraints as C
 from schema_guru_spark.plans.checkpoint import CheckpointManager
@@ -164,8 +163,7 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from schema_guru_spark.core.accumulate import gate_error_message
-        from schema_guru_spark.core.accumulate_batch import fold_docs
+        from schema_guru_spark.core.accumulate_batch import fold_keyed
 
         states: dict[int, dict] = {}
         counters: dict[int, dict] = {}
@@ -213,74 +211,27 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int):
 
             jidx = np.flatnonzero(pdf["lang"].to_numpy() == "json")
             if len(jidx):
-                # unique-doc fast path, ONE factorize per batch (the
-                # monoid stabilizes after one self-merge — see
-                # operators/infer.py). Per-(bucket, doc) multiplicities
-                # come from one np.unique over a fused int key; a doc
-                # repeated across buckets parses once per batch.
-                content = pdf["content"].take(jidx)
+                # the shared keyed kernel, keyed by bucket: one parse
+                # per distinct doc per batch, fused (bucket, doc)
+                # collapse, one columnar fold per (bucket, batch)
                 jbk = bk[jidx]
-                codes, uniques = pd.factorize(content, use_na_sentinel=True)
-                u_width = len(uniques) + 1
-                fused = jbk.astype(np.int64) * u_width + (codes + 1)
-                ukey, kcounts = np.unique(fused, return_counts=True)
-                parsed: list = []
-                parse_err: list = []
-                for text in uniques:
-                    try:
-                        parsed.append(fast_loads(text))
-                        parse_err.append(None)
-                    except (ValueError, TypeError) as e:
-                        parsed.append(None)
-                        parse_err.append(f"invalid JSON: {e}")
-                err_keys: dict[int, str] = {}
-                # per-bucket doc batches: the fold runs once per
-                # (bucket, batch) as a columnar pass (accumulate_batch:
-                # fold == sequential accumulate, law-pinned); a doc with
-                # multiplicity n >= 2 enters twice (one self-merge
-                # stabilizes the monoid — test_merge_self_stabilizes)
-                bucket_docs: dict[int, list] = {}
-                for key, cnt in zip(ukey.tolist(), kcounts.tolist()):
-                    b = key // u_width
-                    code = key % u_width - 1
+                bstates, bcounts, errors = fold_keyed(
+                    pdf["content"].take(jidx), jbk, ctx)
+                for b, (ok, err) in bcounts.items():
                     c = bucket_counter(b)
-                    if code < 0 or parse_err[code] is not None:
-                        c["n_json_err"] += cnt
-                        err_keys[key] = ("null content" if code < 0
-                                         else parse_err[code])
-                        continue
-                    value = parsed[code]
-                    if not isinstance(value, (dict, list)):
-                        c["n_json_err"] += cnt
-                        err_keys[key] = gate_error_message(value)
-                        continue
-                    docs = bucket_docs.get(b)
-                    if docs is None:
-                        docs = bucket_docs[b] = []
-                    docs.append(value)
-                    if cnt > 1:
-                        docs.append(value)
-                    c["n_json_ok"] += cnt
-                for b, docs in bucket_docs.items():
-                    st = states.get(b)
-                    if st is None:
-                        st = states[b] = {}
-                    fold_docs(st, docs, ctx)
-                if err_keys:
+                    c["n_json_ok"] += ok
+                    c["n_json_err"] += err
+                for b, st in bstates.items():
+                    states[b] = merge(states.get(b, ZERO), st, ctx)
+                if errors:
                     # one row PER OCCURRENCE, each under its own row's
-                    # repo — the first-occurrence shortcut misattributed
-                    # copies of the same bad text living in other repos
-                    # of the same bucket. One vectorized membership test
-                    # over the batch; repo attribution stays error-only.
+                    # repo — copies of the same bad text can live in
+                    # other repos of the same bucket
                     jrepo = pdf["repo"].to_numpy()[jidx]
-                    karr = np.fromiter(err_keys, dtype=np.int64,
-                                       count=len(err_keys))
-                    occ = np.flatnonzero(np.isin(fused, karr))
-                    errs = [(int(fused[i]) // u_width, jrepo[i], "json",
-                             err_keys[int(fused[i])])
-                            for i in occ.tolist()]
-                    e = pd.DataFrame(errs, columns=["bucket", "repo", "lang",
-                                                    "payload"])
+                    e = pd.DataFrame(
+                        [(int(jbk[i]), jrepo[i], "json", msg)
+                         for i, msg in errors],
+                        columns=["bucket", "repo", "lang", "payload"])
                     e.insert(0, "kind", "violation")
                     e["n"] = 1
                     yield e[["kind", "bucket", "repo", "lang", "payload", "n"]]
@@ -375,10 +326,9 @@ def validate_repo_table(
     sinks when enabled, so a resumed run sees prior chunks' results too).
     """
     ctx = ctx or SchemaContext.make(0)
-    from schema_guru_spark.operators.infer import (_enum_order_sensitive,
-                                                   _require_commutative)
+    from schema_guru_spark.operators.infer import _require_commutative
     _require_commutative(ctx)  # strict parity mode is order-dependent
-    if _enum_order_sensitive(ctx):
+    if not ctx.enum_disabled:
         # the enum merge is order-sensitive and _combine_buckets folds
         # state rows in shuffle-arrival order (no partition id to sort
         # by in _SCAN_OUT) — verdict schemas would depend on the
@@ -388,8 +338,8 @@ def validate_repo_table(
             "validate_repo_table requires an enum-free context "
             "(enum_cardinality=0, no enum_sets): the reference's enum "
             "merge is non-commutative and the bucket combine has no "
-            "deterministic fold order. Use infer_schema / "
-            "infer_schemas_by_key for enum-capable inference.")
+            "deterministic fold order. Use infer_json_column / "
+            "infer_json_column_by_key for enum-capable inference.")
     has_sha = "content_sha" in df.columns
 
     ckpt = CheckpointManager(spark, checkpoint_dir) if checkpoint_dir else None

@@ -29,7 +29,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from schema_guru_spark.core.context import SchemaContext
 from schema_guru_spark.core.microschema import (
-    ZERO, derive_text, dumps, loads, merge, render,
+    ZERO, dumps, loads, merge, render,
 )
 from schema_guru_spark.core.transforms import apply_transforms
 
@@ -157,19 +157,21 @@ _OUT_SCHEMA = "key string, schema string, n_ok bigint, n_err bigint"
 def _keyed_state_fn(ctx: SchemaContext, column: str):
     def fn(key: Tuple[str], pdfs: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
+        from schema_guru_spark.core.accumulate_batch import fold_keyed
+
         if state.exists:
             st_json, n_ok, n_err = state.get
             acc = loads(st_json)
         else:
             acc, n_ok, n_err = ZERO, 0, 0
         for pdf in pdfs:
-            for text in pdf[column]:
-                sch, err = derive_text(text if text is not None else "", ctx)
-                if err is not None:
-                    n_err += 1
-                else:
-                    acc = merge(acc, sch, ctx)
-                    n_ok += 1
+            # the group's texts fold under one global key, then merge
+            # into the loaded state (enum-free: order is immaterial)
+            states, counts, _ = fold_keyed(pdf[column], None, ctx)
+            acc = merge(acc, states.get(None, ZERO), ctx)
+            ok, err = counts.get(None, (0, 0))
+            n_ok += ok
+            n_err += err
         state.update((dumps(acc), n_ok, n_err))
         rendered = json.dumps(render(apply_transforms(acc, ctx), ctx),
                               sort_keys=True)
@@ -193,15 +195,14 @@ def keyed_schema_stream(stream_df: DataFrame, column: str, key_col: str,
     order-sensitive (concat-size before distinct), so per-key enums
     would depend on the scheduler. Batch inference handles enum
     contexts with a partition-ordered fold (operators/infer.py:
-    _enum_order_sensitive); a stream has no analogous input order to
-    pin within a micro-batch group. ``run_incremental_inference`` stays
+    infer_json_column); a stream has no analogous input order to pin
+    within a micro-batch group. ``run_incremental_inference`` stays
     enum-capable: each micro-batch runs the (deterministic) batch
     engine and the cumulative fold is sequential in batch order.
     """
-    from schema_guru_spark.operators.infer import (_enum_order_sensitive,
-                                                   _require_commutative)
+    from schema_guru_spark.operators.infer import _require_commutative
     _require_commutative(ctx)
-    if _enum_order_sensitive(ctx):
+    if not ctx.enum_disabled:
         raise ValueError(
             "keyed_schema_stream requires an enum-free context: the "
             "enum merge is order-sensitive (SchemaWithEnum.scala:57-70) "

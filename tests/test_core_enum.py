@@ -2,6 +2,10 @@
 predefined-set rescue/substitution behaviors (SchemaWithEnum.scala:57-70,
 Helpers.scala:94-107)."""
 
+import dataclasses
+
+import pytest
+
 from schema_guru_spark.core.context import SchemaContext
 from schema_guru_spark.core.microschema import merge_all, render
 from schema_guru_spark.core.transforms import substitute_enums
@@ -20,6 +24,23 @@ def test_merge_with_zero_cardinality():
     ctx = SchemaContext.make(0)
     merged = render(merge_all([E1, E1], ctx), ctx)
     assert "enum" not in merged
+
+
+def test_negative_cardinality_is_refused():
+    # a negative cutoff used to render like 0 while keeping the enum
+    # machinery live (slow per-value fold, accepted by the validation
+    # job); every construction path refuses it now
+    for build in (lambda: SchemaContext.make(-1),
+                  lambda: SchemaContext(enum_cardinality=-3),
+                  lambda: dataclasses.replace(SchemaContext.make(2),
+                                              enum_cardinality=-1)):
+        with pytest.raises(ValueError, match="enum_cardinality must be >= 0"):
+            build()
+    # the CLI flag is refused as a usage error, before Spark starts
+    from schema_guru_spark.cli import main
+    with pytest.raises(SystemExit) as exc:
+        main(["schema", "in", "--enum-cardinality", "-1"])
+    assert exc.value.code == 2
 
 
 def test_merge_with_same_enum():

@@ -9,7 +9,7 @@ import json
 import string
 import uuid
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from schema_guru_spark.core.context import SchemaContext
@@ -117,7 +117,7 @@ def test_merge_commutative_and_associative(docs):
     check, SchemaWithEnum.scala:57-70) — pinned separately below — and
     the distributed paths fold their states in partition order instead
     of through the combine tree (operators/infer.py:
-    _enum_order_sensitive)."""
+    infer_json_column)."""
     schemas = [derive(d, CTX)[0] for d in docs]
     fwd = merge_all(schemas, CTX)
     rev = merge_all(list(reversed(schemas)), CTX)
@@ -341,6 +341,104 @@ def test_fold_docs_batch_split_invariance(docs, cut):
     fold_docs(split, list(docs[:k]), CTX)
     fold_docs(split, list(docs[k:]), CTX)
     assert dumps(one) == dumps(split)
+
+
+# keyed batches: a small pool of docs drawn repeatedly (repeats within
+# and across keys) mixed with every failing-row kind the gate knows. The
+# pinned docs make row order observable under a tight enum cutoff
+# ({"e": 1}, {"e": 2}, {"e": 1} tombstones at K=2; collapsed, it keeps
+# the enum) and quantity observable through the base64 suggestion.
+_pinned_docs = ['{"e": 1}', '{"e": 2}', '{"b": "abcd"}']
+_keyed_rows = st.lists(json_docs, max_size=2).flatmap(
+    lambda pool: st.lists(
+        st.tuples(
+            st.sampled_from([None, "k1", "k2"]),
+            st.one_of(
+                st.sampled_from([json.dumps(d) for d in pool]
+                                + _pinned_docs),
+                st.sampled_from([None, "null", "3", '"s"', "{broken",
+                                 "[1, 2"]),
+            ),
+        ),
+        max_size=14,
+    ))
+
+
+def _per_row_reference(rows, ctx, ctx_by_key):
+    """Parse and gate each row, then accumulate_doc it into its key's
+    state — the naive per-row fold fold_keyed must equal."""
+    from schema_guru_spark.core.accumulate import accumulate_doc
+    from schema_guru_spark.core.json_fast import loads as fast_loads
+    states, counts, errors = {}, {}, []
+    for pos, (key, text) in enumerate(rows):
+        c = counts.setdefault(key, [0, 0])
+        if text is None:
+            msg = "null content"
+        else:
+            try:
+                value = fast_loads(text)
+            except (ValueError, TypeError) as e:
+                msg = f"invalid JSON: {e}"
+            else:
+                st_ = states.get(key, {})
+                try:
+                    accumulate_doc(st_, value, ctx_by_key.get(key, ctx))
+                except ValueError as e:  # top-level gate
+                    msg = str(e)
+                else:
+                    states[key] = st_
+                    c[0] += 1
+                    continue
+        c[1] += 1
+        errors.append((pos, msg))
+    return states, counts, errors
+
+
+@settings(max_examples=150, deadline=None)
+@given(_keyed_rows)
+@example([("k1", '{"e": 1}'), ("k1", '{"e": 2}'), ("k1", '{"e": 1}'),
+          ("k1", '{"b": "abcd"}'), (None, None), ("k2", "null")])
+def test_fold_keyed_equals_per_row_reference(rows):
+    """The shared keyed kernel (parse once per distinct text, gate,
+    fused (key, doc) collapse, one fold_docs per key) equals the naive
+    per-row fold: same states, per-key counts and (position, message)
+    errors — enum-off (collapsed) and enum-on (row-order) contexts,
+    keyed, global, and with a per-key context map."""
+    import dataclasses
+
+    import pandas as pd
+    import pytest
+
+    from schema_guru_spark.core import json_fast
+    from schema_guru_spark.core.accumulate_batch import fold_keyed
+
+    keys = pd.Series([k for k, _ in rows], dtype=object)
+    texts = pd.Series([t for _, t in rows], dtype=object)
+    n_distinct = len({t for t in texts if t is not None})
+    real_loads = json_fast.loads
+    for ctx in (CTX, SchemaContext.make(0, quantity=5), CTX_ENUM,
+                SchemaContext.make(2, enum_sets=[["x", "y"]])):
+        for batch_keys, ref_rows, ctx_by_key in (
+                (keys, rows, {}),
+                (None, [(None, t) for _, t in rows], {}),
+                (keys, rows, {"k1": dataclasses.replace(ctx, quantity=3)})):
+            calls = [0]
+
+            def counting(text):
+                calls[0] += 1
+                return real_loads(text)
+
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(json_fast, "loads", counting)
+                states, counts, errors = fold_keyed(
+                    texts, batch_keys, ctx, ctx_by_key or None)
+            assert calls[0] == n_distinct
+            ref_states, ref_counts, ref_errors = _per_row_reference(
+                ref_rows, ctx, ctx_by_key)
+            assert {k: dumps(s) for k, s in states.items()} == \
+                {k: dumps(s) for k, s in ref_states.items()}
+            assert counts == ref_counts
+            assert errors == ref_errors
 
 
 # format-shaped strings + adversarial near-misses for the verifier law

@@ -81,6 +81,51 @@ def test_keyed_schema_stream(spark, tmp_path):
     assert view["properties"]["z"]["type"] == "boolean"
 
 
+def test_keyed_schema_stream_equals_batch_by_key(spark, tmp_path):
+    """The keyed stream and batch per-key inference run the same kernel
+    (core fold_keyed): identical (key, schema, n_ok, n_err) on the same
+    rows — null content, invalid JSON and a scalar doc count as errors
+    on both, and an integer past 2^64 infers as number on both (one
+    parser)."""
+    from schema_guru_spark.operators.infer import infer_json_column_by_key
+
+    rows = [
+        ("click", '{"x": 1, "tags": ["a", "b"]}'),
+        ("click", '{"x": 1, "tags": ["a", "b"]}'),
+        ("click", '{"x": 9, "y": "2024-01-02T03:04:05Z"}'),
+        ("click", None),
+        ("click", '{broken'),
+        ("view", '{"z": true, "big": 123456789012345678901234567890}'),
+        ("view", "42"),
+        ("view", '[{"z": false}]'),
+    ]
+    src = str(tmp_path / "rows")
+    spark.createDataFrame(rows, "segment string, content string") \
+         .coalesce(1).write.parquet(src)
+
+    batch = {(r["segment"], r["schema"], r["n_ok"], r["n_err"])
+             for r in infer_json_column_by_key(
+                 spark.read.parquet(src), "content", "segment",
+                 CTX).collect()}
+
+    stream = (spark.readStream.schema("segment string, content string")
+              .parquet(src))
+    q = (keyed_schema_stream(stream, "content", "segment", CTX)
+         .writeStream.format("memory").queryName("keyed_vs_batch")
+         .outputMode("update")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    streamed = {(r["key"], r["schema"], r["n_ok"], r["n_err"])
+                for r in spark.sql("select * from keyed_vs_batch").collect()}
+
+    assert streamed == batch
+    assert {(k, ok, err) for k, _, ok, err in batch} == {
+        ("click", 3, 2), ("view", 2, 1)}
+    view = json.loads(next(s for k, s, _, _ in batch if k == "view"))
+    assert view["properties"]["big"]["type"] == "number"
+
+
 def test_incremental_state_replay_is_idempotent(tmp_path):
     """A foreachBatch replay (same batch_id, failure between sink write
     and checkpoint commit) must not double-merge counters."""
