@@ -75,9 +75,11 @@ def uniqueness_hashed(df: DataFrame, keys: Sequence[str], rsd: float = 0.02,
 
     ``prehashed=True`` declares that ``keys`` ALREADY ARE the two
     independently-seeded 64-bit hash columns (a caller that projects
-    them once and reuses the projection for several checks, e.g.
-    pipeline.constraint_report) — the distinct runs on them directly
-    instead of hashing the hashes a second time per row.
+    them once and reuses the projection for several checks) — the
+    distinct runs on them directly instead of hashing the hashes a
+    second time per row. ``pipeline.constraint_report`` computes the
+    same fields over such a projection, with the approximate count
+    folded into its one fused aggregate.
     """
     cols = [F.col(k) for k in keys]
     if prehashed:
@@ -331,21 +333,34 @@ def drift_psi_report(df: DataFrame, value_col: str, part_col: str,
     ``drift_by_partition`` chains ~8 AQE query stages (joins of tiny
     frames), each a scheduling barrier that costs the same at any
     parallelism; at 1M rows that fixed latency dominated the whole
-    constraint pass (~4s serial, measured). This path is two jobs: a
-    min/max aggregate and ONE groupBy shuffle of the histogram.
+    constraint pass (~4s serial, measured). This path is one min/max
+    aggregate plus ONE groupBy shuffle of the histogram.
+    ``pipeline.constraint_report`` skips the min/max aggregate: it reads
+    the bounds off its fused aggregate and calls ``_psi_in_bounds``
+    directly.
 
     Returns {part_value: psi} (floats, rounded 6dp like the SQL path).
     """
+    c = F.col(value_col)
+    lo, hi = df.agg(F.min(c), F.max(c)).collect()[0]
+    return _psi_in_bounds(df, value_col, part_col, lo, hi, n_bins)
+
+
+def _psi_in_bounds(df: DataFrame, value_col: str, part_col: str,
+                   lo, hi, n_bins: int = 10) -> dict:
+    """``drift_psi_report`` given the column's non-null [lo, hi]
+    (None when every value is NULL): bin, collect the histogram, and
+    compute each partition's PSI against the global histogram on the
+    driver."""
     import math
 
-    c = F.col(value_col)
-    sub = df.where(c.isNotNull())
-    lo, hi = sub.agg(F.min(c), F.max(c)).collect()[0]
     if lo is None:
         return {}
+    c = F.col(value_col)
     width = (hi - lo) / n_bins + 1e-12
     rows = (
-        sub.withColumn(
+        df.where(c.isNotNull())
+        .withColumn(
             "bin",
             F.least(F.lit(n_bins - 1),
                     F.floor((c - F.lit(lo)) / F.lit(width)).cast("int")))

@@ -132,9 +132,11 @@ def hash_split(df: DataFrame, id_col: str, fractions: dict[str, float],
     ``fractions`` is an ORDERED mapping label -> fraction (insertion
     order defines which hash region each label owns — keep it stable
     across jobs or the assignment changes); fractions must be positive
-    and sum to 1 within 1e-9. The last label takes the open tail region
-    (no 9-char threshold, see ``_rate_to_hex_threshold``), so float
-    rounding in the cumulative sum can never orphan a row.
+    and sum to 1 within 1e-9, and every cumulative fraction before the
+    last label must stay below 1.0 (ValueError from
+    ``split_thresholds`` otherwise). The last label takes the open tail
+    region (no 9-char threshold, see ``_rate_to_hex_threshold``), so
+    float rounding in the cumulative sum can never orphan a row.
 
     Scale shape: map-only, ZERO shuffle — the label is a pure function
     of (salt, id, fractions), independent of partitioning, run, and
@@ -155,16 +157,10 @@ def hash_split(df: DataFrame, id_col: str, fractions: dict[str, float],
     tok = F.substring(
         F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
         1, 8)
-    labels = list(fractions)
-    split = F.lit(labels[-1])  # open tail region
-    cum = 0.0
+    split = F.lit(list(fractions)[-1])  # open tail region
     # walk the boundaries in reverse so the earliest label's WHEN lands
     # outermost: CASE WHEN tok < thr_1 THEN l_1 WHEN tok < thr_2 ...
-    bounds: list[tuple[str, str]] = []
-    for label in labels[:-1]:
-        cum += fractions[label]
-        bounds.append((label, _rate_to_hex_threshold(cum)))
-    for label, thr in reversed(bounds):
+    for label, thr in reversed(split_thresholds(fractions)):
         split = F.when(tok < F.lit(thr), F.lit(label)).otherwise(split)
     return df.select(F.col(id_col).alias("id"), split.alias("split"),
                      tok.alias("split_token"))
@@ -175,11 +171,22 @@ def split_thresholds(fractions: dict[str, float]) -> list[tuple[str, str]]:
     compiles, for callers that need the same literals elsewhere (the
     DuckDB oracle twin embeds them so both engines compute the
     boundaries from ONE cumulative sum, not two float re-derivations).
-    The last label has no threshold (open tail) and is omitted."""
+    The last label has no threshold (open tail) and is omitted.
+
+    A non-tail cumulative fraction that reaches 1.0 (e.g. {'a': 0.5,
+    'b': 0.5, 'c': 1e-10}, within the sum tolerance) has no 8-hex
+    threshold: it is refused with ValueError rather than compiled to a
+    NULL comparison that silently empties the label's region."""
     bounds, cum = [], 0.0
     for label in list(fractions)[:-1]:
         cum += fractions[label]
-        bounds.append((label, _rate_to_hex_threshold(cum)))
+        thr = _rate_to_hex_threshold(cum)
+        if thr is None:
+            raise ValueError(
+                f"cumulative fraction through {label!r} reaches "
+                f"{cum!r} >= 1.0 before the last label; every label "
+                f"but the last must end below 1.0")
+        bounds.append((label, thr))
     return bounds
 
 

@@ -324,6 +324,9 @@ def validate_repo_table(
 
     Returns verdicts/violations as DataFrames (reading the checkpoint
     sinks when enabled, so a resumed run sees prior chunks' results too).
+    Without a checkpoint the verdicts are a local relation of at most
+    ``n_buckets`` rows (collecting it launches no Spark job) and the
+    violations are cached.
     """
     ctx = ctx or SchemaContext.make(0)
     from schema_guru_spark.operators.infer import _require_commutative
@@ -414,19 +417,27 @@ def validate_repo_table(
         violations = (raw.where(F.col("kind") == "violation")
                          .select("bucket", "repo", "lang",
                                  F.col("payload").alias("detail")))
+        verdict_schema = (_VERDICT_SCHEMA_STATE if keep_state
+                          else _VERDICT_SCHEMA)
         verdicts = (raw.where(F.col("kind") != "violation")
                     .groupBy("bucket")
                     .applyInPandas(
                         _combine_buckets(ctx, max_err_rate,
                                          keep_state=keep_state),
-                        _VERDICT_SCHEMA_STATE if keep_state
-                        else _VERDICT_SCHEMA))
+                        verdict_schema))
 
         if not ckpt:
             # materialize the tiny verdicts and the violation rows NOW so
-            # callers' actions don't re-run the full scan after unpersist
-            verdicts = verdicts.persist()
-            verdicts.count()
+            # callers' actions don't re-run the full scan after unpersist.
+            # The <= n_buckets verdict rows are collected once through
+            # Arrow and rebuilt as a local relation rather than
+            # persisted: a persisted plan keeps its shuffle partitioning
+            # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
+            # is false), so AQE could not coalesce the combine and it
+            # would run one Python task per shuffle partition instead of
+            # one. Later actions on the local relation re-run nothing.
+            verdicts = spark.createDataFrame(verdicts.toPandas(),
+                                             verdict_schema)
             violations = violations.persist()
             violations.count()
         if ckpt:
@@ -487,15 +498,28 @@ def constraint_report(spark: SparkSession, df: DataFrame,
     """Key-level constraint suite over the repo table — column-pruned
     scans only (content read once, for its length):
 
-      uniqueness of (repo,path,commit): HLL++ screen + exact;
+      uniqueness of (repo,path,commit): HLL++ screen + exact count over
+        the 128-bit key pre-hash (``C.uniqueness_hashed`` with
+        ``prehashed=True`` computes the same fields);
       referential integrity: every fact repo must resolve against the
         repo dimension via broadcast LEFT ANTI join. ``repo_dims`` is a
         one-column (repo) DataFrame — the lakehouse catalog dim in
-        production; defaults to the table's own distinct repos (orphans
-        = 0 by construction, the join plumbing still runs);
-      drift: per-bucket PSI of content length vs global;
-      completeness: per-key-column non-null fractions (piggybacks on
-        the same cached projection — null flags are 1 byte each).
+        production. Without it the dimension is the table's own
+        distinct repos: every non-null repo matches itself and a NULL
+        repo never matches (NULL = NULL is not true), so the orphan
+        count IS the repo null count and no join runs;
+      drift: per-bucket PSI of content length vs global
+        (``C.drift_psi_report`` semantics);
+      completeness: per-key-column non-null fractions.
+
+    Job shape: the projection is cached, and ONE aggregate over it
+    (which also materializes the cache) computes the row count, the
+    HLL++ estimate, every null count and the content-length bounds.
+    Only the checks that need a shuffle of their own fan out from
+    there, concurrently: the exact distinct count of the key hash (its
+    own aggregate — see the Expand-plan trap in ``C.uniqueness_hll``),
+    the PSI histogram binned with the bounds already in hand, and the
+    RI anti-join when ``repo_dims`` is given.
     """
     # ONE pass over the table projects everything the checks need
     # (~30 bytes/row), cached; content is read exactly once here
@@ -515,66 +539,73 @@ def constraint_report(spark: SparkSession, df: DataFrame,
                       *[F.col(c).isNull().cast("int").alias(f"_n_{c}")
                         for c in key_cols])
               .persist())
+    # the hash pair as uniqueness_hashed(prehashed=True) structs it, with
+    # that function's default rsd and tolerance
+    key_hash = F.struct(F.col("kh1").alias("h1"), F.col("kh2").alias("h2"))
+    rsd, tolerance = 0.02, 0.05
     try:
-        slim.count()  # materialize the cache once, then fan out
-        dims = (repo_dims if repo_dims is not None
-                else slim.select("repo").distinct())
-        # the three checks are independent jobs over the same cached
-        # projection — submit them concurrently so their fixed stage
-        # latencies overlap instead of adding up (Spark's scheduler
-        # handles concurrent jobs from one session natively)
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            # hashed screen: 16-byte shuffle rows, not raw key strings;
-            # kh1/kh2 are already the seeded hash pair — don't hash the
-            # hashes a second time per row
-            f_uniq = ex.submit(
-                lambda: C.uniqueness_hashed(slim, ["kh1", "kh2"],
-                                            prehashed=True).collect()[0])
-            # referential integrity: broadcast LEFT ANTI, facts never
-            # shuffled
-            f_ri = ex.submit(
-                lambda: C.referential_violations(
-                    slim.select("repo"), dims, "repo", "repo").count())
-            # per-bucket PSI vs global: histogram shuffled (bounded
-            # rows), PSI math on the driver — see drift_psi_report
-            f_psi = ex.submit(
-                lambda: C.drift_psi_report(slim, "clen", "bucket"))
-            # completeness over the SAME cached projection: one tiny agg
-            f_comp = ex.submit(
-                lambda: slim.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    *[F.sum(f"_n_{c}").alias(c) for c in key_cols],
-                    F.sum(F.col("clen").isNull().cast("int"))
-                     .alias("content")).collect()[0])
-            uniq = f_uniq.result()
-            n_orphans = f_ri.result()
-            psi_by_bucket = f_psi.result()
-            comp_row = f_comp.result()
+        head = slim.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct(key_hash, rsd).alias("n_approx"),
+            *[F.sum(f"_n_{c}").alias(c) for c in key_cols],
+            F.sum(F.col("clen").isNull().cast("int")).alias("content"),
+            F.min("clen").alias("lo"),
+            F.max("clen").alias("hi"),
+        ).collect()[0]
         # sums over zero rows are NULL -> coalesce; keep the RAW null
         # counts for the verdict (a rounded fraction of 1.0 would hide
         # one null key in 10M rows — exactly what the check must catch)
-        null_counts = {c: int(comp_row[c] or 0)
+        null_counts = {c: int(head[c] or 0)
                        for c in (*key_cols, "content")}
-        n_total = max(comp_row["n"], 1)
-        completeness = {
-            c: round(1.0 - null_counts[c] / n_total, 6)
-            for c in (*key_cols, "content")
-        }
-        worst_psi = max(psi_by_bucket.values(), default=0.0)
+        # the remaining checks are independent jobs over the cached
+        # projection — submit them concurrently so their fixed stage
+        # latencies overlap instead of adding up. The worker threads
+        # inherit the caller's job group, local properties and tags
+        # (pinned-thread mode keeps those per Python thread).
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
+        inherit = inheritable_thread_target(spark)
+        with ThreadPoolExecutor(max_workers=3) as ex:
+            def submit(fn):
+                return ex.submit(inherit(fn))
+
+            f_exact = submit(
+                lambda: slim.agg(F.count_distinct(key_hash)).collect()[0][0])
+            # per-bucket PSI vs global: histogram shuffled (bounded
+            # rows), PSI math on the driver
+            f_psi = submit(
+                lambda: C._psi_in_bounds(slim, "clen", "bucket",
+                                         head["lo"], head["hi"]))
+            # referential integrity: broadcast LEFT ANTI, facts never
+            # shuffled
+            f_ri = (submit(
+                lambda: C.referential_violations(
+                    slim.select("repo"), repo_dims, "repo", "repo").count())
+                if repo_dims is not None else None)
+            n_exact = f_exact.result()
+            psi_by_bucket = f_psi.result()
+            n_orphans = (f_ri.result() if f_ri is not None
+                         else null_counts["repo"])
     finally:
         slim.unpersist()
 
+    n_rows, n_approx = head["n"], head["n_approx"]
+    rel_err = abs(n_approx - n_exact) / max(n_exact, 1)
+    n_total = max(n_rows, 1)
     return {
-        "n_rows": uniq["n_rows"],
-        "n_exact_distinct": uniq["n_exact"],
-        "n_approx_distinct": uniq["n_approx"],
-        "hll_rel_err": float(uniq["rel_err"]),
-        "hll_ok": bool(uniq["hll_ok"]),
-        "keys_unique": uniq["n_rows"] == uniq["n_exact"],
+        "n_rows": n_rows,
+        "n_exact_distinct": n_exact,
+        "n_approx_distinct": n_approx,
+        "hll_rel_err": float(rel_err),
+        "hll_ok": rel_err <= tolerance,
+        "keys_unique": n_rows == n_exact,
         "n_ri_orphans": n_orphans,
-        "worst_bucket_psi": float(worst_psi),
-        "completeness": completeness,
+        "worst_bucket_psi": float(max(psi_by_bucket.values(), default=0.0)),
+        "completeness": {
+            c: round(1.0 - null_counts[c] / n_total, 6)
+            for c in (*key_cols, "content")
+        },
         "key_null_counts": {c: null_counts[c]
                             for c in ("repo", "path", "commit")},
         "keys_complete": all(

@@ -23,20 +23,40 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _group_task_times(spark, groups) -> dict:
-    """Summed executor task run-time (seconds) per job group, from the
-    driver's AppStatusStore — the same numbers the (disabled) UI's
-    stage table shows. Attribution: each stage is counted once, under
-    the group of the first job that ran it. Best-effort over a private
-    JVM surface (py4j into AppStatusStore; shape tested against Spark
-    4.1.x) — returns {} rather than failing the job on a Spark upgrade."""
+def _next_job_id(spark):
+    """The id the scheduler gives the next job (ids are sequential), as
+    a watermark between earlier jobs and the ones about to run; None
+    when the private JVM surface is unavailable."""
     try:
-        store = spark.sparkContext._jsc.sc().statusStore()
-        jobs = store.jobsList(None)
+        return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    except Exception:
+        return None
+
+
+def _group_task_times(spark, groups, first_job) -> dict:
+    """Summed executor task run-time (seconds) per job group over the
+    jobs with id >= ``first_job`` (a ``_next_job_id`` watermark taken
+    before the measured section), from the driver's AppStatusStore —
+    the same numbers the (disabled) UI's stage table shows.
+    Attribution: each stage is counted once, under the group of the
+    first job that ran it. Best-effort over a private JVM surface (py4j
+    into AppStatusStore; shape tested against Spark 4.1.x) — returns {}
+    rather than failing the job on a Spark upgrade."""
+    if first_job is None:
+        return {}
+    try:
+        sc = spark.sparkContext._jsc.sc()
+        # listener events reach the store asynchronously: wait until
+        # every finished job's events have been applied
+        sc.listenerBus().waitUntilEmpty()
+        store = sc.statusStore()
         out = {g: 0.0 for g in groups}
         seen: set[int] = set()
-        for i in range(jobs.size()):
-            j = jobs.apply(i)
+        for jid in range(first_job, sc.dagScheduler().nextJobId()):
+            try:
+                j = store.job(jid)
+            except Exception:
+                continue  # not in the store (never recorded, or evicted)
             grp = j.jobGroup()
             grp = grp.get() if grp.isDefined() else None
             if grp not in out:
@@ -189,7 +209,6 @@ def main(argv=None) -> dict:
     if args.warmup and args.checkpoint:
         ap.error("--warmup and --checkpoint are mutually exclusive "
                  "(a warm-up run would mark every bucket finished)")
-    from pyspark.sql import functions as F
     for _ in range(args.warmup):
         w = validate_repo_table(spark, df, n_buckets=args.buckets,
                                 n_salts=args.salts,
@@ -203,6 +222,7 @@ def main(argv=None) -> dict:
         # otherwise read the warm-up's caches instead of recomputing
         spark.catalog.clearCache()
 
+    first_job = _next_job_id(spark)
     t0 = time.perf_counter()
     # the constraint suite and the validation scan are INDEPENDENT
     # passes over the same table — submit the constraint jobs from a
@@ -234,30 +254,29 @@ def main(argv=None) -> dict:
                                   n_buckets=args.buckets, n_salts=args.salts,
                                   chunk_size=args.chunk_size,
                                   max_err_rate=args.max_err_rate)
-        agg = res.verdicts.agg(
-            F.sum("n_rows").alias("rows"),
-            F.sum("n_json_ok").alias("json_ok"),
-            F.sum("n_json_err").alias("json_err"),
-            F.sum("n_sha_bad").alias("sha_bad"),
-            F.sum(F.when(F.col("passed"), 1).otherwise(0)).alias("passed"),
-            F.count(F.lit(1)).alias("buckets"),
-        ).collect()[0]
+        # at most n_buckets verdict rows (already on the driver without
+        # a checkpoint): sum the counters here, not in another Spark job
+        verdicts = res.verdicts.select(
+            "n_rows", "n_json_ok", "n_json_err", "n_sha_bad",
+            "passed").collect()
         n_violations = res.violations.count()
         t_validate = time.perf_counter() - t0
         rep = f_rep.result()
     dt = time.perf_counter() - t0
     spark.sparkContext.setJobGroup("", "")
     task_times = _group_task_times(
-        spark, ("timed-validate", "timed-constraints"))
-    # an EMPTY table aggregates to NULL counters and zero buckets:
-    # report zeros and a vacuous pass (same rule as the incremental
-    # path's cumulative view), not a TypeError
+        spark, ("timed-validate", "timed-constraints"), first_job)
+    tot = {k: sum(r[k] for r in verdicts)
+           for k in ("n_rows", "n_json_ok", "n_json_err", "n_sha_bad")}
+    buckets = len(verdicts)
+    n_passed = sum(1 for r in verdicts if r["passed"])
+    # an EMPTY table has zero counters and zero buckets: report a
+    # vacuous pass (same rule as the incremental path's cumulative view)
     out = {
-        "rows": agg["rows"] or 0, "json_ok": agg["json_ok"] or 0,
-        "json_err": agg["json_err"] or 0, "sha_bad": agg["sha_bad"] or 0,
-        "buckets": agg["buckets"], "buckets_passed": agg["passed"] or 0,
-        "pass_rate": (round((agg["passed"] or 0) / agg["buckets"], 4)
-                      if agg["buckets"] else 1.0),
+        "rows": tot["n_rows"], "json_ok": tot["n_json_ok"],
+        "json_err": tot["n_json_err"], "sha_bad": tot["n_sha_bad"],
+        "buckets": buckets, "buckets_passed": n_passed,
+        "pass_rate": (round(n_passed / buckets, 4) if buckets else 1.0),
         "n_violation_rows": n_violations,
         "resumed_buckets": len(res.resumed_buckets),
         "wall_sec": round(dt, 3),
@@ -267,7 +286,7 @@ def main(argv=None) -> dict:
         # the wall-clock ratio alone cannot show whether the overlap
         # thread penalizes the small-core leg — task time can)
         "task_time_sec": task_times,
-        "files_per_sec": round((agg["rows"] or 0) / dt, 1),
+        "files_per_sec": round(tot["n_rows"] / dt, 1),
         "cpus": args.cpus,
         "constraints": rep,
     }

@@ -314,6 +314,25 @@ def test_hash_split_is_map_only_and_guards(spark, corpus):
     assert all(len(b[1]) == 8 for b in bounds)
 
 
+@pytest.mark.parametrize("fractions", [
+    {"a": 0.5, "b": 0.5, "c": 1e-10},   # cumulative hits 1.0 at 'b'
+    {"a": 1.0, "b": 1e-10},             # ... at the first label
+])
+def test_hash_split_refuses_cumulative_one_before_tail(spark, corpus,
+                                                       fractions):
+    """Fractions within the 1e-9 sum tolerance whose non-tail cumulative
+    sum reaches 1.0 have no 8-hex threshold: both the operator and the
+    boundary list the oracle twin embeds refuse them, instead of a NULL
+    comparison that empties the label's region (and a 'None' literal
+    in the oracle SQL)."""
+    assert abs(sum(fractions.values()) - 1.0) <= 1e-9
+    with pytest.raises(ValueError, match="before the last label"):
+        SMP.split_thresholds(fractions)
+    df = spark.createDataFrame(corpus, ["id", "stratum", "n_tok", "score"])
+    with pytest.raises(ValueError, match="before the last label"):
+        SMP.hash_split(df, "id", fractions)
+
+
 def test_domain_mix_plan_rates_and_caps(spark, corpus):
     """rate = min(1, target*budget/n); underfull strata cap at 1.0 with
     expected_kept == n_rows; strata outside targets get rate 0."""
