@@ -1843,7 +1843,8 @@ def oracle_sql() -> dict[str, str]:
         "pack_sequences_docs": r"""
             WITH toks AS (
               SELECT doc_id AS id,
-                     len(regexp_split_to_array(lower(trim(text)), '\s+'))::BIGINT
+                     coalesce(len(regexp_split_to_array(lower(trim(text)),
+                                                        '\s+')), 0)::BIGINT
                        AS n_tok
               FROM documents),
             cum AS (

@@ -280,14 +280,20 @@ def pack_sequences(df: DataFrame, id_col: str, token_col: str,
 
     Contract: ids must be UNIQUE — the packing order is "id ascending",
     and duplicate ids would make the intra-partition cumsum order (and
-    so the whole packing) nondeterministic.
+    so the whole packing) nondeterministic. A NULL token count is
+    coalesced to 0: the document still lands in exactly one sequence
+    (the one the running offset is in) and adds no tokens, so both
+    conservation laws hold (sum of n_docs == input rows, sum of
+    n_tokens == SUM(token_col)). Left NULL, it would null the document's
+    start offset and drop it into a NULL seq_id group.
     """
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
     if n_ranges < 1:
         raise ValueError(f"n_ranges must be >= 1, got {n_ranges}")
     src = df.select(F.col(id_col).alias("id"),
-                    F.col(token_col).cast("long").alias("n_tok"))
+                    F.coalesce(F.col(token_col).cast("long"), F.lit(0))
+                     .alias("n_tok"))
     ranged = (src.repartitionByRange(n_ranges, "id")
                  .withColumn("_pid", F.spark_partition_id())
                  .localCheckpoint(eager=False))

@@ -45,13 +45,15 @@ from dataclasses import dataclass, field
 from typing import Iterator, Optional, Sequence
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from schema_guru_spark.core.context import SchemaContext
 from schema_guru_spark.core.microschema import ZERO, dumps, loads, merge, render
 from schema_guru_spark.core.transforms import apply_transforms
 from schema_guru_spark.operators import constraints as C
-from schema_guru_spark.plans.checkpoint import CheckpointManager
+from schema_guru_spark.plans.checkpoint import (CheckpointManager,
+                                                 is_missing_path)
 
 DEFAULT_LANGS = ("json", "py", "java", "go", "md")
 
@@ -248,18 +250,27 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int):
     return fn
 
 
-def _combine_buckets(ctx: SchemaContext, max_err_rate: float = 0.0,
-                     keep_state: bool = False):
-    """applyInPandas over the tiny per-(task,bucket) state rows.
+def bucket_passes(c: dict, max_err_rate: float) -> bool:
+    """The per-bucket verdict over its counters (``n_json_ok``,
+    ``n_json_err``, ``n_sha_bad``, ``n_lang_bad``).
 
     A bucket passes when its JSON parse-error rate (errors / attempted
-    JSON docs) is within ``max_err_rate`` and it has zero sha / lang
-    violations. Default 0.0 = strict (any parse error fails the bucket,
-    the reference's implicit semantics — parse failures are errors,
-    SchemaDerive.scala:159-169); production corpora with expected dirt
-    set a tolerance so verdicts discriminate instead of failing every
-    bucket. Either way every error row still lands in the violations
-    sink."""
+    JSON docs; 0 with no JSON docs) is within ``max_err_rate`` and it
+    has zero sha / lang violations. Default 0.0 = strict (any parse
+    error fails the bucket, the reference's implicit semantics — parse
+    failures are errors, SchemaDerive.scala:159-169); production corpora
+    with expected dirt set a tolerance so verdicts discriminate instead
+    of failing every bucket. Either way every error row still lands in
+    the violations sink."""
+    n_json = c["n_json_ok"] + c["n_json_err"]
+    return (c["n_json_err"] / max(n_json, 1) <= max_err_rate
+            and c["n_sha_bad"] == 0 and c["n_lang_bad"] == 0)
+
+
+def _combine_buckets(ctx: SchemaContext, max_err_rate: float = 0.0,
+                     keep_state: bool = False):
+    """applyInPandas over the tiny per-(task,bucket) state rows: merged
+    schema, summed counters and the ``bucket_passes`` verdict."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         bucket = int(pdf["bucket"].iloc[0])
@@ -275,12 +286,8 @@ def _combine_buckets(ctx: SchemaContext, max_err_rate: float = 0.0,
                     c[k] += part.get(k, 0)
         schema_json = json.dumps(
             render(apply_transforms(acc, ctx), ctx), sort_keys=True)
-        n_json = c["n_json_ok"] + c["n_json_err"]
-        err_rate = (c["n_json_err"] / n_json) if n_json else 0.0
-        ok = (err_rate <= max_err_rate and c["n_sha_bad"] == 0
-              and c["n_lang_bad"] == 0)
         row = {"bucket": bucket, **c, "schema": schema_json,
-               "passed": ok}
+               "passed": bucket_passes(c, max_err_rate)}
         if keep_state:
             # the raw monoid state alongside the rendered schema:
             # serialized states from different runs re-merge exactly
@@ -297,6 +304,7 @@ _VERDICT_SCHEMA = ("bucket int, n_rows bigint, n_json_ok bigint, "
                    "n_json_err bigint, n_sha_bad bigint, n_lang_bad bigint, "
                    "schema string, passed boolean")
 _VERDICT_SCHEMA_STATE = _VERDICT_SCHEMA + ", state string"
+_VIOLATION_SCHEMA = "bucket int, repo string, lang string, detail string"
 
 
 @dataclass
@@ -322,11 +330,16 @@ def validate_repo_table(
 ) -> ValidationResult:
     """Run the full validation; resumable when checkpoint_dir is set.
 
-    Returns verdicts/violations as DataFrames (reading the checkpoint
-    sinks when enabled, so a resumed run sees prior chunks' results too).
-    Without a checkpoint the verdicts are a local relation of at most
-    ``n_buckets`` rows (collecting it launches no Spark job) and the
-    violations are cached.
+    Per chunk of buckets, the <= ``chunk_size`` verdict rows are
+    collected once through Arrow and rebuilt as a local relation.
+    Without a checkpoint, that local relation (collecting it launches
+    no Spark job) and the cached violations are the result. With a
+    checkpoint, each chunk writes, in this order, its violations sink,
+    its verdicts sink (from the local rows) and a manifest append whose
+    per-bucket metrics come from the same local rows — a sink is never
+    re-read to find out what was just written. The result then reads
+    the sinks under their known schemas (no inference job), so a
+    resumed run sees prior chunks' results too.
     """
     ctx = ctx or SchemaContext.make(0)
     from schema_guru_spark.operators.infer import _require_commutative
@@ -406,6 +419,8 @@ def validate_repo_table(
             "sha_ok", "lang_ok")
     )
 
+    verdict_schema = (_VERDICT_SCHEMA_STATE if keep_state
+                      else _VERDICT_SCHEMA)
     all_verdicts = []
     all_violations = []
     for i in range(0, len(remaining), chunk_size):
@@ -417,68 +432,65 @@ def validate_repo_table(
         violations = (raw.where(F.col("kind") == "violation")
                          .select("bucket", "repo", "lang",
                                  F.col("payload").alias("detail")))
-        verdict_schema = (_VERDICT_SCHEMA_STATE if keep_state
-                          else _VERDICT_SCHEMA)
-        verdicts = (raw.where(F.col("kind") != "violation")
-                    .groupBy("bucket")
-                    .applyInPandas(
-                        _combine_buckets(ctx, max_err_rate,
-                                         keep_state=keep_state),
-                        verdict_schema))
+        # the tiny verdicts are materialized NOW so later actions don't
+        # re-run the full scan after unpersist. The <= len(chunk) verdict
+        # rows are collected once through Arrow and rebuilt as a local
+        # relation rather than persisted: a persisted plan keeps its
+        # shuffle partitioning
+        # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is
+        # false), so AQE could not coalesce the combine and it would run
+        # one Python task per shuffle partition instead of one. Later
+        # actions on the local relation re-run nothing.
+        verdict_rows = (raw.where(F.col("kind") != "violation")
+                        .groupBy("bucket")
+                        .applyInPandas(
+                            _combine_buckets(ctx, max_err_rate,
+                                             keep_state=keep_state),
+                            verdict_schema)
+                        .toPandas())
+        verdicts = spark.createDataFrame(verdict_rows, verdict_schema)
 
-        if not ckpt:
-            # materialize the tiny verdicts and the violation rows NOW so
-            # callers' actions don't re-run the full scan after unpersist.
-            # The <= n_buckets verdict rows are collected once through
-            # Arrow and rebuilt as a local relation rather than
-            # persisted: a persisted plan keeps its shuffle partitioning
-            # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-            # is false), so AQE could not coalesce the combine and it
-            # would run one Python task per shuffle partition instead of
-            # one. Later actions on the local relation re-run nothing.
-            verdicts = spark.createDataFrame(verdicts.toPandas(),
-                                             verdict_schema)
+        if ckpt:
+            # idempotent per-chunk sinks: OVERWRITE this chunk's
+            # partition directory rather than appending to the parent.
+            # A job killed after the data sinks but before the manifest
+            # append re-runs the chunk on restart — an append would then
+            # duplicate every verdict/violation row of the chunk; an
+            # overwrite converges to the same bytes.
+            violations.write.mode("overwrite") \
+                .parquet(f"{ckpt.dir}/violations/chunk={chunk[0]}")
+            verdicts.coalesce(1).write.mode("overwrite") \
+                .parquet(f"{ckpt.dir}/verdicts/chunk={chunk[0]}")
+            # every bucket of the chunk is done, with or without rows;
+            # to_dict("records") hands back Python scalars, so the
+            # manifest's JSON metrics hold true/false, not "True"
+            metrics = {b: {"bucket": b, "n_rows": 0, "n_ok": 0, "n_err": 0,
+                           "passed": True} for b in chunk}
+            for m in (verdict_rows[["bucket", "n_rows", "n_json_ok",
+                                    "n_json_err", "passed"]]
+                      .rename(columns={"n_json_ok": "n_ok",
+                                       "n_json_err": "n_err"})
+                      .to_dict("records")):
+                metrics[m["bucket"]] = m
+            ckpt.record_done(metrics.values())
+        else:
             violations = violations.persist()
             violations.count()
-        if ckpt:
-            viol_path = f"{ckpt.dir}/violations"
-            verd_path = f"{ckpt.dir}/verdicts"
-            # idempotent per-chunk sink: OVERWRITE this chunk's
-            # partition directory rather than appending to the parent.
-            # A job killed after the data append but before the
-            # manifest append re-runs the chunk on restart — an append
-            # would then duplicate every verdict/violation row of the
-            # chunk; an overwrite converges to the same bytes.
-            violations.write.mode("overwrite") \
-                .parquet(f"{viol_path}/chunk={chunk[0]}")
-            verdicts.write.mode("overwrite") \
-                .parquet(f"{verd_path}/chunk={chunk[0]}")
-            metrics = [r.asDict() for r in
-                       spark.read.parquet(verd_path)
-                       .where(F.col("bucket").isin(chunk))
-                       .select("bucket", "n_rows",
-                               F.col("n_json_ok").alias("n_ok"),
-                               F.col("n_json_err").alias("n_err"),
-                               "passed").collect()]
-            seen = {m["bucket"] for m in metrics}
-            metrics.extend({"bucket": b, "n_rows": 0, "n_ok": 0, "n_err": 0,
-                            "passed": True} for b in chunk if b not in seen)
-            ckpt.record_done(metrics)
-        else:
             all_verdicts.append(verdicts)
             all_violations.append(violations)
         raw.unpersist()
 
     if ckpt:
-        # chunk=N partition dirs: drop the inferred partition column
-        verdicts_df = spark.read.parquet(f"{ckpt.dir}/verdicts") \
-            .drop("chunk")
+        # chunk=N partition dirs: drop the discovered partition column
+        verdicts_df = spark.read.schema(verdict_schema) \
+            .parquet(f"{ckpt.dir}/verdicts").drop("chunk")
         try:
-            violations_df = spark.read.parquet(f"{ckpt.dir}/violations") \
-                .drop("chunk")
-        except Exception:
-            violations_df = spark.createDataFrame(
-                [], "bucket int, repo string, lang string, detail string")
+            violations_df = spark.read.schema(_VIOLATION_SCHEMA) \
+                .parquet(f"{ckpt.dir}/violations").drop("chunk")
+        except AnalysisException as exc:
+            if not is_missing_path(exc):
+                raise
+            violations_df = spark.createDataFrame([], _VIOLATION_SCHEMA)
     else:
         from functools import reduce
         verdicts_df = reduce(DataFrame.unionByName, all_verdicts)

@@ -7,6 +7,10 @@ bucket — resume without recomputing completed partitions.
 
 The manifest is plain parquet (append-only, tiny), readable by any
 engine; no reference counterpart (the reference has no checkpointing).
+The manager knows the manifest's schema, so every read passes it
+instead of inferring it (an inferred read costs a Spark job per call),
+and each append is built as a pandas local relation — shipped to the
+JVM through Arrow, not pickled through a Python task.
 """
 
 from __future__ import annotations
@@ -16,14 +20,30 @@ import os
 import time
 from typing import Iterable, Optional, Set
 
+import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 MANIFEST_SCHEMA = ("bucket int, status string, n_rows bigint, "
                    "n_ok bigint, n_err bigint, metrics string, "
                    "run_id string, finished_at double")
 
+_COUNTERS = ("n_rows", "n_ok", "n_err")
+
+
+def is_missing_path(exc: AnalysisException) -> bool:
+    """True when a read failed only because its path does not exist
+    (a schema-pinned read still checks that at load time)."""
+    return exc.getCondition() == "PATH_NOT_FOUND"
+
 
 class CheckpointManager:
+    """The manifest of one checkpoint directory. ``validate_repo_table``
+    appends one row per bucket of a chunk after that chunk's violations
+    and verdicts sinks are written, with the metrics taken from the
+    verdict rows it already holds: the manifest row is the chunk's
+    commit point."""
+
     def __init__(self, spark: SparkSession, checkpoint_dir: str,
                  run_id: Optional[str] = None):
         self.spark = spark
@@ -31,40 +51,42 @@ class CheckpointManager:
         self.manifest_path = os.path.join(checkpoint_dir, "manifest")
         self.run_id = run_id or f"run-{int(time.time() * 1000)}"
 
-    def _manifest_exists(self) -> bool:
-        # works for local paths; for object stores the read itself is the probe
-        try:
-            self.spark.read.parquet(self.manifest_path).limit(1).collect()
-            return True
-        except Exception:
-            return False
-
     def finished_buckets(self) -> Set[int]:
-        if not self._manifest_exists():
-            return set()
-        rows = (self.spark.read.parquet(self.manifest_path)
-                .where(F.col("status") == "done")
-                .select("bucket").distinct().collect())
+        """Buckets the manifest records as done — one read, one job.
+        Only a missing manifest means "nothing finished"; an unreadable
+        one raises rather than silently re-running every bucket."""
+        try:
+            df = self.manifest()
+        except AnalysisException as exc:
+            if is_missing_path(exc):
+                return set()
+            raise
+        rows = df.where(F.col("status") == "done").select("bucket").collect()
         return {r["bucket"] for r in rows}
 
     def record_done(self, bucket_metrics: Iterable[dict]) -> None:
         """Append one manifest row per finished bucket.
-        Each dict: {bucket, n_rows, n_ok, n_err, **extra}."""
-        now = time.time()
-        rows = [
-            (int(m["bucket"]), "done", int(m.get("n_rows", 0)),
-             int(m.get("n_ok", 0)), int(m.get("n_err", 0)),
-             json.dumps({k: v for k, v in m.items()
-                         if k not in ("bucket", "n_rows", "n_ok", "n_err")},
-                        sort_keys=True, default=str),
-             self.run_id, now)
-            for m in bucket_metrics
-        ]
-        if not rows:
+        Each dict: {bucket, n_rows, n_ok, n_err, **extra}; the extras
+        land JSON-encoded in ``metrics``, so they must be JSON-native
+        (a numpy scalar would be stringified)."""
+        ms = list(bucket_metrics)
+        if not ms:
             return
-        (self.spark.createDataFrame(rows, MANIFEST_SCHEMA)
+        pdf = pd.DataFrame({
+            "bucket": [int(m["bucket"]) for m in ms],
+            "status": "done",
+            **{k: [int(m.get(k, 0)) for m in ms] for k in _COUNTERS},
+            "metrics": [json.dumps({k: v for k, v in m.items()
+                                    if k != "bucket" and k not in _COUNTERS},
+                                   sort_keys=True, default=str)
+                        for m in ms],
+            "run_id": self.run_id,
+            "finished_at": time.time(),
+        })
+        (self.spark.createDataFrame(pdf, MANIFEST_SCHEMA)
          .coalesce(1)
          .write.mode("append").parquet(self.manifest_path))
 
     def manifest(self) -> DataFrame:
-        return self.spark.read.parquet(self.manifest_path)
+        return self.spark.read.schema(MANIFEST_SCHEMA) \
+            .parquet(self.manifest_path)

@@ -61,6 +61,9 @@ from typing import Any, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 _STATE_FILE = "table_state.json"
+_UNIQ_SCHEMA = "n_rows bigint, sketch binary"
+_COUNTERS = ("n_rows", "n_json_ok", "n_json_err", "n_sha_bad",
+             "n_lang_bad")
 
 
 def _state_path(checkpoint_dir: str) -> str:
@@ -246,22 +249,18 @@ def incremental_validate(
             n_buckets=n_buckets, n_salts=n_salts,
             chunk_size=chunk_size, allowed_langs=allowed_langs,
             max_err_rate=max_err_rate, keep_state=True)
-        agg = res.verdicts.agg(
-            F.sum("n_rows").alias("rows"),
-            F.sum("n_json_ok").alias("json_ok"),
-            F.sum("n_json_err").alias("json_err"),
-            F.sum("n_sha_bad").alias("sha_bad"),
-            F.sum(F.when(F.col("passed"), 1).otherwise(0))
-             .alias("passed"),
-            F.count(F.lit(1)).alias("buckets")).collect()[0]
-        _write_uniq_sketch(delta_dir, delta_df, int(agg["rows"] or 0))
+        # <= n_buckets verdict rows: summed on the driver
+        summed = ("n_rows", "n_json_ok", "n_json_err", "n_sha_bad")
+        verdicts = res.verdicts.select(*summed, "passed").collect()
+        tot = {k: sum(r[k] for r in verdicts) for k in summed}
+        _write_uniq_sketch(delta_dir, delta_df, tot["n_rows"])
         delta_report = {
-            "rows": agg["rows"] or 0,
-            "json_ok": agg["json_ok"] or 0,
-            "json_err": agg["json_err"] or 0,
-            "sha_bad": agg["sha_bad"] or 0,
-            "buckets": agg["buckets"],
-            "buckets_passed": agg["passed"] or 0,
+            "rows": tot["n_rows"],
+            "json_ok": tot["n_json_ok"],
+            "json_err": tot["n_json_err"],
+            "sha_bad": tot["n_sha_bad"],
+            "buckets": len(verdicts),
+            "buckets_passed": sum(1 for r in verdicts if r["passed"]),
             "n_violation_rows": res.violations.count(),
             "resumed_buckets": len(res.resumed_buckets),
         }
@@ -290,10 +289,21 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
     """Exact whole-table view from the committed window chain's delta
     sinks: per-bucket counter sums + recomputed verdicts, monoid-merged
     schema, HLL-union uniqueness vs exact summed rows. Touches only
-    checkpoint metadata (KBs), never the table."""
+    checkpoint metadata (KBs), never the table.
+
+    The verdict sinks (<= n_deltas x n_buckets rows) are read from the
+    local ``checkpoint_dir`` with pyarrow and folded on the driver:
+    counters summed per bucket, the verdict recomputed with the scan's
+    own rule (``pipeline.bucket_passes``), states monoid-merged in the
+    same loop. Only the HLL sketch union runs in Spark, over the delta
+    sketches read under their known schema — so the job count does not
+    grow with the chain."""
+    import pyarrow.parquet as pq
+
     from schema_guru_spark.core.context import SchemaContext
     from schema_guru_spark.core.microschema import ZERO, loads, merge, render
     from schema_guru_spark.core.transforms import apply_transforms
+    from schema_guru_spark.pipeline import bucket_passes
 
     state = _load_state(checkpoint_dir)
     if state is None:
@@ -304,47 +314,31 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
         return {"n_deltas": 0, "rows": 0, "buckets": 0,
                 "buckets_passed": 0, "pass_rate": 1.0}
 
-    # one read per delta (each verdicts sink has its own chunk=N
-    # partition layout; a multi-root read trips partition discovery)
-    from functools import reduce
-    verdicts = reduce(DataFrame.unionByName, [
-        spark.read.option("basePath", os.path.join(d, "verdicts"))
-             .parquet(os.path.join(d, "verdicts")).drop("chunk")
-        for d in dirs])
-    per_bucket = (verdicts.groupBy("bucket").agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_json_ok").alias("n_json_ok"),
-        F.sum("n_json_err").alias("n_json_err"),
-        F.sum("n_sha_bad").alias("n_sha_bad"),
-        F.sum("n_lang_bad").alias("n_lang_bad"))
-        .withColumn(
-            "passed",
-            (F.coalesce(F.col("n_json_err") /
-                        F.greatest(F.col("n_json_ok") +
-                                   F.col("n_json_err"), F.lit(1)),
-                        F.lit(0.0)) <= max_err_rate)
-            & (F.col("n_sha_bad") == 0) & (F.col("n_lang_bad") == 0))
-        ).collect()
-
-    # cross-delta schema: merge the raw states (driver-side fan-in
-    # over <= n_deltas * n_buckets tiny rows, same shape as the infer
-    # operators' final combine)
+    # counters sum per bucket and the raw states merge (commutative, so
+    # delta and row order cannot matter) — the same fan-in shape as the
+    # infer operators' final combine
     ctx = SchemaContext.make(0)
-    states = verdicts.select("bucket", "state").collect()
+    per_bucket: dict[int, dict] = {}
     by_bucket: dict[int, dict] = {}
     glob = ZERO
-    for r in states:
-        st = loads(r["state"])
-        by_bucket[r["bucket"]] = merge(
-            by_bucket.get(r["bucket"], ZERO), st, ctx)
-        glob = merge(glob, st, ctx)
+    for d in dirs:
+        for r in pq.read_table(os.path.join(d, "verdicts"),
+                               columns=["bucket", *_COUNTERS, "state"]) \
+                   .to_pylist():
+            b = r["bucket"]
+            acc = per_bucket.setdefault(b, dict.fromkeys(_COUNTERS, 0))
+            for k in _COUNTERS:
+                acc[k] += r[k]
+            st = loads(r["state"])
+            by_bucket[b] = merge(by_bucket.get(b, ZERO), st, ctx)
+            glob = merge(glob, st, ctx)
     global_schema = render(apply_transforms(glob, ctx), ctx)
 
     uniq_paths = [os.path.join(d, "uniq") for d in dirs
                   if os.path.isdir(os.path.join(d, "uniq"))]
     uniq: dict[str, Any] = {}
     if uniq_paths:
-        u = (spark.read.parquet(*uniq_paths)
+        u = (spark.read.schema(_UNIQ_SCHEMA).parquet(*uniq_paths)
              .agg(F.sum("n_rows").alias("n_rows"),
                   F.hll_sketch_estimate(F.hll_union_agg("sketch"))
                    .alias("n_distinct_est"))).collect()[0]
@@ -354,10 +348,9 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
                 "rel_gap": round(gap, 6),
                 "uniq_ok": gap <= uniq_tolerance}
 
-    total = {k: sum(r[k] for r in per_bucket)
-             for k in ("n_rows", "n_json_ok", "n_json_err",
-                       "n_sha_bad", "n_lang_bad")}
-    passed = sum(1 for r in per_bucket if r["passed"])
+    total = {k: sum(c[k] for c in per_bucket.values()) for k in _COUNTERS}
+    passed = sum(1 for c in per_bucket.values()
+                 if bucket_passes(c, max_err_rate))
     return {
         "n_deltas": len(dirs),
         "rows": total["n_rows"], "json_ok": total["n_json_ok"],

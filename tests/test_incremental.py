@@ -319,7 +319,7 @@ def test_uncommitted_delta_dir_is_not_double_counted(spark, tmp_path):
 
 # ----------------------------------------------- metadata property law
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 
 @settings(max_examples=25, deadline=None)
@@ -452,3 +452,182 @@ def test_params_pin_canonicalizes_collection_filters(spark, tmp_path):
             spark, tp, ckpt, n_buckets=N_BUCKETS,
             allowed_langs=("json",),
             partition_filter={"lang": ("json",)})
+
+
+# ------------------------------------------- fixed per-append job cost
+
+def test_incremental_append_job_count_flat(spark, tmp_path):
+    """An append's validation cost is fixed: every incremental_validate
+    of a chain runs the same number of Spark jobs, at most 15 (verdict
+    rows built and collected through Arrow, every sink read under its
+    known schema), and cumulative_report runs at most 2 (the verdict
+    sinks fold on the driver; only the HLL union runs in Spark) however
+    many deltas are committed."""
+    from schema_guru_spark.plans.incremental import cumulative_report
+    from schema_guru_spark.run_validation import _next_job_id
+    tp = str(tmp_path / "repos")
+    ckpt = str(tmp_path / "ckpt")
+    langs = ("json", "py")
+    append_snapshot(tp, _vrows(40, "c1", langs=langs), SCHEMA,
+                    partition_by="lang")
+    _run(spark, tp, ckpt)
+    append_jobs, cum_jobs = [], []
+    for j in range(3):
+        append_snapshot(tp, _vrows(12, f"c{j + 2}", start=100 * (j + 1),
+                                   langs=langs),
+                        SCHEMA, partition_by="lang")
+        lo = _next_job_id(spark)
+        rep = _run(spark, tp, ckpt)
+        append_jobs.append(_next_job_id(spark) - lo)
+        spark.catalog.clearCache()
+        assert rep["cumulative"]["n_deltas"] == j + 2
+        lo = _next_job_id(spark)
+        cum = cumulative_report(spark, ckpt)
+        cum_jobs.append(_next_job_id(spark) - lo)
+        assert cum == rep["cumulative"]
+    assert max(append_jobs) <= 15, append_jobs
+    assert append_jobs[0] == append_jobs[2], append_jobs
+    assert max(cum_jobs) <= 2, cum_jobs
+
+
+# ---------------------------------------- driver-side cumulative fold
+
+def _fold_state(doc):
+    from schema_guru_spark.core.context import SchemaContext
+    from schema_guru_spark.core.microschema import derive_text, dumps
+    return dumps(derive_text(doc, SchemaContext.make(0))[0])
+
+
+_FOLD_DOCS = ('{"a": 1}', '{"a": "x", "b": [1, 2]}', '[true, null]',
+              '{"b": 2.5}', '{}')
+
+
+def _write_chain(root, deltas):
+    """A committed chain of verdict sinks laid out as
+    validate_repo_table writes them: one sub-checkpoint per delta,
+    chunk=N partition directories (buckets < 3 in chunk=0, the rest in
+    chunk=3), table_state.json listing the windows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from schema_guru_spark.plans.incremental import _save_state
+    schema = pa.schema(
+        [("bucket", pa.int32())]
+        + [(k, pa.int64()) for k in ("n_rows", "n_json_ok", "n_json_err",
+                                     "n_sha_bad", "n_lang_bad")]
+        + [("schema", pa.string()), ("passed", pa.bool_()),
+           ("state", pa.string())])
+    labels = [f"e000-snap-{k}-{k + 1}" for k in range(len(deltas))]
+    for label, rows in zip(labels, deltas):
+        parts: dict = {}
+        for r in rows:
+            parts.setdefault(0 if r["bucket"] < 3 else 3, []).append(
+                {**{k: v for k, v in r.items() if k != "doc"},
+                 "schema": "{}", "passed": True,
+                 "state": _fold_state(_FOLD_DOCS[r["doc"]])})
+        # a zero-row delta: one empty file that carries the schema
+        for chunk, part in (parts or {0: []}).items():
+            d = os.path.join(root, label, "verdicts", f"chunk={chunk}")
+            os.makedirs(d)
+            pq.write_table(pa.Table.from_pylist(part, schema=schema),
+                           os.path.join(d, "part-00000.parquet"))
+    _save_state(root, {"table_uuid": "t", "snapshot_id": len(deltas),
+                       "epoch": 0, "windows": labels})
+
+
+def _groupby_reference(spark, deltas, max_err_rate):
+    """The cumulative view as a Spark groupBy over the unioned verdict
+    rows, with the pass rule as a Column expression — the formula the
+    fold replaced, kept here as the law's reference."""
+    from schema_guru_spark.core.context import SchemaContext
+    from schema_guru_spark.core.microschema import ZERO, loads, merge, render
+    from schema_guru_spark.core.transforms import apply_transforms
+    from pyspark.sql import functions as F
+    rows = [(r["bucket"], r["n_rows"], r["n_json_ok"], r["n_json_err"],
+             r["n_sha_bad"], r["n_lang_bad"],
+             _fold_state(_FOLD_DOCS[r["doc"]]))
+            for d in deltas for r in d]
+    verdicts = spark.createDataFrame(
+        rows, "bucket int, n_rows bigint, n_json_ok bigint, "
+              "n_json_err bigint, n_sha_bad bigint, n_lang_bad bigint, "
+              "state string")
+    per_bucket = (verdicts.groupBy("bucket").agg(
+        F.sum("n_rows").alias("n_rows"),
+        F.sum("n_json_ok").alias("n_json_ok"),
+        F.sum("n_json_err").alias("n_json_err"),
+        F.sum("n_sha_bad").alias("n_sha_bad"),
+        F.sum("n_lang_bad").alias("n_lang_bad"))
+        .withColumn(
+            "passed",
+            (F.coalesce(F.col("n_json_err") /
+                        F.greatest(F.col("n_json_ok") +
+                                   F.col("n_json_err"), F.lit(1)),
+                        F.lit(0.0)) <= max_err_rate)
+            & (F.col("n_sha_bad") == 0) & (F.col("n_lang_bad") == 0))
+        ).collect()
+    ctx = SchemaContext.make(0)
+    by_bucket, glob = {}, ZERO
+    for r in rows:
+        st = loads(r[-1])
+        by_bucket[r[0]] = merge(by_bucket.get(r[0], ZERO), st, ctx)
+        glob = merge(glob, st, ctx)
+    total = {k: sum(r[k] for r in per_bucket)
+             for k in ("n_rows", "n_json_ok", "n_json_err", "n_sha_bad",
+                       "n_lang_bad")}
+    passed = sum(1 for r in per_bucket if r["passed"])
+    return {
+        "n_deltas": len(deltas),
+        "rows": total["n_rows"], "json_ok": total["n_json_ok"],
+        "json_err": total["n_json_err"], "sha_bad": total["n_sha_bad"],
+        "lang_bad": total["n_lang_bad"],
+        "buckets": len(per_bucket), "buckets_passed": passed,
+        "pass_rate": (round(passed / len(per_bucket), 4)
+                      if per_bucket else 1.0),
+        "uniqueness": {},
+        "schema": render(apply_transforms(glob, ctx), ctx),
+        "bucket_schemas": {b: render(apply_transforms(st, ctx), ctx)
+                           for b, st in sorted(by_bucket.items())},
+    }
+
+
+_verdict_row = st.fixed_dictionaries({
+    "bucket": st.integers(0, 5),
+    "n_json_ok": st.integers(0, 4),
+    "n_json_err": st.integers(0, 4),
+    "n_sha_bad": st.sampled_from((0, 0, 0, 1)),
+    "n_lang_bad": st.sampled_from((0, 0, 0, 2)),
+    "doc": st.integers(0, len(_FOLD_DOCS) - 1),
+}).map(lambda r: {**r, "n_rows": r["n_json_ok"] + r["n_json_err"]
+                  + r["n_sha_bad"] + r["n_lang_bad"]})
+
+
+def _row(bucket, ok, err, sha=0, lang=0, doc=0):
+    return {"bucket": bucket, "n_json_ok": ok, "n_json_err": err,
+            "n_sha_bad": sha, "n_lang_bad": lang, "doc": doc,
+            "n_rows": ok + err + sha + lang}
+
+
+@settings(max_examples=20, deadline=None)
+@given(deltas=st.lists(st.lists(_verdict_row, max_size=6,
+                                unique_by=lambda r: r["bucket"]),
+                       min_size=1, max_size=4),
+       max_err_rate=st.sampled_from((0.0, 0.25, 1 / 3, 0.5)))
+# error rate exactly at the bound (1/4 summed across two deltas), a
+# bucket with zero JSON docs, buckets missing from some deltas, and a
+# zero-row delta in the middle of the chain
+@example(deltas=[[_row(0, 2, 1), _row(1, 0, 0, lang=1), _row(4, 0, 0)],
+                 [],
+                 [_row(0, 1, 0, doc=1), _row(3, 3, 1, doc=2)]],
+         max_err_rate=0.25)
+@example(deltas=[[]], max_err_rate=0.0)
+def test_cumulative_fold_equals_spark_groupby(spark, tmp_path_factory,
+                                              deltas, max_err_rate):
+    """The law behind the driver-side fold: for ANY committed chain of
+    per-delta verdict rows, cumulative_report equals the Spark groupBy
+    over the unioned rows with the pass rule as a Column expression —
+    counters, per-bucket verdicts (err/max(ok+err,1) <= max_err_rate,
+    no sha or lang violation), pass rate and merged schemas."""
+    from schema_guru_spark.plans.incremental import cumulative_report
+    root = str(tmp_path_factory.mktemp("fold") / "ckpt")
+    _write_chain(root, deltas)
+    got = cumulative_report(spark, root, max_err_rate=max_err_rate)
+    assert got == _groupby_reference(spark, deltas, max_err_rate)

@@ -112,6 +112,61 @@ def test_resume_skips_finished_work(spark, repo_df, tmp_path):
     assert res.resumed_buckets == [0, 1, 2, 3]
 
 
+def test_finished_buckets_missing_manifest_is_empty(spark, tmp_path):
+    """No manifest yet (a fresh checkpoint, or one whose manifest was
+    lost) means nothing finished."""
+    mgr = CheckpointManager(spark, str(tmp_path / "fresh"))
+    assert mgr.finished_buckets() == set()
+
+
+def test_finished_buckets_reads_manifest_once(spark, tmp_path):
+    """The manifest is read under MANIFEST_SCHEMA in one job: no
+    existence probe, no schema-inference job."""
+    from schema_guru_spark.run_validation import _next_job_id
+    mgr = CheckpointManager(spark, str(tmp_path / "ck"))
+    mgr.record_done([{"bucket": b, "n_rows": 1} for b in (0, 2, 2, 5)])
+    lo = _next_job_id(spark)
+    assert mgr.finished_buckets() == {0, 2, 5}
+    assert _next_job_id(spark) - lo == 1
+
+
+def test_finished_buckets_corrupt_manifest_raises(spark, repo_df,
+                                                  tmp_path):
+    """An unreadable manifest must fail the run, not read as 'no bucket
+    done' and silently recompute (and re-append) every bucket."""
+    ck = tmp_path / "ck"
+    (ck / "manifest").mkdir(parents=True)
+    (ck / "manifest" / "part-00000.parquet").write_bytes(b"not parquet")
+    mgr = CheckpointManager(spark, str(ck))
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        mgr.finished_buckets()
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        validate_repo_table(spark, repo_df, checkpoint_dir=str(ck),
+                            n_buckets=N_BUCKETS)
+
+
+def test_manifest_metrics_round_trip(spark, repo_df, tmp_path):
+    """The checkpoint branch derives the manifest metrics from the
+    verdict rows it collected through Arrow: the JSON metrics hold real
+    booleans (true/false, never the string "True"), and every manifest
+    row agrees with its bucket's verdict."""
+    ck = str(tmp_path / "ck")
+    res = validate_repo_table(spark, repo_df, checkpoint_dir=ck,
+                              n_buckets=N_BUCKETS, chunk_size=5)
+    verd = {r["bucket"]: r for r in res.verdicts.collect()}
+    man = CheckpointManager(spark, ck).manifest().collect()
+    assert sorted(r["bucket"] for r in man) == list(range(N_BUCKETS))
+    for r in man:
+        metrics = json.loads(r["metrics"])
+        assert metrics == {"passed": verd[r["bucket"]]["passed"]}
+        assert type(metrics["passed"]) is bool
+        assert (r["status"], r["n_rows"], r["n_ok"], r["n_err"]) == (
+            "done", verd[r["bucket"]]["n_rows"],
+            verd[r["bucket"]]["n_json_ok"], verd[r["bucket"]]["n_json_err"])
+    # the strict default fails some buckets: both values round-trip
+    assert {json.loads(r["metrics"])["passed"] for r in man} == {True, False}
+
+
 def test_bucket_salting_spreads_megarepo(spark, repo_df):
     n_salts = 8
     buckets = (repo_df.withColumn("b", bucket_expr(64, n_salts))

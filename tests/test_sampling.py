@@ -143,6 +143,41 @@ def test_pack_sequences_boundary_doc(spark):
     assert out[1]["first_doc"] == 3
 
 
+def test_pack_sequences_null_tokens_count_as_zero(spark, tmp_path):
+    """A NULL token count is coalesced to 0: the document still lands in
+    exactly one sequence (left NULL, its start offset would be NULL and
+    drop it into a NULL seq_id group, breaking conservation). Pinned against the DuckDB
+    oracle twin of pack_sequences_docs over documents whose NULL text
+    has a NULL token count on both engines, and against the driver-side
+    reference with NULL read as 0."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    rng = random.Random(11)
+    docs = [(i, None if i % 4 == 1 else
+             " ".join(["tok"] * rng.randint(1, 900))) for i in range(80)]
+    spark.createDataFrame(docs, "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "documents.parquet"))
+    got = [tuple(r) for r in
+           entry.queries()["pack_sequences_docs"](spark, str(tmp_path))
+           .collect()]
+    con = duckdb.connect()
+    con.sql("CREATE VIEW documents AS SELECT * FROM "
+            f"'{tmp_path}/documents.parquet/*.parquet'")
+    assert got == con.sql(
+        entry.oracle_sql()["pack_sequences_docs"]).fetchall()
+    assert all(r[0] is not None for r in got)
+    assert sum(r[1] for r in got) == len(docs)
+
+    rows = [(i, None if i % 3 == 0 else 150 + i) for i in range(1, 40)]
+    df = spark.createDataFrame(rows, "id long, n_tok long")
+    out = SMP.pack_sequences(df, "id", "n_tok", budget=500,
+                             n_ranges=4).collect()
+    assert {r["seq_id"]: (r["n_docs"], r["n_tokens"], r["first_doc"],
+                          r["last_doc"]) for r in out} == \
+        _pack_reference([(i, n or 0) for i, n in rows], 500)
+
+
 def test_pack_sequences_partition_sweep_input_layout(spark, corpus):
     """Same output whatever the INPUT partitioning (repartitionByRange
     re-ranges internally)."""
