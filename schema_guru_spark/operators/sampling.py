@@ -56,6 +56,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 # sampling decisions hash through md5 over "<salt>:<id>" — the salt
 # decorrelates this operator's keep set from every other md5-keyed
@@ -336,6 +337,12 @@ def topk_by_score(scored: DataFrame, strata_col: str, id_col: str,
     """Keep the k best-scoring rows per stratum, ties broken by id
     ascending (fully deterministic, partition-independent).
 
+    NaN/NULL rule: a NaN score is read as NULL (missing) and comes back
+    as NULL. Missing scores rank after every real score (-inf
+    included), ties among them broken by id ascending — the map-side
+    pandas sort and the final Spark window agree on this order, so the
+    pre-filter never evicts a row the window would keep.
+
     Scale shape: a map-side per-PARTITION top-k (mapInPandas — the
     generator folds all of a partition's Arrow batches, compacting the
     accumulator whenever it exceeds ``compact_every`` rows so memory is
@@ -362,9 +369,17 @@ def topk_by_score(scored: DataFrame, strata_col: str, id_col: str,
             f"passthrough column(s) {sorted(clash)} collide with the "
             f"operator's reserved output names (id, stratum, quality); "
             f"rename them before calling topk_by_score")
+    # NaN -> NULL up front: Spark orders NaN above +inf (first under
+    # DESC) while the pandas pre-filter sorts it last; both put NULL
+    # last. The survivors' NaN also comes back from pandas as NULL
+    # (the Arrow conversion masks it), so normalizing here states the
+    # rule instead of resting on that serializer detail
+    score, score_type = F.col(score_col), scored.schema[score_col].dataType
+    if isinstance(score_type, (DoubleType, FloatType)):
+        score = F.nanvl(score, F.lit(None).cast(score_type))
     narrow = scored.select(
         F.col(id_col).alias("id"), F.col(strata_col).alias("stratum"),
-        F.col(score_col).alias("quality"),
+        score.alias("quality"),
         *[c for c in scored.columns
           if c not in (id_col, strata_col, score_col)])
 

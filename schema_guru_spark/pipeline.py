@@ -19,7 +19,9 @@ Scale design (the whole point):
     (sha2(content,256) == content_sha, lang allow-list) are computed as
     native JVM columns; one ``mapInPandas`` pass then derives JSON
     micro-schemas per doc and folds PER-(task, bucket) partial states —
-    map-side combine. Only the tiny state rows shuffle (groupBy bucket).
+    map-side combine. No shuffle follows it either: the tiny partial
+    rows (at most scan tasks x buckets x 2) are collected and merged
+    per bucket on the driver (states are a commutative monoid).
   * Buckets are a salted hash of repo: pmod(xxhash64(repo) +
     pmod(xxhash64(path), n_salts), n_buckets) — a mega-repo (30% of the
     synthetic table) spreads over n_salts buckets instead of hot-spotting
@@ -59,6 +61,8 @@ DEFAULT_LANGS = ("json", "py", "java", "go", "md")
 
 _SCAN_OUT = ("kind string, bucket int, repo string, lang string, "
              "payload string, n bigint")
+# the per-bucket counters of a partial row and of a verdict row
+_COUNTERS = ("n_rows", "n_json_ok", "n_json_err", "n_sha_bad", "n_lang_bad")
 
 
 # bump when bucket_expr's formula changes: a layout written under a
@@ -172,8 +176,7 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int):
 
         def bucket_counter(b):
             if b not in counters:
-                counters[b] = {"n_rows": 0, "n_json_ok": 0, "n_json_err": 0,
-                               "n_sha_bad": 0, "n_lang_bad": 0}
+                counters[b] = dict.fromkeys(_COUNTERS, 0)
             return counters[b]
 
         for pdf in batches:
@@ -267,26 +270,38 @@ def bucket_passes(c: dict, max_err_rate: float) -> bool:
             and c["n_sha_bad"] == 0 and c["n_lang_bad"] == 0)
 
 
-def _combine_buckets(ctx: SchemaContext, max_err_rate: float = 0.0,
-                     keep_state: bool = False):
-    """applyInPandas over the tiny per-(task,bucket) state rows: merged
-    schema, summed counters and the ``bucket_passes`` verdict."""
+def _fold_buckets(parts: pd.DataFrame, ctx: SchemaContext,
+                  max_err_rate: float = 0.0,
+                  keep_state: bool = False) -> pd.DataFrame:
+    """Fold the scan pass's per-(task, bucket) partial rows (``kind``,
+    ``bucket``, ``payload``; no violations) into one verdict row per
+    bucket, on the driver: merged schema state, summed counters, the
+    ``bucket_passes`` verdict and the rendered schema, sorted by bucket,
+    with the columns and dtypes of ``_VERDICT_SCHEMA[_STATE]``.
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(pdf["bucket"].iloc[0])
-        acc = ZERO
-        c = {"n_rows": 0, "n_json_ok": 0, "n_json_err": 0,
-             "n_sha_bad": 0, "n_lang_bad": 0}
-        for kind, payload in zip(pdf["kind"], pdf["payload"]):
-            if kind == "state":
-                acc = merge(acc, loads(payload), ctx)
-            else:
-                part = json.loads(payload)
-                for k in c:
-                    c[k] += part.get(k, 0)
-        schema_json = json.dumps(
-            render(apply_transforms(acc, ctx), ctx), sort_keys=True)
-        row = {"bucket": bucket, **c, "schema": schema_json,
+    There are at most (scan tasks x buckets x 2) partial rows — a few
+    hundred at test scale, ~15.6k (a few MB) for 16M files over 128
+    splits — so the fold is a plain loop: a Spark combine stage would
+    pay a shuffle and a Python task's fixed cost for the same work."""
+    states: dict[int, dict] = {}
+    counters: dict[int, dict] = {}
+    for kind, bucket, payload in zip(parts["kind"], parts["bucket"],
+                                     parts["payload"]):
+        b = int(bucket)
+        if kind == "state":
+            states[b] = merge(states.get(b, ZERO), loads(payload), ctx)
+        else:
+            c = counters.setdefault(b, dict.fromkeys(_COUNTERS, 0))
+            part = json.loads(payload)
+            for k in _COUNTERS:
+                c[k] += part.get(k, 0)
+    rows = []
+    for b in sorted(counters.keys() | states.keys()):
+        c = counters.get(b) or dict.fromkeys(_COUNTERS, 0)
+        acc = states.get(b, ZERO)
+        row = {"bucket": b, **c,
+               "schema": json.dumps(render(apply_transforms(acc, ctx), ctx),
+                                    sort_keys=True),
                "passed": bucket_passes(c, max_err_rate)}
         if keep_state:
             # the raw monoid state alongside the rendered schema:
@@ -295,9 +310,13 @@ def _combine_buckets(ctx: SchemaContext, max_err_rate: float = 0.0,
             # rendered form cannot do (enum cutoffs and range encasing
             # are lossy)
             row["state"] = dumps(acc)
-        return pd.DataFrame([row])
-
-    return fn
+        rows.append(row)
+    columns = ["bucket", *_COUNTERS, "schema", "passed"]
+    if keep_state:
+        columns.append("state")
+    return pd.DataFrame(rows, columns=columns).astype(
+        {"bucket": "int32", **dict.fromkeys(_COUNTERS, "int64"),
+         "passed": "bool"})
 
 
 _VERDICT_SCHEMA = ("bucket int, n_rows bigint, n_json_ok bigint, "
@@ -330,31 +349,39 @@ def validate_repo_table(
 ) -> ValidationResult:
     """Run the full validation; resumable when checkpoint_dir is set.
 
-    Per chunk of buckets, the <= ``chunk_size`` verdict rows are
-    collected once through Arrow and rebuilt as a local relation.
-    Without a checkpoint, that local relation (collecting it launches
-    no Spark job) and the cached violations are the result. With a
-    checkpoint, each chunk writes, in this order, its violations sink,
-    its verdicts sink (from the local rows) and a manifest append whose
-    per-bucket metrics come from the same local rows — a sink is never
-    re-read to find out what was just written. The result then reads
-    the sinks under their known schemas (no inference job), so a
-    resumed run sees prior chunks' results too.
+    Per chunk of buckets, the scan's per-(task, bucket) partial rows are
+    collected once through Arrow (which also materializes the persisted
+    scan for the violations) and folded on the driver into the
+    <= ``chunk_size`` verdict rows (``_fold_buckets``): no shuffle and
+    no grouped Python stage. A chunk of every bucket over a bucket
+    column computed here scans without a bucket filter; partial or
+    resumed chunks, and a materialized layout, filter.
+
+    The verdict rows are rebuilt as a local relation. Without a
+    checkpoint, that local relation (collecting it launches no Spark
+    job) and the cached violations are the result. With a checkpoint,
+    each chunk writes, in this order, its violations sink, its verdicts
+    sink (from the local rows) and a manifest append whose per-bucket
+    metrics come from the same local rows — a sink is never re-read to
+    find out what was just written. The result then reads the sinks
+    under their known schemas (no inference job), so a resumed run sees
+    prior chunks' results too.
     """
     ctx = ctx or SchemaContext.make(0)
     from schema_guru_spark.operators.infer import _require_commutative
     _require_commutative(ctx)  # strict parity mode is order-dependent
     if not ctx.enum_disabled:
-        # the enum merge is order-sensitive and _combine_buckets folds
-        # state rows in shuffle-arrival order (no partition id to sort
-        # by in _SCAN_OUT) — verdict schemas would depend on the
-        # scheduler. Same guard as the keyed schema stream; enum-capable
-        # inference belongs to operators.infer (partition-order fold).
+        # the enum merge is order-sensitive, and the partial states are
+        # cut at scan-task and Arrow-batch boundaries, which move with
+        # the input's file splits and the core count — verdict schemas
+        # would depend on the layout, not only on the data. Same guard
+        # as the keyed schema stream; enum-capable inference belongs to
+        # operators.infer (partition-order fold).
         raise ValueError(
             "validate_repo_table requires an enum-free context "
             "(enum_cardinality=0, no enum_sets): the reference's enum "
-            "merge is non-commutative and the bucket combine has no "
-            "deterministic fold order. Use infer_json_column / "
+            "merge is non-commutative and the scan's partial states "
+            "depend on the input's split layout. Use infer_json_column / "
             "infer_json_column_by_key for enum-capable inference.")
     has_sha = "content_sha" in df.columns
 
@@ -421,33 +448,34 @@ def validate_repo_table(
 
     verdict_schema = (_VERDICT_SCHEMA_STATE if keep_state
                       else _VERDICT_SCHEMA)
+    # a bucket column computed here lies in [0, n_buckets) and is never
+    # NULL, so a chunk of every bucket needs no filter: it could not
+    # remove a row, and building its n_buckets literals costs py4j time
+    # on every call. A materialized layout's column and partial or
+    # resumed chunks keep it (there it prunes files, or the chunk
+    # excludes buckets)
+    computed_bucket = "bucket" not in df.columns
     all_verdicts = []
     all_violations = []
     for i in range(0, len(remaining), chunk_size):
         chunk = remaining[i:i + chunk_size]
-        sub = prepared.where(F.col("bucket").isin(chunk))
+        sub = (prepared.where(F.col("bucket").isin(chunk))
+               if len(chunk) < n_buckets or not computed_bucket
+               else prepared)
         raw = sub.mapInPandas(
             _scan_pass(ctx, max_violation_examples), _SCAN_OUT).persist()
 
         violations = (raw.where(F.col("kind") == "violation")
                          .select("bucket", "repo", "lang",
                                  F.col("payload").alias("detail")))
-        # the tiny verdicts are materialized NOW so later actions don't
-        # re-run the full scan after unpersist. The <= len(chunk) verdict
-        # rows are collected once through Arrow and rebuilt as a local
-        # relation rather than persisted: a persisted plan keeps its
-        # shuffle partitioning
-        # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is
-        # false), so AQE could not coalesce the combine and it would run
-        # one Python task per shuffle partition instead of one. Later
-        # actions on the local relation re-run nothing.
-        verdict_rows = (raw.where(F.col("kind") != "violation")
-                        .groupBy("bucket")
-                        .applyInPandas(
-                            _combine_buckets(ctx, max_err_rate,
-                                             keep_state=keep_state),
-                            verdict_schema)
-                        .toPandas())
+        # collecting the partial rows materializes the persisted scan,
+        # so later actions on the violations never re-run it. The
+        # verdict rows are folded on the driver and rebuilt as a local
+        # relation: collecting it launches no Spark job
+        verdict_rows = _fold_buckets(
+            raw.where(F.col("kind") != "violation")
+               .select("kind", "bucket", "payload").toPandas(),
+            ctx, max_err_rate, keep_state=keep_state)
         verdicts = spark.createDataFrame(verdict_rows, verdict_schema)
 
         if ckpt:

@@ -60,10 +60,10 @@ from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from schema_guru_spark.pipeline import _COUNTERS
+
 _STATE_FILE = "table_state.json"
 _UNIQ_SCHEMA = "n_rows bigint, sketch binary"
-_COUNTERS = ("n_rows", "n_json_ok", "n_json_err", "n_sha_bad",
-             "n_lang_bad")
 
 
 def _state_path(checkpoint_dir: str) -> str:

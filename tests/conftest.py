@@ -47,3 +47,25 @@ def scan_metrics(df):
 
     walk(ep)
     return out
+
+
+def _sql_executions(spark):
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [execs.apply(k) for k in range(execs.size())]
+
+
+def last_execution_id(spark):
+    """Id of the newest SQL execution in the status store (-1 if none):
+    the watermark for ``executed_plans``."""
+    return max((e.executionId() for e in _sql_executions(spark)),
+               default=-1)
+
+
+def executed_plans(spark, after=-1):
+    """[(execution id, physical plan description)] of the SQL executions
+    with id > ``after``, from the SQL status store — every plan a call
+    executed, including the ones behind internal actions (sink writes,
+    ``toPandas``) that a caller never holds a DataFrame for."""
+    return [(e.executionId(), e.physicalPlanDescription())
+            for e in _sql_executions(spark) if e.executionId() > after]

@@ -458,11 +458,14 @@ def test_params_pin_canonicalizes_collection_filters(spark, tmp_path):
 
 def test_incremental_append_job_count_flat(spark, tmp_path):
     """An append's validation cost is fixed: every incremental_validate
-    of a chain runs the same number of Spark jobs, at most 15 (verdict
+    of a chain runs the same number of Spark jobs, at most 12 (the
+    scan's partial rows folded into verdicts on the driver, verdict
     rows built and collected through Arrow, every sink read under its
-    known schema), and cumulative_report runs at most 2 (the verdict
-    sinks fold on the driver; only the HLL union runs in Spark) however
-    many deltas are committed."""
+    known schema), none of them a grouped Python stage, and
+    cumulative_report runs at most 2 (the verdict sinks fold on the
+    driver; only the HLL union runs in Spark) however many deltas are
+    committed."""
+    from conftest import executed_plans, last_execution_id
     from schema_guru_spark.plans.incremental import cumulative_report
     from schema_guru_spark.run_validation import _next_job_id
     tp = str(tmp_path / "repos")
@@ -476,16 +479,19 @@ def test_incremental_append_job_count_flat(spark, tmp_path):
         append_snapshot(tp, _vrows(12, f"c{j + 2}", start=100 * (j + 1),
                                    langs=langs),
                         SCHEMA, partition_by="lang")
-        lo = _next_job_id(spark)
+        lo, e0 = _next_job_id(spark), last_execution_id(spark)
         rep = _run(spark, tp, ckpt)
         append_jobs.append(_next_job_id(spark) - lo)
+        plans = executed_plans(spark, e0)
         spark.catalog.clearCache()
+        grouped = [i for i, p in plans if "FlatMapGroupsInPandas" in p]
+        assert plans and not grouped, grouped
         assert rep["cumulative"]["n_deltas"] == j + 2
         lo = _next_job_id(spark)
         cum = cumulative_report(spark, ckpt)
         cum_jobs.append(_next_job_id(spark) - lo)
         assert cum == rep["cumulative"]
-    assert max(append_jobs) <= 15, append_jobs
+    assert max(append_jobs) <= 12, append_jobs
     assert append_jobs[0] == append_jobs[2], append_jobs
     assert max(cum_jobs) <= 2, cum_jobs
 

@@ -4,6 +4,7 @@ sha256 invariant, checkpoint/resume."""
 import json
 
 import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from schema_guru_spark.pipeline import (
@@ -334,11 +335,61 @@ def test_crash_between_sink_and_manifest_does_not_duplicate(spark, repo_df,
     assert all(r["count"] == 1 for r in per_bucket)
 
 
+def _bucket_filters(spark, after):
+    """The bucket-membership predicates (``IN (...)`` / ``INSET``) of the
+    filters and partition filters executed after SQL execution
+    ``after``. The lang allow-list's IN sits in a projection, never in
+    a filter."""
+    import re
+    from conftest import executed_plans
+    pat = re.compile(r"^(Condition|PartitionFilters)\s*:.*(\bIN \(|\bINSET\b)",
+                     re.M)
+    return [m.group(0) for _, plan in executed_plans(spark, after)
+            for m in pat.finditer(plan)]
+
+
+def test_bucket_filter_only_where_it_can_remove_rows(spark, repo_df,
+                                                     tmp_path):
+    """A chunk of every bucket over a bucket column computed in the call
+    scans unfiltered (the column is never NULL and lies in
+    [0, n_buckets)); a partial chunk and a resumed run filter, and every
+    run's verdicts equal the one-chunk run's, bucket for bucket."""
+    from conftest import last_execution_id
+
+    def verdicts(res):
+        rows = sorted(tuple(r) for r in res.verdicts.collect())
+        res.violations.unpersist()
+        return rows
+
+    e0 = last_execution_id(spark)
+    one = verdicts(validate_repo_table(spark, repo_df, n_buckets=N_BUCKETS))
+    assert _bucket_filters(spark, e0) == []
+    assert [r[0] for r in one] == list(range(N_BUCKETS))
+
+    e0 = last_execution_id(spark)
+    chunked = verdicts(validate_repo_table(spark, repo_df,
+                                           n_buckets=N_BUCKETS,
+                                           chunk_size=3))
+    assert _bucket_filters(spark, e0)
+    assert chunked == one
+
+    ck = str(tmp_path / "resumed")
+    CheckpointManager(spark, ck).record_done(
+        [{"bucket": b, "n_rows": 0, "n_ok": 0, "n_err": 0}
+         for b in range(3)])
+    e0 = last_execution_id(spark)
+    res = validate_repo_table(spark, repo_df, checkpoint_dir=ck,
+                              n_buckets=N_BUCKETS)
+    assert res.processed_buckets == list(range(3, N_BUCKETS))
+    assert _bucket_filters(spark, e0)
+    assert verdicts(res) == one[3:]
+
+
 def test_bucketed_layout_prunes(spark, tmp_path):
     """materialize_bucketed writes bucket=N/ directories; the validation's
     chunk filter over that layout prunes at the scan, and verdicts match
     the compute-bucket-per-run path exactly."""
-    from conftest import scan_metrics
+    from conftest import last_execution_id, scan_metrics
     from schema_guru_spark.pipeline import (
         materialize_bucketed, validate_repo_table)
     from schema_guru_spark.sources.repo_table import synthesize_repo_table
@@ -359,9 +410,13 @@ def test_bucketed_layout_prunes(spark, tmp_path):
     m = scan_metrics(sub)
     assert m.get("numPartitions", 99) <= len(chunk), m
 
-    # identical verdicts through both layouts
+    # identical verdicts through both layouts; the materialized layout
+    # keeps its bucket filter even for a chunk of every bucket (there it
+    # is a partition filter)
+    e0 = last_execution_id(spark)
     r_layout = validate_repo_table(spark, bucketed, n_buckets=16, n_salts=4,
                                    max_err_rate=0.02)
+    assert any("PartitionFilters" in f for f in _bucket_filters(spark, e0))
     r_compute = validate_repo_table(spark, df, n_buckets=16, n_salts=4,
                                     max_err_rate=0.02)
     a = sorted(tuple(r) for r in r_layout.verdicts
@@ -561,6 +616,112 @@ def test_scan_pass_vectorized_equals_naive_reference():
     assert by_payload[
         "invalid JSON: Expecting property name enclosed in double quotes: "
         "line 1 column 2 (char 1)"] == "r4"
+
+
+# ------------------------------------------ driver-side bucket fold
+
+def _combine_reference(ctx, max_err_rate, keep_state):
+    """The applyInPandas bucket combine the driver fold replaced, kept
+    here as the law's reference: one call per bucket group."""
+    import pandas as pd
+
+    from schema_guru_spark.core.microschema import (ZERO, dumps, loads,
+                                                     merge, render)
+    from schema_guru_spark.core.transforms import apply_transforms
+    from schema_guru_spark.pipeline import bucket_passes
+
+    def fn(pdf):
+        acc = ZERO
+        c = {"n_rows": 0, "n_json_ok": 0, "n_json_err": 0,
+             "n_sha_bad": 0, "n_lang_bad": 0}
+        for kind, payload in zip(pdf["kind"], pdf["payload"]):
+            if kind == "state":
+                acc = merge(acc, loads(payload), ctx)
+            else:
+                part = json.loads(payload)
+                for k in c:
+                    c[k] += part.get(k, 0)
+        row = {"bucket": int(pdf["bucket"].iloc[0]), **c,
+               "schema": json.dumps(render(apply_transforms(acc, ctx), ctx),
+                                    sort_keys=True),
+               "passed": bucket_passes(c, max_err_rate)}
+        if keep_state:
+            row["state"] = dumps(acc)
+        return pd.DataFrame([row])
+
+    return fn
+
+
+_PART_DOCS = ('{"a": 1}', '{"a": "x", "b": [1, 2]}', '[true, null]',
+              '{"b": 2.5, "c": {"d": null}}', '{}')
+
+
+def _counter(bucket, ok=0, err=0, sha=0, lang=0, other=0):
+    """A scan pass counter row; ``other`` counts non-JSON rows."""
+    c = {"n_rows": ok + err + sha + lang + other, "n_json_ok": ok,
+         "n_json_err": err, "n_sha_bad": sha, "n_lang_bad": lang}
+    return ("counter", bucket, json.dumps(c))
+
+
+def _state(bucket, doc):
+    from schema_guru_spark.core.context import SchemaContext
+    from schema_guru_spark.core.microschema import derive_text, dumps
+    return ("state", bucket,
+            dumps(derive_text(_PART_DOCS[doc], SchemaContext.make(0))[0]))
+
+
+_partial_rows = st.lists(st.one_of(
+    st.builds(_counter, st.integers(0, 5), st.integers(0, 4),
+              st.integers(0, 4), st.sampled_from((0, 0, 0, 1)),
+              st.sampled_from((0, 0, 0, 2)), st.integers(0, 3)),
+    st.builds(_state, st.integers(0, 5),
+              st.integers(0, len(_PART_DOCS) - 1))), max_size=14)
+
+
+@settings(max_examples=20, deadline=None)
+@given(parts=_partial_rows,
+       max_err_rate=st.sampled_from((0.0, 0.25, 1 / 3, 1.0)),
+       keep_state=st.booleans())
+# bucket 0: error rate exactly at the bound, split over two tasks;
+# bucket 1: counters only, no JSON; bucket 2: only parse errors;
+# bucket 3: a sha violation beside a clean state
+@example(parts=[_counter(0, ok=2, err=1), _state(0, 0), _counter(0, ok=1),
+                _state(0, 1), _counter(1, other=3), _counter(2, err=2),
+                _counter(3, ok=1, sha=1), _state(3, 3)],
+         max_err_rate=0.25, keep_state=True)
+@example(parts=[_counter(0, ok=2, err=1), _state(0, 0), _counter(0, ok=1),
+                _counter(1, other=3), _counter(2, err=2)],
+         max_err_rate=0.25, keep_state=False)
+@example(parts=[], max_err_rate=0.0, keep_state=True)   # an empty chunk
+@example(parts=[], max_err_rate=0.0, keep_state=False)
+def test_driver_fold_equals_bucket_combine(spark, parts, max_err_rate,
+                                           keep_state):
+    """Law: for ANY set of scan-pass partial rows, the driver fold
+    returns what the grouped Spark combine it replaced returned — one
+    row per bucket with the same counters, verdict, rendered schema and
+    (with keep_state) serialized state, under the verdict schema's
+    columns and dtypes."""
+    import pandas as pd
+
+    from schema_guru_spark.core.context import SchemaContext
+    from schema_guru_spark.pipeline import (_VERDICT_SCHEMA,
+                                            _VERDICT_SCHEMA_STATE,
+                                            _fold_buckets)
+    ctx = SchemaContext.make(0)
+    schema = _VERDICT_SCHEMA_STATE if keep_state else _VERDICT_SCHEMA
+    got = _fold_buckets(pd.DataFrame(parts,
+                                     columns=["kind", "bucket", "payload"]),
+                        ctx, max_err_rate, keep_state=keep_state)
+    ref = (spark.createDataFrame(parts, "kind string, bucket int, "
+                                        "payload string")
+           .groupBy("bucket")
+           .applyInPandas(_combine_reference(ctx, max_err_rate, keep_state),
+                          schema)
+           .toPandas().sort_values("bucket", ignore_index=True))
+    pd.testing.assert_frame_equal(got, ref)
+    # the fold's frame rebuilds as the verdict relation unchanged
+    assert [tuple(r) for r in spark.createDataFrame(got, schema).collect()] \
+        == list(got.itertuples(index=False, name=None))
 
 
 def test_null_fields_are_violations_not_crashes(spark):
@@ -786,21 +947,27 @@ def small_table(spark, tmp_path_factory):
 def test_run_validation_job_count_guard(spark, small_table):
     """The validation job is bound by fixed per-job cost, so its Spark
     job count is pinned: one run_validation.main call submits at most
-    18 jobs (the fused constraint aggregate plus the verdicts collected
-    to a local relation; 31 before). The no-checkpoint verdicts are a
-    local relation — no Exchange, no Python node — so later actions
-    never re-run the scan or the bucket combine."""
+    15 jobs (the fused constraint aggregate, and the per-bucket partial
+    rows folded on the driver; 31, then 17 before). No executed plan
+    holds a grouped Python node: the bucket fan-in is not a Spark
+    stage. The no-checkpoint verdicts are a local relation — no
+    Exchange, no Python node — so later actions never re-run the
+    scan."""
+    from conftest import executed_plans, last_execution_id
     from schema_guru_spark.run_validation import _next_job_id, main as run_main
     argv = ["--input", small_table, "--cpus", "4", "--buckets", "8",
             "--salts", "4", "--max-err-rate", "0.02"]
     run_main(argv)   # warm: Python workers, codegen
     spark.catalog.clearCache()
-    lo = _next_job_id(spark)
+    lo, e0 = _next_job_id(spark), last_execution_id(spark)
     out = run_main(argv)
     n_jobs = _next_job_id(spark) - lo
+    plans = executed_plans(spark, e0)
     spark.catalog.clearCache()
     assert out["rows"] == 3000 and out["sha_bad"] == 3
-    assert n_jobs <= 18, n_jobs
+    assert n_jobs <= 15, n_jobs
+    grouped = [i for i, p in plans if "FlatMapGroupsInPandas" in p]
+    assert plans and not grouped, grouped
 
     res = validate_repo_table(spark, spark.read.parquet(small_table),
                               n_buckets=8, n_salts=4)

@@ -233,6 +233,72 @@ def test_topk_ties_break_by_id(spark):
     assert [(r["rank"], r["id"]) for r in out] == [(1, 3), (2, 7)]
 
 
+def _nan_scored_rows():
+    """Scores with NaN, NULL, +-inf and ties; stratum 'sparse' holds
+    fewer real scores than k, so NaN/NULL rows must fill its tail."""
+    rng = random.Random(7)
+    special = [float("nan"), None, float("inf"), float("-inf"), 0.5]
+    rows = []
+    for i in range(60):
+        s = ("a", "b", "hot")[i % 3]
+        q = (special[i % 5] if i % 4 == 0
+             else float(rng.randint(0, 8)) / 8.0)
+        rows.append((i, s, q))
+    rows += [(100, "sparse", float("nan")), (101, "sparse", 0.25),
+             (102, "sparse", None), (103, "sparse", float("nan")),
+             (104, "sparse", 0.75)]
+    return rows
+
+
+def _nan_topk_reference(rows, k):
+    """Brute force under the NaN/NULL rule: NaN is NULL, missing scores
+    rank after every real score, ties by id."""
+    missing = [(i, s, None if q is None or math.isnan(q) else q)
+               for i, s, q in rows]
+    out = []
+    for s in sorted({s for _, s, _ in missing}):
+        ranked = sorted((r for r in missing if r[1] == s),
+                        key=lambda r: (r[2] is None, -(r[2] or 0.0), r[0]))
+        out += [(s, rank, i, q)
+                for rank, (i, _s, q) in enumerate(ranked[:k], start=1)]
+    return out
+
+
+@pytest.mark.parametrize("nparts", [1, 4])
+def test_topk_nan_scores_rank_last(spark, tmp_path, nparts):
+    """A NaN score is NULL: it ranks after every real score at any
+    partitioning (the map-side pandas pre-filter sorts NaN last while a
+    Spark DESC window ranks NaN first, so an unnormalized NaN row's fate
+    depended on which partition held it). Pinned against the brute
+    force and a DuckDB window that applies the same NaN -> NULL rule."""
+    import duckdb
+
+    rows, k = _nan_scored_rows(), 3
+    path = str(tmp_path / f"scored{nparts}")
+    spark.createDataFrame(rows, "id long, stratum string, quality double") \
+        .repartition(nparts).write.parquet(path)
+    df = spark.read.parquet(path).repartition(nparts)
+    got = [tuple(r) for r in
+           SMP.topk_by_score(df, "stratum", "id", "quality", k)
+           .select("stratum", "rank", "id", "quality").collect()]
+    ref = _nan_topk_reference(rows, k)
+    assert got == ref
+    assert ("sparse", 3, 100, None) in got   # NaN fills the sparse tail
+    con = duckdb.connect()
+    oracle = con.sql(f"""
+        SELECT stratum, rank, id, quality FROM (
+          SELECT stratum, id, quality,
+                 row_number() OVER (PARTITION BY stratum
+                                    ORDER BY quality DESC NULLS LAST,
+                                             id ASC) AS rank
+          FROM (SELECT id, stratum,
+                       CASE WHEN isnan(quality) THEN NULL
+                            ELSE quality END AS quality
+                FROM read_parquet('{path}/*.parquet')))
+        WHERE rank <= {k} ORDER BY stratum, rank""").fetchall()
+    assert got == oracle
+
+
 def test_stratified_sample_streams_stateless(spark, tmp_path, corpus):
     """stratified_sample is a pure projection+filter, so the SAME
     function applies unchanged to a streaming DataFrame: stream==batch
