@@ -18,10 +18,19 @@ Scale design (the whole point):
   * The big-table scan NEVER shuffles content. Row-level checks
     (sha2(content,256) == content_sha, lang allow-list) are computed as
     native JVM columns; one ``mapInPandas`` pass then derives JSON
-    micro-schemas per doc and folds PER-(task, bucket) partial states —
-    map-side combine. No shuffle follows it either: the tiny partial
-    rows (at most scan tasks x buckets x 2) are collected and merged
-    per bucket on the driver (states are a commutative monoid).
+    micro-schemas per doc and folds them into ONE partial row per
+    (scan task, bucket) — map-side combine. A partial row has the shape
+    of a verdict row: the five ``_COUNTERS`` as bigints and the schema
+    state as serialized text (NULL when the bucket saw no JSON doc).
+    No shuffle follows the scan: the partial rows (at most scan tasks x
+    buckets) are collected and folded per bucket on the driver
+    (``_fold_buckets``; counters sum and states merge, both commutative
+    monoids).
+  * One fold serves every fan-in level. ``_fold_buckets`` folds a
+    chunk's partial rows into its verdict rows, and the same function
+    folds the committed deltas' verdict rows into the incremental
+    cumulative view (plans/incremental.py). A new summable per-bucket
+    column is one column in that shape, summed in that one fold.
   * Buckets are a salted hash of repo: pmod(xxhash64(repo) +
     pmod(xxhash64(path), n_salts), n_buckets) — a mega-repo (30% of the
     synthetic table) spreads over n_salts buckets instead of hot-spotting
@@ -42,7 +51,6 @@ the reference's errors.collect-to-driver (SchemaDerive.scala:98).
 from __future__ import annotations
 
 import json
-import math
 from dataclasses import dataclass, field
 from typing import Iterator, Optional, Sequence
 
@@ -59,10 +67,16 @@ from schema_guru_spark.plans.checkpoint import (CheckpointManager,
 
 DEFAULT_LANGS = ("json", "py", "java", "go", "md")
 
-_SCAN_OUT = ("kind string, bucket int, repo string, lang string, "
-             "payload string, n bigint")
+# the uniqueness key of the repo table
+_KEY = ("repo", "path", "commit")
 # the per-bucket counters of a partial row and of a verdict row
 _COUNTERS = ("n_rows", "n_json_ok", "n_json_err", "n_sha_bad", "n_lang_bad")
+# the scan pass's two row shapes in one frame: a partial row fills
+# bucket, counters and state; a violation row fills bucket, repo, lang
+# and detail (never NULL for a violation, always NULL for a partial row)
+_SCAN_COLS = ("bucket", *_COUNTERS, "state", "repo", "lang", "detail")
+_SCAN_OUT = ("bucket int, " + ", ".join(f"{c} bigint" for c in _COUNTERS)
+             + ", state string, repo string, lang string, detail string")
 
 
 # bump when bucket_expr's formula changes: a layout written under a
@@ -162,9 +176,16 @@ def bucket_expr(n_buckets: int, n_salts: int):
     ).cast("int")
 
 
+def _scan_rows(**cols) -> pd.DataFrame:
+    """A frame of ``_SCAN_OUT`` rows; the columns not given are NULL."""
+    return pd.DataFrame({c: cols.get(c) for c in _SCAN_COLS})
+
+
 def _scan_pass(ctx: SchemaContext, max_violation_examples: int):
     """mapInPandas fn: per-batch vectorized flag counting + per-doc JSON
-    derivation folded into per-(task, bucket) states."""
+    derivation folded into per-(task, bucket) states. Violation rows are
+    yielded as the batches find them; the task ends with one partial row
+    per bucket it saw (counters, and the serialized state or NULL)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -201,18 +222,11 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int):
             viol_mask = ~(sha_ok & lang_ok)
             if viol_mask.any():
                 bad = pdf[viol_mask].head(max_violation_examples)
-                out = pd.DataFrame({
-                    "kind": "violation",
-                    "bucket": bad["bucket"].astype("int32"),
-                    "repo": bad["repo"],
-                    "lang": bad["lang"],
-                    "payload": [
-                        "sha256 mismatch" if not s else "lang not allowed"
-                        for s in bad["sha_ok"]
-                    ],
-                    "n": 1,
-                })
-                yield out
+                yield _scan_rows(
+                    bucket=bad["bucket"].astype("int32"),
+                    repo=bad["repo"], lang=bad["lang"],
+                    detail=["sha256 mismatch" if not s else "lang not allowed"
+                            for s in bad["sha_ok"]])
 
             jidx = np.flatnonzero(pdf["lang"].to_numpy() == "json")
             if len(jidx):
@@ -233,22 +247,18 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int):
                     # repo — copies of the same bad text can live in
                     # other repos of the same bucket
                     jrepo = pdf["repo"].to_numpy()[jidx]
-                    e = pd.DataFrame(
-                        [(int(jbk[i]), jrepo[i], "json", msg)
-                         for i, msg in errors],
-                        columns=["bucket", "repo", "lang", "payload"])
-                    e.insert(0, "kind", "violation")
-                    e["n"] = 1
-                    yield e[["kind", "bucket", "repo", "lang", "payload", "n"]]
+                    pos = [i for i, _ in errors]
+                    yield _scan_rows(bucket=jbk[pos].astype("int32"),
+                                     repo=jrepo[pos], lang="json",
+                                     detail=[msg for _, msg in errors])
 
-        rows = []
-        for b, c in counters.items():
-            rows.append(("counter", b, "", "", json.dumps(c), c["n_rows"]))
-        for b, s in states.items():
-            rows.append(("state", b, "", "", dumps(s), 0))
-        if rows:
-            yield pd.DataFrame(rows, columns=["kind", "bucket", "repo",
-                                              "lang", "payload", "n"])
+        if counters:
+            buckets = list(counters)
+            yield _scan_rows(
+                bucket=buckets,
+                **{k: [counters[b][k] for b in buckets] for k in _COUNTERS},
+                state=[dumps(states[b]) if b in states else None
+                       for b in buckets])
 
     return fn
 
@@ -270,53 +280,66 @@ def bucket_passes(c: dict, max_err_rate: float) -> bool:
             and c["n_sha_bad"] == 0 and c["n_lang_bad"] == 0)
 
 
+def verdict_summary(rows) -> dict:
+    """Totals over verdict rows (Spark ``Row``s or dict records with the
+    ``_COUNTERS`` and ``passed``): summed counters, bucket and passing
+    bucket counts, and the pass rate — vacuously 1.0 over zero buckets
+    (an empty or fully filtered table has no failing partition). Every
+    report of the validation job and of the incremental job totals its
+    verdict rows here."""
+    rows = list(rows)
+    tot = {k: int(sum(r[k] for r in rows)) for k in _COUNTERS}
+    passed = sum(1 for r in rows if r["passed"])
+    return {"rows": tot["n_rows"], "json_ok": tot["n_json_ok"],
+            "json_err": tot["n_json_err"], "sha_bad": tot["n_sha_bad"],
+            "lang_bad": tot["n_lang_bad"],
+            "buckets": len(rows), "buckets_passed": passed,
+            "pass_rate": round(passed / len(rows), 4) if rows else 1.0}
+
+
 def _fold_buckets(parts: pd.DataFrame, ctx: SchemaContext,
                   max_err_rate: float = 0.0,
                   keep_state: bool = False) -> pd.DataFrame:
-    """Fold the scan pass's per-(task, bucket) partial rows (``kind``,
-    ``bucket``, ``payload``; no violations) into one verdict row per
-    bucket, on the driver: merged schema state, summed counters, the
-    ``bucket_passes`` verdict and the rendered schema, sorted by bucket,
-    with the columns and dtypes of ``_VERDICT_SCHEMA[_STATE]``.
+    """Fold ``(bucket, *_COUNTERS, state)`` rows into one verdict row per
+    bucket, on the driver: counters summed, states merged (a NULL state
+    is the empty schema), the ``bucket_passes`` verdict and the rendered
+    schema, sorted by bucket, with the columns and dtypes of
+    ``_VERDICT_SCHEMA[_STATE]``.
 
-    There are at most (scan tasks x buckets x 2) partial rows — a few
-    hundred at test scale, ~15.6k (a few MB) for 16M files over 128
-    splits — so the fold is a plain loop: a Spark combine stage would
-    pay a shuffle and a Python task's fixed cost for the same work."""
+    The input shape is the scan's partial row AND the verdict row kept
+    with ``keep_state``, so one fold serves both fan-in levels: a
+    chunk's scan-task partials into its verdicts (``validate_repo_table``)
+    and the committed deltas' verdicts into the cumulative view
+    (``plans.incremental.cumulative_report``). Folding folds equals one
+    fold, because counters and states are commutative monoids.
+
+    There are at most (scan tasks x buckets) partial rows — a few
+    hundred at test scale, ~7.8k for 16M files over 128 splits — so a
+    Spark combine stage would pay a shuffle and a Python task's fixed
+    cost for the same work."""
+    counters = (parts.astype(dict.fromkeys(_COUNTERS, "int64"))
+                .groupby("bucket")[list(_COUNTERS)].sum())
     states: dict[int, dict] = {}
-    counters: dict[int, dict] = {}
-    for kind, bucket, payload in zip(parts["kind"], parts["bucket"],
-                                     parts["payload"]):
-        b = int(bucket)
-        if kind == "state":
-            states[b] = merge(states.get(b, ZERO), loads(payload), ctx)
-        else:
-            c = counters.setdefault(b, dict.fromkeys(_COUNTERS, 0))
-            part = json.loads(payload)
-            for k in _COUNTERS:
-                c[k] += part.get(k, 0)
-    rows = []
-    for b in sorted(counters.keys() | states.keys()):
-        c = counters.get(b) or dict.fromkeys(_COUNTERS, 0)
-        acc = states.get(b, ZERO)
-        row = {"bucket": b, **c,
-               "schema": json.dumps(render(apply_transforms(acc, ctx), ctx),
-                                    sort_keys=True),
-               "passed": bucket_passes(c, max_err_rate)}
-        if keep_state:
-            # the raw monoid state alongside the rendered schema:
-            # serialized states from different runs re-merge exactly
-            # (incremental validation's cross-delta schema), which the
-            # rendered form cannot do (enum cutoffs and range encasing
-            # are lossy)
-            row["state"] = dumps(acc)
-        rows.append(row)
-    columns = ["bucket", *_COUNTERS, "schema", "passed"]
+    for b, st in zip(parts["bucket"], parts["state"]):
+        if isinstance(st, str):
+            b = int(b)
+            states[b] = merge(states.get(b, ZERO), loads(st), ctx)
+    out = counters.reset_index()
+    accs = [states.get(int(b), ZERO) for b in out["bucket"]]
+    out["schema"] = pd.Series(
+        [json.dumps(render(apply_transforms(acc, ctx), ctx), sort_keys=True)
+         for acc in accs], dtype=object)
+    out["passed"] = pd.Series(
+        [bucket_passes(c, max_err_rate)
+         for c in out[list(_COUNTERS)].to_dict("records")], dtype=bool)
     if keep_state:
-        columns.append("state")
-    return pd.DataFrame(rows, columns=columns).astype(
-        {"bucket": "int32", **dict.fromkeys(_COUNTERS, "int64"),
-         "passed": "bool"})
+        # the raw monoid state alongside the rendered schema:
+        # serialized states from different runs re-merge exactly
+        # (incremental validation's cross-delta schema), which the
+        # rendered form cannot do (enum cutoffs and range encasing are
+        # lossy)
+        out["state"] = pd.Series([dumps(acc) for acc in accs], dtype=object)
+    return out.astype({"bucket": "int32"})
 
 
 _VERDICT_SCHEMA = ("bucket int, n_rows bigint, n_json_ok bigint, "
@@ -465,16 +488,16 @@ def validate_repo_table(
         raw = sub.mapInPandas(
             _scan_pass(ctx, max_violation_examples), _SCAN_OUT).persist()
 
-        violations = (raw.where(F.col("kind") == "violation")
-                         .select("bucket", "repo", "lang",
-                                 F.col("payload").alias("detail")))
+        is_violation = F.col("detail").isNotNull()
+        violations = raw.where(is_violation).select(
+            "bucket", "repo", "lang", "detail")
         # collecting the partial rows materializes the persisted scan,
         # so later actions on the violations never re-run it. The
         # verdict rows are folded on the driver and rebuilt as a local
         # relation: collecting it launches no Spark job
         verdict_rows = _fold_buckets(
-            raw.where(F.col("kind") != "violation")
-               .select("kind", "bucket", "payload").toPandas(),
+            raw.where(~is_violation)
+               .select("bucket", *_COUNTERS, "state").toPandas(),
             ctx, max_err_rate, keep_state=keep_state)
         verdicts = spark.createDataFrame(verdict_rows, verdict_schema)
 
@@ -540,7 +563,9 @@ def constraint_report(spark: SparkSession, df: DataFrame,
 
       uniqueness of (repo,path,commit): HLL++ screen + exact count over
         the 128-bit key pre-hash (``C.uniqueness_hashed`` with
-        ``prehashed=True`` computes the same fields);
+        ``prehashed=True`` computes the same fields). NULL key parts
+        compare equal at the same position (``C.key_hash``), as in
+        ``C.uniqueness_exact`` and ``key_violation_rows``;
       referential integrity: every fact repo must resolve against the
         repo dimension via broadcast LEFT ANTI join. ``repo_dims`` is a
         one-column (repo) DataFrame — the lakehouse catalog dim in
@@ -563,7 +588,7 @@ def constraint_report(spark: SparkSession, df: DataFrame,
     """
     # ONE pass over the table projects everything the checks need
     # (~30 bytes/row), cached; content is read exactly once here
-    key_cols = ("repo", "path", "commit", "lang")
+    key_cols = (*_KEY, "lang")
     # 128-bit key pre-hash: two independently-seeded xxhash64 columns.
     # One 64-bit hash expects ~27 phantom key collisions at the
     # north-rule's 10^12 rows (birthday n²/2⁶⁵) — wide enough that the
@@ -572,10 +597,8 @@ def constraint_report(spark: SparkSession, df: DataFrame,
     slim = (df.withColumn("bucket", bucket_expr(n_buckets, n_salts))
               .select("bucket", "repo",
                       F.length("content").alias("clen"),
-                      F.xxhash64(F.lit(0x5EED0), "repo", "path", "commit")
-                       .alias("kh1"),
-                      F.xxhash64(F.lit(0x5EED1), "repo", "path", "commit")
-                       .alias("kh2"),
+                      C.key_hash(0x5EED0, _KEY).alias("kh1"),
+                      C.key_hash(0x5EED1, _KEY).alias("kh2"),
                       *[F.col(c).isNull().cast("int").alias(f"_n_{c}")
                         for c in key_cols])
               .persist())
@@ -646,10 +669,8 @@ def constraint_report(spark: SparkSession, df: DataFrame,
             c: round(1.0 - null_counts[c] / n_total, 6)
             for c in (*key_cols, "content")
         },
-        "key_null_counts": {c: null_counts[c]
-                            for c in ("repo", "path", "commit")},
-        "keys_complete": all(
-            null_counts[c] == 0 for c in ("repo", "path", "commit")),
+        "key_null_counts": {c: null_counts[c] for c in _KEY},
+        "keys_complete": all(null_counts[c] == 0 for c in _KEY),
     }
 
 
@@ -664,7 +685,9 @@ def key_violation_rows(df: DataFrame, repo_dims: Optional[DataFrame] = None,
 
     Both are column-pruned scans (never read content). Output is capped
     at ``max_examples`` per kind — violation EXAMPLES for humans; the
-    full counts live in constraint_report.
+    full counts live in constraint_report. The GROUP BY treats NULL key
+    parts as equal at the same position — the rule ``constraint_report``
+    applies through ``C.key_hash`` — so the sink and the verdict agree.
     """
     # group by EXACTLY the uniqueness key (repo, path, commit) — the
     # same tuple constraint_report's screen hashes. lang is reported as

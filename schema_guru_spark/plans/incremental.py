@@ -24,7 +24,10 @@ Each delta is validated by the ordinary ``validate_repo_table`` with
 its own sub-checkpoint (so a killed delta run resumes mid-delta), with
 ``keep_state=True`` so the per-bucket verdict rows carry the raw
 schema-monoid state. Cumulative results are then EXACT, not
-re-scanned:
+re-scanned. The cumulative view is the validation job's own bucket
+fold (``pipeline._fold_buckets``) applied once more, to the committed
+deltas' verdict sinks — the scan folds task partials into a chunk's
+verdict rows, and this module folds those rows across deltas:
 
   * counters (rows / json ok / err / sha / lang) sum per bucket;
     the per-bucket pass verdict is recomputed from the summed
@@ -60,7 +63,8 @@ from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from schema_guru_spark.pipeline import _COUNTERS
+from schema_guru_spark.operators.constraints import key_hash
+from schema_guru_spark.pipeline import _COUNTERS, _KEY, verdict_summary
 
 _STATE_FILE = "table_state.json"
 _UNIQ_SCHEMA = "n_rows bigint, sketch binary"
@@ -98,8 +102,9 @@ def _key_hash() -> "F.Column":
     # 64-bit key hash for the HLL sketch: collisions only DEFLATE the
     # distinct estimate, by ~n^2/2^65 expected keys — ~27 at 10^12
     # rows, i.e. 1e-11 relative, invisible next to the sketch's own
-    # ~1-2% error
-    return F.xxhash64(F.lit(0x1CEB), "repo", "path", "commit")
+    # ~1-2% error. NULL-free keys hash as they always did, so sketches
+    # already stored in checkpoints stay mergeable
+    return key_hash(0x1CEB, _KEY)
 
 
 def _write_uniq_sketch(delta_dir: str, df: DataFrame,
@@ -177,8 +182,9 @@ def incremental_validate(
     """
     from schema_guru_spark.pipeline import (DEFAULT_LANGS,
                                             validate_repo_table)
-    from schema_guru_spark.sources.iceberg_meta import (
-        load_table_metadata, read_iceberg, read_iceberg_incremental)
+    from schema_guru_spark.sources.catalog import (read_table,
+                                                   read_table_appends)
+    from schema_guru_spark.sources.iceberg_meta import load_table_metadata
 
     if on_nonappend not in ("error", "rebase"):
         raise ValueError(f"on_nonappend={on_nonappend!r}: "
@@ -215,16 +221,19 @@ def incremental_validate(
     epoch = state["epoch"] if state else 0
     frm = state["snapshot_id"] if state else None
     mode, delta_df = "baseline", None
+    # the catalog read path: file pruning on identity partitions plus
+    # the residual row filter, so partition_filter means the same rows
+    # here as in a full run, whatever the table is partitioned by
     if state is None:
-        delta_df = read_iceberg(spark, table_path, snapshot_id=cur,
-                                partition_filter=partition_filter)
+        delta_df = read_table(spark, path=table_path, snapshot_id=cur,
+                              partition_filter=partition_filter)
     elif frm == cur:
         mode = "up-to-date"
     else:
         try:
-            delta_df = read_iceberg_incremental(
-                spark, table_path, frm, to_snapshot_id=cur,
-                partition_filter=partition_filter)
+            delta_df = read_table_appends(
+                spark, path=table_path, from_snapshot_id=frm,
+                to_snapshot_id=cur, partition_filter=partition_filter)
             mode = "incremental"
         except NotImplementedError:
             if on_nonappend == "error":
@@ -234,11 +243,11 @@ def incremental_validate(
             epoch += 1
             mode = "rebase"
             frm = None  # the new window is a full scan, not (frm, cur]
-            delta_df = read_iceberg(spark, table_path, snapshot_id=cur,
-                                    partition_filter=partition_filter)
+            delta_df = read_table(spark, path=table_path,
+                                  snapshot_id=cur,
+                                  partition_filter=partition_filter)
 
-    delta_report: dict[str, Any] = {"rows": 0, "buckets": 0,
-                                    "buckets_passed": 0,
+    delta_report: dict[str, Any] = {**verdict_summary([]),
                                     "n_violation_rows": 0,
                                     "resumed_buckets": 0}
     if delta_df is not None:
@@ -249,18 +258,12 @@ def incremental_validate(
             n_buckets=n_buckets, n_salts=n_salts,
             chunk_size=chunk_size, allowed_langs=allowed_langs,
             max_err_rate=max_err_rate, keep_state=True)
-        # <= n_buckets verdict rows: summed on the driver
-        summed = ("n_rows", "n_json_ok", "n_json_err", "n_sha_bad")
-        verdicts = res.verdicts.select(*summed, "passed").collect()
-        tot = {k: sum(r[k] for r in verdicts) for k in summed}
-        _write_uniq_sketch(delta_dir, delta_df, tot["n_rows"])
+        # <= n_buckets verdict rows: totalled on the driver
+        summary = verdict_summary(
+            res.verdicts.select(*_COUNTERS, "passed").collect())
+        _write_uniq_sketch(delta_dir, delta_df, summary["rows"])
         delta_report = {
-            "rows": tot["n_rows"],
-            "json_ok": tot["n_json_ok"],
-            "json_err": tot["n_json_err"],
-            "sha_bad": tot["n_sha_bad"],
-            "buckets": len(verdicts),
-            "buckets_passed": sum(1 for r in verdicts if r["passed"]),
+            **summary,
             "n_violation_rows": res.violations.count(),
             "resumed_buckets": len(res.resumed_buckets),
         }
@@ -291,19 +294,24 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
     schema, HLL-union uniqueness vs exact summed rows. Touches only
     checkpoint metadata (KBs), never the table.
 
-    The verdict sinks (<= n_deltas x n_buckets rows) are read from the
-    local ``checkpoint_dir`` with pyarrow and folded on the driver:
-    counters summed per bucket, the verdict recomputed with the scan's
-    own rule (``pipeline.bucket_passes``), states monoid-merged in the
-    same loop. Only the HLL sketch union runs in Spark, over the delta
-    sketches read under their known schema — so the job count does not
-    grow with the chain."""
+    The view is the validation job's bucket fold over the committed
+    verdict sinks: their rows (<= n_deltas x n_buckets, read from the
+    local ``checkpoint_dir`` with pyarrow) are the ``(bucket,
+    *_COUNTERS, state)`` shape ``pipeline._fold_buckets`` folds, so the
+    per-bucket counters, verdicts and schemas come from that one
+    function, the totals from ``pipeline.verdict_summary``, and the
+    global schema is the merge of the folded bucket states. Only the
+    HLL sketch union runs in Spark, over the delta sketches read under
+    their known schema — so the job count does not grow with the
+    chain."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from schema_guru_spark.core.context import SchemaContext
-    from schema_guru_spark.core.microschema import ZERO, loads, merge, render
+    from schema_guru_spark.core.microschema import (loads, merge_all,
+                                                     render)
     from schema_guru_spark.core.transforms import apply_transforms
-    from schema_guru_spark.pipeline import bucket_passes
+    from schema_guru_spark.pipeline import _fold_buckets
 
     state = _load_state(checkpoint_dir)
     if state is None:
@@ -311,28 +319,16 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
     dirs = [os.path.join(checkpoint_dir, w)
             for w in state.get("windows", [])]
     if not dirs:
-        return {"n_deltas": 0, "rows": 0, "buckets": 0,
-                "buckets_passed": 0, "pass_rate": 1.0}
+        return {"n_deltas": 0, **verdict_summary([])}
 
-    # counters sum per bucket and the raw states merge (commutative, so
-    # delta and row order cannot matter) — the same fan-in shape as the
-    # infer operators' final combine
     ctx = SchemaContext.make(0)
-    per_bucket: dict[int, dict] = {}
-    by_bucket: dict[int, dict] = {}
-    glob = ZERO
-    for d in dirs:
-        for r in pq.read_table(os.path.join(d, "verdicts"),
-                               columns=["bucket", *_COUNTERS, "state"]) \
-                   .to_pylist():
-            b = r["bucket"]
-            acc = per_bucket.setdefault(b, dict.fromkeys(_COUNTERS, 0))
-            for k in _COUNTERS:
-                acc[k] += r[k]
-            st = loads(r["state"])
-            by_bucket[b] = merge(by_bucket.get(b, ZERO), st, ctx)
-            glob = merge(glob, st, ctx)
-    global_schema = render(apply_transforms(glob, ctx), ctx)
+    folded = _fold_buckets(
+        pa.concat_tables(
+            pq.read_table(os.path.join(d, "verdicts"),
+                          columns=["bucket", *_COUNTERS, "state"])
+            for d in dirs).to_pandas(),
+        ctx, max_err_rate, keep_state=True)
+    glob = merge_all((loads(st) for st in folded["state"]), ctx)
 
     uniq_paths = [os.path.join(d, "uniq") for d in dirs
                   if os.path.isdir(os.path.join(d, "uniq"))]
@@ -348,22 +344,11 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
                 "rel_gap": round(gap, 6),
                 "uniq_ok": gap <= uniq_tolerance}
 
-    total = {k: sum(c[k] for c in per_bucket.values()) for k in _COUNTERS}
-    passed = sum(1 for c in per_bucket.values()
-                 if bucket_passes(c, max_err_rate))
     return {
         "n_deltas": len(dirs),
-        "rows": total["n_rows"], "json_ok": total["n_json_ok"],
-        "json_err": total["n_json_err"], "sha_bad": total["n_sha_bad"],
-        "lang_bad": total["n_lang_bad"],
-        "buckets": len(per_bucket), "buckets_passed": passed,
-        # zero observed buckets = vacuously passing (an empty or fully
-        # filtered table has no failing partition)
-        "pass_rate": (round(passed / len(per_bucket), 4)
-                      if per_bucket else 1.0),
+        **verdict_summary(folded.to_dict("records")),
         "uniqueness": uniq,
-        "schema": global_schema,
-        "bucket_schemas": {
-            b: render(apply_transforms(st, ctx), ctx)
-            for b, st in sorted(by_bucket.items())},
+        "schema": render(apply_transforms(glob, ctx), ctx),
+        "bucket_schemas": {int(b): json.loads(sch) for b, sch
+                           in zip(folded["bucket"], folded["schema"])},
     }

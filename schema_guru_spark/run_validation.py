@@ -119,7 +119,10 @@ def main(argv=None) -> dict:
                          "costs, irrelevant at production data scale. "
                          "Incompatible with --checkpoint.")
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS")
+                                or len(os.sched_getaffinity(0))),
+                    help="local[N] cores (default: $SPARK_GRAFT_CPUS, "
+                         "else the CPUs this process may run on)")
     ap.add_argument("--json-out", default=None)
     ap.add_argument("--incremental", action="store_true",
                     help="validate only what was appended to the "
@@ -138,7 +141,9 @@ def main(argv=None) -> dict:
     args = ap.parse_args(argv)
 
     from schema_guru_spark.session import get_spark
-    from schema_guru_spark.pipeline import constraint_report, validate_repo_table
+    from schema_guru_spark.pipeline import (_COUNTERS, constraint_report,
+                                            validate_repo_table,
+                                            verdict_summary)
     from schema_guru_spark.sources.repo_table import synthesize_repo_table
 
     spark = get_spark("sgs-validate", master=f"local[{args.cpus}]",
@@ -256,9 +261,7 @@ def main(argv=None) -> dict:
                                   max_err_rate=args.max_err_rate)
         # at most n_buckets verdict rows (already on the driver without
         # a checkpoint): sum the counters here, not in another Spark job
-        verdicts = res.verdicts.select(
-            "n_rows", "n_json_ok", "n_json_err", "n_sha_bad",
-            "passed").collect()
+        verdicts = res.verdicts.select(*_COUNTERS, "passed").collect()
         n_violations = res.violations.count()
         t_validate = time.perf_counter() - t0
         rep = f_rep.result()
@@ -266,17 +269,9 @@ def main(argv=None) -> dict:
     spark.sparkContext.setJobGroup("", "")
     task_times = _group_task_times(
         spark, ("timed-validate", "timed-constraints"), first_job)
-    tot = {k: sum(r[k] for r in verdicts)
-           for k in ("n_rows", "n_json_ok", "n_json_err", "n_sha_bad")}
-    buckets = len(verdicts)
-    n_passed = sum(1 for r in verdicts if r["passed"])
-    # an EMPTY table has zero counters and zero buckets: report a
-    # vacuous pass (same rule as the incremental path's cumulative view)
+    summary = verdict_summary(verdicts)
     out = {
-        "rows": tot["n_rows"], "json_ok": tot["n_json_ok"],
-        "json_err": tot["n_json_err"], "sha_bad": tot["n_sha_bad"],
-        "buckets": buckets, "buckets_passed": n_passed,
-        "pass_rate": (round(n_passed / buckets, 4) if buckets else 1.0),
+        **summary,
         "n_violation_rows": n_violations,
         "resumed_buckets": len(res.resumed_buckets),
         "wall_sec": round(dt, 3),
@@ -286,7 +281,7 @@ def main(argv=None) -> dict:
         # the wall-clock ratio alone cannot show whether the overlap
         # thread penalizes the small-core leg — task time can)
         "task_time_sec": task_times,
-        "files_per_sec": round(tot["n_rows"] / dt, 1),
+        "files_per_sec": round(summary["rows"] / dt, 1),
         "cpus": args.cpus,
         "constraints": rep,
     }

@@ -353,6 +353,39 @@ def test_incremental_windows_partition_the_full_scan(tmp_path_factory,
         == sum(sizes[i + 1:])
 
 
+def test_partition_filter_on_unpartitioned_column(spark, tmp_path):
+    """partition_filter names a column the table is not partitioned by:
+    file pruning keeps every file, so the delta and the cumulative view
+    must still hold only the filtered rows — the rows read_table
+    returns — and count exactly what a from-scratch validation over
+    read_table counts."""
+    from schema_guru_spark.pipeline import validate_repo_table
+    from schema_guru_spark.sources.catalog import read_table
+    tp = str(tmp_path / "repos")
+    ckpt = str(tmp_path / "ckpt")
+    langs = ("json", "py", "go")
+    flt = {"lang": ["json"]}
+    append_snapshot(tp, _vrows(30, "c1", langs=langs), SCHEMA)
+    r1 = _run(spark, tp, ckpt, partition_filter=flt)
+    n1 = read_table(spark, path=tp, partition_filter=flt).count()
+    assert n1 == 10
+    assert r1["delta"]["rows"] == r1["cumulative"]["rows"] == n1
+
+    append_snapshot(tp, _vrows(30, "c2", langs=langs, start=100), SCHEMA)
+    r2 = _run(spark, tp, ckpt, partition_filter=flt)
+    assert r2["mode"] == "incremental"
+    filtered = read_table(spark, path=tp, partition_filter=flt)
+    assert r2["delta"]["rows"] == filtered.count() - n1 == 10
+    full = validate_repo_table(spark, filtered, n_buckets=N_BUCKETS,
+                               allowed_langs=("json",))
+    rows = full.verdicts.collect()
+    assert {k: r2["cumulative"][k] for k in ("rows", "json_ok", "json_err",
+                                             "sha_bad", "lang_bad")} == {
+        k: sum(r[f"n_{k}"] for r in rows)
+        for k in ("rows", "json_ok", "json_err", "sha_bad", "lang_bad")}
+    assert r2["cumulative"]["rows"] == 20
+
+
 def test_zero_row_delta_is_vacuously_passing(spark, tmp_path):
     """A delta whose partition filter removes every file must not
     crash the sketch union or report a failing pass_rate."""

@@ -595,23 +595,27 @@ def test_scan_pass_vectorized_equals_naive_reference():
         accumulate_doc(ref_states.setdefault(b, {}), v, ctx)
         c["n_json_ok"] += 1
 
-    got_counters = {int(r["bucket"]): json.loads(r["payload"])
-                    for _, r in got[got["kind"] == "counter"].iterrows()}
+    # partial rows: one per bucket, counters and the state (NULL when
+    # the bucket saw no JSON doc); violation rows carry a detail
+    partial = got[got["detail"].isna()]
+    assert partial["bucket"].is_unique
+    got_counters = {int(r["bucket"]): {k: int(r[k]) for k in ref_counters[0]}
+                    for _, r in partial.iterrows()}
     assert got_counters == ref_counters
 
-    got_states = {int(r["bucket"]): r["payload"]
-                  for _, r in got[got["kind"] == "state"].iterrows()}
+    got_states = {int(r["bucket"]): r["state"]
+                  for _, r in partial.iterrows() if pd.notna(r["state"])}
     assert got_states == {b: dumps(s) for b, s in ref_states.items()}
 
-    viol = got[got["kind"] == "violation"]
+    viol = got[got["detail"].notna()]
     # one row per violating instance, repo attributed to a real example
-    assert sorted(zip(viol["bucket"], viol["payload"])) == sorted([
+    assert sorted(zip(viol["bucket"], viol["detail"])) == sorted([
         (1, "sha256 mismatch"), (0, "lang not allowed"),
         (1, "null content"),
         (1, "invalid JSON: Expecting property name enclosed in double "
             "quotes: line 1 column 2 (char 1)"),
     ])
-    by_payload = dict(zip(viol["payload"], viol["repo"]))
+    by_payload = dict(zip(viol["detail"], viol["repo"]))
     assert by_payload["null content"] == "r5"
     assert by_payload[
         "invalid JSON: Expecting property name enclosed in double quotes: "
@@ -634,13 +638,11 @@ def _combine_reference(ctx, max_err_rate, keep_state):
         acc = ZERO
         c = {"n_rows": 0, "n_json_ok": 0, "n_json_err": 0,
              "n_sha_bad": 0, "n_lang_bad": 0}
-        for kind, payload in zip(pdf["kind"], pdf["payload"]):
-            if kind == "state":
-                acc = merge(acc, loads(payload), ctx)
-            else:
-                part = json.loads(payload)
-                for k in c:
-                    c[k] += part.get(k, 0)
+        for part in pdf.to_dict("records"):
+            if part["state"] is not None:
+                acc = merge(acc, loads(part["state"]), ctx)
+            for k in c:
+                c[k] += part[k]
         row = {"bucket": int(pdf["bucket"].iloc[0]), **c,
                "schema": json.dumps(render(apply_transforms(acc, ctx), ctx),
                                     sort_keys=True),
@@ -656,17 +658,24 @@ _PART_DOCS = ('{"a": 1}', '{"a": "x", "b": [1, 2]}', '[true, null]',
               '{"b": 2.5, "c": {"d": null}}', '{}')
 
 
+_PART_COLUMNS = ["bucket", "n_rows", "n_json_ok", "n_json_err",
+                 "n_sha_bad", "n_lang_bad", "state"]
+_PART_SCHEMA = ("bucket int, n_rows bigint, n_json_ok bigint, "
+                "n_json_err bigint, n_sha_bad bigint, n_lang_bad bigint, "
+                "state string")
+
+
 def _counter(bucket, ok=0, err=0, sha=0, lang=0, other=0):
-    """A scan pass counter row; ``other`` counts non-JSON rows."""
-    c = {"n_rows": ok + err + sha + lang + other, "n_json_ok": ok,
-         "n_json_err": err, "n_sha_bad": sha, "n_lang_bad": lang}
-    return ("counter", bucket, json.dumps(c))
+    """A scan pass partial row with counters and no JSON state;
+    ``other`` counts non-JSON rows."""
+    return (bucket, ok + err + sha + lang + other, ok, err, sha, lang, None)
 
 
 def _state(bucket, doc):
+    """A scan pass partial row with zero counters and a state."""
     from schema_guru_spark.core.context import SchemaContext
     from schema_guru_spark.core.microschema import derive_text, dumps
-    return ("state", bucket,
+    return (bucket, 0, 0, 0, 0, 0,
             dumps(derive_text(_PART_DOCS[doc], SchemaContext.make(0))[0]))
 
 
@@ -709,11 +718,9 @@ def test_driver_fold_equals_bucket_combine(spark, parts, max_err_rate,
                                             _fold_buckets)
     ctx = SchemaContext.make(0)
     schema = _VERDICT_SCHEMA_STATE if keep_state else _VERDICT_SCHEMA
-    got = _fold_buckets(pd.DataFrame(parts,
-                                     columns=["kind", "bucket", "payload"]),
+    got = _fold_buckets(pd.DataFrame(parts, columns=_PART_COLUMNS),
                         ctx, max_err_rate, keep_state=keep_state)
-    ref = (spark.createDataFrame(parts, "kind string, bucket int, "
-                                        "payload string")
+    ref = (spark.createDataFrame(parts, _PART_SCHEMA)
            .groupBy("bucket")
            .applyInPandas(_combine_reference(ctx, max_err_rate, keep_state),
                           schema)
@@ -722,6 +729,40 @@ def test_driver_fold_equals_bucket_combine(spark, parts, max_err_rate,
     # the fold's frame rebuilds as the verdict relation unchanged
     assert [tuple(r) for r in spark.createDataFrame(got, schema).collect()] \
         == list(got.itertuples(index=False, name=None))
+
+
+@settings(max_examples=40, deadline=None)
+@given(a=_partial_rows, b=_partial_rows,
+       max_err_rate=st.sampled_from((0.0, 0.25, 1 / 3, 1.0)),
+       keep_state=st.booleans())
+# counter-only buckets (no state) on both sides and in one side only
+@example(a=[_counter(0, ok=2, err=1), _counter(1, other=3)],
+         b=[_counter(1, err=1), _state(2, 1), _counter(2, ok=1)],
+         max_err_rate=0.25, keep_state=True)
+@example(a=[_counter(0, ok=1), _state(0, 2)], b=[],          # an empty side
+         max_err_rate=0.0, keep_state=False)
+@example(a=[], b=[], max_err_rate=0.0, keep_state=True)
+def test_fold_of_folds_equals_one_fold(a, b, max_err_rate, keep_state):
+    """Law: ``_fold_buckets`` over two row sets together equals
+    ``_fold_buckets`` over each set's own fold (kept with its state).
+    That is what lets one function fold scan-task partials into a
+    chunk's verdict rows AND committed deltas' verdict rows into the
+    cumulative view: a verdict row is a partial row of the next level."""
+    import pandas as pd
+
+    from schema_guru_spark.core.context import SchemaContext
+    from schema_guru_spark.pipeline import _fold_buckets
+    ctx = SchemaContext.make(0)
+
+    def fold(parts, keep):
+        return _fold_buckets(parts, ctx, max_err_rate, keep_state=keep)
+
+    A = pd.DataFrame(a, columns=_PART_COLUMNS)
+    B = pd.DataFrame(b, columns=_PART_COLUMNS)
+    once = fold(pd.concat([A, B], ignore_index=True), keep_state)
+    twice = fold(pd.concat([fold(A, True), fold(B, True)],
+                           ignore_index=True), keep_state)
+    pd.testing.assert_frame_equal(once, twice)
 
 
 def test_null_fields_are_violations_not_crashes(spark):
@@ -855,9 +896,9 @@ def test_constraint_report_equals_standalone_operators(spark, law_tables,
     key_cols = ("repo", "path", "commit", "lang")
     slim = (df.withColumn("bucket", bucket_expr(nb, ns))
               .select("bucket", "repo", F.length("content").alias("clen"),
-                      F.xxhash64(F.lit(0x5EED0), "repo", "path", "commit")
+                      C.key_hash(0x5EED0, ("repo", "path", "commit"))
                        .alias("kh1"),
-                      F.xxhash64(F.lit(0x5EED1), "repo", "path", "commit")
+                      C.key_hash(0x5EED1, ("repo", "path", "commit"))
                        .alias("kh2")))
     uniq = C.uniqueness_hashed(slim, ["kh1", "kh2"],
                                prehashed=True).collect()[0]
@@ -909,6 +950,49 @@ def test_constraint_report_equals_standalone_operators(spark, law_tables,
         assert ri_explicit > ri_self
     if table == "empty":
         assert rep["n_rows"] == 0 and rep["worst_bucket_psi"] == 0.0
+
+
+@pytest.mark.parametrize("keys", [
+    # NULLs at different positions over the same non-NULL values: two
+    # distinct keys (xxhash64 alone skips the NULLs and aliases them)
+    [("r", None, "c"), ("r", "c", None), ("x", "y", "z")],
+    # a NULL at the same position: one key, seen twice
+    [("r", None, "c"), ("r", None, "c"), ("r", "c", None)],
+], ids=["null_positions_differ", "null_positions_equal"])
+def test_null_key_parts_agree_everywhere(spark, keys):
+    """Every uniqueness path applies one rule to keys with NULL parts:
+    NULL parts compare equal at the same position. constraint_report,
+    uniqueness_hashed, uniqueness_exact and key_violation_rows agree
+    with each other and with DuckDB's count(DISTINCT (repo, path,
+    commit))."""
+    import duckdb
+
+    from schema_guru_spark.operators import constraints as C
+    from schema_guru_spark.pipeline import key_violation_rows
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (repo VARCHAR, path VARCHAR, "
+                "commit VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", keys)
+    n_rows, n_distinct = con.execute(
+        "SELECT count(*), count(DISTINCT (repo, path, commit)) "
+        "FROM t").fetchone()
+    n_dup_groups = con.execute(
+        "SELECT count(*) FROM (SELECT 1 FROM t GROUP BY repo, path, "
+        "commit HAVING count(*) > 1)").fetchone()[0]
+
+    df = spark.createDataFrame([(*k, "json", "{}") for k in keys],
+                               "repo string, path string, commit string, "
+                               "lang string, content string")
+    cols = ["repo", "path", "commit"]
+    rep = constraint_report(spark, df, n_buckets=4, n_salts=2)
+    hashed = C.uniqueness_hashed(df, cols).collect()[0]
+    exact = C.uniqueness_exact(df, cols).collect()[0]
+    assert (rep["n_rows"], rep["n_exact_distinct"]) == (n_rows, n_distinct)
+    assert rep["keys_unique"] == (n_rows == n_distinct)
+    assert (hashed["n_rows"], hashed["n_exact"]) == (n_rows, n_distinct)
+    assert (exact["n_rows"], exact["n_distinct"]) == (n_rows, n_distinct)
+    assert key_violation_rows(df, n_buckets=4, n_salts=2).count() \
+        == n_dup_groups
 
 
 def _jobs_in(spark, lo, hi):
