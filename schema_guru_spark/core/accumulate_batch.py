@@ -110,12 +110,13 @@ def fold_keyed(texts, keys, ctx: SchemaContext,
 
     Each distinct text is parsed once (``pd.factorize``). Enum-off
     contexts then collapse rows on a fused (key, text) ``np.unique``:
-    a document seen n >= 2 times under one key folds twice, because the
-    monoid stabilizes after one self-merge (test_merge_self_stabilizes),
-    and each key's documents fold in one ``fold_docs`` pass. Enum-on
-    contexts fold each key's documents in row order instead: the
-    reference's enum merge is order-sensitive (SchemaWithEnum.scala:
-    57-70), and the collapse reorders documents."""
+    a document seen n >= 2 times under one key folds once, because
+    folding it again leaves the accumulator unchanged
+    (test_fold_of_a_repeated_doc_equals_one_fold), and each key's
+    documents fold in one ``fold_docs`` pass. Enum-on contexts fold
+    each key's documents in row order instead: the reference's enum
+    merge is order-sensitive (SchemaWithEnum.scala:57-70), and the
+    collapse reorders documents."""
     import numpy as np
     import pandas as pd
 
@@ -170,12 +171,7 @@ def fold_keyed(texts, keys, ctx: SchemaContext,
             c[1] += cnt
             continue
         c[0] += cnt
-        batch = key_docs.get(key)
-        if batch is None:
-            batch = key_docs[key] = []
-        batch.append(doc)
-        if cnt > 1:
-            batch.append(doc)
+        key_docs.setdefault(key, []).append(doc)
 
     states = {
         key: fold_docs({}, batch, ctx if ctx_by_key is None

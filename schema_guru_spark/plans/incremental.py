@@ -65,6 +65,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from schema_guru_spark.operators.constraints import key_hash
 from schema_guru_spark.pipeline import _COUNTERS, _KEY, verdict_summary
+from schema_guru_spark.sources.iceberg_meta import (_VALUE_SETS,
+                                                    load_table_metadata)
 
 _STATE_FILE = "table_state.json"
 _UNIQ_SCHEMA = "n_rows bigint, sketch binary"
@@ -140,16 +142,15 @@ def _run_params(n_buckets: int, n_salts: int, max_err_rate: float,
 
     The dict is compared against a JSON-round-tripped prior, so every
     value must be in JSON-canonical form already: collection-valued
-    partition_filter entries (the read path accepts list/tuple/set
-    alike) become sorted lists — otherwise a tuple filter would
-    spuriously mismatch its own saved list form on the second run, and
-    a set would crash json.dump after the validation scan had already
-    been paid for."""
+    partition_filter entries (``iceberg_meta._VALUE_SETS``, the rule
+    the read path applies too) become sorted lists — otherwise a tuple
+    filter would spuriously mismatch its own saved list form on the
+    second run, and a set would crash json.dump after the validation
+    scan had already been paid for."""
     canon_filter = None
     if partition_filter is not None:
         canon_filter = {
-            k: (sorted(v, key=repr)
-                if isinstance(v, (list, tuple, set, frozenset)) else v)
+            k: (sorted(v, key=repr) if isinstance(v, _VALUE_SETS) else v)
             for k, v in partition_filter.items()
         }
     return {
@@ -184,7 +185,6 @@ def incremental_validate(
                                             validate_repo_table)
     from schema_guru_spark.sources.catalog import (read_table,
                                                    read_table_appends)
-    from schema_guru_spark.sources.iceberg_meta import load_table_metadata
 
     if on_nonappend not in ("error", "rebase"):
         raise ValueError(f"on_nonappend={on_nonappend!r}: "

@@ -62,10 +62,10 @@ def _residual(df: DataFrame, partition_filter: Optional[dict]) -> DataFrame:
     """The one row-level semantics every route shares: col in allowed
     set. Single definition so a semantics fix lands on all routes."""
     from pyspark.sql import functions as F
+
+    from .iceberg_meta import _allowed_values
     for col, want in (partition_filter or {}).items():
-        allowed = list(want) if isinstance(want, (list, tuple,
-                                                  set)) else [want]
-        df = df.where(F.col(col).isin(allowed))
+        df = df.where(F.col(col).isin(_allowed_values(want)))
     return df
 
 

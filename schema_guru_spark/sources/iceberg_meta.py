@@ -116,6 +116,12 @@ class ScanPlan:
     deletes: list[DeleteFile]
 
 
+def _versions(mdir: str) -> list[int]:
+    """The N of every ``v{N}.metadata.json`` in a metadata directory."""
+    return [int(m.group(1)) for f in os.listdir(mdir)
+            if (m := re.match(r"v(\d+)\.metadata\.json$", f))]
+
+
 def load_table_metadata(table_path: str,
                         version: Optional[int] = None) -> dict:
     """Load ``metadata/v{N}.metadata.json`` (version-hint or latest)."""
@@ -130,8 +136,7 @@ def load_table_metadata(table_path: str,
             with open(hint) as fh:
                 version = int(fh.read().strip())
         else:
-            versions = [int(m.group(1)) for f in os.listdir(mdir)
-                        if (m := re.match(r"v(\d+)\.metadata\.json$", f))]
+            versions = _versions(mdir)
             if not versions:
                 raise FileNotFoundError(
                     f"{mdir}: no v*.metadata.json files")
@@ -156,24 +161,6 @@ def _select_snapshot(meta: dict, snapshot_id: Optional[int]) -> dict:
             return s
     raise LookupError(f"snapshot {snapshot_id} not in table metadata "
                       f"(have {[s['snapshot-id'] for s in snaps]})")
-
-
-def _identity_fields(meta: dict, spec_id: int) -> dict[str, str]:
-    """partition-struct field name -> source column name, identity
-    only. A field whose source column was later DROPPED from the
-    current schema is skipped: it can't be named by a current-schema
-    filter, and pruning treats unknown fields as non-prunable."""
-    cols = {f["id"]: f["name"]
-            for sch in meta["schemas"] if sch["schema-id"] ==
-            meta["current-schema-id"]
-            for f in sch["fields"]}
-    for spec in meta["partition-specs"]:
-        if spec["spec-id"] == spec_id:
-            return {f["name"]: cols[f["source-id"]]
-                    for f in spec["fields"]
-                    if f["transform"] == "identity"
-                    and f["source-id"] in cols}
-    raise LookupError(f"partition spec {spec_id} not in metadata")
 
 
 def _spec_fields(meta: dict, spec_id: int) -> list[dict]:
@@ -373,6 +360,19 @@ def _time_transform(transform: str, value: Any, ice_type: str) -> int:
     raise NotImplementedError(f"{transform} over {ice_type}")
 
 
+# a partition_filter value of one of these types allows each of its
+# members; any other value is the one allowed value
+_VALUE_SETS = (list, tuple, set, frozenset)
+
+
+def _allowed_values(want: Any) -> list:
+    """The values a ``partition_filter`` entry allows (see
+    ``_VALUE_SETS``): the one reading shared by file pruning here, the
+    residual row filter (``catalog._residual``) and the pinned
+    checkpoint parameters (``plans.incremental._run_params``)."""
+    return list(want) if isinstance(want, _VALUE_SETS) else [want]
+
+
 def _partition_keeps_spec(raw_part: dict[str, Any], fields: list[dict],
                           partition_filter: Optional[dict[str, Any]],
                           ) -> bool:
@@ -393,11 +393,9 @@ def _partition_keeps_spec(raw_part: dict[str, Any], fields: list[dict],
             continue
         if f["transform"] == "void":
             continue  # every row maps to null: carries no information
-        want = partition_filter[f["source"]]
-        allowed = want if isinstance(want, (list, tuple, set)) else [want]
         try:
             image = {transform_value(f["transform"], v, f["source_type"])
-                     for v in allowed}
+                     for v in _allowed_values(partition_filter[f["source"]])}
         except (NotImplementedError, ValueError, TypeError):
             continue
         if raw_part[f["name"]] not in image:
@@ -405,51 +403,46 @@ def _partition_keeps_spec(raw_part: dict[str, Any], fields: list[dict],
     return True
 
 
-def plan_scan(table_path: str, snapshot_id: Optional[int] = None,
-              partition_filter: Optional[dict[str, Any]] = None,
-              ) -> ScanPlan:
-    """Resolve a snapshot to its live data files AND the delete files
-    that apply to them, pruning by identity partition values before any
-    file is touched.
+def _plan_manifests(table_path: str, meta: dict, manifests: Iterable[dict],
+                    partition_filter: Optional[dict[str, Any]],
+                    added_only: bool) -> ScanPlan:
+    """Turn the entries of ``manifests`` into the data and delete files
+    they list, pruned by ``partition_filter`` — the one manifest-entry
+    decoder behind ``plan_scan`` and ``plan_incremental``.
 
-    ``partition_filter`` maps source column name -> value or list of
-    values. Columns that are not identity partition fields of a
-    manifest's spec simply don't prune that manifest's files (correct,
-    only less selective — Spark's scan still applies the predicate).
-    Delete files are pruned by the same partition predicate: a delete
-    file can only reference rows of its own partition (position deletes
-    name data files explicitly; equality deletes in a partitioned spec
-    apply within their partition per the spec).
-    """
-    meta = load_table_metadata(table_path)
-    snap = _select_snapshot(meta, snapshot_id)
-    if not snap:
-        return ScanPlan([], [])
-    # schema each file was written under = its ADDING snapshot's
-    # schema-id (resolves renamed columns by field id at read time)
+    ``added_only`` keeps only the ADDED entries of each manifest's own
+    snapshot (an incremental window); otherwise every entry that is not
+    DELETED is live. Each file carries its inherited sequence number,
+    its identity partition values and the schema it was WRITTEN under
+    (the adding snapshot's schema-id, which resolves renamed columns by
+    field id at read time)."""
     snap_schema = {s["snapshot-id"]: s.get("schema-id",
                                            meta["current-schema-id"])
                    for s in meta.get("snapshots", [])}
-    _, manifests = read_ocf(_strip_file_uri(snap["manifest-list"]))
     data: list[DataFile] = []
     deletes: list[DeleteFile] = []
     # per-spec lookups hoisted out of the manifest loop: thousands of
     # manifests typically share one or two spec ids, and rebuilding the
     # current-schema column map per manifest is O(manifests x schema)
     # on the metadata-planning hot path
-    spec_cache: dict[int, tuple[dict, list]] = {}
-
-    def _spec(spec_id: int) -> tuple[dict, list]:
-        if spec_id not in spec_cache:
-            spec_cache[spec_id] = (_identity_fields(meta, spec_id),
-                                   _spec_fields(meta, spec_id))
-        return spec_cache[spec_id]
-
+    spec_cache: dict[int, tuple[list, dict]] = {}
     for mf in manifests:
-        ident, fields = _spec(mf["partition_spec_id"])
+        spec_id = mf["partition_spec_id"]
+        if spec_id not in spec_cache:
+            fields = _spec_fields(meta, spec_id)
+            spec_cache[spec_id] = (fields, {
+                f["name"]: f["source"] for f in fields
+                if f["transform"] == "identity"})
+        fields, ident = spec_cache[spec_id]
         _, entries = read_ocf(_strip_file_uri(mf["manifest_path"]))
         for e in entries:
-            if e["status"] == 2:  # DELETED
+            if added_only:
+                # an entry's snapshot_id, when present, must be the
+                # manifest's adding snapshot; when null it inherits it
+                if e["status"] != 1 or e.get("snapshot_id") not in (
+                        None, mf["added_snapshot_id"]):
+                    continue
+            elif e["status"] == 2:  # DELETED
                 continue
             df = e["data_file"]
             # sequence-number inheritance (spec): an ADDED entry with a
@@ -516,14 +509,43 @@ def plan_scan(table_path: str, snapshot_id: Optional[int] = None,
                     sequence_number=seq,
                     equality_ids=list(df.get("equality_ids") or []),
                     partition=part, schema_id=file_schema))
-    if deletes:
-        # keep only deletes that can affect a surviving data file
-        min_data_seq = min((d.sequence_number for d in data), default=0)
-        deletes = [d for d in deletes
-                   if (d.sequence_number >= min_data_seq
-                       if d.content == 1
-                       else d.sequence_number > min_data_seq)]
     return ScanPlan(data, deletes)
+
+
+def plan_scan(table_path: str, snapshot_id: Optional[int] = None,
+              partition_filter: Optional[dict[str, Any]] = None,
+              ) -> ScanPlan:
+    """Resolve a snapshot to its live data files AND the delete files
+    that apply to them, pruning by partition values before any file is
+    touched.
+
+    ``partition_filter`` maps source column name -> value or list of
+    values. It only prunes FILES: the rows of a kept file are not
+    filtered, and a column that is not a partition source of a
+    manifest's spec does not prune that manifest's files at all.
+    ``catalog.read_table`` is the row-exact entry point (it adds the
+    residual row filter). Delete files are pruned by the same partition
+    predicate: a delete file can only reference rows of its own
+    partition (position deletes name data files explicitly; equality
+    deletes in a partitioned spec apply within their partition per the
+    spec).
+    """
+    meta = load_table_metadata(table_path)
+    snap = _select_snapshot(meta, snapshot_id)
+    if not snap:
+        return ScanPlan([], [])
+    _, manifests = read_ocf(_strip_file_uri(snap["manifest-list"]))
+    plan = _plan_manifests(table_path, meta, manifests, partition_filter,
+                           added_only=False)
+    if plan.deletes:
+        # keep only deletes that can affect a surviving data file
+        min_data_seq = min((d.sequence_number for d in plan.data),
+                           default=0)
+        plan.deletes = [d for d in plan.deletes
+                        if (d.sequence_number >= min_data_seq
+                            if d.content == 1
+                            else d.sequence_number > min_data_seq)]
+    return plan
 
 
 def _ancestors_between(meta: dict, from_snapshot_id: int,
@@ -594,7 +616,9 @@ def plan_incremental(table_path: str, from_snapshot_id: int,
     manifests whose ``added_snapshot_id`` is in the window are opened
     (a fast-append commit carries prior manifests forward untouched),
     and within them only status=ADDED entries of the window's
-    snapshots are kept. Partition pruning applies as in ``plan_scan``.
+    snapshots are kept. ``partition_filter`` prunes files as in
+    ``plan_scan`` and, like there, does not filter the rows of a kept
+    file: ``catalog.read_table_appends`` is the row-exact entry point.
     """
     meta = load_table_metadata(table_path)
     if to_snapshot_id is None:
@@ -604,99 +628,48 @@ def plan_incremental(table_path: str, from_snapshot_id: int,
     if from_snapshot_id == to_snapshot_id:
         return ScanPlan([], [])
     window = _ancestors_between(meta, from_snapshot_id, to_snapshot_id)
-    data: list[DataFile] = []
-    spec_cache: dict[int, tuple[dict, list]] = {}
 
-    def _spec(spec_id: int) -> tuple[dict, list]:
-        if spec_id not in spec_cache:
-            spec_cache[spec_id] = (_identity_fields(meta, spec_id),
-                                   _spec_fields(meta, spec_id))
-        return spec_cache[spec_id]
-
-    for snap in window:
-        op = (snap.get("summary") or {}).get("operation", "append")
-        if op != "append":
-            raise NotImplementedError(
-                f"snapshot {snap['snapshot-id']} in the incremental "
-                f"window is '{op}', not 'append' — appends-between is "
-                "undefined across row-removing commits; re-validate "
-                "with a full scan of the target snapshot")
-        _, manifests = read_ocf(_strip_file_uri(snap["manifest-list"]))
-        for mf in manifests:
-            if mf["added_snapshot_id"] != snap["snapshot-id"]:
-                continue  # carried forward from an older commit
-            if mf.get("content", 0) != 0:
+    def added_manifests() -> Iterable[dict]:
+        for snap in window:
+            op = (snap.get("summary") or {}).get("operation", "append")
+            if op != "append":
                 raise NotImplementedError(
-                    f"snapshot {snap['snapshot-id']} summary says "
-                    "'append' but added a delete manifest — corrupt "
-                    "or mislabeled metadata; full scan required")
-            ident, fields = _spec(mf["partition_spec_id"])
-            _, entries = read_ocf(_strip_file_uri(mf["manifest_path"]))
-            for e in entries:
-                if e["status"] != 1:  # only ADDED entries
-                    continue
-                # entry snapshot_id, when present, must be this
-                # snapshot; when inherited (null) it IS this snapshot:
-                # manifests added by other commits were skipped above,
-                # and this snapshot is in the window by construction
-                if e.get("snapshot_id") not in (None,
-                                                snap["snapshot-id"]):
-                    continue
-                df = e["data_file"]
-                seq = e.get("sequence_number")
-                if seq is None:
-                    seq = mf.get("sequence_number", 0)
-                part = {ident[k]: v for k, v in df["partition"].items()
-                        if k in ident}
-                # identity pruning is the identity branch of
-                # _partition_keeps_spec — one call covers all transforms
-                if not _partition_keeps_spec(df["partition"], fields,
-                                             partition_filter):
-                    continue
-                data.append(DataFile(
-                    path=_strip_file_uri(df["file_path"]),
-                    record_count=df["record_count"],
-                    file_size_in_bytes=df["file_size_in_bytes"],
-                    partition=part, sequence_number=seq,
-                    schema_id=snap.get(
-                        "schema-id", meta["current-schema-id"])))
-    return ScanPlan(data, [])
+                    f"snapshot {snap['snapshot-id']} in the incremental "
+                    f"window is '{op}', not 'append' — appends-between "
+                    "is undefined across row-removing commits; "
+                    "re-validate with a full scan of the target "
+                    "snapshot")
+            _, manifests = read_ocf(_strip_file_uri(snap["manifest-list"]))
+            for mf in manifests:
+                if mf["added_snapshot_id"] != snap["snapshot-id"]:
+                    continue  # carried forward from an older commit
+                if mf.get("content", 0) != 0:
+                    raise NotImplementedError(
+                        f"snapshot {snap['snapshot-id']} summary says "
+                        "'append' but added a delete manifest — corrupt "
+                        "or mislabeled metadata; full scan required")
+                yield mf
+
+    return _plan_manifests(table_path, meta, added_manifests(),
+                           partition_filter, added_only=True)
 
 
 def read_iceberg_incremental(spark, table_path: str,
                              from_snapshot_id: int,
                              to_snapshot_id: Optional[int] = None,
                              partition_filter: Optional[dict] = None):
-    """DataFrame of exactly the rows appended in ``(from, to]`` —
-    a parquet scan over the incrementally planned file list (no
-    delete application needed: the window is append-only by
-    construction, see ``plan_incremental``).
+    """DataFrame of the rows appended in ``(from, to]``: the
+    ``read_iceberg`` read over the incrementally planned file list (no
+    delete application: the window is append-only by construction, see
+    ``plan_incremental``), so files written before a column rename are
+    projected to the CURRENT schema by field id as there.
 
-    Files are grouped by the schema they were written under and
-    projected to the CURRENT schema by field id, exactly like
-    ``read_iceberg`` — an incremental window that spans a column
-    rename would otherwise read the post-rename files' renamed
-    column as null (plain multi-path parquet reads unify schemas
-    by NAME, silently dropping the renamed physical column)."""
-    from functools import reduce
-
-    from pyspark.sql import DataFrame as _DF
-
+    ``partition_filter`` only prunes files; rows of the kept files are
+    not filtered. ``catalog.read_table_appends`` is the row-exact entry
+    point."""
     plan = plan_incremental(table_path, from_snapshot_id,
                             to_snapshot_id, partition_filter)
-    meta = load_table_metadata(table_path)
-    cur_schema = _current_schema(meta)
-    if not plan.data:
-        ddl = ", ".join(f"`{f['name']}` {_ICE_TO_SPARK[f['type']]}"
-                        for f in cur_schema["fields"])
-        return spark.createDataFrame([], ddl)
-    by_schema: dict[int, list[str]] = {}
-    for f in plan.data:
-        by_schema.setdefault(f.schema_id, []).append(f.path)
-    parts = [_project_to_schema(spark.read.parquet(*paths), meta,
-                                sid, cur_schema)
-             for sid, paths in sorted(by_schema.items())]
-    return reduce(_DF.unionByName, parts)
+    return _read_plan(spark, load_table_metadata(table_path), plan)
 
 
 def data_files(table_path: str, snapshot_id: Optional[int] = None,
@@ -794,9 +767,6 @@ def rename_column(table_path: str, old_name: str, new_name: str) -> int:
     schema-id."""
     table_path = os.path.abspath(table_path)
     meta = load_table_metadata(table_path)
-    mdir = os.path.join(table_path, "metadata")
-    version = max(int(m.group(1)) for f in os.listdir(mdir)
-                  if (m := re.match(r"v(\d+)\.metadata\.json$", f)))
     cur = _current_schema(meta)
     names = [f["name"] for f in cur["fields"]]
     if old_name not in names:
@@ -808,15 +778,10 @@ def rename_column(table_path: str, old_name: str, new_name: str) -> int:
         "type": "struct", "schema-id": new_id,
         "fields": [dict(f, name=new_name) if f["name"] == old_name
                    else dict(f) for f in cur["fields"]]}
-    out = dict(meta)
-    out["schemas"] = meta["schemas"] + [new_schema]
-    out["current-schema-id"] = new_id
-    out["last-updated-ms"] = meta["last-updated-ms"] + 1
-    with open(os.path.join(mdir, f"v{version + 1}.metadata.json"),
-              "w") as fh:
-        json.dump(out, fh, indent=1)
-    with open(os.path.join(mdir, "version-hint.text"), "w") as fh:
-        fh.write(str(version + 1))
+    _commit_metadata(table_path, dict(meta, **{
+        "schemas": meta["schemas"] + [new_schema],
+        "current-schema-id": new_id,
+        "last-updated-ms": meta["last-updated-ms"] + 1}))
     return new_id
 
 
@@ -827,6 +792,21 @@ def read_iceberg(spark, table_path: str,
     layer: snapshot selection + manifest partition pruning, then a
     plain Spark parquet scan over only the surviving files, then
     merge-on-read delete application.
+
+    ``partition_filter`` only prunes files (see ``plan_scan``): rows of
+    the kept files are not filtered. ``catalog.read_table`` is the
+    row-exact entry point.
+    """
+    meta = load_table_metadata(table_path)
+    return _read_plan(spark, meta,
+                      plan_scan(table_path, snapshot_id, partition_filter))
+
+
+def _read_plan(spark, meta: dict, plan: ScanPlan):
+    """The one projected read behind ``read_iceberg`` and
+    ``read_iceberg_incremental``: a parquet scan of the planned data
+    files, each projected to the current schema by field id, then the
+    plan's deletes (if any) applied.
 
     Deletes are applied with anti-joins, all JVM-side:
 
@@ -849,9 +829,7 @@ def read_iceberg(spark, table_path: str,
     from pyspark.sql import DataFrame as _DF
     from pyspark.sql import functions as F
 
-    meta = load_table_metadata(table_path)
     cur_schema = _current_schema(meta)
-    plan = plan_scan(table_path, snapshot_id, partition_filter)
     if not plan.data:
         ddl = ", ".join(
             f"`{f['name']}` {_ICE_TO_SPARK[f['type']]}"
@@ -1095,13 +1073,9 @@ def append_snapshot(table_path: str, rows: list[dict],
         suffix = {"truncate": "trunc"}.get(suffix, suffix)
         part_name = f"{part_col}_{suffix}" if part_col else None
 
-    hint = os.path.join(mdir, "version-hint.text")
-    if os.path.exists(hint):
+    prev = None
+    if os.path.exists(os.path.join(mdir, "version-hint.text")):
         prev = load_table_metadata(table_path)
-        version = max(int(m.group(1)) for f in os.listdir(mdir)
-                      if (m := re.match(r"v(\d+)\.metadata\.json$", f)))
-        snap_id = max((s["snapshot-id"] for s in prev["snapshots"]),
-                      default=0) + 1
         if [(f["name"], f["type"])
                 for f in _current_schema(prev)["fields"]] != list(schema):
             raise ValueError(
@@ -1114,9 +1088,6 @@ def append_snapshot(table_path: str, rows: list[dict],
                 ([(part_name, part_transform)] if part_col else []):
             raise ValueError(
                 "append_snapshot does not evolve partition specs")
-    else:
-        prev, version, snap_id = None, 0, 1
-    seq = snap_id
 
     # field ids come from the live schema (stable across renames);
     # only a brand-new table assigns fresh positional ids
@@ -1124,8 +1095,6 @@ def append_snapshot(table_path: str, rows: list[dict],
                   for f in _current_schema(prev)["fields"]}
                  if prev is not None
                  else {name: i + 1 for i, (name, _) in enumerate(schema)})
-    cur_schema_id = (prev["current-schema-id"] if prev is not None
-                     else 0)
     types = dict(schema)
     part_fields_meta = []
     part_val_type = None
@@ -1146,17 +1115,37 @@ def append_snapshot(table_path: str, rows: list[dict],
             part_val_type = "date"
         else:  # year / month / hour
             part_val_type = "int"
+    if prev is None:
+        # a new table: the metadata every later commit carries forward
+        # (schema history too: files written before a rename resolve
+        # their old physical names by field id; _commit_snapshot fills
+        # in the snapshot fields)
+        prev = {
+            "format-version": 2,
+            "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL,
+                                         "file://" + table_path)),
+            "location": "file://" + table_path,
+            "last-sequence-number": 0,
+            "last-updated-ms": _FIXED_TS_MS,
+            "last-column-id": len(schema),
+            "current-schema-id": 0,
+            "schemas": [{"type": "struct", "schema-id": 0, "fields": [
+                {"id": field_ids[n], "name": n, "required": False,
+                 "type": t} for n, t in schema]}],
+            "default-spec-id": 0,
+            "partition-specs": [{"spec-id": 0,
+                                 "fields": part_fields_meta}],
+            "last-partition-id": 1000 if partition_by else 999,
+            "default-sort-order-id": 0,
+            "sort-orders": [{"order-id": 0, "fields": []}],
+            "current-snapshot-id": -1,
+            "snapshots": [],
+            "snapshot-log": [], "metadata-log": [],
+        }
+    snap_id = max((s["snapshot-id"] for s in prev["snapshots"]),
+                  default=0) + 1
 
-    _PA = {"string": pa.string(), "long": pa.int64(), "int": pa.int32(),
-           "double": pa.float64(), "float": pa.float32(),
-           "boolean": pa.bool_(), "binary": pa.binary(),
-           # iceberg timestamp/timestamptz are micros; rows pass them
-           # as int micros-from-epoch (matches plan_scan's transform
-           # evaluation and Spark's parquet reader)
-           "timestamp": pa.timestamp("us"),
-           "timestamptz": pa.timestamp("us", tz="UTC"),
-           "date": pa.date32()}
-    pa_schema = pa.schema([(n, _PA[t]) for n, t in schema])
+    pa_schema = pa.schema([(n, _arrow_type(t)) for n, t in schema])
 
     # -- data files: one parquet per (transformed) partition value
     groups: dict[Any, list[dict]] = {}
@@ -1164,10 +1153,7 @@ def append_snapshot(table_path: str, rows: list[dict],
         pv = (transform_value(part_transform, r[part_col],
                               types[part_col]) if part_col else None)
         groups.setdefault(pv, []).append(r)
-    entry_part_fields = [{"name": part_name,
-                          "ice_type": part_val_type,
-                          "field-id": 1000}] if part_col else []
-    entries = []
+    files = []
     for i, (pval, grp) in enumerate(sorted(groups.items(),
                                            key=lambda kv: str(kv[0]))):
         sub = (os.path.join(ddir, f"{part_name}={pval}")
@@ -1176,86 +1162,103 @@ def append_snapshot(table_path: str, rows: list[dict],
         fpath = os.path.join(sub, f"{snap_id:05d}-{i:05d}.parquet")
         tbl = pa.Table.from_pylist(grp, schema=pa_schema)
         pq.write_table(tbl, fpath)
-        entries.append({
-            "status": 1, "snapshot_id": snap_id,
-            "sequence_number": seq, "file_sequence_number": seq,
-            "data_file": {
-                "content": 0, "file_path": "file://" + fpath,
-                "file_format": "PARQUET",
-                "partition": ({part_name: pval}
-                              if part_col else {}),
-                "record_count": len(grp),
-                "file_size_in_bytes": os.path.getsize(fpath)}})
+        files.append({
+            "content": 0, "file_path": "file://" + fpath,
+            "file_format": "PARQUET",
+            "partition": ({part_name: pval} if part_col else {}),
+            "record_count": len(grp),
+            "file_size_in_bytes": os.path.getsize(fpath)})
+    return _commit_snapshot(
+        table_path, prev, snap_id, files, content=0, spec_id=0,
+        part_fields=([{"name": part_name, "ice_type": part_val_type,
+                       "field-id": 1000}] if part_col else []))
 
-    man_path = os.path.join(mdir, f"manifest-{snap_id:05d}.avro")
-    write_ocf(man_path, _manifest_entry_schema(entry_part_fields),
-              entries,
-              extra_meta={"format-version": b"2", "content": b"data",
-                          "partition-spec-id": b"0"})
 
-    new_manifest = {
+def _arrow_type(ice_type: str):
+    """The pyarrow type the writers store an Iceberg primitive as.
+    timestamp/timestamptz are micros: rows pass them as int
+    micros-from-epoch (matches plan_scan's transform evaluation and
+    Spark's parquet reader)."""
+    import pyarrow as pa
+    return {"string": pa.string(), "long": pa.int64(), "int": pa.int32(),
+            "double": pa.float64(), "float": pa.float32(),
+            "boolean": pa.bool_(), "binary": pa.binary(),
+            "timestamp": pa.timestamp("us"),
+            "timestamptz": pa.timestamp("us", tz="UTC"),
+            "date": pa.date32()}[ice_type]
+
+
+def _commit_snapshot(table_path: str, base: dict, snap_id: int,
+                     files: list[dict], *, content: int, spec_id: int,
+                     part_fields: list[dict]) -> int:
+    """Commit snapshot ``snap_id`` (its sequence number is the same)
+    whose only change is one new manifest listing ``files`` — data
+    files (``content`` 0, an ``append``) or delete files (1, a
+    ``delete``) under partition spec ``spec_id``. Writes that
+    manifest, a manifest list with it first and the current snapshot's
+    manifests carried forward (fast append), and the next metadata
+    version: ``base`` plus the new snapshot. Returns ``snap_id``."""
+    mdir = os.path.join(table_path, "metadata")
+    seq = snap_id
+    man_path = os.path.join(
+        mdir, (f"manifest-{snap_id:05d}.avro" if content == 0
+               else f"manifest-del-{snap_id:05d}.avro"))
+    write_ocf(man_path,
+              _manifest_entry_schema(part_fields,
+                                     with_equality_ids=content == 1),
+              [{"status": 1, "snapshot_id": snap_id,
+                "sequence_number": seq, "file_sequence_number": seq,
+                "data_file": f} for f in files],
+              extra_meta={"format-version": b"2",
+                          "content": b"data" if content == 0
+                          else b"deletes",
+                          "partition-spec-id": str(spec_id).encode()})
+    manifest = {
         "manifest_path": "file://" + man_path,
         "manifest_length": os.path.getsize(man_path),
-        "partition_spec_id": 0, "content": 0,
+        "partition_spec_id": spec_id, "content": content,
         "sequence_number": seq, "min_sequence_number": seq,
         "added_snapshot_id": snap_id,
-        "added_files_count": len(entries), "existing_files_count": 0,
+        "added_files_count": len(files), "existing_files_count": 0,
         "deleted_files_count": 0,
-        "added_rows_count": len(rows), "existing_rows_count": 0,
-        "deleted_rows_count": 0}
-    carried = []
-    if prev is not None and prev.get("current-snapshot-id", -1) != -1:
-        cur = _select_snapshot(prev, None)
-        _, carried = read_ocf(_strip_file_uri(cur["manifest-list"]))
+        "added_rows_count": sum(f["record_count"] for f in files),
+        "existing_rows_count": 0, "deleted_rows_count": 0}
+    cur = _select_snapshot(base, None)
+    carried = (read_ocf(_strip_file_uri(cur["manifest-list"]))[1]
+               if cur else [])
     mlist_path = os.path.join(mdir, f"snap-{snap_id}-manifest-list.avro")
     write_ocf(mlist_path, _MANIFEST_FILE_SCHEMA,
-              [new_manifest] + list(carried),
+              [manifest] + list(carried),
               extra_meta={"format-version": b"2"})
 
     snapshot = {"snapshot-id": snap_id, "sequence-number": seq,
                 "timestamp-ms": _FIXED_TS_MS + snap_id,
                 "manifest-list": "file://" + mlist_path,
-                "summary": {"operation": "append"},
-                "schema-id": cur_schema_id}
-    if prev is not None and prev.get("current-snapshot-id", -1) != -1:
-        snapshot["parent-snapshot-id"] = prev["current-snapshot-id"]
-    meta = {
-        "format-version": 2,
-        "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL,
-                                     "file://" + table_path)),
-        "location": "file://" + table_path,
+                "summary": {"operation": ("append" if content == 0
+                                          else "delete")},
+                "schema-id": base["current-schema-id"]}
+    if cur:
+        snapshot["parent-snapshot-id"] = cur["snapshot-id"]
+    _commit_metadata(table_path, dict(base, **{
         "last-sequence-number": seq,
         "last-updated-ms": _FIXED_TS_MS + snap_id,
-        "last-column-id": (prev["last-column-id"] if prev is not None
-                           else len(schema)),
-        "current-schema-id": cur_schema_id,
-        # schema HISTORY carries forward — files written before a
-        # rename resolve their old physical names by field id
-        "schemas": (prev["schemas"] if prev is not None
-                    else [{"type": "struct", "schema-id": 0, "fields": [
-                        {"id": field_ids[n], "name": n,
-                         "required": False, "type": t}
-                        for n, t in schema]}]),
-        "default-spec-id": 0,
-        # carry prior specs forward — delete snapshots may have added
-        # an unpartitioned spec that carried manifests still reference
-        "partition-specs": (prev["partition-specs"] if prev else
-                            [{"spec-id": 0,
-                              "fields": part_fields_meta}]),
-        "last-partition-id": (prev["last-partition-id"] if prev else
-                              (1000 if partition_by else 999)),
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
         "current-snapshot-id": snap_id,
-        "snapshots": (prev["snapshots"] if prev else []) + [snapshot],
-        "snapshot-log": [], "metadata-log": [],
-    }
-    with open(os.path.join(mdir, f"v{version + 1}.metadata.json"),
+        "snapshots": base["snapshots"] + [snapshot]}))
+    return snap_id
+
+
+def _commit_metadata(table_path: str, meta: dict) -> None:
+    """Write ``meta`` as the table's next metadata version (one past
+    the highest ``v{N}.metadata.json`` on disk) and point
+    ``version-hint.text`` at it: the one commit step of every writer
+    in this module."""
+    mdir = os.path.join(table_path, "metadata")
+    version = max(_versions(mdir), default=0) + 1
+    with open(os.path.join(mdir, f"v{version}.metadata.json"),
               "w") as fh:
         json.dump(meta, fh, indent=1)
-    with open(hint, "w") as fh:
-        fh.write(str(version + 1))
-    return snap_id
+    with open(os.path.join(mdir, "version-hint.text"), "w") as fh:
+        fh.write(str(version))
 
 
 # ------------------------------------------------- delete-file writers
@@ -1273,82 +1276,34 @@ def _pa_field(name, pa_type, field_id):
                               str(field_id).encode()})
 
 
-def _commit_delete_snapshot(table_path: str, del_file_rel: str,
-                            n_rows: int, content: int,
+def _commit_delete_snapshot(table_path: str, meta: dict, tbl, kind: str,
+                            content: int,
                             equality_ids: Optional[list[int]]) -> int:
-    """Commit a snapshot whose only change is one delete file: a
-    delete manifest (content=1) under an UNPARTITIONED spec (so the
-    deletes apply table-wide and are never partition-pruned away),
-    prior manifests carried forward, new metadata json + hint."""
-    table_path = os.path.abspath(table_path)
-    mdir = os.path.join(table_path, "metadata")
-    prev = load_table_metadata(table_path)
-    version = max(int(m.group(1)) for f in os.listdir(mdir)
-                  if (m := re.match(r"v(\d+)\.metadata\.json$", f)))
-    snap_id = max(s["snapshot-id"] for s in prev["snapshots"]) + 1
-    seq = snap_id
+    """Commit a snapshot whose only change is one delete file: ``tbl``
+    written as ``data/{snapshot}-{kind}-deletes.parquet`` and listed in
+    a delete manifest under an UNPARTITIONED spec (so the deletes apply
+    table-wide and are never partition-pruned away)."""
+    import pyarrow.parquet as pq
 
-    specs = [dict(s) for s in prev["partition-specs"]]
+    snap_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
+    path = os.path.join(table_path, "data",
+                        f"{snap_id:05d}-{kind}-deletes.parquet")
+    pq.write_table(tbl, path)
+
+    specs = [dict(s) for s in meta["partition-specs"]]
     unpart = next((s["spec-id"] for s in specs if not s["fields"]),
                   None)
     if unpart is None:
         unpart = max(s["spec-id"] for s in specs) + 1
         specs.append({"spec-id": unpart, "fields": []})
-
-    entry = {
-        "status": 1, "snapshot_id": snap_id,
-        "sequence_number": seq, "file_sequence_number": seq,
-        "data_file": {
-            "content": content,
-            "file_path": "file://" + os.path.join(table_path,
-                                                  del_file_rel),
-            "file_format": "PARQUET", "partition": {},
-            "record_count": n_rows,
-            "file_size_in_bytes": os.path.getsize(
-                os.path.join(table_path, del_file_rel)),
-            "equality_ids": equality_ids}}
-    man_path = os.path.join(mdir, f"manifest-del-{snap_id:05d}.avro")
-    write_ocf(man_path, _manifest_entry_schema([],
-                                               with_equality_ids=True),
-              [entry],
-              extra_meta={"format-version": b"2", "content": b"deletes",
-                          "partition-spec-id": str(unpart).encode()})
-
-    del_manifest = {
-        "manifest_path": "file://" + man_path,
-        "manifest_length": os.path.getsize(man_path),
-        "partition_spec_id": unpart, "content": 1,
-        "sequence_number": seq, "min_sequence_number": seq,
-        "added_snapshot_id": snap_id,
-        "added_files_count": 1, "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": n_rows, "existing_rows_count": 0,
-        "deleted_rows_count": 0}
-    cur = _select_snapshot(prev, None)
-    _, carried = read_ocf(_strip_file_uri(cur["manifest-list"]))
-    mlist_path = os.path.join(mdir, f"snap-{snap_id}-manifest-list.avro")
-    write_ocf(mlist_path, _MANIFEST_FILE_SCHEMA,
-              [del_manifest] + list(carried),
-              extra_meta={"format-version": b"2"})
-
-    meta = dict(prev)
-    meta["partition-specs"] = specs
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = _FIXED_TS_MS + snap_id
-    meta["current-snapshot-id"] = snap_id
-    meta["snapshots"] = prev["snapshots"] + [{
-        "snapshot-id": snap_id, "sequence-number": seq,
-        "timestamp-ms": _FIXED_TS_MS + snap_id,
-        "manifest-list": "file://" + mlist_path,
-        "summary": {"operation": "delete"},
-        "schema-id": prev["current-schema-id"],
-        "parent-snapshot-id": prev["current-snapshot-id"]}]
-    with open(os.path.join(mdir, f"v{version + 1}.metadata.json"),
-              "w") as fh:
-        json.dump(meta, fh, indent=1)
-    with open(os.path.join(mdir, "version-hint.text"), "w") as fh:
-        fh.write(str(version + 1))
-    return snap_id
+    return _commit_snapshot(
+        table_path, dict(meta, **{"partition-specs": specs}), snap_id,
+        [{"content": content, "file_path": "file://" + path,
+          "file_format": "PARQUET", "partition": {},
+          "record_count": tbl.num_rows,
+          "file_size_in_bytes": os.path.getsize(path),
+          "equality_ids": equality_ids}],
+        content=1, spec_id=unpart, part_fields=[])
 
 
 def delete_positions(table_path: str,
@@ -1362,7 +1317,6 @@ def delete_positions(table_path: str,
     manifest and a new metadata version.
     """
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     table_path = os.path.abspath(table_path)
     rows = sorted(
@@ -1371,14 +1325,11 @@ def delete_positions(table_path: str,
     sch = pa.schema([
         _pa_field("file_path", pa.string(), _POS_DELETE_PATH_ID),
         _pa_field("pos", pa.int64(), _POS_DELETE_POS_ID)])
-    snap_hint = max(s["snapshot-id"] for s in
-                    load_table_metadata(table_path)["snapshots"]) + 1
-    rel = os.path.join("data", f"{snap_hint:05d}-pos-deletes.parquet")
-    pq.write_table(pa.table({"file_path": [r[0] for r in rows],
-                             "pos": [r[1] for r in rows]}, schema=sch),
-                   os.path.join(table_path, rel))
-    return _commit_delete_snapshot(table_path, rel, len(rows),
-                                   content=1, equality_ids=None)
+    return _commit_delete_snapshot(
+        table_path, load_table_metadata(table_path),
+        pa.table({"file_path": [r[0] for r in rows],
+                  "pos": [r[1] for r in rows]}, schema=sch),
+        "pos", content=1, equality_ids=None)
 
 
 def delete_where_equal(table_path: str, rows: list[dict]) -> int:
@@ -1389,31 +1340,20 @@ def delete_where_equal(table_path: str, rows: list[dict]) -> int:
     re-inserted later survive. Returns the new snapshot id.
     """
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     if not rows:
         raise ValueError("delete_where_equal needs at least one row")
     table_path = os.path.abspath(table_path)
     meta = load_table_metadata(table_path)
-    sch_fields = next(s for s in meta["schemas"]
-                      if s["schema-id"] == meta["current-schema-id"]
-                      )["fields"]
-    by_name = {f["name"]: f for f in sch_fields}
+    by_name = {f["name"]: f for f in _current_schema(meta)["fields"]}
     names = list(rows[0].keys())
     if any(list(r.keys()) != names for r in rows):
         raise ValueError("every delete row must use the same key set")
     unknown = [n for n in names if n not in by_name]
     if unknown:
         raise ValueError(f"unknown delete columns {unknown}")
-    _PA = {"string": pa.string(), "long": pa.int64(), "int": pa.int32(),
-           "double": pa.float64(), "float": pa.float32(),
-           "boolean": pa.bool_(), "binary": pa.binary()}
-    sch = pa.schema([_pa_field(n, _PA[by_name[n]["type"]],
+    sch = pa.schema([_pa_field(n, _arrow_type(by_name[n]["type"]),
                                by_name[n]["id"]) for n in names])
-    snap_hint = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    rel = os.path.join("data", f"{snap_hint:05d}-eq-deletes.parquet")
-    pq.write_table(pa.Table.from_pylist(rows, schema=sch),
-                   os.path.join(table_path, rel))
     return _commit_delete_snapshot(
-        table_path, rel, len(rows), content=2,
-        equality_ids=[by_name[n]["id"] for n in names])
+        table_path, meta, pa.Table.from_pylist(rows, schema=sch), "eq",
+        content=2, equality_ids=[by_name[n]["id"] for n in names])

@@ -441,6 +441,27 @@ def test_fold_keyed_equals_per_row_reference(rows):
             assert errors == ref_errors
 
 
+@settings(max_examples=300, deadline=None)
+@given(st.one_of(json_docs.map(json.dumps), st.sampled_from(_pinned_docs)))
+def test_fold_of_a_repeated_doc_equals_one_fold(text):
+    """The law behind fold_keyed's collapse: for an enum-off context, a
+    document folded twice gives the same accumulator as folded once, so
+    a document seen n >= 2 times under one key folds once. Docs and
+    contexts are those of test_fold_keyed_equals_per_row_reference."""
+    import dataclasses
+
+    from schema_guru_spark.core import json_fast
+    from schema_guru_spark.core.accumulate_batch import fold_docs
+
+    doc = json_fast.loads(text)
+    for base in (CTX, SchemaContext.make(0, quantity=5), CTX_ENUM,
+                 SchemaContext.make(2, enum_sets=[["x", "y"]])):
+        for ctx in (base, dataclasses.replace(base, quantity=3)):
+            if ctx.enum_disabled:
+                assert fold_docs({}, [doc, doc], ctx) == \
+                    fold_docs({}, [doc], ctx)
+
+
 # format-shaped strings + adversarial near-misses for the verifier law
 _fmt_strings = st.one_of(
     st.uuids().map(str),

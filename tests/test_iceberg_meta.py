@@ -702,8 +702,7 @@ def test_dropped_partition_source_column_is_skipped():
     current schema must plan as non-prunable, not KeyError: the old
     identity-only lookup ignored non-identity fields entirely, so
     tables like this planned fine before transform-aware pruning."""
-    from schema_guru_spark.sources.iceberg_meta import (_identity_fields,
-                                                        _spec_fields)
+    from schema_guru_spark.sources.iceberg_meta import _spec_fields
     meta = {
         "current-schema-id": 1,
         "schemas": [
@@ -723,7 +722,8 @@ def test_dropped_partition_source_column_is_skipped():
     }
     fields = _spec_fields(meta, 0)
     assert [f["source"] for f in fields] == ["repo"]
-    assert _identity_fields(meta, 0) == {"repo": "repo"}
+    assert [(f["name"], f["source"]) for f in fields
+            if f["transform"] == "identity"] == [("repo", "repo")]
 
 
 def test_identity_date_filter_accepts_iso_and_int(tmp_path, spark):
@@ -756,6 +756,27 @@ def test_identity_date_filter_accepts_iso_and_int(tmp_path, spark):
                     [("repo", "string"), ("dt", "date"),
                      ("content", "string")], partition_by="repo")
     assert len(plan_scan(tp2, partition_filter={"repo": 5}).data) == 2
+
+
+def test_equality_delete_on_date_and_timestamp_columns(tmp_path, spark):
+    """delete_where_equal writes its key columns with the pyarrow types
+    append_snapshot writes them with, so an equality delete on a date
+    or a timestamp column removes exactly the matching rows (it used to
+    refuse both types with a KeyError)."""
+    import datetime
+    tp = str(tmp_path / "dated")
+    ts0 = 1_700_000_000_000_000  # micros from epoch
+    rows = [{"repo": f"r{i}", "dt": datetime.date(2024, 1, 1 + i % 3),
+             "ts": ts0 + i % 2} for i in range(12)]
+    append_snapshot(tp, rows, [("repo", "string"), ("dt", "date"),
+                               ("ts", "timestamp")])
+    delete_where_equal(tp, [{"dt": datetime.date(2024, 1, 2)}])
+    delete_where_equal(tp, [{"ts": ts0 + 1}])
+    got = sorted(r.repo for r in read_iceberg(spark, tp).collect())
+    assert got == sorted(r["repo"] for r in rows
+                         if r["dt"] != datetime.date(2024, 1, 2)
+                         and r["ts"] != ts0 + 1)
+    assert len(got) == 4
 
 
 def test_position_deletes_apply_under_uri_escaped_path(tmp_path, spark):

@@ -331,26 +331,119 @@ def test_incremental_windows_partition_the_full_scan(tmp_path_factory,
     """The incremental-scan law: for ANY append-only history and ANY
     window split point, the files of plan_scan(to) are exactly the
     disjoint union of plan_scan(from)'s and plan_incremental(from,to)'s
-    — no file double-planned, none lost."""
-    from schema_guru_spark.sources.iceberg_meta import plan_scan
+    — no file double-planned, none lost — and both planners give each
+    file the same record: row count, size, partition, sequence number
+    and write-time schema id, also when a column rename sits in the
+    chain and later appends write under the new name."""
+    from schema_guru_spark.sources.iceberg_meta import (plan_scan,
+                                                        rename_column)
     tp = str(tmp_path_factory.mktemp("prop") / "repos")
+    # the rename lands just before the append at this index
+    rename_at = data.draw(st.sampled_from([None, *range(1, len(sizes))]))
+    schema, col = SCHEMA, "content"
     snaps = []
     start = 0
     for k, n in enumerate(sizes):
-        rows = _vrows(n, f"c{k}", start=start,
-                      langs=("json", "py", "go"))
+        if k == rename_at:
+            rename_column(tp, "content", "body")
+            schema = [("body" if c == "content" else c, t)
+                      for c, t in SCHEMA]
+            col = "body"
+        rows = [{(col if c == "content" else c): v for c, v in r.items()}
+                for r in _vrows(n, f"c{k}", start=start,
+                                langs=("json", "py", "go"))]
         start += n
-        snaps.append(append_snapshot(tp, rows, SCHEMA,
+        snaps.append(append_snapshot(tp, rows, schema,
                                      partition_by="lang"))
     i = data.draw(st.integers(min_value=0, max_value=len(snaps) - 1))
     frm, to = snaps[i], snaps[-1]
-    base = {f.path for f in plan_scan(tp, frm).data}
-    delta = {f.path for f in plan_incremental(tp, frm, to).data}
-    full = {f.path for f in plan_scan(tp, to).data}
-    assert base | delta == full
-    assert not (base & delta)
-    assert sum(f.record_count for f in plan_incremental(tp, frm, to).data) \
-        == sum(sizes[i + 1:])
+    base = {f.path: f for f in plan_scan(tp, frm).data}
+    delta = {f.path: f for f in plan_incremental(tp, frm, to).data}
+    full = {f.path: f for f in plan_scan(tp, to).data}
+    assert not (base.keys() & delta.keys())
+    assert {**base, **delta} == full
+    # snapshot k is sequence number k + 1; files appended after the
+    # rename were written under schema 1
+    assert all(f.schema_id == int(rename_at is not None
+                                  and f.sequence_number > rename_at)
+               for f in full.values())
+    assert sum(f.record_count for f in delta.values()) == sum(sizes[i + 1:])
+
+
+@settings(max_examples=8, deadline=None)
+@given(st.integers(min_value=2, max_value=8))
+def test_plan_incremental_opens_only_the_window(tmp_path_factory, k):
+    """plan_incremental(s_{k-1}, s_k) reads exactly two metadata files,
+    whatever the chain length k: the manifest list of s_k and the one
+    manifest s_k added. Planning an append is O(window), never
+    O(history)."""
+    from schema_guru_spark.sources import iceberg_meta
+    tp = str(tmp_path_factory.mktemp("window") / "repos")
+    snaps = [append_snapshot(tp, _vrows(3, f"c{j}", start=10 * j,
+                                        langs=("json", "py")),
+                             SCHEMA, partition_by="lang")
+             for j in range(k)]
+    real = iceberg_meta.read_ocf
+    last = next(s for s in load_table_metadata(tp)["snapshots"]
+                if s["snapshot-id"] == snaps[-1])
+    mlist = last["manifest-list"].removeprefix("file://")
+    added = [m["manifest_path"].removeprefix("file://")
+             for m in real(mlist)[1]
+             if m["added_snapshot_id"] == snaps[-1]]
+    assert len(added) == 1
+    opened = []
+
+    def spy(path):
+        opened.append(path)
+        return real(path)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(iceberg_meta, "read_ocf", spy)
+        plan = plan_incremental(tp, snaps[-2], snaps[-1])
+    assert opened == [mlist, added[0]]
+    assert sum(f.record_count for f in plan.data) == 3
+
+
+def test_frozenset_filter_equals_list_form(spark, tmp_path):
+    """A frozenset partition_filter value allows its members, like a
+    list or a set: plan_scan prunes by it, read_table filters rows by
+    it, and incremental_validate accepts it and resumes a checkpoint
+    pinned with the list form. It used to be read as one scalar value
+    in pruning and in the residual filter, which failed the scan."""
+    from schema_guru_spark.sources.catalog import read_table
+    from schema_guru_spark.sources.iceberg_meta import plan_scan
+    tp = str(tmp_path / "repos")
+    ckpt_fz, ckpt_list = str(tmp_path / "ck_fz"), str(tmp_path / "ck_list")
+    langs = ("json", "py", "go")
+    fz, lst = {"lang": frozenset({"json"})}, {"lang": ["json"]}
+    append_snapshot(tp, _vrows(30, "c1", langs=langs), SCHEMA,
+                    partition_by="lang")
+    pruned = plan_scan(tp, partition_filter=fz)
+    assert pruned == plan_scan(tp, partition_filter={"lang": {"json"}})
+    assert [f.partition for f in pruned.data] == [{"lang": "json"}]
+    rows = sorted(read_table(spark, path=tp, partition_filter=fz).collect())
+    assert rows == sorted(
+        read_table(spark, path=tp, partition_filter=lst).collect())
+    assert len(rows) == 10
+
+    counters = ("rows", "json_ok", "json_err", "sha_bad", "lang_bad")
+    r_fz = _run(spark, tp, ckpt_fz, partition_filter=fz)
+    r_list = _run(spark, tp, ckpt_list, partition_filter=lst)
+    assert {k: r_fz["cumulative"][k] for k in counters} == \
+        {k: r_list["cumulative"][k] for k in counters}
+    assert r_fz["cumulative"]["rows"] == 10
+    with open(os.path.join(ckpt_fz, "table_state.json")) as fh:
+        params_fz = json.load(fh)["params"]
+    with open(os.path.join(ckpt_list, "table_state.json")) as fh:
+        assert params_fz == json.load(fh)["params"]
+    assert params_fz["partition_filter"] == {"lang": ["json"]}
+
+    append_snapshot(tp, _vrows(30, "c2", langs=langs, start=100), SCHEMA,
+                    partition_by="lang")
+    r2 = _run(spark, tp, ckpt_list, partition_filter=fz)
+    assert r2["mode"] == "incremental"
+    assert r2["delta"]["rows"] == 10
+    assert r2["cumulative"]["rows"] == 20
 
 
 def test_partition_filter_on_unpartitioned_column(spark, tmp_path):
