@@ -9,10 +9,12 @@ window-function CDFs. Scale notes per operator inline.
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 from operator import or_
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -56,6 +58,91 @@ def key_hash(seed: int, keys: Sequence[str]) -> Column:
                   F.lit(0).cast("long"))
     return F.xxhash64(F.lit(seed), *[F.col(k) for k in keys],
                       F.when(reduce(or_, nulls), mask))
+
+
+# ---------------------------------------------- mergeable key sketch
+#
+# HyperLogLog registers over ``key_hash`` values, built in the
+# validation scan's Python tasks and merged and estimated on the
+# driver. ``KEY_SKETCH`` names the format (precision and hash); a store
+# of sketches pins it, so registers of another format are never merged.
+
+KEY_SKETCH = "hll-p14-xxhash64"
+HLL_P = 14
+HLL_M = 1 << HLL_P        # 16384 one-byte registers: 16 KiB a sketch
+_HLL_Q = 64 - HLL_P       # hash bits left for the rank
+
+
+def hll_registers(hashes, regs=None):
+    """Fold 64-bit hashes into HyperLogLog registers (a ``uint8`` array
+    of ``HLL_M``; ``regs`` is updated in place when given). The top
+    ``HLL_P`` bits of a hash pick its register; the register keeps the
+    largest rank seen, the 1-based position of the first 1 bit in the
+    other ``_HLL_Q`` bits (``_HLL_Q + 1`` when they are all 0). The
+    registers of A ∪ B are the element-wise max of A's and B's
+    (``hll_merge``), however the hashes are split."""
+    if regs is None:
+        regs = np.zeros(HLL_M, np.uint8)
+    u = np.ascontiguousarray(hashes, dtype=np.int64).view(np.uint64)
+    idx = (u >> np.uint64(_HLL_Q)).astype(np.intp)
+    w = u & np.uint64((1 << _HLL_Q) - 1)
+    # frexp's exponent is the bit length of w, exactly: w < 2^50 is a
+    # float64 without rounding (a log2 would round 2^k - 1 up to k)
+    rank = _HLL_Q + 1 - np.frexp(w.astype(np.float64))[1]
+    np.maximum.at(regs, idx, rank.astype(np.uint8))
+    return regs
+
+
+def hll_merge(sketches):
+    """Element-wise max of register arrays (or their bytes): the
+    sketch of the union of their inputs. No sketch is the empty one."""
+    out = np.zeros(HLL_M, np.uint8)
+    for s in sketches:
+        np.maximum(out, np.frombuffer(s, np.uint8), out=out)
+    return out
+
+
+def hll_estimate(regs) -> float:
+    """Distinct-count estimate of HyperLogLog registers: Ertl's improved
+    raw estimator ("New cardinality estimation algorithms for
+    HyperLogLog sketches", 2017, Algorithm 6). It is close to unbiased
+    over the whole range, from a handful of keys to far beyond 2^32,
+    without bias tables or a linear-counting switch; exactly 0 for
+    empty registers. Relative standard error ~1.04/sqrt(HLL_M) =
+    0.81%."""
+    c = np.bincount(np.frombuffer(regs, np.uint8), minlength=_HLL_Q + 2)
+    m = float(HLL_M)
+    if c[0] == HLL_M:
+        return 0.0
+    z = m * _hll_tau(1.0 - c[_HLL_Q + 1] / m)
+    for k in range(_HLL_Q, 0, -1):
+        z = 0.5 * (z + c[k])
+    z += m * _hll_sigma(c[0] / m)
+    return m * m / (2.0 * math.log(2.0) * z)
+
+
+def _hll_sigma(x: float) -> float:
+    # x + sum_k x^(2^k) 2^(k-1), for x < 1 (Ertl 2017, eq. 28)
+    y, z = 1.0, x
+    while True:
+        x *= x
+        z_old, z = z, z + x * y
+        y += y
+        if z == z_old:
+            return z
+
+
+def _hll_tau(x: float) -> float:
+    # (1 - x - sum_k (1 - x^(2^-k))^2 2^-k) / 3 (Ertl 2017, eq. 31)
+    if x in (0.0, 1.0):
+        return 0.0
+    y, z = 1.0, 1.0 - x
+    while True:
+        x = math.sqrt(x)
+        y *= 0.5
+        z_old, z = z, z - (1.0 - x) ** 2 * y
+        if z == z_old:
+            return z / 3.0
 
 
 def _distinct_screen(df: DataFrame, key: Column, rsd: float,

@@ -36,12 +36,22 @@ verdict rows, and this module folds those rows across deltas:
     of the deltas' serialized states — commutative, so delta order
     cannot matter; the rendered schema alone could NOT be re-merged
     (enum cutoff and range encasing are lossy);
-  * table-wide key uniqueness uses mergeable HLL sketches
-    (``hll_sketch_agg`` over a 64-bit key hash, one tiny row per
-    delta): cumulative estimate = ``hll_union_agg`` across deltas vs
-    the exact summed row count — the north_star's "HLL++ vs exact
-    count" check, made incremental. (Per-delta exact distincts do
-    not sum; sketches do.)
+  * table-wide key uniqueness uses mergeable HyperLogLog sketches
+    (``operators.constraints.hll_registers``, p = 14, 16 KiB) over a
+    64-bit key hash. The sketch rides the validation scan: each scan
+    task folds its rows' key hashes into registers, and every chunk of
+    a delta stores one ``(n_rows, sketch)`` row next to its verdicts,
+    so a resumed delta still covers all its chunks. The cumulative
+    estimate is Ertl's estimator over the element-wise max of every
+    committed chunk sketch, against the exact summed row count — the
+    north_star's "HLL vs exact count" check, made incremental.
+    (Per-delta exact distincts do not sum; sketches do.) The register
+    format is pinned in ``params`` (``key_sketch``), so a checkpoint
+    holding sketches of another format is refused, not misread.
+
+The cumulative view reads only checkpoint files, with pyarrow on the
+driver: it runs no Spark job, and checkpoint dirs are driver-local
+paths (``plans.checkpoint.local_dir``).
 
 A non-append snapshot (delete / overwrite) in the window makes
 "the new rows" ill-defined (rows also vanished), so
@@ -61,15 +71,19 @@ import os
 import time
 from typing import Any, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import SparkSession
 
-from schema_guru_spark.operators.constraints import key_hash
-from schema_guru_spark.pipeline import _COUNTERS, _KEY, verdict_summary
+from schema_guru_spark.operators import constraints as C
+from schema_guru_spark.pipeline import (_KEY_SKETCH_SCHEMA,
+                                        _VERDICT_SCHEMA_STATE,
+                                        verdict_summary)
+from schema_guru_spark.plans.checkpoint import (arrow_schema, count_rows,
+                                                local_dir, read_sink)
 from schema_guru_spark.sources.iceberg_meta import (_VALUE_SETS,
                                                     load_table_metadata)
 
 _STATE_FILE = "table_state.json"
-_UNIQ_SCHEMA = "n_rows bigint, sketch binary"
 
 
 def _state_path(checkpoint_dir: str) -> str:
@@ -100,34 +114,6 @@ def _save_state(checkpoint_dir: str, state: dict) -> None:
 # ONLY the committed chain, or rows double-count.
 
 
-def _key_hash() -> "F.Column":
-    # 64-bit key hash for the HLL sketch: collisions only DEFLATE the
-    # distinct estimate, by ~n^2/2^65 expected keys — ~27 at 10^12
-    # rows, i.e. 1e-11 relative, invisible next to the sketch's own
-    # ~1-2% error. NULL-free keys hash as they always did, so sketches
-    # already stored in checkpoints stay mergeable
-    return key_hash(0x1CEB, _KEY)
-
-
-def _write_uniq_sketch(delta_dir: str, df: DataFrame,
-                       n_rows: int) -> None:
-    """Second pass over the delta for the mergeable key sketch — but a
-    NARROW one: only the three key columns are selected, so the
-    column-pruned parquet scan never touches ``content`` (the corpus
-    payload, ~95% of the bytes). The row count is NOT recounted — the
-    validation scan already summed it exactly; it rides along as a
-    literal. (Folding the sketch into the validation scan itself would
-    widen its Arrow projection with path+commit for every row, or
-    require a Python-side HLL mergeable with Spark's hll_union_agg,
-    which does not exist — the key-only second scan is the cheaper
-    shape at scale.)"""
-    (df.select(_key_hash().alias("h"))
-       .agg(F.lit(n_rows).cast("long").alias("n_rows"),
-            F.hll_sketch_agg("h").alias("sketch"))
-       .coalesce(1)
-       .write.mode("overwrite").parquet(os.path.join(delta_dir, "uniq")))
-
-
 def _run_params(n_buckets: int, n_salts: int, max_err_rate: float,
                 allowed_langs: Sequence[str],
                 partition_filter: Optional[dict]) -> dict:
@@ -138,7 +124,8 @@ def _run_params(n_buckets: int, n_salts: int, max_err_rate: float,
     'whole table' covers, allowed_langs changes what counts as a
     violation, max_err_rate changes each delta's recorded verdicts. All
     are pinned in table_state.json on the first commit; later runs must
-    match (ADVICE r04).
+    match (ADVICE r04). So is ``key_sketch``, the format of the stored
+    key sketches: registers of different formats do not merge.
 
     The dict is compared against a JSON-round-tripped prior, so every
     value must be in JSON-canonical form already: collection-valued
@@ -158,6 +145,7 @@ def _run_params(n_buckets: int, n_salts: int, max_err_rate: float,
         "max_err_rate": max_err_rate,
         "allowed_langs": sorted(allowed_langs),
         "partition_filter": canon_filter,
+        "key_sketch": C.KEY_SKETCH,
     }
 
 
@@ -190,6 +178,7 @@ def incremental_validate(
         raise ValueError(f"on_nonappend={on_nonappend!r}: "
                          "expected 'error' or 'rebase'")
     allowed_langs = tuple(allowed_langs or DEFAULT_LANGS)
+    checkpoint_dir = local_dir(checkpoint_dir)
 
     meta = load_table_metadata(table_path)
     cur = meta.get("current-snapshot-id")
@@ -213,10 +202,11 @@ def incremental_validate(
             raise ValueError(
                 f"checkpoint {checkpoint_dir} was built with different "
                 f"validation parameters ({', '.join(sorted(diff))}): "
-                f"{prior_params} vs {params} — per-bucket counters from "
-                "deltas validated under different parameters are not "
-                "summable (same guard class as table_uuid). Use a new "
-                "checkpoint dir, or rerun with the pinned values.")
+                f"{prior_params} vs {params} — per-bucket counters and "
+                "key sketches from deltas validated under different "
+                "parameters do not merge (same guard class as "
+                "table_uuid). Use a new checkpoint dir, or rerun with "
+                "the pinned values.")
 
     epoch = state["epoch"] if state else 0
     frm = state["snapshot_id"] if state else None
@@ -258,13 +248,12 @@ def incremental_validate(
             n_buckets=n_buckets, n_salts=n_salts,
             chunk_size=chunk_size, allowed_langs=allowed_langs,
             max_err_rate=max_err_rate, keep_state=True)
-        # <= n_buckets verdict rows: totalled on the driver
-        summary = verdict_summary(
-            res.verdicts.select(*_COUNTERS, "passed").collect())
-        _write_uniq_sketch(delta_dir, delta_df, summary["rows"])
+        # <= n_buckets verdict rows, already on the driver; the
+        # violation rows counted from the sink's parquet footers
         delta_report = {
-            **summary,
-            "n_violation_rows": res.violations.count(),
+            **verdict_summary(res.verdict_rows.to_dict("records")),
+            "n_violation_rows": count_rows(
+                os.path.join(delta_dir, "violations")),
             "resumed_buckets": len(res.resumed_buckets),
         }
         prior = (state.get("windows", []) if state is not None
@@ -292,7 +281,7 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
     """Exact whole-table view from the committed window chain's delta
     sinks: per-bucket counter sums + recomputed verdicts, monoid-merged
     schema, HLL-union uniqueness vs exact summed rows. Touches only
-    checkpoint metadata (KBs), never the table.
+    checkpoint metadata (KBs), never the table, and runs no Spark job.
 
     The view is the validation job's bucket fold over the committed
     verdict sinks: their rows (<= n_deltas x n_buckets, read from the
@@ -300,19 +289,17 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
     *_COUNTERS, state)`` shape ``pipeline._fold_buckets`` folds, so the
     per-bucket counters, verdicts and schemas come from that one
     function, the totals from ``pipeline.verdict_summary``, and the
-    global schema is the merge of the folded bucket states. Only the
-    HLL sketch union runs in Spark, over the delta sketches read under
-    their known schema — so the job count does not grow with the
-    chain."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    global schema is the merge of the folded bucket states. The key
+    sketches of every committed chunk merge by element-wise max
+    (``C.hll_merge``) into one estimate (``C.hll_estimate``).
+    ``spark`` is not used; it keeps the signature callers rely on."""
     from schema_guru_spark.core.context import SchemaContext
     from schema_guru_spark.core.microschema import (loads, merge_all,
                                                      render)
     from schema_guru_spark.core.transforms import apply_transforms
     from schema_guru_spark.pipeline import _fold_buckets
 
+    checkpoint_dir = local_dir(checkpoint_dir)
     state = _load_state(checkpoint_dir)
     if state is None:
         raise LookupError(f"{checkpoint_dir}: no validation state")
@@ -323,22 +310,20 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
 
     ctx = SchemaContext.make(0)
     folded = _fold_buckets(
-        pa.concat_tables(
-            pq.read_table(os.path.join(d, "verdicts"),
-                          columns=["bucket", *_COUNTERS, "state"])
-            for d in dirs).to_pandas(),
+        pa.concat_tables(read_sink(os.path.join(d, "verdicts"),
+                                   arrow_schema(_VERDICT_SCHEMA_STATE))
+                         for d in dirs).to_pandas(),
         ctx, max_err_rate, keep_state=True)
     glob = merge_all((loads(st) for st in folded["state"]), ctx)
 
-    uniq_paths = [os.path.join(d, "uniq") for d in dirs
-                  if os.path.isdir(os.path.join(d, "uniq"))]
+    sketches = pa.concat_tables(
+        read_sink(os.path.join(d, "key_sketch"),
+                  arrow_schema(_KEY_SKETCH_SCHEMA)) for d in dirs)
     uniq: dict[str, Any] = {}
-    if uniq_paths:
-        u = (spark.read.schema(_UNIQ_SCHEMA).parquet(*uniq_paths)
-             .agg(F.sum("n_rows").alias("n_rows"),
-                  F.hll_sketch_estimate(F.hll_union_agg("sketch"))
-                   .alias("n_distinct_est"))).collect()[0]
-        n_rows, est = u["n_rows"] or 0, u["n_distinct_est"] or 0
+    if sketches.num_rows:
+        n_rows = sum(sketches.column("n_rows").to_pylist())
+        est = round(C.hll_estimate(
+            C.hll_merge(sketches.column("sketch").to_pylist())))
         gap = abs(n_rows - est) / max(n_rows, 1)
         uniq = {"n_rows": n_rows, "n_distinct_est": est,
                 "rel_gap": round(gap, 6),

@@ -141,7 +141,7 @@ def main(argv=None) -> dict:
     args = ap.parse_args(argv)
 
     from schema_guru_spark.session import get_spark
-    from schema_guru_spark.pipeline import (_COUNTERS, constraint_report,
+    from schema_guru_spark.pipeline import (constraint_report,
                                             validate_repo_table,
                                             verdict_summary)
     from schema_guru_spark.sources.repo_table import synthesize_repo_table
@@ -259,9 +259,9 @@ def main(argv=None) -> dict:
                                   n_buckets=args.buckets, n_salts=args.salts,
                                   chunk_size=args.chunk_size,
                                   max_err_rate=args.max_err_rate)
-        # at most n_buckets verdict rows (already on the driver without
-        # a checkpoint): sum the counters here, not in another Spark job
-        verdicts = res.verdicts.select(*_COUNTERS, "passed").collect()
+        # at most n_buckets verdict rows, already on the driver: sum
+        # the counters here, not in another Spark job
+        verdicts = res.verdict_rows.to_dict("records")
         n_violations = res.violations.count()
         t_validate = time.perf_counter() - t0
         rep = f_rep.result()

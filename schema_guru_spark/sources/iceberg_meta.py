@@ -530,7 +530,12 @@ def plan_scan(table_path: str, snapshot_id: Optional[int] = None,
     deletes in a partitioned spec apply within their partition per the
     spec).
     """
-    meta = load_table_metadata(table_path)
+    return _plan_scan(table_path, load_table_metadata(table_path),
+                      snapshot_id, partition_filter)
+
+
+def _plan_scan(table_path: str, meta: dict, snapshot_id: Optional[int],
+               partition_filter: Optional[dict[str, Any]]) -> ScanPlan:
     snap = _select_snapshot(meta, snapshot_id)
     if not snap:
         return ScanPlan([], [])
@@ -619,14 +624,22 @@ def plan_incremental(table_path: str, from_snapshot_id: int,
     snapshots are kept. ``partition_filter`` prunes files as in
     ``plan_scan`` and, like there, does not filter the rows of a kept
     file: ``catalog.read_table_appends`` is the row-exact entry point.
+    Both ids must be in the table metadata (``LookupError`` otherwise),
+    also when they are equal and the window is empty.
     """
-    meta = load_table_metadata(table_path)
+    return _plan_incremental(table_path, load_table_metadata(table_path),
+                             from_snapshot_id, to_snapshot_id,
+                             partition_filter)
+
+
+def _plan_incremental(table_path: str, meta: dict, from_snapshot_id: int,
+                      to_snapshot_id: Optional[int],
+                      partition_filter: Optional[dict[str, Any]]
+                      ) -> ScanPlan:
     if to_snapshot_id is None:
         to_snapshot_id = meta.get("current-snapshot-id")
         if to_snapshot_id in (None, -1):
             raise LookupError(f"{table_path}: empty table, no snapshot")
-    if from_snapshot_id == to_snapshot_id:
-        return ScanPlan([], [])
     window = _ancestors_between(meta, from_snapshot_id, to_snapshot_id)
 
     def added_manifests() -> Iterable[dict]:
@@ -666,10 +679,12 @@ def read_iceberg_incremental(spark, table_path: str,
 
     ``partition_filter`` only prunes files; rows of the kept files are
     not filtered. ``catalog.read_table_appends`` is the row-exact entry
-    point."""
-    plan = plan_incremental(table_path, from_snapshot_id,
-                            to_snapshot_id, partition_filter)
-    return _read_plan(spark, load_table_metadata(table_path), plan)
+    point. The metadata is parsed once, and the plan is projected
+    under the same version it was planned from."""
+    meta = load_table_metadata(table_path)
+    return _read_plan(spark, meta, _plan_incremental(
+        table_path, meta, from_snapshot_id, to_snapshot_id,
+        partition_filter))
 
 
 def data_files(table_path: str, snapshot_id: Optional[int] = None,
@@ -698,6 +713,13 @@ _ICE_TO_SPARK = {"string": "string", "long": "bigint", "int": "int",
                  # UTC-adjusted (spec Primitive Types)
                  "timestamp": "timestamp_ntz",
                  "timestamptz": "timestamp", "date": "date"}
+
+
+def _spark_ddl(schema: dict) -> str:
+    """The Spark DDL of an Iceberg schema's (primitive) fields."""
+    return ", ".join(
+        f"`{f['name'].replace('`', '``')}` {_ICE_TO_SPARK[f['type']]}"
+        for f in schema["fields"])
 
 
 # broadcast delete sets below this many rows (manifest record counts,
@@ -795,11 +817,12 @@ def read_iceberg(spark, table_path: str,
 
     ``partition_filter`` only prunes files (see ``plan_scan``): rows of
     the kept files are not filtered. ``catalog.read_table`` is the
-    row-exact entry point.
+    row-exact entry point. The metadata is parsed once, and the plan is
+    projected under the same version it was planned from.
     """
     meta = load_table_metadata(table_path)
-    return _read_plan(spark, meta,
-                      plan_scan(table_path, snapshot_id, partition_filter))
+    return _read_plan(spark, meta, _plan_scan(table_path, meta, snapshot_id,
+                                              partition_filter))
 
 
 def _read_plan(spark, meta: dict, plan: ScanPlan):
@@ -831,23 +854,23 @@ def _read_plan(spark, meta: dict, plan: ScanPlan):
 
     cur_schema = _current_schema(meta)
     if not plan.data:
-        ddl = ", ".join(
-            f"`{f['name']}` {_ICE_TO_SPARK[f['type']]}"
-            for f in cur_schema["fields"])
-        return spark.createDataFrame([], ddl)
+        return spark.createDataFrame([], _spark_ddl(cur_schema))
 
     # group files by the schema they were written under and project
     # each group to the CURRENT schema by FIELD ID — renames map to
     # the new name, reorders normalize, dropped-then-readded or
     # late-added columns come back as nulls, int->long / float->double
     # widen. (Real Iceberg resolves the same way; name-based reads
-    # would silently miss renamed columns.)
+    # would silently miss renamed columns.) Each group is read under
+    # its write schema, known from the metadata, so the read runs no
+    # footer-inference job.
     by_schema: dict[int, list[str]] = {}
     for f in plan.data:
         by_schema.setdefault(f.schema_id, []).append(f.path)
     parts = []
     for sid, paths in sorted(by_schema.items()):
-        g = spark.read.parquet(*paths)
+        g = spark.read.schema(_spark_ddl(_schema_by_id(meta, sid))) \
+            .parquet(*paths)
         if plan.deletes:
             g = (g.withColumn("__sg_path",
                               _norm_path(F.col("_metadata.file_path")))

@@ -98,6 +98,41 @@ def test_plan_incremental_unknown_snapshots(table3):
         plan_incremental(tp, s1, 999)
 
 
+def test_plan_incremental_empty_window_checks_the_id(table3):
+    """An empty window (from == to) is planned only for a snapshot the
+    table has: a stale or wrong id raises like an unequal pair does,
+    instead of planning a silently empty window."""
+    tp, _, _, s3 = table3
+    assert plan_incremental(tp, s3, s3) == plan_incremental(tp, s3)
+    with pytest.raises(LookupError, match="snapshot 999 not in"):
+        plan_incremental(tp, 999, 999)
+
+
+@pytest.mark.parametrize("incremental", [False, True])
+def test_read_parses_metadata_once(spark, table3, monkeypatch,
+                                   incremental):
+    """A read plans and projects from ONE parse of metadata.json, so a
+    commit landing mid-read cannot project the plan onto a schema it
+    was not planned under; and it reads under the known write schema
+    (no footer-inference job)."""
+    from schema_guru_spark.run_validation import _next_job_id
+    from schema_guru_spark.sources import iceberg_meta
+    tp, s1, _, s3 = table3
+    calls = []
+
+    def counted(*a, **kw):
+        calls.append(a)
+        return load_table_metadata(*a, **kw)
+
+    monkeypatch.setattr(iceberg_meta, "load_table_metadata", counted)
+    lo = _next_job_id(spark)
+    df = (iceberg_meta.read_iceberg_incremental(spark, tp, s1, s3)
+          if incremental else iceberg_meta.read_iceberg(spark, tp))
+    assert len(calls) == 1
+    assert _next_job_id(spark) == lo
+    assert df.count() == (30 if incremental else 60)
+
+
 def test_parent_snapshot_ids_recorded(table3):
     tp, s1, s2, s3 = table3
     snaps = {s["snapshot-id"]: s
@@ -584,12 +619,12 @@ def test_params_pin_canonicalizes_collection_filters(spark, tmp_path):
 
 def test_incremental_append_job_count_flat(spark, tmp_path):
     """An append's validation cost is fixed: every incremental_validate
-    of a chain runs the same number of Spark jobs, at most 12 (the
-    scan's partial rows folded into verdicts on the driver, verdict
-    rows built and collected through Arrow, every sink read under its
-    known schema), none of them a grouped Python stage, and
-    cumulative_report runs at most 2 (the verdict sinks fold on the
-    driver; only the HLL union runs in Spark) however many deltas are
+    of a chain runs the same number of Spark jobs, at most 2 — the scan
+    (its partial and key-sketch rows collected through Arrow, the delta
+    read under its known schema) and the violations write — none of
+    them a grouped Python stage. The verdicts, the chunk key sketch and
+    the manifest are written and read on the driver, and
+    cumulative_report runs no Spark job however many deltas are
     committed."""
     from conftest import executed_plans, last_execution_id
     from schema_guru_spark.plans.incremental import cumulative_report
@@ -617,9 +652,133 @@ def test_incremental_append_job_count_flat(spark, tmp_path):
         cum = cumulative_report(spark, ckpt)
         cum_jobs.append(_next_job_id(spark) - lo)
         assert cum == rep["cumulative"]
-    assert max(append_jobs) <= 12, append_jobs
+    assert max(append_jobs) <= 2, append_jobs
     assert append_jobs[0] == append_jobs[2], append_jobs
-    assert max(cum_jobs) <= 2, cum_jobs
+    assert max(cum_jobs) == 0, cum_jobs
+
+
+# ------------------------------------------------ key sketch laws
+
+_hashes = st.lists(st.integers(-2 ** 63, 2 ** 63 - 1), max_size=300)
+
+
+@settings(max_examples=50, deadline=None)
+@given(a=_hashes, b=_hashes, cut=st.integers(0, 300))
+def test_sketch_of_union_is_max_of_sketches(a, b, cut):
+    """The registers of A ∪ B are the element-wise max of A's and B's,
+    byte for byte, however the rows are split into tasks and merged."""
+    import numpy as np
+    from schema_guru_spark.operators.constraints import (hll_merge,
+                                                         hll_registers)
+    whole = hll_registers(np.array(a + b, dtype=np.int64)).tobytes()
+    ab = a + b
+    # the per-hash loop reference: top 14 bits pick the register, which
+    # keeps the max 1-based position of the first 1 bit in the other 50
+    ref = bytearray(1 << 14)
+    for h in ab:
+        u = h % 2 ** 64
+        idx, w = u >> 50, u & (2 ** 50 - 1)
+        ref[idx] = max(ref[idx], 51 - w.bit_length())
+    assert bytes(ref) == whole
+    parts = [hll_registers(np.array(p, dtype=np.int64))
+             for p in (ab[:cut], ab[cut:])]
+    assert hll_merge(parts).tobytes() == whole
+    assert hll_merge([hll_registers(np.array(a, dtype=np.int64)),
+                      hll_registers(np.array(b, dtype=np.int64)).tobytes()]
+                     ).tobytes() == whole
+    # folding into existing registers is the same merge
+    regs = hll_registers(np.array(a, dtype=np.int64))
+    assert hll_registers(np.array(b, dtype=np.int64), regs).tobytes() \
+        == whole
+
+
+@pytest.mark.parametrize("n", [1, 2, 7, 100, 1000, 12_345, 50_000,
+                               200_000])
+def test_sketch_estimate_within_4_sigma(n):
+    """The estimator is exact on empty registers and within 4 standard
+    errors (4 x 1.04/sqrt(2^14) = 3.2%) of the exact distinct count
+    from one key to 200k."""
+    import numpy as np
+    from schema_guru_spark.operators.constraints import (HLL_M, hll_estimate,
+                                                         hll_registers)
+    assert hll_estimate(np.zeros(HLL_M, np.uint8)) == 0.0
+    keys = np.random.default_rng(n).integers(-2 ** 63, 2 ** 63 - 1, n,
+                                             dtype=np.int64)
+    # every key twice: duplicates never raise the estimate
+    est = hll_estimate(hll_registers(np.concatenate([keys, keys[::-1]])))
+    assert abs(est - n) / n <= 0.032, (n, est)
+
+
+def _delta_sketch(ckpt):
+    """The merged key sketch and row count of the one delta of
+    ``ckpt``."""
+    from schema_guru_spark.operators.constraints import hll_merge
+    from schema_guru_spark.pipeline import _KEY_SKETCH_SCHEMA
+    from schema_guru_spark.plans.checkpoint import arrow_schema, read_sink
+    [delta] = [d for d in os.listdir(ckpt) if d.startswith("e000")]
+    t = read_sink(os.path.join(ckpt, delta, "key_sketch"),
+                  arrow_schema(_KEY_SKETCH_SCHEMA))
+    return (sum(t.column("n_rows").to_pylist()),
+            hll_merge(t.column("sketch").to_pylist()).tobytes(), t.num_rows)
+
+
+def test_resumed_delta_sketch_equals_one_chunk_run(spark, tmp_path,
+                                                   monkeypatch):
+    """A delta killed after its first chunk commits and then resumed
+    stores one sketch per chunk, and their merge is byte-identical to
+    the sketch of the same delta validated in one chunk."""
+    from schema_guru_spark.plans.checkpoint import CheckpointManager
+    from schema_guru_spark.plans.incremental import incremental_validate
+    tp = str(tmp_path / "repos")
+    append_snapshot(tp, _vrows(60, "c1"), SCHEMA, partition_by="lang")
+    kw = dict(n_buckets=N_BUCKETS, allowed_langs=("json",))
+    one = str(tmp_path / "one")
+    rep_one = incremental_validate(spark, tp, one, **kw)
+
+    chunked = str(tmp_path / "chunked")
+    record_done = CheckpointManager.record_done
+    commits = []
+
+    def killed_after_first_chunk(self, metrics):
+        if commits:
+            raise RuntimeError("killed")
+        commits.append(1)
+        record_done(self, metrics)
+
+    monkeypatch.setattr(CheckpointManager, "record_done",
+                        killed_after_first_chunk)
+    with pytest.raises(RuntimeError, match="killed"):
+        incremental_validate(spark, tp, chunked, chunk_size=1, **kw)
+    monkeypatch.setattr(CheckpointManager, "record_done", record_done)
+    rep = incremental_validate(spark, tp, chunked, chunk_size=1, **kw)
+    assert rep["delta"]["resumed_buckets"] == 1
+    n_rows, sketch, n_chunks = _delta_sketch(chunked)
+    assert n_chunks == N_BUCKETS
+    assert (n_rows, sketch, 1) == _delta_sketch(one)
+    assert rep["cumulative"]["uniqueness"] == \
+        rep_one["cumulative"]["uniqueness"]
+    assert rep["cumulative"]["uniqueness"]["n_rows"] == 60
+
+
+def test_checkpoint_with_other_sketch_format_is_refused(spark, tmp_path):
+    """A checkpoint whose pinned parameters lack this key-sketch format
+    (one written before the registers were built in the scan holds
+    DataSketches bytes) is refused by the parameter guard, naming
+    key_sketch, instead of merging registers it cannot read."""
+    tp = str(tmp_path / "repos")
+    ckpt = str(tmp_path / "ckpt")
+    append_snapshot(tp, _vrows(10, "c1"), SCHEMA, partition_by="lang")
+    _run(spark, tp, ckpt)
+    path = os.path.join(ckpt, "table_state.json")
+    with open(path) as fh:
+        state = json.load(fh)
+    del state["params"]["key_sketch"]
+    with open(path, "w") as fh:
+        json.dump(state, fh)
+    append_snapshot(tp, _vrows(10, "c2", start=10), SCHEMA,
+                    partition_by="lang")
+    with pytest.raises(ValueError, match=r"parameters \(key_sketch\)"):
+        _run(spark, tp, ckpt)
 
 
 # ---------------------------------------- driver-side cumulative fold

@@ -121,14 +121,17 @@ def test_finished_buckets_missing_manifest_is_empty(spark, tmp_path):
 
 
 def test_finished_buckets_reads_manifest_once(spark, tmp_path):
-    """The manifest is read under MANIFEST_SCHEMA in one job: no
-    existence probe, no schema-inference job."""
+    """The manifest is written and read with pyarrow on the driver: no
+    Spark job for either, and every append is one more file."""
+    import os
     from schema_guru_spark.run_validation import _next_job_id
     mgr = CheckpointManager(spark, str(tmp_path / "ck"))
-    mgr.record_done([{"bucket": b, "n_rows": 1} for b in (0, 2, 2, 5)])
     lo = _next_job_id(spark)
+    mgr.record_done([{"bucket": b, "n_rows": 1} for b in (0, 2, 2)])
+    mgr.record_done([{"bucket": 5, "n_rows": 1}])
     assert mgr.finished_buckets() == {0, 2, 5}
-    assert _next_job_id(spark) - lo == 1
+    assert _next_job_id(spark) - lo == 0
+    assert len(os.listdir(mgr.manifest_path)) == 2
 
 
 def test_finished_buckets_corrupt_manifest_raises(spark, repo_df,
@@ -139,11 +142,27 @@ def test_finished_buckets_corrupt_manifest_raises(spark, repo_df,
     (ck / "manifest").mkdir(parents=True)
     (ck / "manifest" / "part-00000.parquet").write_bytes(b"not parquet")
     mgr = CheckpointManager(spark, str(ck))
-    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+    with pytest.raises(Exception, match="magic bytes not found"):
         mgr.finished_buckets()
-    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+    with pytest.raises(Exception, match="magic bytes not found"):
         validate_repo_table(spark, repo_df, checkpoint_dir=str(ck),
                             n_buckets=N_BUCKETS)
+
+
+def test_checkpoint_dir_must_be_driver_local(spark, repo_df, tmp_path):
+    """Checkpoints are read and written with local file I/O on the
+    driver: a non-file URI scheme is refused before any scan, and a
+    file: URI means its local path."""
+    from schema_guru_spark.run_validation import _next_job_id
+    lo = _next_job_id(spark)
+    with pytest.raises(ValueError, match="'s3a'.*driver-local"):
+        validate_repo_table(spark, repo_df, checkpoint_dir="s3a://b/ck",
+                            n_buckets=N_BUCKETS)
+    assert _next_job_id(spark) == lo
+    mgr = CheckpointManager(spark, f"file://{tmp_path}/ck")
+    mgr.record_done([{"bucket": 1}])
+    assert CheckpointManager(spark, str(tmp_path / "ck")) \
+        .finished_buckets() == {1}
 
 
 def test_manifest_metrics_round_trip(spark, repo_df, tmp_path):
@@ -567,10 +586,33 @@ def test_scan_pass_vectorized_equals_naive_reference():
         (1, "r7", "md", None, False, True),        # sha violation
         (0, "r8", "go", None, True, False),        # lang violation
     ]
+    import numpy as np
+
+    from schema_guru_spark.operators import constraints as C
+
     pdf = pd.DataFrame(rows, columns=["bucket", "repo", "lang", "content",
                                       "sha_ok", "lang_ok"])
-    out = list(_scan_pass(ctx, max_violation_examples=100)(iter([pdf])))
+    # the key hash the scan projects for the key sketch: any int64s
+    pdf["kh"] = np.random.default_rng(3).integers(
+        -2 ** 63, 2 ** 63 - 1, len(rows), dtype=np.int64)
+    # two batches: the task's one sketch row covers both
+    out = list(_scan_pass(ctx, max_violation_examples=100, key_sketch=True)(
+        iter([pdf.iloc[:4], pdf.iloc[4:]])))
     got = pd.concat(out, ignore_index=True)
+
+    # exactly one sketch row, last, carrying nothing else: the
+    # registers of every row's key hash
+    is_sketch = got["sketch"].notna()
+    assert is_sketch.tolist() == [False] * (len(got) - 1) + [True]
+    sk = got[is_sketch].iloc[0]
+    assert sk.drop("sketch").isna().all()
+    assert sk["sketch"] == C.hll_registers(pdf["kh"]).tobytes()
+    got = got[~is_sketch]
+    # without key_sketch the same rows, and no sketch row
+    plain = pd.concat(_scan_pass(ctx, max_violation_examples=100)(
+        iter([pdf.iloc[:4], pdf.iloc[4:]])), ignore_index=True)
+    assert plain["sketch"].isna().all()
+    pd.testing.assert_frame_equal(plain, got, check_dtype=False)
 
     # naive reference: per-row fold
     ref_states: dict[int, dict] = {}
