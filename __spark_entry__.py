@@ -1,10 +1,18 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Each ``queries()`` entry is an implemented operator from SURVEY.md §2,
-runnable as ``fn(spark, sf_dir) -> DataFrame``; ``oracle_sql()`` holds the
-DuckDB-equivalent ANSI SQL (same column names/aliases) for the driver's
-side-by-side correctness check. Non-SQL-expressible operators (the
-recursive schema-merge aggregation) have no oracle entry -> rows-only.
+``REGISTRY`` names each implemented operator from SURVEY.md §2 once:
+its query, runnable as ``fn(spark, sf_dir) -> DataFrame``; its DuckDB
+oracle SQL (same column names/aliases) for the driver's side-by-side
+correctness check, or ``None`` when the operator is not
+SQL-expressible (the recursive schema-merge render, the KS sketch) and
+is checked rows-only; and whether it is in the driver's window. The
+queries and their oracles sit side by side in ``driver_queries/``, one
+module per operator family.
+
+The window: the driver's correctness harness records only the FIRST 50
+entries of ``queries()``. ``queries()`` lists the in-window entries
+first, in registry order, then the rest; an entry past the window is
+still checked against its oracle by tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations
@@ -13,41 +21,123 @@ import json
 import os
 import sys
 from collections.abc import Callable
+from typing import NamedTuple, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from schema_guru_spark.core.context import SchemaContext
-from schema_guru_spark.operators import constraints as C
-from schema_guru_spark.operators import dedup as D
-from schema_guru_spark.operators import sampling as SMP
-from schema_guru_spark.operators import similarity as SIM
-from schema_guru_spark.operators import stats as S
-from schema_guru_spark.operators import textstats as TS
-from schema_guru_spark.operators.infer import (
-    infer_json_column,
-    infer_json_column_by_key,
+from driver_queries import constraints, dedup, infer, media, sampling, text
+from driver_queries import table
+from schema_guru_spark.operators.infer import infer_json_column
+
+Query = Callable[[SparkSession, str], DataFrame]
+
+
+class Op(NamedTuple):
+    name: str
+    query: Query
+    oracle: Optional[str]  # None: rows-only
+    window: bool           # recorded by the driver
+
+
+IN, OUT = True, False
+
+REGISTRY = (
+    Op("infer_top_keys", infer.top_keys, infer.TOP_KEYS, IN),
+    Op("infer_string_annotations", infer.string_annotations,
+       infer.STRING_ANNOTATIONS, IN),
+    Op("infer_numeric_bounds", infer.numeric_bounds, infer.NUMERIC_BOUNDS,
+       IN),
+    Op("infer_by_type_keys", infer.by_type_keys, infer.BY_TYPE_KEYS, IN),
+    Op("infer_props_schema", infer.props_schema, None, IN),
+    Op("infer_by_event_type", infer.by_event_type, None, IN),
+    Op("string_profile_doc_text", infer.doc_text_profile,
+       infer.DOC_TEXT_PROFILE, IN),
+    Op("numeric_profile_quantity", infer.quantity_profile,
+       infer.QUANTITY_PROFILE, IN),
+    Op("enum_orderpriority", infer.orderpriority_enum,
+       infer.ORDERPRIORITY_ENUM, IN),
+    Op("enum_over_cardinality", infer.event_type_enum,
+       infer.EVENT_TYPE_ENUM, IN),
+    Op("duplicate_keys_source", infer.source_key_dupes,
+       infer.SOURCE_KEY_DUPES, IN),
+    Op("segment_props", infer.props_segments, infer.PROPS_SEGMENTS, IN),
+    Op("latest_event_per_user", infer.latest_event, infer.LATEST_EVENT, IN),
+    Op("uniqueness_lineitem_pk", constraints.lineitem_pk_unique,
+       constraints.LINEITEM_PK_UNIQUE, IN),
+    Op("ri_orders_customer", constraints.orders_customer_ri,
+       constraints.ORDERS_CUSTOMER_RI, IN),
+    Op("duplicate_rows_events_user", constraints.events_user_dup_rows,
+       constraints.EVENTS_USER_DUP_ROWS, IN),
+    Op("psi_price_returnflag", constraints.psi, constraints.PSI, IN),
+    Op("ks_quantity_linestatus", constraints.ks, constraints.KS, IN),
+    Op("ks_quantity_sketch", constraints.ks_sketch, None, IN),
+    Op("snakify_mktsegment", infer.snakify, infer.SNAKIFY, IN),
+    Op("exact_dup_props", dedup.exact_dups, dedup.EXACT_DUPS, IN),
+    Op("unigram_jaccard_docs", dedup.unigram_jaccard, dedup.UNIGRAM_JACCARD,
+       IN),
+    Op("token_stats_docs", text.token_stats, text.TOKEN_STATS, IN),
+    Op("lang_id_docs", text.lang_id, text.LANG_ID, IN),
+    Op("quality_docs", text.quality, text.QUALITY, IN),
+    Op("pii_docs", text.pii, text.PII, IN),
+    Op("repetition_docs", text.repetition, text.REPETITION, IN),
+    Op("contamination_docs", text.contamination, text.CONTAMINATION, IN),
+    Op("dup_span_census_docs", text.span_census, text.SPAN_CENSUS, IN),
+    Op("curation_docs", text.curation, text.CURATION, IN),
+    Op("source_mix_docs", text.source_mix, text.SOURCE_MIX, IN),
+    Op("cosine_topk_embeddings", dedup.cosine_topk, dedup.COSINE_TOPK, IN),
+    Op("drift_price_by_returnflag", constraints.drift, constraints.DRIFT,
+       IN),
+    Op("moment_drift_quantity", constraints.moment_drift,
+       constraints.MOMENT_DRIFT, IN),
+    Op("completeness_orders", constraints.completeness,
+       constraints.COMPLETENESS, IN),
+    Op("fd_lineitem_order_returnflag", constraints.fd, constraints.FD, IN),
+    Op("png_decode_features", media.png, media.PNG, IN),
+    Op("jpeg_decode_features", media.jpeg, media.JPEG, IN),
+    Op("wav_decode_features", media.wav, media.WAV, IN),
+    Op("avi_frame_features", media.avi, media.AVI, IN),
+    Op("mjpeg_frame_features", media.mjpeg, media.MJPEG, IN),
+    Op("progressive_jpeg_features", media.progressive_jpeg,
+       media.PROGRESSIVE_JPEG, IN),
+    Op("minhash_pairs_docs", dedup.minhash_pairs, dedup.MINHASH_PAIRS, IN),
+    Op("near_dup_clusters_docs", dedup.clusters, dedup.CLUSTERS, IN),
+    Op("simhash_neardup_docs", dedup.simhash_pairs, dedup.SIMHASH_PAIRS, IN),
+    Op("ivf_topk_embeddings", dedup.ivf_topk, dedup.IVF_TOPK, IN),
+    Op("embedding_neardup_pairs", dedup.embedding_pairs,
+       dedup.EMBEDDING_PAIRS, IN),
+    Op("knn_join_embeddings", dedup.knn_join, dedup.KNN_JOIN, IN),
+    Op("dedup_keep_list_docs", dedup.keep_list, dedup.KEEP_LIST, IN),
+    Op("fingerprint_winnow_docs", text.winnow, text.WINNOW, IN),
+    Op("stratified_sample_docs", sampling.stratified, sampling.STRATIFIED,
+       OUT),
+    Op("pack_sequences_docs", sampling.pack, sampling.PACK, OUT),
+    Op("quality_topk_per_source", sampling.quality_topk,
+       sampling.QUALITY_TOPK, OUT),
+    Op("hash_split_docs", sampling.hash_split, sampling.HASH_SPLIT, OUT),
+    Op("domain_mix_plan_docs", sampling.mix_plan, sampling.MIX_PLAN, OUT),
+    # twins of entries above, each through a path or input those miss
+    Op("string_profile_cname", infer.cname_profile, infer.CNAME_PROFILE,
+       OUT),
+    Op("numeric_profile_acctbal", infer.acctbal_profile,
+       infer.ACCTBAL_PROFILE, OUT),
+    Op("duplicate_keys_distributed", infer.source_key_dupes_distributed,
+       infer.SOURCE_KEY_DUPES, OUT),
+    Op("simhash_fp_docs", dedup.simhash_fps, dedup.SIMHASH_FPS, OUT),
+    Op("fingerprint_md5_docs", text.content_md5, text.CONTENT_MD5, OUT),
+    Op("uniqueness_orders", constraints.orders_unique,
+       constraints.ORDERS_UNIQUE, OUT),
 )
 
-CTX = SchemaContext.make(0)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# ---------------------------------------------------------------------------
-# entry — flagship: distributed schema inference over events.props
-# ---------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Infer the merged JSON Schema of sf0.001 events.props (derive ->
-    per-partition merge -> tree combine -> transform passes), returning a
-    one-row DataFrame with the rendered schema + counters."""
-    events = _t(spark, "/root/testdata/sf0.001", "events")
-    res = infer_json_column(events, "props", CTX)
-    rendered = json.dumps(res.schema(CTX), sort_keys=True)
+    """Flagship: infer the merged JSON Schema of sf0.001 events.props
+    (derive -> per-partition merge -> tree combine -> transform passes),
+    returning a one-row DataFrame with the rendered schema + counters."""
+    events = table(spark, "/root/testdata/sf0.001", "events")
+    res = infer_json_column(events, "props", infer.CTX)
+    rendered = json.dumps(res.schema(infer.CTX), sort_keys=True)
     dupes = json.dumps(sorted(res.duplicated_keys()))
     return spark.createDataFrame(
         [(rendered, res.n_ok, res.n_err, dupes)],
@@ -55,1849 +145,10 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# queries — one per operator
-# ---------------------------------------------------------------------------
-
-def q_string_profile_cname(spark, sf):
-    return S.string_profile(_t(spark, sf, "customer"), "c_name")
-
-
-def q_string_profile_doc_text(spark, sf):
-    return S.string_profile(_t(spark, sf, "documents"), "text")
-
-
-def q_numeric_profile_quantity(spark, sf):
-    return S.numeric_profile(_t(spark, sf, "lineitem"), "l_quantity")
-
-
-def q_numeric_profile_acctbal(spark, sf):
-    return S.numeric_profile(_t(spark, sf, "customer"), "c_acctbal")
-
-
-def q_enum_orderpriority(spark, sf):
-    df = S.enum_candidates(_t(spark, sf, "orders"), "o_orderpriority", 8)
-    return df.select("n_distinct",
-                     F.array_join("enum", ",").alias("enum_csv"))
-
-
-def q_enum_over_cardinality(spark, sf):
-    # tombstoned: > 3 distinct values at K=3 -> NULL (E1 elimination)
-    df = S.enum_candidates(_t(spark, sf, "events"), "event_type", 3)
-    return df.select("n_distinct",
-                     F.array_join("enum", ",").alias("enum_csv"))
-
-
-def q_duplicate_keys_source(spark, sf):
-    return S.duplicate_keys(_t(spark, sf, "documents"), "source") \
-            .orderBy("key_a", "key_b")
-
-
-def q_duplicate_keys_distributed(spark, sf):
-    # the past-the-guard plan (deletion-neighborhood equi-join + exact
-    # levenshtein verify) must produce byte-identical pairs to the
-    # driver-side reference pairing — same oracle SQL
-    return S.duplicate_keys_distributed(_t(spark, sf, "documents"),
-                                        "source") \
-            .orderBy("key_a", "key_b")
-
-
-def q_segment_props(spark, sf):
-    return S.segment_counts(_t(spark, sf, "events"), "props", "$.k")
-
-
-# ts is TIMESTAMP_NTZ; DuckDB's epoch(naive ts) is UTC-naive. NTZ
-# interval arithmetic gives the same number WITHOUT reading (or
-# mutating) the session timezone, so the query fn stays pure.
-# FLOOR semantics, not the interval cast's truncation: for a pre-1970
-# fractional-second ts the oracle's floor(epoch(ts)) is -1 where
-# CAST(interval AS BIGINT) rounds toward zero to 0. Exact integer
-# micros, then pmod-based floor division (pmod >= 0, the subtraction
-# leaves an exact multiple of 1e6, so the double division is exact).
-EPOCH_NTZ_SQL = (
-    "CAST((timestampdiff(MICROSECOND,"
-    " TIMESTAMP_NTZ '1970-01-01 00:00:00', {col})"
-    " - pmod(timestampdiff(MICROSECOND,"
-    " TIMESTAMP_NTZ '1970-01-01 00:00:00', {col}), 1000000))"
-    " / 1000000 AS BIGINT)")
-
-
-def q_latest_event_per_user(spark, sf):
-    out = S.group_with_latest(_t(spark, sf, "events"), ["user_id"],
-                              ["ts", "event_id"])
-    epoch = F.expr(EPOCH_NTZ_SQL.format(col="ts"))
-    return out.select("user_id", "event_id", "event_type",
-                      epoch.alias("ts_epoch")) \
-              .orderBy("user_id")
-
-
-def q_uniqueness_orders(spark, sf):
-    return C.uniqueness_exact(_t(spark, sf, "orders"), ["o_orderkey"])
-
-
-def q_uniqueness_lineitem_pk(spark, sf):
-    return C.uniqueness_exact(_t(spark, sf, "lineitem"),
-                              ["l_orderkey", "l_linenumber"])
-
-
-def q_ri_orders_customer(spark, sf):
-    return C.orphan_key_counts(_t(spark, sf, "orders"),
-                               _t(spark, sf, "customer"),
-                               "o_custkey", "c_custkey")
-
-
-def q_duplicate_rows_events_user_ts(spark, sf):
-    return C.duplicate_key_rows(_t(spark, sf, "events"), ["user_id"]) \
-            .orderBy("user_id")
-
-
-def q_psi_price_returnflag(spark, sf):
-    return C.psi(_t(spark, sf, "lineitem"), "l_extendedprice",
-                 "l_returnflag", "R", "N", n_bins=10)
-
-
-def q_ks_quantity_linestatus(spark, sf):
-    return C.ks_two_sample(_t(spark, sf, "lineitem"), "l_quantity",
-                           "l_linestatus", "O", "F")
-
-
-def q_ks_quantity_sketch(spark, sf):
-    # the 100 TB KS path: one aggregation pass over mergeable quantile
-    # sketches (percentile_approx). No SQL oracle — DuckDB cannot
-    # reproduce Spark's QuantileSummaries cut-points — so rows-only; the
-    # exact query above stays the oracle-confirmed twin and
-    # test_ks_sketch_close_to_exact pins the two within ~0.01.
-    v = C.ks_two_sample_sketch(_t(spark, sf, "lineitem"), "l_quantity",
-                               "l_linestatus", "O", "F")
-    return spark.createDataFrame([(round(v, 6),)], "ks_stat_sketch double")
-
-
-def q_snakify_mktsegment(spark, sf):
-    # F4 snakify over distinct values (camelCase -> snake_case)
-    df = _t(spark, sf, "customer").select("c_mktsegment").distinct()
-    return df.select(F.col("c_mktsegment").alias("raw"),
-                     S.snakify(F.col("c_mktsegment")).alias("snake")) \
-             .orderBy("raw")
-
-
-# --- dedup / similarity / text analysis (training-data pipeline ops) ---
-
-def q_exact_dup_props(spark, sf):
-    return (D.exact_duplicates(_t(spark, sf, "events"), "props", "event_id")
-            .select("digest", "n").orderBy("digest"))
-
-
-def q_unigram_jaccard_docs(spark, sf):
-    docs = _t(spark, sf, "documents").where(F.col("doc_id") < 60)
-    return D.ngram_jaccard_pairs(docs, "doc_id", "text", n=1, threshold=0.6)
-
-
-def q_token_stats_docs(spark, sf):
-    return TS.token_stats(_t(spark, sf, "documents"), "text", "doc_id")
-
-
-def q_lang_id_docs(spark, sf):
-    return TS.lang_id(_t(spark, sf, "documents"), "text", "doc_id")
-
-
-def q_quality_docs(spark, sf):
-    return TS.quality_scores(_t(spark, sf, "documents"), "text", "doc_id")
-
-
-def q_pii_docs(spark, sf):
-    # pii_scan's output is already id-sorted (narrow pre-sort inside
-    # the operator; re-sorting here would recompute the regex pass)
-    return TS.pii_scan(_t(spark, sf, "documents"), "text", "doc_id")
-
-
-def q_fingerprint_md5_docs(spark, sf):
-    return TS.fingerprints(_t(spark, sf, "documents"), "text", "doc_id") \
-             .select("id", "content_md5")
-
-
-def q_repetition_docs(spark, sf):
-    # Gopher-style within-doc repetition signals (dup n-gram fractions,
-    # top-bigram share) — pure per-row array expressions, zero shuffle
-    return TS.repetition_signals(_t(spark, sf, "documents"),
-                                 "text", "doc_id")
-
-
-def q_contamination_docs(spark, sf):
-    # benchmark decontamination: corpus docs (id >= 5) screened against
-    # a broadcast benchmark gram set built from docs 0-4
-    docs = _t(spark, sf, "documents")
-    return TS.contamination_check(
-        docs.where(F.col("doc_id") >= 5), docs.where(F.col("doc_id") < 5),
-        "text", "doc_id", n=5)
-
-
-def q_dup_span_census_docs(spark, sf):
-    # cross-document duplicated word-8-gram census (C4-style span-dedup
-    # discovery pass): one shuffle keyed by span
-    return TS.interdoc_span_census(_t(spark, sf, "documents"),
-                                   "text", "doc_id", k=8)
-
-
-def q_curation_docs(spark, sf):
-    # end-product keep/drop verdict with reason codes, composing quality,
-    # repetition caps, lang allow-list, PII, and benchmark contamination
-    # (docs 0-4 as the broadcast benchmark set); thresholds chosen to
-    # exercise every reason code on the fixture
-    docs = _t(spark, sf, "documents")
-    return TS.curation_report(
-        docs.where(F.col("doc_id") >= 5), "text", "doc_id",
-        bench=docs.where(F.col("doc_id") < 5), contamination_n=5,
-        quality_min=0.75, dup3_max=0.01, top2_max=0.06,
-        allowed_langs=("en",))
-
-
-def q_source_mix_docs(spark, sf):
-    # per-source data-mixing report (doc/char/token volumes, mean
-    # quality, corpus share)
-    return TS.source_mix_report(_t(spark, sf, "documents"),
-                                "text", "source")
-
-
-def q_stratified_sample_docs(spark, sf):
-    # deterministic per-source mixture downsampling: src0 kept whole,
-    # progressively heavier cuts on src1-3, default rate for the rest;
-    # the keep set is a pure function of (salt, doc_id, rates) — zero
-    # shuffle, nested across rate changes, bit-reproducible in SQL
-    rates = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.125}
-    return SMP.stratified_sample(_t(spark, sf, "documents"), "source",
-                                 "doc_id", rates, default_rate=0.0625) \
-              .orderBy("id")
-
-
-def q_pack_sequences_docs(spark, sf):
-    # token-budget sequence packing for training batches: whitespace
-    # token counts (same expression as token_stats.n_ws_tokens), docs
-    # concatenated in id order, seq = floor(start_offset / 2048); the
-    # global prefix sum is two-phase (per-range partials + broadcast
-    # offsets), never a single-task global window
-    docs = _t(spark, sf, "documents")
-    toks = TS.token_stats(docs, "text", "doc_id", sorted_output=False) \
-             .select("id", F.col("n_ws_tokens").alias("n_tok"))
-    return SMP.pack_sequences(toks, "id", "n_tok", budget=2048)
-
-
-def q_quality_topk_per_source(spark, sf):
-    # per-domain quality selection: keep the 5 best docs per source
-    # under the pinned quality formula (ties by id); map-side bounded
-    # top-k before the per-stratum window
-    return SMP.quality_topk_per_stratum(_t(spark, sf, "documents"),
-                                        "text", "doc_id", "source", k=5)
-
-
-# hash_split_docs / domain_mix_plan_docs share these constants with
-# their oracle twins so both engines compile from ONE cumulative sum /
-# ONE driver-side target*budget product (see sampling.split_thresholds)
-_SPLIT_FRACTIONS = {"train": 0.8, "val": 0.1, "test": 0.1}
-_MIX_TARGETS = {"src0": 0.3, "src1": 0.2, "src2": 0.1}
-_MIX_BUDGET = 200
-
-
-def q_hash_split_docs(spark, sf):
-    # deterministic train/val/test assignment: exactly one label per
-    # doc by cumulative md5-threshold regions — zero shuffle, stable
-    # across partitioning/cluster size, train region nested under
-    # fraction growth
-    return SMP.hash_split(_t(spark, sf, "documents"), "doc_id",
-                          _SPLIT_FRACTIONS).orderBy("id")
-
-
-def q_domain_mix_plan_docs(spark, sf):
-    # target-mixture reweighting plan: per-source sampling rates for a
-    # 200-doc budget at 30/20/10% target shares; one map-combined
-    # groupBy over the source column, #strata output rows
-    return SMP.domain_mix_plan(_t(spark, sf, "documents"), "source",
-                               _MIX_TARGETS, _MIX_BUDGET)
-
-
-def q_cosine_topk_embeddings(spark, sf):
-    emb = _t(spark, sf, "embeddings")
-    qvec = emb.where(F.col("vec_id") == 0).first()["embedding"]
-    return SIM.cosine_topk(emb, qvec, "embedding", "vec_id", k=20)
-
-
-def q_drift_price_by_returnflag(spark, sf):
-    return C.drift_by_partition(_t(spark, sf, "lineitem"),
-                                "l_extendedprice", "l_returnflag")
-
-
-def q_wav_decode_features(spark, sf):
-    # REAL audio decode: rows carry actual PCM WAV payloads of a
-    # deterministic integer pattern; the pure-Python RIFF/PCM codec
-    # decodes them and the oracle recomputes amplitude stats
-    # analytically — a hash match proves the decoder round-trips the
-    # encoder (header parse, alignment, sample widths).
-    from schema_guru_spark.operators import multimodal as MM
-    ids = _t(spark, sf, "documents").where(F.col("doc_id") < 40) \
-        .select("doc_id")
-    feats = MM.decode_audio_features(MM.attach_wav_media(ids, "doc_id"),
-                                     id_col="doc_id")
-    return feats.select(
-        "id", "n_samples", "n_channels", "sample_rate", "duration_ms",
-        F.round("mean_abs", 6).alias("mean_abs"),
-        F.round("rms", 6).alias("rms"),
-    ).orderBy("id")
-
-
-def q_completeness_orders(spark, sf):
-    return C.completeness(_t(spark, sf, "orders"),
-                          ["o_orderkey", "o_custkey", "o_orderpriority",
-                           "o_totalprice"])
-
-
-def q_fd_lineitem_order_returnflag(spark, sf):
-    # l_orderkey -> l_returnflag does NOT hold (12k of 14.7k orders mix
-    # flags at sf0.01) — checks the violating-group accounting, not
-    # just a trivial pass
-    return C.functional_dependency(_t(spark, sf, "lineitem"),
-                                   ["l_orderkey"], ["l_returnflag"])
-
-
-def q_moment_drift_quantity(spark, sf):
-    return C.moment_drift_by_partition(_t(spark, sf, "lineitem"),
-                                       "l_quantity", "l_returnflag")
-
-
-def q_avi_frame_features(spark, sf):
-    # REAL video decode + frame sampling: rows carry actual uncompressed
-    # 24-bit AVI payloads; every 2nd frame is decoded and featurized,
-    # and the oracle recomputes per-frame channel means analytically —
-    # a hash match proves the RIFF/DIB decode (bottom-up rows, BGR,
-    # stride padding) round-trips the encoder frame-exactly.
-    from schema_guru_spark.operators import multimodal as MM
-    ids = _t(spark, sf, "documents").where(F.col("doc_id") < 40) \
-        .select("doc_id")
-    feats = MM.decode_video_features(MM.attach_avi_media(ids, "doc_id"),
-                                     id_col="doc_id", every_n=2)
-    return feats.select(
-        "id", "frame_idx", "n_frames", "width", "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    ).orderBy("id", "frame_idx")
-
-
-def q_png_decode_features(spark, sf):
-    # REAL media decode: rows get actual encoded PNGs of a deterministic
-    # test pattern (all 5 predictor filters exercised), the pure-Python
-    # codec decodes them, and the oracle recomputes the channel means
-    # ANALYTICALLY from the pattern formula — so a hash match proves the
-    # decoder (IHDR parse, inflate, unfilter) round-trips the encoder.
-    from schema_guru_spark.operators import multimodal as MM
-    ids = _t(spark, sf, "documents").where(F.col("doc_id") < 40) \
-        .select("doc_id")
-    feats = MM.decode_and_featurize(MM.attach_png_media(ids, "doc_id"),
-                                    id_col="doc_id")
-    return feats.select(
-        "id", "width", "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    ).orderBy("id")
-
-
-def q_progressive_jpeg_features(spark, sf):
-    # REAL progressive (SOF2) decode: the same flat-block pattern as
-    # jpeg_decode_features serialized as a six-scan progressive stream
-    # (DC first/refine, AC first/refine over two spectral bands, EOB-run
-    # coding). Flat blocks + unit quant stay bit-exact, so the identical
-    # analytic oracle pins the whole multi-scan path with zero loss.
-    from schema_guru_spark.operators import multimodal as MM
-    ids = _t(spark, sf, "documents").where(F.col("doc_id") < 40) \
-        .select("doc_id")
-    feats = MM.decode_and_featurize(
-        MM.attach_progressive_jpeg_media(ids, "doc_id"), id_col="doc_id")
-    return feats.select(
-        "id", "width", "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    ).orderBy("id")
-
-
-def q_mjpeg_frame_features(spark, sf):
-    # REAL compressed-video decode: rows carry actual Motion-JPEG AVIs
-    # (each frame an independent baseline JPEG) of the deterministic
-    # flat-8x8-block pattern; every 2nd frame is entropy-decoded and
-    # featurized. With the all-ones quant table flat blocks round-trip
-    # bit-exactly, so the oracle recomputes per-frame channel means
-    # analytically over BLOCK indices — a hash match proves the full
-    # MJPEG path (RIFF walk + per-frame Huffman decode + IDCT) is
-    # lossless on this pattern.
-    from schema_guru_spark.operators import multimodal as MM
-    ids = _t(spark, sf, "documents").where(F.col("doc_id") < 40) \
-        .select("doc_id")
-    feats = MM.decode_video_features(MM.attach_mjpeg_media(ids, "doc_id"),
-                                     id_col="doc_id", every_n=2)
-    return feats.select(
-        "id", "frame_idx", "n_frames", "width", "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    ).orderBy("id", "frame_idx")
-
-
-def q_jpeg_decode_features(spark, sf):
-    # REAL compressed-image decode: rows carry actual baseline JPEGs
-    # (Huffman entropy coding + DCT + quantization) of a deterministic
-    # FLAT-8x8-BLOCK pattern. With the all-ones quant table a flat block
-    # round-trips bit-exactly (operators/jpeg.py docstring), so the
-    # oracle recomputes channel means analytically over BLOCK indices —
-    # a hash match proves the full entropy decode round-trips the
-    # encoder with zero loss.
-    from schema_guru_spark.operators import multimodal as MM
-    ids = _t(spark, sf, "documents").where(F.col("doc_id") < 40) \
-        .select("doc_id")
-    feats = MM.decode_and_featurize(MM.attach_jpeg_media(ids, "doc_id"),
-                                    id_col="doc_id")
-    return feats.select(
-        "id", "width", "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    ).orderBy("id")
-
-
-# LSH/banding pipelines — oracle-checked through their exact-output
-# faces: the Spark side prunes with LSH but the RESULT is defined by
-# exact similarity, which DuckDB computes directly (all pairs).
-
-def q_minhash_pairs_docs(spark, sf):
-    docs = _t(spark, sf, "documents").where(F.col("doc_id") < 200)
-    return D.minhash_verified_pairs(docs, "doc_id", "text",
-                                    threshold=0.6) \
-            .orderBy("id_a", "id_b")
-
-
-def q_near_dup_clusters_docs(spark, sf):
-    docs = _t(spark, sf, "documents").where(F.col("doc_id") < 200)
-    pairs = D.minhash_verified_pairs(docs, "doc_id", "text", threshold=0.6)
-    return D.near_duplicate_clusters(pairs).orderBy("id")
-
-
-def q_simhash_fp_docs(spark, sf):
-    docs = _t(spark, sf, "documents").where(F.col("doc_id") < 200)
-    return D.simhash_fingerprints(docs, "doc_id", "text").orderBy("id")
-
-
-def q_simhash_neardup_docs(spark, sf):
-    # pigeonhole banding has recall 1 by construction (a pair within
-    # max_hamming flips must share a chunk), so the all-pairs oracle is
-    # an exact twin, not a probabilistic one
-    docs = _t(spark, sf, "documents").where(F.col("doc_id") < 200)
-    return D.simhash_near_duplicates(docs, "doc_id", "text",
-                                     max_hamming=6).orderBy("id_a", "id_b")
-
-
-def q_ivf_topk_embeddings(spark, sf):
-    # probe-all configuration: IVF must be LOSSLESS when every bucket is
-    # probed — the oracle is the brute-force top-k, so a hash match
-    # proves the quantize/assign/probe plumbing drops nothing. Partial
-    # probing (the at-scale recall/cost dial) is pinned by
-    # tests/test_similarity.py and the partition-pruning layout test.
-    emb = _t(spark, sf, "embeddings")
-    qvec = emb.where(F.col("vec_id") == 0).first()["embedding"]
-    return SIM.ivf_topk(emb, qvec, "embedding", "vec_id", k=10,
-                        n_centroids=8, n_probe=8)
-
-
-def q_embedding_neardup_pairs(spark, sf):
-    # ORACLE for the banded sign-LSH embedding dedup (previously
-    # pytest-only): the fixture has no natural near-dups (max pair
-    # cosine 0.51), so the query plants them — each vec_id < 50 gets a
-    # deterministic perturbed twin (id + 1000) built with JVM array
-    # ops, cosine ~0.999, leaving a huge gap to the natural 0.51
-    # ceiling. The Spark side prunes candidates with 4x4-banded
-    # hyperplane LSH and verifies exactly; the DuckDB twin computes all
-    # pairs directly. At cosine 0.999 a true pair escapes all 4 bands
-    # w.p. ~1e-5 per pair on RANDOM planes — but the planes are a fixed
-    # seed and the vectors fixed, so the parity is deterministic
-    # (verified green, like the minhash fixture-gap argument).
-    emb = _t(spark, sf, "embeddings").where(F.col("vec_id") < 50)
-    base = emb.select("vec_id",
-                      F.col("embedding").cast("array<double>").alias("e"))
-    # rename the id first: a lateral column alias would otherwise make
-    # the lambda's vec_id resolve to the ALIASED (vec_id + 1000) output
-    # column, silently shifting the perturbation formula
-    pert = base.withColumnRenamed("vec_id", "orig_id").select(
-        (F.col("orig_id") + 1000).alias("vec_id"),
-        F.transform(
-            "e",
-            lambda x, i: x + F.lit(0.003)
-            * (((F.col("orig_id") + i + F.lit(1)) % 7).cast("double")
-               - F.lit(3.0)),
-        ).alias("e"))
-    both = base.unionByName(pert)
-    return D.embedding_near_duplicates(both, "vec_id", "e",
-                                       threshold=0.9) \
-            .orderBy("id_a", "id_b")
-
-
-def q_knn_join_embeddings(spark, sf):
-    # k-NN join face of the similarity family (previously pytest-only):
-    # top-3 right neighbors per left vector by exact cosine. Broadcast
-    # crossJoin + window top-k — explicitly gated behind IVF bucketing
-    # at scale (similarity.py docstring); the oracle is the same
-    # all-pairs ranking in SQL.
-    emb = _t(spark, sf, "embeddings")
-    left = emb.where(F.col("vec_id") < 20)
-    right = emb.where(F.col("vec_id") >= 20)
-    return SIM.pairwise_topk_join(left, right, "embedding", "vec_id", k=3)
-
-
-def q_dedup_keep_list_docs(spark, sf):
-    # the training-data dedup END PRODUCT: per near-dup cluster keep the
-    # min-id representative, emit every doc with its keep/drop verdict
-    # (docs in no cluster keep themselves). Derived from the same
-    # verified-pair + connected-components plan the cluster oracle pins.
-    docs = _t(spark, sf, "documents").where(F.col("doc_id") < 200)
-    pairs = D.minhash_verified_pairs(docs, "doc_id", "text", threshold=0.6)
-    clusters = D.near_duplicate_clusters(pairs)
-    ids = docs.select(F.col("doc_id").alias("id"))
-    return (ids.join(clusters, "id", "left")
-            .select("id",
-                    F.coalesce("cluster_id", "id").alias("cluster_id"),
-                    (F.coalesce("cluster_id", "id") == F.col("id"))
-                    .alias("keep"))
-            .orderBy("id"))
-
-
-def q_fingerprint_winnow_docs(spark, sf):
-    return TS.fingerprints(_t(spark, sf, "documents"), "text", "doc_id") \
-             .select("id", "winnow_min", "winnow_fps")
-
-
-def q_infer_top_keys(spark, sf):
-    # an ORACLE for the inference path after all: the merged schema's
-    # top-level property set must equal DuckDB's independent union of
-    # JSON object keys, and the ok/err counters must match its
-    # json_valid accounting — pins P1/P2 routing and the A5 object
-    # key-union merge without needing the full recursive render in SQL.
-    res = infer_json_column(_t(spark, sf, "events"), "props", CTX)
-    sch = res.schema(CTX)
-    keys = sorted((sch.get("properties") or {}).keys())
-    return spark.createDataFrame(
-        [(res.n_ok, res.n_err, ",".join(keys))],
-        "n_ok long, n_err long, top_keys string")
-
-
-def q_infer_numeric_bounds(spark, sf):
-    # pins derivation (D9) + integer merge (A3) + T1 encasing THROUGH
-    # the distributed engine: the rendered property's type/min/max must
-    # equal the SQL-side encasing of the observed json_extract range
-    res = infer_json_column(_t(spark, sf, "events"), "props", CTX)
-    k = (res.schema(CTX).get("properties") or {}).get("k", {})
-    return spark.createDataFrame(
-        [(k.get("type"), k.get("minimum"), k.get("maximum"))],
-        "k_type string, k_min long, k_max long")
-
-
-def q_infer_string_annotations(spark, sf):
-    # pins the string-annotation surface (D2 lengths, D3-D8 format
-    # priority chain, D7 base64 pattern, A2 eq-or-none merge, T2
-    # maxLength fix) THROUGH the distributed engine, the way
-    # infer_numeric_bounds pins D9/A3/T1: build a 5-string-key JSON doc
-    # per documents row (uuid / iso timestamp / uri / base64-ish hex /
-    # free-text source), infer the merged schema, and project each
-    # rendered property's (type, format, pattern, minLength, maxLength).
-    # The oracle recomputes every annotation independently with SQL
-    # regexes + all-agree aggregation over the same reconstructed values.
-    d = F.col("doc_id")
-    docs = _t(spark, sf, "documents").select(F.to_json(F.struct(
-        F.format_string("%016x", d).alias("b"),
-        F.concat(F.lit("https://example.com/doc/"),
-                 d.cast("string")).alias("h"),
-        F.col("source").alias("s"),
-        F.format_string("2024-01-%02dT%02d:%02d:05Z",
-                        F.pmod(d, F.lit(28)) + 1, F.pmod(d, F.lit(24)),
-                        F.pmod(d, F.lit(60))).alias("t"),
-        F.format_string("%08x-0000-4000-8000-%012x", d, d).alias("u"),
-    )).alias("doc"))
-    res = infer_json_column(docs, "doc", CTX)
-    props = res.schema(CTX).get("properties") or {}
-    rows = [(k, p.get("type"), p.get("format"), p.get("pattern"),
-             p.get("minLength"), p.get("maxLength"))
-            for k, p in sorted(props.items())]
-    return spark.createDataFrame(
-        rows, "key string, v_type string, format string, pattern string, "
-              "min_len long, max_len long")
-
-
-def q_infer_by_type_keys(spark, sf):
-    # flat projection of the per-key (A8) merge output: per event_type,
-    # the merged schema's key set and encased integer bounds — all
-    # independently recomputable by the oracle from json_keys /
-    # json_extract aggregates
-    out = infer_json_column_by_key(_t(spark, sf, "events"), "props",
-                                   "event_type", CTX).collect()
-    rows = []
-    for r in out:
-        sch = json.loads(r["schema"])
-        props = sch.get("properties") or {}
-        kk = props.get("k", {})
-        rows.append((r["event_type"], ",".join(sorted(props)),
-                     kk.get("minimum"), kk.get("maximum")))
-    return spark.createDataFrame(
-        sorted(rows),
-        "event_type string, top_keys string, k_min long, k_max long")
-
-
-# --- non-SQL-expressible (recursive merge state): rows-only checks ---
-
-def q_infer_props_schema(spark, sf):
-    res = infer_json_column(_t(spark, sf, "events"), "props", CTX)
-    rendered = json.dumps(res.schema(CTX), sort_keys=True)
-    return spark.createDataFrame(
-        [(rendered, res.n_ok, res.n_err)],
-        "schema string, n_ok long, n_err long")
-
-
-def q_infer_by_event_type(spark, sf):
-    out = infer_json_column_by_key(_t(spark, sf, "events"), "props",
-                                   "event_type", CTX)
-    return out.orderBy("event_type")
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDERING CONTRACT: the driver's correctness harness records only
-    # the FIRST 50 entries. The engine-core infer family leads so its
-    # oracle rows land every round (round-3 verdict item #1); entries
-    # past position 50 are pytest-twinned redundancies of operators
-    # already oracle-checked above (same code path, different column
-    # or a driver-vs-distributed twin).
-    return {
-        "infer_top_keys": q_infer_top_keys,
-        "infer_string_annotations": q_infer_string_annotations,
-        "infer_numeric_bounds": q_infer_numeric_bounds,
-        "infer_by_type_keys": q_infer_by_type_keys,
-        "infer_props_schema": q_infer_props_schema,
-        "infer_by_event_type": q_infer_by_event_type,
-        "string_profile_doc_text": q_string_profile_doc_text,
-        "numeric_profile_quantity": q_numeric_profile_quantity,
-        "enum_orderpriority": q_enum_orderpriority,
-        "enum_over_cardinality": q_enum_over_cardinality,
-        "duplicate_keys_source": q_duplicate_keys_source,
-        "segment_props": q_segment_props,
-        "latest_event_per_user": q_latest_event_per_user,
-        "uniqueness_lineitem_pk": q_uniqueness_lineitem_pk,
-        "ri_orders_customer": q_ri_orders_customer,
-        "duplicate_rows_events_user": q_duplicate_rows_events_user_ts,
-        "psi_price_returnflag": q_psi_price_returnflag,
-        "ks_quantity_linestatus": q_ks_quantity_linestatus,
-        "ks_quantity_sketch": q_ks_quantity_sketch,
-        "snakify_mktsegment": q_snakify_mktsegment,
-        "exact_dup_props": q_exact_dup_props,
-        "unigram_jaccard_docs": q_unigram_jaccard_docs,
-        "token_stats_docs": q_token_stats_docs,
-        "lang_id_docs": q_lang_id_docs,
-        "quality_docs": q_quality_docs,
-        "pii_docs": q_pii_docs,
-        "repetition_docs": q_repetition_docs,
-        "contamination_docs": q_contamination_docs,
-        "dup_span_census_docs": q_dup_span_census_docs,
-        "curation_docs": q_curation_docs,
-        "source_mix_docs": q_source_mix_docs,
-        "cosine_topk_embeddings": q_cosine_topk_embeddings,
-        "drift_price_by_returnflag": q_drift_price_by_returnflag,
-        "moment_drift_quantity": q_moment_drift_quantity,
-        "completeness_orders": q_completeness_orders,
-        "fd_lineitem_order_returnflag": q_fd_lineitem_order_returnflag,
-        "png_decode_features": q_png_decode_features,
-        "jpeg_decode_features": q_jpeg_decode_features,
-        "wav_decode_features": q_wav_decode_features,
-        "avi_frame_features": q_avi_frame_features,
-        "mjpeg_frame_features": q_mjpeg_frame_features,
-        "progressive_jpeg_features": q_progressive_jpeg_features,
-        "minhash_pairs_docs": q_minhash_pairs_docs,
-        "near_dup_clusters_docs": q_near_dup_clusters_docs,
-        "simhash_neardup_docs": q_simhash_neardup_docs,
-        "ivf_topk_embeddings": q_ivf_topk_embeddings,
-        "embedding_neardup_pairs": q_embedding_neardup_pairs,
-        "knn_join_embeddings": q_knn_join_embeddings,
-        "dedup_keep_list_docs": q_dedup_keep_list_docs,
-        "fingerprint_winnow_docs": q_fingerprint_winnow_docs,
-        # -- position 50 boundary: the driver's correctness window ends
-        #    here. Below: (a) r05 additions — DISTINCT operators whose
-        #    oracles are verified by the local parity suite
-        #    (tests/test_oracle_parity.py runs EVERY entry vs DuckDB,
-        #    same compare as the driver) but kept out of the window so
-        #    the 50 recorded rows stay the same operators as r04; and
-        #    (b) twins of oracle-checked entries above --
-        "stratified_sample_docs": q_stratified_sample_docs,
-        "pack_sequences_docs": q_pack_sequences_docs,
-        "quality_topk_per_source": q_quality_topk_per_source,
-        "hash_split_docs": q_hash_split_docs,
-        "domain_mix_plan_docs": q_domain_mix_plan_docs,
-        "string_profile_cname": q_string_profile_cname,
-        "numeric_profile_acctbal": q_numeric_profile_acctbal,
-        "duplicate_keys_distributed": q_duplicate_keys_distributed,
-        "simhash_fp_docs": q_simhash_fp_docs,
-        "fingerprint_md5_docs": q_fingerprint_md5_docs,
-        "uniqueness_orders": q_uniqueness_orders,
-    }
-
-
-# ---------------------------------------------------------------------------
-# oracle SQL (DuckDB) — same aliases, same values
-# ---------------------------------------------------------------------------
-
-_UUID_RE = S.UUID_SQL_RE
-_IPV4_RE = S.IPV4_SQL_RE
-_URI_RE = S.URI_SQL_RE
-_DT_RE = S.DATETIME_SQL_RE
-
-
-def _string_profile_sql(table: str, col: str) -> str:
-    return f"""
-    SELECT count(*)::BIGINT AS n_rows,
-           count({col})::BIGINT AS n_present,
-           min(length({col})) AS min_len,
-           max(length({col})) AS max_len,
-           count(DISTINCT {col})::BIGINT AS n_distinct,
-           sum(CASE WHEN regexp_matches({col}, '{_UUID_RE}') THEN 1 ELSE 0 END)::BIGINT AS n_uuid,
-           sum(CASE WHEN regexp_matches({col}, '{_IPV4_RE}') THEN 1 ELSE 0 END)::BIGINT AS n_ipv4,
-           sum(CASE WHEN regexp_matches({col}, '{_URI_RE}') THEN 1 ELSE 0 END)::BIGINT AS n_uri,
-           sum(CASE WHEN regexp_matches({col}, '{_DT_RE}') THEN 1 ELSE 0 END)::BIGINT AS n_datetime
-    FROM {table}
-    """
-
-
-def _numeric_profile_sql(table: str, col: str) -> str:
-    return f"""
-    WITH agg AS (
-      SELECT count(*)::BIGINT AS n_rows, count({col})::BIGINT AS n_present,
-             min({col})::DOUBLE AS min_val, max({col})::DOUBLE AS max_val
-      FROM {table})
-    SELECT n_rows, n_present, min_val, max_val,
-      (CASE WHEN min_val >= 0 AND max_val <= 32767 THEN 0
-            WHEN min_val >= -32768 AND max_val <= 32767 THEN -32768
-            WHEN min_val >= 0 AND max_val <= 2147483647 THEN 0
-            WHEN min_val >= -2147483648 AND max_val <= 2147483647 THEN -2147483648
-            WHEN min_val >= 0 THEN 0
-            ELSE -9223372036854775808 END)::BIGINT AS encased_min,
-      (CASE WHEN min_val >= 0 AND max_val <= 32767 THEN 32767
-            WHEN min_val >= -32768 AND max_val <= 32767 THEN 32767
-            WHEN min_val >= 0 AND max_val <= 2147483647 THEN 2147483647
-            WHEN min_val >= -2147483648 AND max_val <= 2147483647 THEN 2147483647
-            ELSE 9223372036854775807 END)::BIGINT AS encased_max
-    FROM agg
-    """
-
-
-def _encase_min_sql(mn: str, mx: str) -> str:
-    """Reference T1 integer encasing (Helpers.scala:151-201) over SQL
-    min/max expressions — shared by the flat numeric profile and the
-    engine-path inference oracles."""
-    return f"""(CASE WHEN {mn} >= 0 AND {mx} <= 32767 THEN 0
-            WHEN {mn} >= -32768 AND {mx} <= 32767 THEN -32768
-            WHEN {mn} >= 0 AND {mx} <= 2147483647 THEN 0
-            WHEN {mn} >= -2147483648 AND {mx} <= 2147483647 THEN -2147483648
-            WHEN {mn} >= 0 THEN 0
-            ELSE -9223372036854775808 END)::BIGINT"""
-
-
-def _encase_max_sql(mn: str, mx: str) -> str:
-    return f"""(CASE WHEN {mn} >= 0 AND {mx} <= 32767 THEN 32767
-            WHEN {mn} >= -32768 AND {mx} <= 32767 THEN 32767
-            WHEN {mn} >= 0 AND {mx} <= 2147483647 THEN 2147483647
-            WHEN {mn} >= -2147483648 AND {mx} <= 2147483647 THEN 2147483647
-            ELSE 9223372036854775807 END)::BIGINT"""
-
-
-def _moments_sql(n: str, s1: str, s2: str, s3: str, s4: str) -> dict:
-    """Standardized moments from exact integer power sums — operation
-    order mirrors constraints.moment_drift_by_partition verbatim so the
-    IEEE doubles reproduce bit-for-bit."""
-    mean = f"(({s1})::DOUBLE / ({n})::DOUBLE)"
-    s2n = f"(({s2})::DOUBLE / ({n})::DOUBLE)"
-    s3n = f"(({s3})::DOUBLE / ({n})::DOUBLE)"
-    s4n = f"(({s4})::DOUBLE / ({n})::DOUBLE)"
-    m2 = f"({s2n} - {mean} * {mean})"
-    m3 = f"(({s3n} - ((3 * {mean}) * {s2n})) + (((2 * {mean}) * {mean}) * {mean}))"
-    m4 = (f"((({s4n} - ((4 * {mean}) * {s3n})) + (((6 * {mean}) * {mean}) * {s2n}))"
-          f" - ((((3 * {mean}) * {mean}) * {mean}) * {mean}))")
-    skew = f"({m3} / sqrt(({m2} * {m2}) * {m2}))"
-    kurt = f"(({m4} / ({m2} * {m2})) - 3)"
-    return {"mean": mean, "m2": m2, "skew": skew, "kurt": kurt}
-
-
-def _psi_sql(table: str, col: str, grp: str, b: str, t: str, n_bins: int = 10) -> str:
-    return f"""
-    WITH sub AS (
-      SELECT {col} AS v, {grp} AS g FROM {table}
-      WHERE {grp} IN ('{b}','{t}') AND {col} IS NOT NULL),
-    bounds AS (SELECT min(v)::DOUBLE AS lo, max(v)::DOUBLE AS hi FROM sub),
-    binned AS (
-      SELECT least({n_bins - 1},
-               floor((v - lo) / ((hi - lo) / {n_bins} + 1e-12))::INT) AS bin,
-             sum(CASE WHEN g = '{b}' THEN 1 ELSE 0 END)::BIGINT AS nb,
-             sum(CASE WHEN g = '{t}' THEN 1 ELSE 0 END)::BIGINT AS nt
-      FROM sub, bounds GROUP BY 1),
-    tot AS (SELECT sum(nb) AS tb, sum(nt) AS tt FROM binned),
-    terms AS (
-      SELECT ((nt + 0.5) / (tt + 0.5 * {n_bins})) AS pt,
-             ((nb + 0.5) / (tb + 0.5 * {n_bins})) AS pb
-      FROM binned, tot)
-    SELECT round(sum((pt - pb) * ln(pt / pb)), 6) AS psi FROM terms
-    """
-
-
-# Exact char-5-gram Jaccard pairs (doc_id < 200) — the all-pairs twin of
-# the LSH-pruned Spark plan; shared by the pair and cluster oracles.
-_CHAR_JACCARD_PAIRS_CTE = r"""
-    d AS (SELECT doc_id AS id,
-                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-          FROM documents WHERE doc_id < 200),
-    grams AS (
-      SELECT DISTINCT id, substring(t, gs.i, 5) AS g
-      FROM d CROSS JOIN generate_series(1, 4000) gs(i)
-      WHERE gs.i <= greatest(length(t) - 4, 1)),
-    sizes AS (SELECT id, count(*) AS sz FROM grams GROUP BY 1),
-    inter AS (
-      SELECT a.id AS id_a, b.id AS id_b, count(*) AS common
-      FROM grams a JOIN grams b USING (g)
-      WHERE a.id < b.id GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b,
-             round(common / (sa.sz + sb.sz - common), 6) AS jaccard
-      FROM inter
-      JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b
-      WHERE common / (sa.sz + sb.sz - common) >= 0.6)
-"""
-
-
-# md5-prefix 60-bit simhash fingerprints (doc_id < 200) — the bit-exact
-# twin of dedup.simhash_fingerprints; shared by the fp and pair oracles.
-_SIMHASH_FPS_CTE = r"""
-    d AS (SELECT doc_id AS id, text FROM documents WHERE doc_id < 200),
-    toks AS (
-      SELECT id, tok, count(*)::BIGINT AS cnt FROM (
-        SELECT id, unnest(regexp_split_to_array(
-            lower(trim(text)), '\s+')) AS tok FROM d)
-      WHERE tok <> '' GROUP BY 1, 2),
-    hashed AS (
-      SELECT id, cnt, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
-      FROM toks),
-    bits AS (
-      SELECT id, b.j, sum(cnt * (((h >> b.j) & 1) * 2 - 1)) AS s
-      FROM hashed CROSS JOIN generate_series(0, 59) b(j)
-      GROUP BY 1, 2),
-    fps0 AS (
-      SELECT id, sum(CASE WHEN s > 0 THEN 1::BIGINT << j
-                          ELSE 0 END)::BIGINT AS fp
-      FROM bits GROUP BY 1),
-    fps AS (
-      SELECT d.id, coalesce(fps0.fp, 0)::BIGINT AS fp
-      FROM (SELECT DISTINCT id FROM d) d LEFT JOIN fps0 USING (id))
-"""
-
-
-def _hash_split_sql() -> str:
-    """Oracle twin of q_hash_split_docs: the boundary literals come
-    from sampling.split_thresholds over the SAME fraction dict, so both
-    engines compile one cumulative sum (never two float re-derivations
-    that could disagree at a boundary)."""
-    tok = "substr(md5('sgs-sample:' || doc_id::VARCHAR), 1, 8)"
-    whens = "\n".join(
-        f"                 WHEN {tok} < '{thr}' THEN '{label}'"
-        for label, thr in SMP.split_thresholds(_SPLIT_FRACTIONS))
-    tail = list(_SPLIT_FRACTIONS)[-1]
-    return f"""
-            SELECT doc_id AS id,
-                   CASE
-{whens}
-                 ELSE '{tail}' END AS split,
-                   {tok} AS split_token
-            FROM documents ORDER BY id
-        """
-
-
-def _mix_plan_sql() -> str:
-    """Oracle twin of q_domain_mix_plan_docs: target_frac and the
-    target*budget numerator are embedded as repr() of the SAME Python
-    doubles the Spark plan compiles (repr round-trips exactly through
-    DuckDB's decimal->DOUBLE parse), so rate is one identical IEEE
-    division in both engines."""
-    tf = "".join(
-        f" WHEN '{s}' THEN {targets!r}::DOUBLE"
-        for s, targets in sorted(_MIX_TARGETS.items()))
-    want = "".join(
-        f" WHEN '{s}' THEN {float(t * _MIX_BUDGET)!r}::DOUBLE"
-        for s, t in sorted(_MIX_TARGETS.items()))
-    return f"""
-            WITH per AS (
-              SELECT source AS stratum, count(*)::BIGINT AS n_rows
-              FROM documents GROUP BY source),
-            plan AS (
-              SELECT stratum, n_rows,
-                     CASE stratum{tf} ELSE 0.0::DOUBLE END AS target_frac,
-                     least(1.0, CASE stratum{want} ELSE 0.0::DOUBLE END
-                                / n_rows) AS rate
-              FROM per)
-            SELECT stratum, n_rows, target_frac, rate,
-                   floor(rate * n_rows)::BIGINT AS expected_kept
-            FROM plan ORDER BY stratum
-        """
+def queries() -> dict[str, Query]:
+    ordered = sorted(REGISTRY, key=lambda op: not op.window)
+    return {op.name: op.query for op in ordered}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "string_profile_cname": _string_profile_sql("customer", "c_name"),
-        "string_profile_doc_text": _string_profile_sql("documents", "text"),
-        "numeric_profile_quantity": _numeric_profile_sql("lineitem", "l_quantity"),
-        "numeric_profile_acctbal": _numeric_profile_sql("customer", "c_acctbal"),
-        "enum_orderpriority": """
-            SELECT count(DISTINCT o_orderpriority)::BIGINT AS n_distinct,
-                   CASE WHEN count(DISTINCT o_orderpriority) <= 8
-                        THEN array_to_string(list_sort(list(DISTINCT o_orderpriority)), ',')
-                        END AS enum_csv
-            FROM orders
-        """,
-        "enum_over_cardinality": """
-            SELECT count(DISTINCT event_type)::BIGINT AS n_distinct,
-                   CASE WHEN count(DISTINCT event_type) <= 3
-                        THEN array_to_string(list_sort(list(DISTINCT event_type)), ',')
-                        END AS enum_csv
-            FROM events
-        """,
-        "duplicate_keys_source": """
-            WITH keys AS (
-              SELECT DISTINCT source AS k FROM documents
-              WHERE source IS NOT NULL AND length(source) > 3)
-            SELECT DISTINCT least(a.k, b.k) AS key_a, greatest(a.k, b.k) AS key_b
-            FROM keys a CROSS JOIN keys b
-            WHERE a.k <> b.k
-              AND levenshtein(lower(regexp_replace(a.k, '[-_]', '', 'g')),
-                              lower(regexp_replace(b.k, '[-_]', '', 'g'))) <= 1
-            ORDER BY key_a, key_b
-        """,
-        "duplicate_keys_distributed": """
-            WITH keys AS (
-              SELECT DISTINCT source AS k FROM documents
-              WHERE source IS NOT NULL AND length(source) > 3)
-            SELECT DISTINCT least(a.k, b.k) AS key_a, greatest(a.k, b.k) AS key_b
-            FROM keys a CROSS JOIN keys b
-            WHERE a.k <> b.k
-              AND levenshtein(lower(regexp_replace(a.k, '[-_]', '', 'g')),
-                              lower(regexp_replace(b.k, '[-_]', '', 'g'))) <= 1
-            ORDER BY key_a, key_b
-        """,
-        "segment_props": """
-            WITH seg AS (
-              SELECT CASE WHEN json_extract_string(props, '$.k') IS NULL
-                            OR trim(json_extract_string(props, '$.k')) = ''
-                          THEN 'unmatched'
-                          ELSE regexp_replace(
-                                 substring(json_extract_string(props, '$.k'), 1, 30),
-                                 '[^a-zA-Z0-9.-]', '_', 'g') END AS segment
-              FROM events)
-            SELECT segment, count(*)::BIGINT AS n FROM seg
-            GROUP BY segment ORDER BY segment
-        """,
-        "latest_event_per_user": """
-            -- floor() matches Spark's truncating timestamp->long cast
-            SELECT user_id, event_id, event_type,
-                   floor(epoch(ts))::BIGINT AS ts_epoch
-            FROM (SELECT *, row_number() OVER (
-                      PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-                  FROM events)
-            WHERE rn = 1 ORDER BY user_id
-        """,
-        "uniqueness_orders": """
-            SELECT count(*)::BIGINT AS n_rows,
-                   count(DISTINCT o_orderkey)::BIGINT AS n_distinct,
-                   (count(*) - count(DISTINCT o_orderkey))::BIGINT AS n_duplicates,
-                   count(*) = count(DISTINCT o_orderkey) AS is_unique
-            FROM orders
-        """,
-        "uniqueness_lineitem_pk": """
-            SELECT count(*)::BIGINT AS n_rows,
-                   count(DISTINCT (l_orderkey, l_linenumber))::BIGINT AS n_distinct,
-                   (count(*) - count(DISTINCT (l_orderkey, l_linenumber)))::BIGINT AS n_duplicates,
-                   count(*) = count(DISTINCT (l_orderkey, l_linenumber)) AS is_unique
-            FROM lineitem
-        """,
-        "ri_orders_customer": """
-            SELECT o_custkey, count(*)::BIGINT AS n_orphan_rows
-            FROM orders
-            WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)
-            GROUP BY o_custkey ORDER BY o_custkey
-        """,
-        "duplicate_rows_events_user": """
-            SELECT user_id, count(*)::BIGINT AS n_occurrences
-            FROM events GROUP BY user_id HAVING count(*) > 1
-            ORDER BY user_id
-        """,
-        "psi_price_returnflag": _psi_sql("lineitem", "l_extendedprice",
-                                         "l_returnflag", "R", "N"),
-        "exact_dup_props": """
-            SELECT md5(props) AS digest, count(*)::BIGINT AS n
-            FROM events GROUP BY 1 HAVING count(*) > 1 ORDER BY digest
-        """,
-        "unigram_jaccard_docs": r"""
-            WITH grams AS (
-              SELECT DISTINCT doc_id AS id,
-                     unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS ngram
-              FROM documents WHERE doc_id < 60),
-            sizes AS (SELECT id, count(*) AS sz FROM grams GROUP BY id),
-            inter AS (
-              SELECT a.id AS id_a, b.id AS id_b, count(*) AS common
-              FROM grams a JOIN grams b USING (ngram)
-              WHERE a.id < b.id GROUP BY 1, 2)
-            SELECT id_a, id_b,
-                   round(common / (sa.sz + sb.sz - common), 6) AS jaccard
-            FROM inter
-            JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b
-            WHERE common / (sa.sz + sb.sz - common) >= 0.6
-            ORDER BY id_a, id_b
-        """,
-        "token_stats_docs": r"""
-            SELECT doc_id AS id,
-                   len(regexp_split_to_array(lower(trim(text)), '\s+'))::INT
-                     AS n_ws_tokens,
-                   len(regexp_extract_all(text,
-                     '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))::INT AS n_bpe_tokens,
-                   length(text)::INT AS n_chars
-            FROM documents ORDER BY id
-        """,
-        "lang_id_docs": r"""
-            WITH w AS (
-              SELECT doc_id AS id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS words
-              FROM documents),
-            h AS (
-              SELECT id,
-                len(list_intersect(words, ['der','die','das','und','ist','nicht','ein','mit','auf','zu']))::INT AS h_de,
-                len(list_intersect(words, ['the','and','of','to','a','in','is','it','for','on']))::INT AS h_en,
-                len(list_intersect(words, ['el','la','los','y','es','un','una','de','en','por']))::INT AS h_es,
-                len(list_intersect(words, ['le','la','les','et','est','un','une','des','dans','pour']))::INT AS h_fr
-              FROM w)
-            SELECT id, h_de, h_en, h_es, h_fr,
-              CASE WHEN greatest(h_de, h_en, h_es, h_fr) <= 0 THEN 'und'
-                   WHEN h_de = greatest(h_de, h_en, h_es, h_fr) THEN 'de'
-                   WHEN h_en = greatest(h_de, h_en, h_es, h_fr) THEN 'en'
-                   WHEN h_es = greatest(h_de, h_en, h_es, h_fr) THEN 'es'
-                   ELSE 'fr' END AS lang_pred
-            FROM h ORDER BY id
-        """,
-        "quality_docs": r"""
-            WITH base AS (
-              SELECT doc_id AS id, text,
-                     length(text)::INT AS n_chars,
-                     len(regexp_split_to_array(lower(trim(text)), '\s+'))::INT AS n_words,
-                     len(regexp_extract_all(text, '[^\w\s]'))::BIGINT AS n_punct,
-                     len(list_intersect(
-                       regexp_split_to_array(lower(trim(text)), '\s+'),
-                       ['the','and','of','to','a','in','is','it','for','on']))::INT AS n_stop
-              FROM documents),
-            derived AS (
-              SELECT id, n_chars, n_words,
-                     round(n_punct / greatest(n_chars, 1), 6) AS punct_ratio,
-                     round(n_stop / 10, 6) AS stopword_hits,
-                     round((n_chars - (n_words - 1)) / greatest(n_words, 1), 6)
-                       AS mean_word_len,
-                     n_stop
-              FROM base)
-            SELECT id, n_chars, n_words, punct_ratio, stopword_hits,
-                   mean_word_len,
-                   round(
-                     0.25 * (CASE WHEN n_chars >= 50 AND n_chars <= 100000
-                                  THEN 1.0 ELSE 0.0 END)
-                   + 0.25 * (1 - least(punct_ratio * 4, 1.0))
-                   + 0.25 * (CASE WHEN n_stop >= 2 THEN 1.0 ELSE 0.0 END)
-                   + 0.25 * (CASE WHEN mean_word_len >= 2.0
-                                   AND mean_word_len <= 12.0
-                                  THEN 1.0 ELSE 0.0 END), 6) AS quality
-            FROM derived ORDER BY id
-        """,
-        "pii_docs": r"""
-            SELECT doc_id AS id,
-                   len(regexp_extract_all(text,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_email,
-                   len(regexp_extract_all(text,
-                       '(?:\+?[0-9]{1,3}[-. ]?)?\(?[0-9]{3}\)?[-. ][0-9]{3}[-. ][0-9]{4}')) AS n_phone,
-                   len(regexp_extract_all(text,
-                       '[0-9]{3}-[0-9]{2}-[0-9]{4}')) AS n_ssn,
-                   len(regexp_extract_all(text,
-                       '(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])(\.(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])){3}')) AS n_ipv4,
-                   (n_email + n_phone + n_ssn + n_ipv4) > 0 AS has_pii
-            FROM documents ORDER BY id
-        """,
-        "repetition_docs": r"""
-            WITH w AS (
-              SELECT doc_id AS id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS words
-              FROM documents),
-            g AS (
-              SELECT id, len(words)::INT AS n_words,
-                     list_transform(generate_series(1, len(words)-1),
-                       i -> array_to_string(words[i:i+1], ' ')) AS g2,
-                     list_transform(generate_series(1, len(words)-2),
-                       i -> array_to_string(words[i:i+2], ' ')) AS g3
-              FROM w),
-            top AS (
-              SELECT id, max(cnt) AS top_n FROM (
-                SELECT id, gram, count(*) AS cnt
-                FROM (SELECT id, unnest(g2) AS gram FROM g) GROUP BY 1, 2)
-              GROUP BY 1)
-            SELECT g.id, n_words, len(g2)::INT AS n_2grams,
-                   CASE WHEN len(g2) > 0
-                        THEN round(1 - len(list_distinct(g2))/len(g2), 6)
-                        ELSE 0.0 END AS dup_2gram_frac,
-                   CASE WHEN len(g3) > 0
-                        THEN round(1 - len(list_distinct(g3))/len(g3), 6)
-                        ELSE 0.0 END AS dup_3gram_frac,
-                   coalesce(top_n, 0)::INT AS top_2gram_n,
-                   CASE WHEN len(g2) > 0
-                        THEN round(coalesce(top_n, 0)/len(g2), 6)
-                        ELSE 0.0 END AS top_2gram_frac
-            FROM g LEFT JOIN top ON g.id = top.id ORDER BY g.id
-        """,
-        "contamination_docs": r"""
-            WITH w AS (
-              SELECT doc_id AS id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS words
-              FROM documents),
-            g AS (
-              SELECT id, list_distinct(list_transform(
-                       generate_series(1, len(words)-4),
-                       i -> array_to_string(words[i:i+4], ' '))) AS g5
-              FROM w),
-            bench AS (SELECT DISTINCT unnest(g5) AS gram FROM g WHERE id < 5),
-            dg AS (SELECT id, unnest(g5) AS gram FROM g WHERE id >= 5),
-            hits AS (SELECT id, count(*) AS n_cont
-                     FROM dg JOIN bench USING (gram) GROUP BY 1)
-            SELECT g.id, len(g5)::INT AS n_grams,
-                   coalesce(n_cont, 0)::INT AS n_contaminated,
-                   round(coalesce(n_cont, 0)/greatest(len(g5), 1), 6)
-                     AS contam_frac,
-                   coalesce(n_cont, 0) > 0 AS contaminated
-            FROM g LEFT JOIN hits ON g.id = hits.id
-            WHERE g.id >= 5 ORDER BY g.id
-        """,
-        "curation_docs": r"""
-            WITH w AS (
-              SELECT doc_id AS id, text,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS words
-              FROM documents),
-            grams AS (
-              SELECT id,
-                     list_transform(generate_series(1, len(words)-1),
-                       i -> array_to_string(words[i:i+1], ' ')) AS g2,
-                     list_transform(generate_series(1, len(words)-2),
-                       i -> array_to_string(words[i:i+2], ' ')) AS g3,
-                     list_distinct(list_transform(
-                       generate_series(1, len(words)-4),
-                       i -> array_to_string(words[i:i+4], ' '))) AS g5
-              FROM w),
-            top AS (
-              SELECT id, max(cnt) AS top_n FROM (
-                SELECT id, gram, count(*) AS cnt
-                FROM (SELECT id, unnest(g2) AS gram FROM grams) GROUP BY 1, 2)
-              GROUP BY 1),
-            bench AS (SELECT DISTINCT unnest(g5) AS gram FROM grams
-                      WHERE id < 5),
-            cont AS (SELECT DISTINCT id
-                     FROM (SELECT id, unnest(g5) AS gram FROM grams
-                           WHERE id >= 5)
-                     JOIN bench USING (gram)),
-            base AS (
-              SELECT w.id,
-                     length(text) AS n_chars,
-                     len(words) AS n_words,
-                     len(regexp_extract_all(text, '[^\w\s]')) AS n_punct,
-                     len(list_intersect(words, ['the','and','of','to','a','in','is','it','for','on'])) AS h_en,
-                     len(list_intersect(words, ['der','die','das','und','ist','nicht','ein','mit','auf','zu'])) AS h_de,
-                     len(list_intersect(words, ['el','la','los','y','es','un','una','de','en','por'])) AS h_es,
-                     len(list_intersect(words, ['le','la','les','et','est','un','une','des','dans','pour'])) AS h_fr,
-                     len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-                     + len(regexp_extract_all(text, '(?:\+?[0-9]{1,3}[-. ]?)?\(?[0-9]{3}\)?[-. ][0-9]{3}[-. ][0-9]{4}'))
-                     + len(regexp_extract_all(text, '[0-9]{3}-[0-9]{2}-[0-9]{4}'))
-                     + len(regexp_extract_all(text, '(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])(\.(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])){3}'))
-                       AS n_pii
-              FROM w WHERE w.id >= 5),
-            derived AS (
-              SELECT id, n_chars, n_words, h_en, h_de, h_es, h_fr, n_pii,
-                     round(n_punct / greatest(n_chars, 1), 6) AS punct_ratio,
-                     round((n_chars - (n_words - 1)) / greatest(n_words, 1), 6)
-                       AS mean_word_len
-              FROM base),
-            sig AS (
-              SELECT d.id,
-                CASE WHEN greatest(h_de, h_en, h_es, h_fr) <= 0 THEN 'und'
-                     WHEN h_de = greatest(h_de, h_en, h_es, h_fr) THEN 'de'
-                     WHEN h_en = greatest(h_de, h_en, h_es, h_fr) THEN 'en'
-                     WHEN h_es = greatest(h_de, h_en, h_es, h_fr) THEN 'es'
-                     ELSE 'fr' END AS lang_pred,
-                round(
-                  0.25 * (CASE WHEN n_chars >= 50 AND n_chars <= 100000
-                               THEN 1.0 ELSE 0.0 END)
-                + 0.25 * (1 - least(punct_ratio * 4, 1.0))
-                + 0.25 * (CASE WHEN h_en >= 2 THEN 1.0 ELSE 0.0 END)
-                + 0.25 * (CASE WHEN mean_word_len >= 2.0
-                                AND mean_word_len <= 12.0
-                               THEN 1.0 ELSE 0.0 END), 6) AS quality,
-                CASE WHEN len(g.g3) > 0
-                     THEN round(1 - len(list_distinct(g.g3))/len(g.g3), 6)
-                     ELSE 0.0 END AS dup_3gram_frac,
-                CASE WHEN len(g.g2) > 0
-                     THEN round(coalesce(t.top_n, 0)/len(g.g2), 6)
-                     ELSE 0.0 END AS top_2gram_frac,
-                n_pii > 0 AS has_pii,
-                (c.id IS NOT NULL) AS contaminated
-              FROM derived d
-              JOIN grams g ON g.id = d.id
-              LEFT JOIN top t ON t.id = d.id
-              LEFT JOIN cont c ON c.id = d.id)
-            SELECT id, lang_pred, quality, dup_3gram_frac, top_2gram_frac,
-                   has_pii, contaminated,
-                   len(reasons_list) = 0 AS keep,
-                   coalesce(array_to_string(list_sort(reasons_list), ','),
-                            '') AS reasons
-            FROM (
-              SELECT *, list_filter([
-                  CASE WHEN contaminated THEN 'contaminated' END,
-                  CASE WHEN dup_3gram_frac > 0.01 THEN 'high_dup_3gram' END,
-                  CASE WHEN top_2gram_frac > 0.06 THEN 'high_top_2gram' END,
-                  CASE WHEN quality < 0.75 THEN 'low_quality' END,
-                  CASE WHEN has_pii THEN 'pii' END,
-                  CASE WHEN lang_pred <> 'en' THEN 'lang' END
-                ], x -> x IS NOT NULL) AS reasons_list
-              FROM sig)
-            ORDER BY id
-        """,
-        "source_mix_docs": r"""
-            WITH perdoc AS (
-              SELECT source,
-                     length(text) AS n_chars,
-                     len(regexp_split_to_array(lower(trim(text)), '\s+'))
-                       AS n_tokens,
-                     round(
-                       0.25 * (CASE WHEN length(text) >= 50
-                                     AND length(text) <= 100000
-                                    THEN 1.0 ELSE 0.0 END)
-                     + 0.25 * (1 - least(round(
-                         len(regexp_extract_all(text, '[^\w\s]'))
-                         / greatest(length(text), 1), 6) * 4, 1.0))
-                     + 0.25 * (CASE WHEN len(list_intersect(
-                         regexp_split_to_array(lower(trim(text)), '\s+'),
-                         ['the','and','of','to','a','in','is','it','for','on']))
-                         >= 2 THEN 1.0 ELSE 0.0 END)
-                     + 0.25 * (CASE WHEN round((length(text)
-                         - (len(regexp_split_to_array(lower(trim(text)), '\s+')) - 1))
-                         / greatest(len(regexp_split_to_array(lower(trim(text)), '\s+')), 1), 6)
-                         BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END), 6)
-                       AS quality
-              FROM documents),
-            per AS (
-              -- exact integer sum of the 1e-6-quantized quality, then
-              -- one double division: bit-stable at any partitioning
-              -- (mirrors source_mix_report's _q6 aggregation)
-              -- ::BIGINT on the sums: DuckDB sum(BIGINT) is HUGEINT,
-              -- which pandas materializes as float64 (73327.0) while
-              -- Spark sum(long) is int64 — the driver hashes dtypes too
-              SELECT source, count(*)::BIGINT AS n_docs,
-                     sum(n_chars)::BIGINT AS n_chars,
-                     sum(n_tokens)::BIGINT AS n_tokens,
-                     round(sum(round(quality * 1e6)::BIGINT)
-                           / (count(*) * 1e6), 6) AS mean_quality
-              FROM perdoc GROUP BY source)
-            SELECT source, n_docs, n_chars, n_tokens, mean_quality,
-                   round(n_docs / (SELECT sum(n_docs) FROM per), 6)
-                     AS doc_share
-            FROM per ORDER BY source
-        """,
-        "dup_span_census_docs": r"""
-            WITH w AS (
-              SELECT doc_id AS id,
-                     regexp_split_to_array(lower(trim(text)), '\s+') AS words
-              FROM documents),
-            e AS (
-              SELECT id, unnest(list_transform(
-                       generate_series(1, len(words)-7),
-                       i -> array_to_string(words[i:i+7], ' '))) AS span
-              FROM w)
-            SELECT span, count(DISTINCT id)::INT AS n_docs,
-                   count(*)::INT AS n_total
-            FROM e GROUP BY span HAVING count(DISTINCT id) >= 2
-            ORDER BY span
-        """,
-        "fingerprint_md5_docs": r"""
-            SELECT doc_id AS id,
-                   md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-                     AS content_md5
-            FROM documents ORDER BY id
-        """,
-        "cosine_topk_embeddings": """
-            WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings
-                       WHERE vec_id = 0)
-            SELECT vec_id AS id,
-                   round(list_inner_product(embedding::DOUBLE[], qv) /
-                         (sqrt(list_inner_product(embedding::DOUBLE[],
-                                                  embedding::DOUBLE[]))
-                          * sqrt(list_inner_product(qv, qv)) + 1e-12), 6)
-                     AS cosine
-            FROM embeddings, q
-            ORDER BY cosine DESC, id ASC LIMIT 20
-        """,
-        "drift_price_by_returnflag": """
-            WITH sub AS (SELECT l_extendedprice AS v, l_returnflag AS p
-                         FROM lineitem WHERE l_extendedprice IS NOT NULL),
-            bounds AS (SELECT min(v)::DOUBLE AS lo, max(v)::DOUBLE AS hi FROM sub),
-            binned AS (
-              SELECT p, least(9, floor((v - lo) / ((hi - lo) / 10 + 1e-12))::INT)
-                       AS bin,
-                     count(*)::BIGINT AS n
-              FROM sub, bounds GROUP BY 1, 2),
-            gl AS (SELECT bin, sum(n) AS gn FROM binned GROUP BY 1),
-            gtot AS (SELECT sum(gn) AS gt FROM gl),
-            ptot AS (SELECT p, sum(n) AS pt_n FROM binned GROUP BY 1),
-            terms AS (
-              SELECT b.p,
-                     ((b.n + 0.5) / (ptot.pt_n + 5.0)) AS pp,
-                     ((g.gn + 0.5) / (gtot.gt + 5.0)) AS pg
-              FROM binned b JOIN gl g USING (bin)
-              JOIN ptot ON ptot.p = b.p, gtot)
-            SELECT p AS l_returnflag, round(sum((pp - pg) * ln(pp / pg)), 6) AS psi
-            FROM terms GROUP BY 1 ORDER BY 1
-        """,
-        "avi_frame_features": """
-            -- analytic twin of the AVI test pattern
-            -- px(x,y,c,t) = (7x + 13y + 29c + 17t + 31*id) mod 256
-            WITH ids AS (
-              SELECT doc_id AS id,
-                     (doc_id % 8 + 4)::INT AS width,
-                     (doc_id % 6 + 4)::INT AS height,
-                     (doc_id % 4 + 2)::INT AS n_frames
-              FROM documents WHERE doc_id < 40),
-            sampled AS (
-              SELECT i.*, gt.t AS frame_idx
-              FROM ids i, generate_series(0, 4) gt(t)
-              WHERE gt.t < i.n_frames AND gt.t % 2 = 0),
-            px AS (
-              SELECT s.id, s.frame_idx, s.n_frames, s.width, s.height,
-                     gx.x, gy.y
-              FROM sampled s,
-                   generate_series(0, 11) gx(x),
-                   generate_series(0, 9) gy(y)
-              WHERE gx.x < s.width AND gy.y < s.height)
-            SELECT id, frame_idx::INT AS frame_idx, n_frames, width,
-                   height,
-                   round(avg((7*x + 13*y + 17*frame_idx + 31*id) % 256),
-                         6) AS mean_r,
-                   round(avg((7*x + 13*y + 29 + 17*frame_idx + 31*id)
-                             % 256), 6) AS mean_g,
-                   round(avg((7*x + 13*y + 58 + 17*frame_idx + 31*id)
-                             % 256), 6) AS mean_b
-            FROM px GROUP BY 1, 2, 3, 4, 5 ORDER BY id, frame_idx
-        """,
-        "progressive_jpeg_features": """
-            -- analytic twin of the flat-block pattern, decoded from a
-            -- six-scan PROGRESSIVE (SOF2) stream — same formula as
-            -- jpeg_decode_features because progressive re-serializes
-            -- the same quantized coefficients losslessly
-            WITH ids AS (
-              SELECT doc_id AS id,
-                     (doc_id % 3 + 2)::INT AS wb,
-                     (doc_id % 2 + 2)::INT AS hb
-              FROM documents WHERE doc_id < 40),
-            px AS (
-              SELECT i.id, i.wb, i.hb, gx.x AS bx, gy.y AS by
-              FROM ids i,
-                   generate_series(0, 4) gx(x),
-                   generate_series(0, 3) gy(y)
-              WHERE gx.x < i.wb AND gy.y < i.hb)
-            SELECT id, (wb * 8)::INT AS width, (hb * 8)::INT AS height,
-                   round(avg((7*bx + 13*by + 31*id) % 256), 6) AS mean_r,
-                   round(avg((7*bx + 13*by + 29 + 31*id) % 256), 6)
-                     AS mean_g,
-                   round(avg((7*bx + 13*by + 58 + 31*id) % 256), 6)
-                     AS mean_b
-            FROM px GROUP BY 1, 2, 3 ORDER BY id
-        """,
-        "mjpeg_frame_features": """
-            -- analytic twin of the MJPEG flat-block pattern
-            -- block(bx,by,c,t) = (7bx + 13by + 29c + 17t + 31*id) mod 256
-            -- mean over pixels == mean over blocks (each block is 64
-            -- identical pixels), so the oracle never touches a codec
-            WITH ids AS (
-              SELECT doc_id AS id,
-                     (doc_id % 3 + 1)::INT AS wb,
-                     (doc_id % 2 + 1)::INT AS hb,
-                     (doc_id % 4 + 2)::INT AS n_frames
-              FROM documents WHERE doc_id < 40),
-            sampled AS (
-              SELECT i.*, gt.t AS frame_idx
-              FROM ids i, generate_series(0, 4) gt(t)
-              WHERE gt.t < i.n_frames AND gt.t % 2 = 0),
-            blk AS (
-              SELECT s.id, s.frame_idx, s.n_frames, s.wb, s.hb,
-                     gx.bx, gy.by
-              FROM sampled s,
-                   generate_series(0, 2) gx(bx),
-                   generate_series(0, 1) gy(by)
-              WHERE gx.bx < s.wb AND gy.by < s.hb)
-            SELECT id, frame_idx::INT AS frame_idx, n_frames,
-                   (wb * 8)::INT AS width, (hb * 8)::INT AS height,
-                   round(avg((7*bx + 13*by + 17*frame_idx + 31*id) % 256),
-                         6) AS mean_r,
-                   round(avg((7*bx + 13*by + 29 + 17*frame_idx + 31*id)
-                             % 256), 6) AS mean_g,
-                   round(avg((7*bx + 13*by + 58 + 17*frame_idx + 31*id)
-                             % 256), 6) AS mean_b
-            FROM blk GROUP BY 1, 2, 3, 4, 5 ORDER BY id, frame_idx
-        """,
-        "wav_decode_features": """
-            -- analytic twin of the WAV test pattern
-            -- s(t) = ((t*t + 7t + 31*id) mod 2001) - 1000, mono 8 kHz
-            WITH ids AS (
-              SELECT doc_id AS id, ((doc_id % 5) + 1) * 400 AS n
-              FROM documents WHERE doc_id < 40),
-            s AS (
-              SELECT i.id, i.n,
-                     ((gt.t * gt.t + 7 * gt.t + 31 * i.id) % 2001) - 1000
-                       AS v
-              FROM ids i CROSS JOIN generate_series(0, 1999) gt(t)
-              WHERE gt.t < i.n)
-            SELECT id, n::INT AS n_samples, 1::INT AS n_channels,
-                   8000::INT AS sample_rate,
-                   (n * 1000 // 8000)::INT AS duration_ms,
-                   round(avg(abs(v)), 6) AS mean_abs,
-                   round(sqrt(avg(v * v)), 6) AS rms
-            FROM s GROUP BY id, n ORDER BY id
-        """,
-        "png_decode_features": """
-            -- analytic twin of the PNG test pattern: the Spark side
-            -- encodes px(x,y,c) = (7x+13y+29c+31*id) mod 256 into real
-            -- PNGs and decodes them back; this recomputes the means
-            -- without any codec
-            WITH ids AS (
-              SELECT doc_id AS id,
-                     (doc_id % 16 + 8)::INT AS width,
-                     (doc_id % 12 + 8)::INT AS height
-              FROM documents WHERE doc_id < 40),
-            px AS (
-              SELECT i.id, i.width, i.height, gx.x, gy.y
-              FROM ids i,
-                   generate_series(0, 23) gx(x),
-                   generate_series(0, 19) gy(y)
-              WHERE gx.x < i.width AND gy.y < i.height)
-            SELECT id, width, height,
-                   round(avg((7*x + 13*y + 31*id) % 256), 6) AS mean_r,
-                   round(avg((7*x + 13*y + 29 + 31*id) % 256), 6) AS mean_g,
-                   round(avg((7*x + 13*y + 58 + 31*id) % 256), 6) AS mean_b
-            FROM px GROUP BY 1, 2, 3 ORDER BY id
-        """,
-        "jpeg_decode_features": """
-            -- analytic twin of the flat-block JPEG pattern: the Spark
-            -- side entropy-encodes block(bx,by,c) = (7bx+13by+29c+31id)
-            -- mod 256 into real baseline JPEGs and decodes them back
-            -- LOSSLESSLY (flat blocks, unit quant table); this
-            -- recomputes the means over block indices without a codec
-            WITH ids AS (
-              SELECT doc_id AS id,
-                     (doc_id % 3 + 2)::INT AS wb,
-                     (doc_id % 2 + 2)::INT AS hb
-              FROM documents WHERE doc_id < 40),
-            px AS (
-              SELECT i.id, i.wb, i.hb, gx.x AS bx, gy.y AS by
-              FROM ids i,
-                   generate_series(0, 4) gx(x),
-                   generate_series(0, 3) gy(y)
-              WHERE gx.x < i.wb AND gy.y < i.hb)
-            SELECT id, (wb * 8)::INT AS width, (hb * 8)::INT AS height,
-                   round(avg((7*bx + 13*by + 31*id) % 256), 6) AS mean_r,
-                   round(avg((7*bx + 13*by + 29 + 31*id) % 256), 6)
-                     AS mean_g,
-                   round(avg((7*bx + 13*by + 58 + 31*id) % 256), 6)
-                     AS mean_b
-            FROM px GROUP BY 1, 2, 3 ORDER BY id
-        """,
-        "completeness_orders": """
-            WITH base AS (
-              SELECT count(*)::BIGINT AS n_rows,
-                     count(o_orderkey)::BIGINT AS c1,
-                     count(o_custkey)::BIGINT AS c2,
-                     count(o_orderpriority)::BIGINT AS c3,
-                     count(o_totalprice)::BIGINT AS c4
-              FROM orders)
-            SELECT "column", n_rows, n_present,
-                   round(n_present / greatest(n_rows, 1), 6)
-                     AS completeness
-            FROM (
-              SELECT 'o_orderkey' AS "column", n_rows, c1 AS n_present
-              FROM base
-              UNION ALL SELECT 'o_custkey', n_rows, c2 FROM base
-              UNION ALL SELECT 'o_orderpriority', n_rows, c3 FROM base
-              UNION ALL SELECT 'o_totalprice', n_rows, c4 FROM base)
-            ORDER BY "column"
-        """,
-        "fd_lineitem_order_returnflag": """
-            WITH per AS (
-              SELECT l_orderkey,
-                     count(DISTINCT l_returnflag)::BIGINT AS nd,
-                     count(*)::BIGINT AS n
-              FROM lineitem GROUP BY 1)
-            SELECT count(*)::BIGINT AS n_groups,
-                   sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END)::BIGINT
-                     AS n_violating_groups,
-                   sum(CASE WHEN nd > 1 THEN n ELSE 0 END)::BIGINT
-                     AS n_violating_rows,
-                   sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) = 0 AS holds
-            FROM per
-        """,
-        "moment_drift_quantity": (lambda pm=_moments_sql("n", "s1", "s2", "s3", "s4"),
-                                  gm=_moments_sql("gn", "gs1", "gs2", "gs3", "gs4"): f"""
-            WITH per AS (
-              SELECT l_returnflag AS p, count(*)::BIGINT AS n,
-                     sum(l_quantity::BIGINT)::BIGINT AS s1,
-                     sum(l_quantity::BIGINT * l_quantity::BIGINT)::BIGINT AS s2,
-                     sum((l_quantity::BIGINT * l_quantity::BIGINT)
-                         * l_quantity::BIGINT)::BIGINT AS s3,
-                     sum(((l_quantity::BIGINT * l_quantity::BIGINT)
-                          * l_quantity::BIGINT) * l_quantity::BIGINT)::BIGINT AS s4
-              FROM lineitem WHERE l_quantity IS NOT NULL GROUP BY 1),
-            g AS (SELECT sum(n)::BIGINT AS gn, sum(s1)::BIGINT AS gs1,
-                         sum(s2)::BIGINT AS gs2, sum(s3)::BIGINT AS gs3,
-                         sum(s4)::BIGINT AS gs4 FROM per)
-            SELECT p AS l_returnflag, n,
-                   round({pm['mean']}, 6) AS mean,
-                   round({pm['m2']}, 6) AS variance,
-                   round({pm['skew']}, 6) AS skewness,
-                   round({pm['kurt']}, 6) AS kurtosis_ex,
-                   round(greatest(
-                     abs({pm['mean']} - {gm['mean']}) / sqrt({gm['m2']}),
-                     abs(sqrt({pm['m2']}) - sqrt({gm['m2']})) / sqrt({gm['m2']}),
-                     abs({pm['skew']} - {gm['skew']}),
-                     abs({pm['kurt']} - {gm['kurt']}) / 2.0
-                   ), 6) AS moment_distance
-            FROM per, g ORDER BY l_returnflag
-        """)(),
-        "ks_quantity_linestatus": """
-            WITH per_value AS (
-              SELECT l_quantity AS v,
-                     sum(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END)::BIGINT AS d1,
-                     sum(CASE WHEN l_linestatus = 'F' THEN 1 ELSE 0 END)::BIGINT AS d2
-              FROM lineitem
-              WHERE l_linestatus IN ('O','F') AND l_quantity IS NOT NULL
-              GROUP BY 1),
-            counts AS (SELECT sum(d1) AS n1, sum(d2) AS n2 FROM per_value),
-            cdfs AS (
-              SELECT sum(d1) OVER (ORDER BY v) AS c1,
-                     sum(d2) OVER (ORDER BY v) AS c2
-              FROM per_value)
-            SELECT round(max(abs(c1 / n1 - c2 / n2)), 6) AS ks_stat
-            FROM cdfs, counts
-        """,
-        "snakify_mktsegment": """
-            SELECT raw, lower(regexp_replace(raw, '([^A-Z_])([A-Z])', '\\1_\\2', 'g')) AS snake
-            FROM (SELECT DISTINCT c_mktsegment AS raw FROM customer)
-            ORDER BY raw
-        """,
-        "infer_string_annotations": (lambda b64=__import__(
-            "schema_guru_spark.core.formats", fromlist=["BASE64_PATTERN"]
-        ).BASE64_PATTERN: f"""
-            WITH vals AS (
-              SELECT printf('%016x', doc_id) AS b,
-                     'https://example.com/doc/' || doc_id::VARCHAR AS h,
-                     source AS s,
-                     printf('2024-01-%02dT%02d:%02d:05Z',
-                            doc_id % 28 + 1, doc_id % 24, doc_id % 60) AS t,
-                     printf('%08x-0000-4000-8000-%012x',
-                            doc_id, doc_id) AS u
-              FROM documents),
-            long AS (
-              UNPIVOT vals ON b, h, s, t, u INTO NAME key VALUE val),
-            det AS (
-              SELECT key, length(val) AS l,
-                CASE WHEN regexp_matches(val, '{_UUID_RE}') THEN 'uuid'
-                     WHEN length(val) > 10
-                          AND regexp_matches(val, '{_DT_RE}')
-                       THEN 'date-time'
-                     WHEN regexp_matches(val, '{_IPV4_RE}') THEN 'ipv4'
-                     WHEN regexp_matches(val, '{_URI_RE}') THEN 'uri'
-                     END AS fmt,
-                CASE WHEN regexp_matches(val, '{b64}') THEN 1 ELSE 0
-                     END AS is_b64
-              FROM long),
-            agg AS (
-              SELECT key,
-                CASE WHEN count(fmt) = count(*) AND min(fmt) = max(fmt)
-                     THEN min(fmt) END AS format,
-                CASE WHEN sum(is_b64) = count(*) THEN '{b64}'
-                     END AS pattern,
-                min(l) AS min_len, max(l) AS max_len
-              FROM det GROUP BY key)
-            SELECT key, 'string' AS v_type, format, pattern,
-                   min_len::BIGINT AS min_len,
-                   (CASE WHEN format = 'ipv4' THEN 15
-                         WHEN format = 'ipv6' THEN 39
-                         WHEN format = 'uri' THEN 8192
-                         ELSE max_len END)::BIGINT AS max_len
-            FROM agg ORDER BY key
-        """)(),
-        "infer_top_keys": """
-            WITH ok AS (
-              SELECT props FROM events
-              WHERE json_valid(props)
-                AND json_type(props::JSON) IN ('OBJECT', 'ARRAY')),
-            k AS (
-              SELECT DISTINCT unnest(json_keys(props)) AS key
-              FROM ok WHERE json_type(props::JSON) = 'OBJECT')
-            SELECT (SELECT count(*) FROM ok)::BIGINT AS n_ok,
-                   ((SELECT count(*) FROM events)
-                    - (SELECT count(*) FROM ok))::BIGINT AS n_err,
-                   (SELECT array_to_string(list_sort(list(key)), ',')
-                    FROM k) AS top_keys
-        """,
-        "infer_numeric_bounds": f"""
-            WITH agg AS (
-              SELECT min(json_extract(props, '$.k')::BIGINT) AS mn,
-                     max(json_extract(props, '$.k')::BIGINT) AS mx
-              FROM events WHERE json_valid(props))
-            SELECT 'integer' AS k_type,
-                   {_encase_min_sql("mn", "mx")} AS k_min,
-                   {_encase_max_sql("mn", "mx")} AS k_max
-            FROM agg
-        """,
-        "infer_by_type_keys": f"""
-            WITH ok AS (
-              SELECT event_type, props FROM events
-              WHERE json_valid(props)
-                AND json_type(props::JSON) = 'OBJECT'),
-            ks AS (
-              SELECT event_type,
-                     array_to_string(list_sort(list(DISTINCT k)), ',')
-                       AS top_keys
-              FROM (SELECT event_type, unnest(json_keys(props)) AS k
-                    FROM ok)
-              GROUP BY 1),
-            agg AS (
-              SELECT event_type,
-                     min(json_extract(props, '$.k')::BIGINT) AS mn,
-                     max(json_extract(props, '$.k')::BIGINT) AS mx
-              FROM ok GROUP BY 1)
-            SELECT ks.event_type, ks.top_keys,
-                   {_encase_min_sql("mn", "mx")} AS k_min,
-                   {_encase_max_sql("mn", "mx")} AS k_max
-            FROM ks JOIN agg USING (event_type)
-            ORDER BY event_type
-        """,
-        "minhash_pairs_docs": f"""
-            WITH {_CHAR_JACCARD_PAIRS_CTE}
-            SELECT id_a, id_b, jaccard FROM pairs ORDER BY id_a, id_b
-        """,
-        "near_dup_clusters_docs": f"""
-            -- transitive closure of the exact pair set; cluster_id =
-            -- min reachable id (matches min-label propagation)
-            WITH RECURSIVE {_CHAR_JACCARD_PAIRS_CTE},
-            edges AS (
-              SELECT id_a AS s, id_b AS dst FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-            reach AS (
-              SELECT DISTINCT s AS id, s AS r FROM edges
-              UNION
-              SELECT e.dst, reach.r FROM reach JOIN edges e ON e.s = reach.id)
-            SELECT id, min(r)::BIGINT AS cluster_id
-            FROM reach GROUP BY id ORDER BY id
-        """,
-        "simhash_fp_docs": f"""
-            WITH {_SIMHASH_FPS_CTE}
-            SELECT id, fp FROM fps ORDER BY id
-        """,
-        "simhash_neardup_docs": f"""
-            WITH {_SIMHASH_FPS_CTE}
-            SELECT a.id AS id_a, b.id AS id_b,
-                   bit_count(xor(a.fp, b.fp))::INT AS hamming
-            FROM fps a JOIN fps b ON a.id < b.id
-            WHERE bit_count(xor(a.fp, b.fp)) <= 6
-            ORDER BY id_a, id_b
-        """,
-        "ivf_topk_embeddings": """
-            -- probe-all IVF == brute force (losslessness oracle)
-            WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings
-                       WHERE vec_id = 0)
-            SELECT vec_id AS id,
-                   round(list_inner_product(embedding::DOUBLE[], qv) /
-                         (sqrt(list_inner_product(embedding::DOUBLE[],
-                                                  embedding::DOUBLE[]))
-                          * sqrt(list_inner_product(qv, qv)) + 1e-12), 6)
-                     AS cosine
-            FROM embeddings, q
-            ORDER BY cosine DESC, id ASC LIMIT 10
-        """,
-        "embedding_neardup_pairs": """
-            -- all-pairs twin of the banded sign-LSH plan: same planted
-            -- perturbation (1-based g.i == Spark's 0-based i + 1), same
-            -- double arithmetic, exact cosine on every pair
-            WITH base AS (
-              SELECT vec_id, embedding::DOUBLE[] AS e
-              FROM embeddings WHERE vec_id < 50),
-            pert AS (
-              SELECT b.vec_id + 1000 AS vec_id,
-                     list(b.e[g.i] + 0.003
-                          * (((b.vec_id + g.i) % 7) - 3.0)
-                          ORDER BY g.i) AS e
-              FROM base b, generate_series(1, 512) g(i)
-              WHERE g.i <= len(b.e)
-              GROUP BY b.vec_id),
-            all_v AS (SELECT * FROM base UNION ALL SELECT * FROM pert),
-            pairs AS (
-              SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                     list_inner_product(a.e, b.e)
-                     / (sqrt(list_inner_product(a.e, a.e))
-                        * sqrt(list_inner_product(b.e, b.e))) AS c
-              FROM all_v a JOIN all_v b ON a.vec_id < b.vec_id)
-            SELECT id_a, id_b, round(c, 6) AS cosine
-            FROM pairs WHERE c >= 0.9 ORDER BY id_a, id_b
-        """,
-        "knn_join_embeddings": """
-            WITH l AS (SELECT vec_id AS id_l, embedding::DOUBLE[] AS e
-                       FROM embeddings WHERE vec_id < 20),
-            r AS (SELECT vec_id AS id_r, embedding::DOUBLE[] AS e
-                  FROM embeddings WHERE vec_id >= 20),
-            scored AS (
-              SELECT id_l, id_r,
-                     round(list_inner_product(l.e, r.e)
-                           / (sqrt(list_inner_product(l.e, l.e))
-                              * sqrt(list_inner_product(r.e, r.e))
-                              + 1e-12), 6) AS cosine
-              FROM l CROSS JOIN r),
-            ranked AS (
-              SELECT *, row_number() OVER (
-                  PARTITION BY id_l ORDER BY cosine DESC, id_r) AS rn
-              FROM scored)
-            SELECT id_l, id_r, cosine FROM ranked WHERE rn <= 3
-            ORDER BY id_l, cosine DESC, id_r
-        """,
-        "dedup_keep_list_docs": f"""
-            WITH RECURSIVE {_CHAR_JACCARD_PAIRS_CTE},
-            edges AS (
-              SELECT id_a AS s, id_b AS dst FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-            reach AS (
-              SELECT DISTINCT s AS id, s AS r FROM edges
-              UNION
-              SELECT e.dst, reach.r FROM reach JOIN edges e ON e.s = reach.id),
-            clusters AS (SELECT id, min(r) AS cluster_id
-                         FROM reach GROUP BY id),
-            ids AS (SELECT DISTINCT id FROM d)
-            SELECT i.id,
-                   coalesce(c.cluster_id, i.id)::BIGINT AS cluster_id,
-                   coalesce(c.cluster_id, i.id) = i.id AS keep
-            FROM ids i LEFT JOIN clusters c USING (id) ORDER BY i.id
-        """,
-        "fingerprint_winnow_docs": r"""
-            WITH d AS (SELECT doc_id AS id,
-                regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-              FROM documents),
-            pos AS (
-              SELECT id, t, gs.i
-              FROM d CROSS JOIN generate_series(1, 4000) gs(i)
-              WHERE gs.i <= greatest(length(t) - 7, 1)),
-            kh AS (
-              SELECT id, i,
-                ('0x' || substr(md5(substring(t, i, 8)), 1, 15))::BIGINT AS h
-              FROM pos),
-            wmin AS (
-              SELECT id, i,
-                     min(h) OVER (PARTITION BY id ORDER BY i
-                                  ROWS BETWEEN CURRENT ROW
-                                  AND 3 FOLLOWING) AS wm,
-                     count(*) OVER (PARTITION BY id) AS n
-              FROM kh),
-            sel AS (SELECT DISTINCT id, wm FROM wmin
-                    WHERE i <= greatest(n - 3, 1)),
-            fps AS (SELECT id,
-                           array_to_string(list_sort(list(wm)), ',')
-                             AS winnow_fps
-                    FROM sel GROUP BY id),
-            mins AS (SELECT id, min(h) AS winnow_min FROM kh GROUP BY id)
-            SELECT id, winnow_min, winnow_fps
-            FROM fps JOIN mins USING (id) ORDER BY id
-        """,
-        # r05 corpus-selection additions (past the driver's 50-row
-        # window; verified by tests/test_oracle_parity.py every run)
-        "stratified_sample_docs": r"""
-            -- same md5-threshold predicate as the Spark plan; the
-            -- rate-1.0 stratum compares against 'g' because every
-            -- 8-char lowercase-hex token is < 'g' (NEVER a 9-char
-            -- threshold: lexicographic order breaks across widths)
-            SELECT doc_id AS id, source AS stratum,
-                   substr(md5('sgs-sample:' || doc_id::VARCHAR), 1, 8)
-                     AS keep_token
-            FROM documents
-            WHERE substr(md5('sgs-sample:' || doc_id::VARCHAR), 1, 8) <
-                  CASE source
-                    WHEN 'src0' THEN 'g'
-                    WHEN 'src1' THEN '80000000'
-                    WHEN 'src2' THEN '40000000'
-                    WHEN 'src3' THEN '20000000'
-                    ELSE '10000000' END
-            ORDER BY id
-        """,
-        "pack_sequences_docs": r"""
-            WITH toks AS (
-              SELECT doc_id AS id,
-                     coalesce(len(regexp_split_to_array(lower(trim(text)),
-                                                        '\s+')), 0)::BIGINT
-                       AS n_tok
-              FROM documents),
-            cum AS (
-              SELECT id, n_tok,
-                     sum(n_tok) OVER (ORDER BY id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       - n_tok AS st
-              FROM toks)
-            SELECT (st // 2048)::BIGINT AS seq_id,
-                   count(*)::BIGINT AS n_docs,
-                   sum(n_tok)::BIGINT AS n_tokens,
-                   min(id) AS first_doc,
-                   max(id) AS last_doc
-            FROM cum GROUP BY seq_id ORDER BY seq_id
-        """,
-        "quality_topk_per_source": r"""
-            WITH base AS (
-              SELECT doc_id AS id, source AS stratum,
-                     length(text)::INT AS n_chars,
-                     len(regexp_split_to_array(lower(trim(text)), '\s+'))::INT
-                       AS n_words,
-                     len(regexp_extract_all(text, '[^\w\s]'))::BIGINT AS n_punct,
-                     len(list_intersect(
-                       regexp_split_to_array(lower(trim(text)), '\s+'),
-                       ['the','and','of','to','a','in','is','it','for','on']))::INT
-                       AS n_stop
-              FROM documents),
-            scored AS (
-              SELECT id, stratum, n_chars,
-                     round(
-                       0.25 * (CASE WHEN n_chars >= 50 AND n_chars <= 100000
-                                    THEN 1.0 ELSE 0.0 END)
-                     + 0.25 * (1 - least(round(n_punct / greatest(n_chars, 1), 6)
-                                         * 4, 1.0))
-                     + 0.25 * (CASE WHEN n_stop >= 2 THEN 1.0 ELSE 0.0 END)
-                     + 0.25 * (CASE WHEN round((n_chars - (n_words - 1))
-                                              / greatest(n_words, 1), 6)
-                                    BETWEEN 2.0 AND 12.0
-                                    THEN 1.0 ELSE 0.0 END), 6) AS quality
-              FROM base),
-            ranked AS (
-              SELECT stratum, id, quality, n_chars,
-                     row_number() OVER (PARTITION BY stratum
-                                        ORDER BY quality DESC, id) AS rk
-              FROM scored)
-            SELECT stratum, rk::INT AS rank, id, quality, n_chars
-            FROM ranked WHERE rk <= 5 ORDER BY stratum, rank
-        """,
-        "hash_split_docs": _hash_split_sql(),
-        "domain_mix_plan_docs": _mix_plan_sql(),
-        # infer_props_schema / infer_by_event_type: recursive merge state,
-        # not SQL-expressible -> rows-only check (SURVEY.md §2 A1/A8).
-        # ks_quantity_sketch: Spark-internal QuantileSummaries cut-points
-        # -> rows-only; its exact twin ks_quantity_linestatus is the
-        # oracle-confirmed path.
-    }
+    return {op.name: op.oracle for op in REGISTRY if op.oracle is not None}

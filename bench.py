@@ -26,6 +26,36 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
            or len(os.sched_getaffinity(0)))
 
 
+BENCH_NAMES = [
+    "infer_props_schema",
+    "infer_by_event_type",
+    "string_profile_doc_text",
+    "string_profile_cname",
+    "numeric_profile_quantity",
+    "enum_orderpriority",
+    "duplicate_keys_source",
+    "segment_props",
+    "latest_event_per_user",
+    "uniqueness_lineitem_pk",
+    "ri_orders_customer",
+    "psi_price_returnflag",
+    "ks_quantity_linestatus",
+]
+
+# LLM-pipeline operators, timed the same way but reported under
+# their own key so the headline total stays comparable across rounds
+PIPELINE_NAMES = [
+    "minhash_pairs_docs", "simhash_neardup_docs",
+    "near_dup_clusters_docs", "ivf_topk_embeddings",
+    "token_stats_docs", "quality_docs", "pii_docs",
+    "repetition_docs", "contamination_docs", "dup_span_census_docs",
+    "curation_docs", "source_mix_docs",
+    "stratified_sample_docs", "pack_sequences_docs",
+    "quality_topk_per_source", "hash_split_docs",
+    "domain_mix_plan_docs",
+]
+
+
 def _force(df):
     df.write.format("noop").mode("overwrite").save()
 
@@ -34,25 +64,16 @@ def main() -> None:
     from schema_guru_spark.session import get_spark
     import __spark_entry__ as entry
 
+    queries = entry.queries()
+    # a renamed or deleted entry must not silently shrink the timed set
+    # (a smaller headline total reads as a speedup)
+    missing = [n for n in (*BENCH_NAMES, *PIPELINE_NAMES)
+               if n not in queries]
+    if missing:
+        raise KeyError(f"bench names missing from queries(): {missing}")
+
     spark = get_spark("sgs-bench", master=f"local[{CPUS}]",
                       shuffle_partitions=max(CPUS, 8))
-
-    queries = entry.queries()
-    bench_names = [
-        "infer_props_schema",
-        "infer_by_event_type",
-        "string_profile_doc_text",
-        "string_profile_cname",
-        "numeric_profile_quantity",
-        "enum_orderpriority",
-        "duplicate_keys_source",
-        "segment_props",
-        "latest_event_per_user",
-        "uniqueness_lineitem_pk",
-        "ri_orders_customer",
-        "psi_price_returnflag",
-        "ks_quantity_linestatus",
-    ]
     timings: dict[str, float] = {}
     n_docs = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
     # host contention is the leading confounder for cross-round deltas
@@ -76,9 +97,7 @@ def main() -> None:
     cold: dict[str, float] = {}
     medians: dict[str, float] = {}
     total = 0.0
-    for name in bench_names:
-        if name not in queries:
-            continue
+    for name in BENCH_NAMES:
         # the flagship query defines the headline files_per_sec; at
         # sf0.1 it finishes in <1s, where one scheduling hiccup moves
         # the derived throughput 25% (r02->r03 "regression" was exactly
@@ -98,18 +117,6 @@ def main() -> None:
         timings[name] = round(best, 3)
         total += best
 
-    # LLM-pipeline operators, timed the same way but reported under
-    # their own key so the headline total stays comparable across rounds
-    pipeline_names = [
-        "minhash_pairs_docs", "simhash_neardup_docs",
-        "near_dup_clusters_docs", "ivf_topk_embeddings",
-        "token_stats_docs", "quality_docs", "pii_docs",
-        "repetition_docs", "contamination_docs", "dup_span_census_docs",
-        "curation_docs", "source_mix_docs",
-        "stratified_sample_docs", "pack_sequences_docs",
-        "quality_topk_per_source", "hash_split_docs",
-        "domain_mix_plan_docs",
-    ]
     # same treatment as the headline set (r04 verdict #3: pipeline
     # queries got 1 warm sample while headline got 3-5 with medians, so
     # pipeline regressions were not adjudicable from the JSON alone):
@@ -117,9 +124,7 @@ def main() -> None:
     pipe: dict[str, float] = {}
     pipe_medians: dict[str, float] = {}
     pipe_cold: dict[str, float] = {}
-    for name in pipeline_names:
-        if name not in queries:
-            continue
+    for name in PIPELINE_NAMES:
         runs = []
         for attempt in range(3):
             t0 = time.perf_counter()
