@@ -7,19 +7,6 @@ from driver_queries import table
 from schema_guru_spark.operators import constraints as C
 
 
-def orders_unique(spark, sf):
-    return C.uniqueness_exact(table(spark, sf, "orders"), ["o_orderkey"])
-
-
-ORDERS_UNIQUE = """
-            SELECT count(*)::BIGINT AS n_rows,
-                   count(DISTINCT o_orderkey)::BIGINT AS n_distinct,
-                   (count(*) - count(DISTINCT o_orderkey))::BIGINT AS n_duplicates,
-                   count(*) = count(DISTINCT o_orderkey) AS is_unique
-            FROM orders
-        """
-
-
 def lineitem_pk_unique(spark, sf):
     return C.uniqueness_exact(table(spark, sf, "lineitem"),
                               ["l_orderkey", "l_linenumber"])
