@@ -50,8 +50,8 @@ REGISTRY = (
     Op("infer_numeric_bounds", infer.numeric_bounds, infer.NUMERIC_BOUNDS,
        IN),
     Op("infer_by_type_keys", infer.by_type_keys, infer.BY_TYPE_KEYS, IN),
-    Op("infer_props_schema", infer.props_schema, None, IN),
-    Op("infer_by_event_type", infer.by_event_type, None, IN),
+    Op("infer_props_schema", infer.props_schema, None, OUT),
+    Op("infer_by_event_type", infer.by_event_type, None, OUT),
     Op("string_profile_doc_text", infer.doc_text_profile,
        infer.DOC_TEXT_PROFILE, IN),
     Op("numeric_profile_quantity", infer.quantity_profile,
@@ -72,7 +72,7 @@ REGISTRY = (
        constraints.EVENTS_USER_DUP_ROWS, IN),
     Op("psi_price_returnflag", constraints.psi, constraints.PSI, IN),
     Op("ks_quantity_linestatus", constraints.ks, constraints.KS, IN),
-    Op("ks_quantity_sketch", constraints.ks_sketch, None, IN),
+    Op("ks_quantity_sketch", constraints.ks_sketch, None, OUT),
     Op("snakify_mktsegment", infer.snakify, infer.SNAKIFY, IN),
     Op("exact_dup_props", dedup.exact_dups, dedup.EXACT_DUPS, IN),
     Op("unigram_jaccard_docs", dedup.unigram_jaccard, dedup.UNIGRAM_JACCARD,
@@ -98,9 +98,9 @@ REGISTRY = (
     Op("jpeg_decode_features", media.jpeg, media.JPEG, IN),
     Op("wav_decode_features", media.wav, media.WAV, IN),
     Op("avi_frame_features", media.avi, media.AVI, IN),
-    Op("mjpeg_frame_features", media.mjpeg, media.MJPEG, IN),
+    Op("mjpeg_frame_features", media.mjpeg, media.MJPEG, OUT),
     Op("progressive_jpeg_features", media.progressive_jpeg,
-       media.PROGRESSIVE_JPEG, IN),
+       media.PROGRESSIVE_JPEG, OUT),
     Op("minhash_pairs_docs", dedup.minhash_pairs, dedup.MINHASH_PAIRS, IN),
     Op("near_dup_clusters_docs", dedup.clusters, dedup.CLUSTERS, IN),
     Op("simhash_neardup_docs", dedup.simhash_pairs, dedup.SIMHASH_PAIRS, IN),
@@ -111,12 +111,12 @@ REGISTRY = (
     Op("dedup_keep_list_docs", dedup.keep_list, dedup.KEEP_LIST, IN),
     Op("fingerprint_winnow_docs", text.winnow, text.WINNOW, IN),
     Op("stratified_sample_docs", sampling.stratified, sampling.STRATIFIED,
-       OUT),
-    Op("pack_sequences_docs", sampling.pack, sampling.PACK, OUT),
+       IN),
+    Op("pack_sequences_docs", sampling.pack, sampling.PACK, IN),
     Op("quality_topk_per_source", sampling.quality_topk,
-       sampling.QUALITY_TOPK, OUT),
-    Op("hash_split_docs", sampling.hash_split, sampling.HASH_SPLIT, OUT),
-    Op("domain_mix_plan_docs", sampling.mix_plan, sampling.MIX_PLAN, OUT),
+       sampling.QUALITY_TOPK, IN),
+    Op("hash_split_docs", sampling.hash_split, sampling.HASH_SPLIT, IN),
+    Op("domain_mix_plan_docs", sampling.mix_plan, sampling.MIX_PLAN, IN),
     # twins of entries above; a twin stays while it covers what no other
     # entry does: bench.py times cname; acctbal reaches the -32768
     # encasing branch; distributed runs the past-the-guard plan; no

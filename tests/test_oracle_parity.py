@@ -76,13 +76,14 @@ def test_all_queries_have_oracle_or_are_declared():
 
 def test_window_is_fifty_registry_entries():
     """The driver records the first 50 queries(): they are exactly the
-    registry entries flagged in-window, in registry order, and every
-    operator is registered once."""
+    registry entries flagged in-window, in registry order, each with an
+    oracle, and every operator is registered once."""
     names = [op.name for op in entrymod.REGISTRY]
     assert len(names) == len(set(names)) == len(QUERIES)
     window = [op.name for op in entrymod.REGISTRY if op.window]
     assert len(window) == 50
     assert list(QUERIES)[:50] == window
+    assert set(window) <= set(ORACLES)
 
 
 def test_parity_suites_cover_every_oracle():
