@@ -28,8 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from driver_queries import constraints, dedup, infer, media, sampling, text
-from driver_queries import table
-from schema_guru_spark.operators.infer import infer_json_column
 
 Query = Callable[[SparkSession, str], DataFrame]
 
@@ -133,11 +131,9 @@ REGISTRY = (
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: infer the merged JSON Schema of sf0.001 events.props
-    (derive -> per-partition merge -> tree combine -> transform passes),
+    """Flagship: infer the merged JSON Schema of sf0.001 events.props,
     returning a one-row DataFrame with the rendered schema + counters."""
-    events = table(spark, "/root/testdata/sf0.001", "events")
-    res = infer_json_column(events, "props", infer.CTX)
+    res = infer.props_result(spark, "/root/testdata/sf0.001")
     rendered = json.dumps(res.schema(infer.CTX), sort_keys=True)
     dupes = json.dumps(sorted(res.duplicated_keys()))
     return spark.createDataFrame(

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from driver_queries import table
+from driver_queries.text import _EN
 from schema_guru_spark.operators import sampling as SMP
 from schema_guru_spark.operators import textstats as TS
 
@@ -85,7 +86,7 @@ def quality_topk(spark, sf):
                                         "text", "doc_id", "source", k=5)
 
 
-QUALITY_TOPK = r"""
+QUALITY_TOPK = rf"""
             WITH base AS (
               SELECT doc_id AS id, source AS stratum,
                      length(text)::INT AS n_chars,
@@ -94,7 +95,7 @@ QUALITY_TOPK = r"""
                      len(regexp_extract_all(text, '[^\w\s]'))::BIGINT AS n_punct,
                      len(list_intersect(
                        regexp_split_to_array(lower(trim(text)), '\s+'),
-                       ['the','and','of','to','a','in','is','it','for','on']))::INT
+                       {_EN}))::INT
                        AS n_stop
               FROM documents),
             scored AS (

@@ -26,6 +26,19 @@ TOKEN_STATS = r"""
         """
 
 
+# the stopword lists and PII regexes of textstats, spelled once for
+# every text oracle
+_EN = "['the','and','of','to','a','in','is','it','for','on']"
+_DE = "['der','die','das','und','ist','nicht','ein','mit','auf','zu']"
+_ES = "['el','la','los','y','es','un','una','de','en','por']"
+_FR = "['le','la','les','et','est','un','une','des','dans','pour']"
+_EMAIL = r"'[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'"
+_PHONE = r"'(?:\+?[0-9]{1,3}[-. ]?)?\(?[0-9]{3}\)?[-. ][0-9]{3}[-. ][0-9]{4}'"
+_SSN = r"'[0-9]{3}-[0-9]{2}-[0-9]{4}'"
+_IPV4 = (r"'(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])"
+         r"(\.(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])){3}'")
+
+
 # every word-level oracle splits text the way textstats does
 _WORDS = r"""w AS (
               SELECT doc_id AS id,
@@ -41,10 +54,10 @@ LANG_ID = rf"""
             WITH {_WORDS}
             h AS (
               SELECT id,
-                len(list_intersect(words, ['der','die','das','und','ist','nicht','ein','mit','auf','zu']))::INT AS h_de,
-                len(list_intersect(words, ['the','and','of','to','a','in','is','it','for','on']))::INT AS h_en,
-                len(list_intersect(words, ['el','la','los','y','es','un','una','de','en','por']))::INT AS h_es,
-                len(list_intersect(words, ['le','la','les','et','est','un','une','des','dans','pour']))::INT AS h_fr
+                len(list_intersect(words, {_DE}))::INT AS h_de,
+                len(list_intersect(words, {_EN}))::INT AS h_en,
+                len(list_intersect(words, {_ES}))::INT AS h_es,
+                len(list_intersect(words, {_FR}))::INT AS h_fr
               FROM w)
             SELECT id, h_de, h_en, h_es, h_fr,
               CASE WHEN greatest(h_de, h_en, h_es, h_fr) <= 0 THEN 'und'
@@ -60,7 +73,7 @@ def quality(spark, sf):
     return TS.quality_scores(table(spark, sf, "documents"), "text", "doc_id")
 
 
-QUALITY = r"""
+QUALITY = rf"""
             WITH base AS (
               SELECT doc_id AS id, text,
                      length(text)::INT AS n_chars,
@@ -68,7 +81,7 @@ QUALITY = r"""
                      len(regexp_extract_all(text, '[^\w\s]'))::BIGINT AS n_punct,
                      len(list_intersect(
                        regexp_split_to_array(lower(trim(text)), '\s+'),
-                       ['the','and','of','to','a','in','is','it','for','on']))::INT AS n_stop
+                       {_EN}))::INT AS n_stop
               FROM documents),
             derived AS (
               SELECT id, n_chars, n_words,
@@ -98,16 +111,16 @@ def pii(spark, sf):
     return TS.pii_scan(table(spark, sf, "documents"), "text", "doc_id")
 
 
-PII = r"""
+PII = rf"""
             SELECT doc_id AS id,
                    len(regexp_extract_all(text,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_email,
+                       {_EMAIL})) AS n_email,
                    len(regexp_extract_all(text,
-                       '(?:\+?[0-9]{1,3}[-. ]?)?\(?[0-9]{3}\)?[-. ][0-9]{3}[-. ][0-9]{4}')) AS n_phone,
+                       {_PHONE})) AS n_phone,
                    len(regexp_extract_all(text,
-                       '[0-9]{3}-[0-9]{2}-[0-9]{4}')) AS n_ssn,
+                       {_SSN})) AS n_ssn,
                    len(regexp_extract_all(text,
-                       '(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])(\.(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])){3}')) AS n_ipv4,
+                       {_IPV4})) AS n_ipv4,
                    (n_email + n_phone + n_ssn + n_ipv4) > 0 AS has_pii
             FROM documents ORDER BY id
         """
@@ -213,7 +226,7 @@ def curation(spark, sf):
         allowed_langs=("en",))
 
 
-CURATION = r"""
+CURATION = rf"""
             WITH w AS (
               SELECT doc_id AS id, text,
                      regexp_split_to_array(lower(trim(text)), '\s+') AS words
@@ -244,14 +257,14 @@ CURATION = r"""
                      length(text) AS n_chars,
                      len(words) AS n_words,
                      len(regexp_extract_all(text, '[^\w\s]')) AS n_punct,
-                     len(list_intersect(words, ['the','and','of','to','a','in','is','it','for','on'])) AS h_en,
-                     len(list_intersect(words, ['der','die','das','und','ist','nicht','ein','mit','auf','zu'])) AS h_de,
-                     len(list_intersect(words, ['el','la','los','y','es','un','una','de','en','por'])) AS h_es,
-                     len(list_intersect(words, ['le','la','les','et','est','un','une','des','dans','pour'])) AS h_fr,
-                     len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-                     + len(regexp_extract_all(text, '(?:\+?[0-9]{1,3}[-. ]?)?\(?[0-9]{3}\)?[-. ][0-9]{3}[-. ][0-9]{4}'))
-                     + len(regexp_extract_all(text, '[0-9]{3}-[0-9]{2}-[0-9]{4}'))
-                     + len(regexp_extract_all(text, '(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])(\.(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])){3}'))
+                     len(list_intersect(words, {_EN})) AS h_en,
+                     len(list_intersect(words, {_DE})) AS h_de,
+                     len(list_intersect(words, {_ES})) AS h_es,
+                     len(list_intersect(words, {_FR})) AS h_fr,
+                     len(regexp_extract_all(text, {_EMAIL}))
+                     + len(regexp_extract_all(text, {_PHONE}))
+                     + len(regexp_extract_all(text, {_SSN}))
+                     + len(regexp_extract_all(text, {_IPV4}))
                        AS n_pii
               FROM w WHERE w.id >= 5),
             derived AS (
@@ -313,7 +326,7 @@ def source_mix(spark, sf):
                                 "text", "source")
 
 
-SOURCE_MIX = r"""
+SOURCE_MIX = rf"""
             WITH perdoc AS (
               SELECT source,
                      length(text) AS n_chars,
@@ -328,7 +341,7 @@ SOURCE_MIX = r"""
                          / greatest(length(text), 1), 6) * 4, 1.0))
                      + 0.25 * (CASE WHEN len(list_intersect(
                          regexp_split_to_array(lower(trim(text)), '\s+'),
-                         ['the','and','of','to','a','in','is','it','for','on']))
+                         {_EN}))
                          >= 2 THEN 1.0 ELSE 0.0 END)
                      + 0.25 * (CASE WHEN round((length(text)
                          - (len(regexp_split_to_array(lower(trim(text)), '\s+')) - 1))
