@@ -559,9 +559,9 @@ def functional_dependency(df: DataFrame, lhs: Sequence[str],
 def moment_columns(n, s1, s2, s3, s4):
     """Standardized moments (mean, variance, skew, excess kurtosis) from
     power-sum Columns — ONE fixed operation order, mirrored verbatim in
-    the DuckDB oracle SQL (`__spark_entry__._moments_sql`) so the IEEE
-    doubles reproduce bit-for-bit. Shared by the batch per-partition
-    screen and the streaming windowed monitor."""
+    the DuckDB oracle SQL (`driver_queries.constraints._moments_sql`)
+    so the IEEE doubles reproduce bit-for-bit. Shared by the batch
+    per-partition screen and the streaming windowed monitor."""
     n = n.cast("double")
     s1, s2, s3, s4 = [s.cast("double") for s in (s1, s2, s3, s4)]
     mean = s1 / n

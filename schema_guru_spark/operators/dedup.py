@@ -260,7 +260,7 @@ def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame
     hash (cross-engine: ``conv(substr(md5(tok),1,15),16,10)``) -> one
     hash aggregate with 60 per-bit weighted sign sums -> sign bits
     reassembled. No Python anywhere, and bit-for-bit reproducible in
-    ANSI SQL — the DuckDB oracle in __spark_entry__ mirrors it.
+    ANSI SQL — the DuckDB oracle in driver_queries/dedup.py mirrors it.
 
     Scale shape: ONE shuffle, on id, partial-aggregated map-side — the
     shuffle carries 60 sign-sum longs per doc per map partition, never

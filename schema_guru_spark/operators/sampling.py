@@ -8,7 +8,7 @@ similarity.py): operators a large-scale LLM training-data pipeline
 needs that the reference engine has no analogue for. Every operator is
 deterministic (no RNG — hashing through md5, so the sampling decision
 is bit-reproducible in ANSI SQL) and each has a DuckDB oracle twin in
-__spark_entry__.py.
+driver_queries/sampling.py.
 
 Scale notes per operator:
 

@@ -3,7 +3,7 @@ token counting, document fingerprinting.
 
 Everything here is JVM-expression-only (split/regexp/array ops inside
 whole-stage codegen) — no Python in the hot path — and each operator has
-a DuckDB-expressible oracle twin in __spark_entry__.py.
+a DuckDB-expressible oracle twin in driver_queries/text.py.
 """
 
 from __future__ import annotations

@@ -7,11 +7,12 @@ Over an Iceberg/parquet table (repo, path, commit, lang, content
               bucket's JSON content, pass/fail (distribution drift is
               the constraint suite's job: ``constraint_report`` computes
               per-bucket PSI over the same bucket ids)
-  violations: rows keyed (repo, lang, bucket, kind, detail) — parse
-              errors, sha256 invariant mismatches, disallowed langs
-              (from the scan pass); duplicate (repo,path,commit) keys
-              and RI orphans via ``key_violation_rows`` (column-pruned
-              key scans, same row shape)
+  violations: rows (bucket, repo, lang, detail) — parse errors,
+              sha256 invariant mismatches, disallowed langs, all from
+              the scan pass. Duplicate (repo,path,commit) keys and RI
+              orphans are only counted, by ``constraint_report``: the
+              job writes no row for them (``key_violation_rows`` builds
+              such rows in this shape, but the job never calls it)
 
 Scale design (the whole point):
 
@@ -35,9 +36,10 @@ Scale design (the whole point):
     pmod(xxhash64(path), n_salts), n_buckets) — a mega-repo (30% of the
     synthetic table) spreads over n_salts buckets instead of hot-spotting
     one task (BASELINE.json: "salted repartition by repo-hash").
-  * Key-level checks (uniqueness, referential integrity) run as separate
-    column-pruned queries: they scan only the key columns (parquet
-    column pruning), never content.
+  * Key-level checks (uniqueness, referential integrity) run in
+    ``constraint_report``, a separate column-pruned query. It reads the
+    key columns and content, whose length feeds the drift and null
+    checks; only the length, never content, reaches a shuffle.
   * Resume: buckets are processed in chunks; each finished chunk writes
     its violations and verdicts sinks, then appends to a checkpoint
     manifest (plans/checkpoint.py), in a driver-local directory. A
