@@ -28,6 +28,27 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from driver_queries import constraints, dedup, infer, media, sampling, text
+from driver_queries import table as _t
+from driver_queries.infer import CTX
+from schema_guru_spark.operators.infer import infer_json_column
+
+# ---------------------------------------------------------------------------
+# entry — flagship: distributed schema inference over events.props
+# ---------------------------------------------------------------------------
+
+def entry(spark: SparkSession) -> DataFrame:
+    """Infer the merged JSON Schema of sf0.001 events.props (derive ->
+    per-partition merge -> tree combine -> transform passes), returning a
+    one-row DataFrame with the rendered schema + counters."""
+    events = _t(spark, "/root/testdata/sf0.001", "events")
+    res = infer_json_column(events, "props", CTX)
+    rendered = json.dumps(res.schema(CTX), sort_keys=True)
+    dupes = json.dumps(sorted(res.duplicated_keys()))
+    return spark.createDataFrame(
+        [(rendered, res.n_ok, res.n_err, dupes)],
+        "schema string, n_ok long, n_err long, duplicated_keys string",
+    )
+
 
 Query = Callable[[SparkSession, str], DataFrame]
 
@@ -128,18 +149,6 @@ REGISTRY = (
     Op("simhash_fp_docs", dedup.simhash_fps, dedup.SIMHASH_FPS, OUT),
     Op("fingerprint_md5_docs", text.content_md5, text.CONTENT_MD5, OUT),
 )
-
-
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: infer the merged JSON Schema of sf0.001 events.props,
-    returning a one-row DataFrame with the rendered schema + counters."""
-    res = infer.props_result(spark, "/root/testdata/sf0.001")
-    rendered = json.dumps(res.schema(infer.CTX), sort_keys=True)
-    dupes = json.dumps(sorted(res.duplicated_keys()))
-    return spark.createDataFrame(
-        [(rendered, res.n_ok, res.n_err, dupes)],
-        "schema string, n_ok long, n_err long, duplicated_keys string",
-    )
 
 
 def queries() -> dict[str, Query]:

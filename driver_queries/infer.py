@@ -51,9 +51,7 @@ def _encase_max_sql(mn: str, mx: str) -> str:
 
 # --- schema inference over events.props ------------------------------------
 
-def props_result(spark, sf):
-    """The merged schema of events.props (derive -> per-partition merge
-    -> tree combine -> transform passes)."""
+def _props_result(spark, sf):
     return infer_json_column(table(spark, sf, "events"), "props", CTX)
 
 
@@ -62,7 +60,7 @@ def top_keys(spark, sf):
     # independent union of JSON object keys, and the ok/err counters
     # must match its json_valid accounting — pins P1/P2 routing and the
     # A5 object key-union merge without the full recursive render in SQL
-    res = props_result(spark, sf)
+    res = _props_result(spark, sf)
     keys = sorted((res.schema(CTX).get("properties") or {}).keys())
     return spark.createDataFrame(
         [(res.n_ok, res.n_err, ",".join(keys))],
@@ -162,7 +160,7 @@ def numeric_bounds(spark, sf):
     # pins derivation (D9) + integer merge (A3) + T1 encasing THROUGH
     # the distributed engine: the rendered property's type/min/max must
     # equal the SQL-side encasing of the observed json_extract range
-    res = props_result(spark, sf)
+    res = _props_result(spark, sf)
     k = (res.schema(CTX).get("properties") or {}).get("k", {})
     return spark.createDataFrame(
         [(k.get("type"), k.get("minimum"), k.get("maximum"))],
@@ -228,7 +226,7 @@ BY_TYPE_KEYS = f"""
 # (SURVEY.md §2 A1/A8)
 
 def props_schema(spark, sf):
-    res = props_result(spark, sf)
+    res = _props_result(spark, sf)
     rendered = json.dumps(res.schema(CTX), sort_keys=True)
     return spark.createDataFrame(
         [(rendered, res.n_ok, res.n_err)],
