@@ -23,9 +23,26 @@ import sys
 from collections.abc import Callable
 from typing import NamedTuple, Optional
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
+
+
+def _put_root_on_path(env) -> None:
+    """Prepend the checkout to ``env``'s PYTHONPATH (once)."""
+    path = env.get("PYTHONPATH") or ""
+    if _ROOT not in path.split(os.pathsep):
+        env["PYTHONPATH"] = os.pathsep.join(filter(None, (_ROOT, path)))
+
+
+# Spark's Python workers import the package too, from their own cwd: a
+# JVM started after this import inherits the PYTHONPATH, and a running
+# context ships its ``environment`` with every Python function it wraps
+_put_root_on_path(os.environ)
+if SparkContext._active_spark_context is not None:
+    _put_root_on_path(SparkContext._active_spark_context.environment)
 
 from driver_queries import constraints, dedup, infer, media, sampling, text
 from driver_queries import table as _t
@@ -37,9 +54,11 @@ from schema_guru_spark.operators.infer import infer_json_column
 # ---------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Infer the merged JSON Schema of sf0.001 events.props (derive ->
-    per-partition merge -> tree combine -> transform passes), returning a
-    one-row DataFrame with the rendered schema + counters."""
+    """Infer the merged JSON Schema of sf0.001 events.props (derive and
+    fold per partition -> fold of the partition states in pid order,
+    through a combine tree first only above 64 states -> transform
+    passes), returning a one-row DataFrame with the rendered schema +
+    counters."""
     events = _t(spark, "/root/testdata/sf0.001", "events")
     res = infer_json_column(events, "props", CTX)
     rendered = json.dumps(res.schema(CTX), sort_keys=True)

@@ -120,9 +120,13 @@ def main(argv=None) -> int:
         payload = json.dumps(result, indent=2, sort_keys=True)
         # the reference prints parse errors after segmented output
         # (SchemaCommand.scala:127-130); route them like the global path
-        # (--errors-path as parquet, else stderr, capped)
-        bad = docs.filter(~parse_ok)
-        violations = _parse_error_messages(bad)
+        # (--errors-path as parquet, else stderr, capped). The probe
+        # accepts top-level scalars, which the derive pass's gate
+        # rejects, so every row that is not plainly an object or array
+        # goes to the Python pass too
+        bad = docs.filter(~parse_ok
+                          | ~F.col("content").rlike(r"^\s*[\[{]"))
+        violations = _parse_error_messages(bad, ctx)
         if args.errors_path and not violations.isEmpty():
             violations.write.mode("overwrite").parquet(args.errors_path)
         else:
@@ -156,31 +160,23 @@ def main(argv=None) -> int:
     return 0
 
 
-def _parse_error_messages(bad):
-    """Violation messages for rows the JVM validity probe rejected —
-    re-parse each offending text with the same Python parser the derive
-    pass uses so segmented-mode error wording matches the global path
-    ('invalid JSON: ...' / 'null content'). Distributed (mapInPandas);
-    a JVM-rejected row the Python parser accepts is silently dropped."""
+def _parse_error_messages(bad, ctx):
+    """Violation messages of the rows in ``bad`` that are not JSON
+    objects or arrays, from the derive pass's own kernel
+    (``fold_keyed``'s errors), so segmented-mode wording is the global
+    path's ('null content' / 'invalid JSON: ...' / the reference's gate
+    message for a top-level scalar). Distributed (mapInPandas)."""
     import pandas as pd
 
-    from schema_guru_spark.core.json_fast import loads as fast_loads
+    from schema_guru_spark.core.accumulate_batch import fold_keyed
 
     def fn(batches):
         for pdf in batches:
-            msgs = []
-            for text in pdf["content"]:
-                if text is None or (isinstance(text, float) and pd.isna(text)):
-                    msgs.append("null content")
-                    continue
-                try:
-                    fast_loads(text)
-                except (ValueError, TypeError) as e:
-                    msgs.append(f"invalid JSON: {e}")
-            if msgs:
-                yield pd.DataFrame({"error": msgs})
+            errors = fold_keyed(pdf["content"], None, ctx)[2]
+            if errors:
+                yield pd.DataFrame({"error": [msg for _, msg in errors]})
 
-    return bad.mapInPandas(fn, "error string")
+    return bad.select("content").mapInPandas(fn, "error string")
 
 
 def _ddl_command(args) -> int:

@@ -12,14 +12,17 @@ SQL aggregate (no recursive types), so the idiomatic Spark shape is:
      violation ROWS in the same pass (fixing the reference's double
      traversal, SchemaGuruRDD.scala:49, and driver-side errors.collect,
      SchemaDerive.scala:98).
-  2. The per-partition states (one tiny JSON row per task) are combined:
-     intermediate fan-in rounds while the row count is large, then a
-     final driver-side fold. At 1000 executors / 100k partitions the
-     state rows total a few MB — the combine is never the bottleneck;
-     the single data pass is.
+  2. The per-partition states (one tiny JSON row per task) fold in pid
+     (partition) order through one function, ``_fold_partials``, in
+     every context: on the driver, and, only above 64 partial states
+     (inputs past about 2 GB at 32 MB splits) and only for enum-free
+     contexts, first in combine-tree rounds on the executors. At 1000
+     executors / 100k partitions the state rows total a few MB — the
+     combine is never the bottleneck; the single data pass is.
 
 Segmented (per-key) inference folds per-key accumulators map-side in
-each scan task, then shuffles only the tiny states (groupBy(key)) —
+the same pass, then shuffles only the tiny states (groupBy(key), each
+key folded by ``_fold_partials``) —
 replacing the reference's RDD.groupBy that ships whole groups to
 single tasks (JsonPathExtractorRDD.scala:74). A hot key costs the same
 as any other key, so skew cannot concentrate data movement.
@@ -36,13 +39,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from schema_guru_spark.core.context import SchemaContext
-from schema_guru_spark.core.microschema import ZERO, dumps, loads, merge
+from schema_guru_spark.core.microschema import (
+    ZERO, dumps, loads, merge, render)
 from schema_guru_spark.core.transforms import apply_transforms, extract_keys
 from schema_guru_spark.core.levenshtein import get_duplicates
 
-_OUT_SCHEMA = ("kind string, payload string, n_ok bigint, n_err bigint, "
-               "pid int")
-_STATE_KIND, _VIOLATION_KIND = "s", "v"
+# one partial row per (task, key) state, or per failing document
+# (``error`` not NULL); global inference has the one key None
+_PARTIAL = ("key string, state string, n_ok bigint, n_err bigint, "
+            "pid int, error string")
+_COLS = ["key", "state", "n_ok", "n_err", "pid", "error"]
+# combine-tree fan-in: rounds run while there are more partial states
+_FANIN = 64
 
 
 def _require_commutative(ctx: SchemaContext) -> None:
@@ -59,14 +67,21 @@ def _require_commutative(ctx: SchemaContext) -> None:
             "the default commutative context for Spark inference")
 
 
-def _derive_partial(ctx: SchemaContext, column: str):
-    """Build the mapInPandas function: per-task derive+fold, single pass,
-    violations streamed out as rows. Each Arrow batch goes through the
-    shared keyed kernel (``core.accumulate_batch.fold_keyed``, one
-    global key: parse once per distinct document, gate, collapse,
-    fold); batch states merge into the task's state in batch order. For
-    enum-bearing contexts a batch boundary thus acts like a partition
-    boundary: row order within a batch, batch order within a task."""
+def _fold_task(ctx: SchemaContext, column: str,
+               key_col: Optional[str] = None,
+               ctx_by_key: Optional[dict] = None):
+    """Build the mapInPandas function of the one data pass: each Arrow
+    batch goes through the shared keyed kernel
+    (``core.accumulate_batch.fold_keyed``: parse once per distinct
+    document, gate, collapse, fold), and the batch states merge into
+    the task's per-key states in batch order. For enum-bearing contexts
+    a batch boundary thus acts like a partition boundary: row order
+    within a batch, batch order within a task.
+
+    Emits ``_PARTIAL`` rows: one error row per failing document, then
+    one state row per key the task saw. ``key_col=None`` is global
+    inference (one key, None), which emits its state row even for an
+    empty task."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -75,53 +90,45 @@ def _derive_partial(ctx: SchemaContext, column: str):
 
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
-        acc = ZERO
-        n_ok = 0
-        n_err = 0
+        accs: dict = {}
+        counts: dict = {None: [0, 0]} if key_col is None else {}
         for pdf in batches:
-            states, counts, errors = fold_keyed(pdf[column], None, ctx)
-            acc = merge(acc, states.get(None, ZERO), ctx)
-            ok, err = counts.get(None, (0, 0))
-            n_ok += ok
-            n_err += err
+            states, batch_counts, errors = fold_keyed(
+                pdf[column], None if key_col is None else pdf[key_col], ctx,
+                ctx_by_key)
+            for k, st in states.items():
+                accs[k] = merge(accs.get(k, ZERO), st, ctx)
+            for k, (ok, err) in batch_counts.items():
+                c = counts.setdefault(k, [0, 0])
+                c[0] += ok
+                c[1] += err
             if errors:
                 yield pd.DataFrame({
-                    "kind": _VIOLATION_KIND,
-                    "payload": [msg for _, msg in errors],
-                    "n_ok": 0, "n_err": 1, "pid": pid,
-                })
-        yield pd.DataFrame({
-            "kind": [_STATE_KIND], "payload": [dumps(acc)],
-            "n_ok": [n_ok], "n_err": [n_err], "pid": [pid],
-        })
+                    "key": None, "state": None, "n_ok": 0, "n_err": 0,
+                    "pid": pid, "error": [msg for _, msg in errors]},
+                    columns=_COLS)
+        if counts:
+            yield pd.DataFrame(
+                [(k, dumps(accs.get(k, ZERO)), ok, err, pid, None)
+                 for k, (ok, err) in counts.items()], columns=_COLS)
 
     return fn
 
 
-def _state_combiner(ctx: SchemaContext):
-    # only reachable for commutative (enum-off) contexts — see
-    # infer_json_column; pid carries the min so the column stays defined
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = ZERO
-        n_ok = 0
-        n_err = 0
-        pid = None
-        for pdf in batches:
-            for payload, ok, err, p in zip(pdf["payload"], pdf["n_ok"],
-                                           pdf["n_err"], pdf["pid"]):
-                acc = merge(acc, loads(payload), ctx)
-                n_ok += int(ok)
-                n_err += int(err)
-                p = int(p)
-                if pid is None or p < pid:
-                    pid = p
-        yield pd.DataFrame({
-            "kind": [_STATE_KIND], "payload": [dumps(acc)],
-            "n_ok": [n_ok], "n_err": [n_err],
-            "pid": [pid if pid is not None else -1],
-        })
-
-    return fn
+def _fold_partials(rows, ctx: SchemaContext) -> tuple[dict, int, int]:
+    """Fold partial state rows (anything with ``state``, ``n_ok``,
+    ``n_err`` and ``pid`` attributes: collected Rows or pandas
+    itertuples) in pid order: merge the states, sum the counters. The
+    one fan-in of every inference path — tree rounds, the driver fold
+    and the keyed per-key fold. The pid order keeps enum-bearing
+    contexts (order-sensitive merge, see infer_json_column) a function
+    of the input partitioning alone."""
+    acc, n_ok, n_err = ZERO, 0, 0
+    for r in sorted(rows, key=lambda r: r.pid):
+        acc = merge(acc, loads(r.state), ctx)
+        n_ok += int(r.n_ok)
+        n_err += int(r.n_err)
+    return acc, n_ok, n_err
 
 
 @dataclass
@@ -147,7 +154,6 @@ class InferResult:
 
     def schema(self, ctx: SchemaContext) -> dict:
         """Final JSON Schema (transform passes applied, SchemaGuru.scala:74-78)."""
-        from schema_guru_spark.core.microschema import render
         return render(apply_transforms(self.state, ctx), ctx)
 
     def duplicated_keys(self) -> set:
@@ -188,27 +194,30 @@ def _widen_small_scan(src: DataFrame) -> DataFrame:
     return src
 
 
-def infer_json_column(df: DataFrame, column: str, ctx: SchemaContext,
-                      fanin: int = 64) -> InferResult:
+def infer_json_column(df: DataFrame, column: str,
+                      ctx: SchemaContext) -> InferResult:
     """Infer one merged schema for a JSON-bearing string column.
 
-    Single distributed pass + logarithmic state combine. ``fanin``
-    controls intermediate combine rounds: with P partial states, rounds
-    run while P > fanin, each shrinking P by ``fanin``×.
+    One distributed pass (``_fold_task``: one state row per task, one
+    error row per failing document), then one fold of the partial
+    states in pid order (``_fold_partials``) on the driver. Above
+    ``_FANIN`` (64) partial states, enum-free contexts first run
+    combine-tree rounds on the executors, each shrinking the count by
+    ``_FANIN``x through the same fold (at 32 MB splits, only inputs
+    above about 2 GB have that many states).
     """
     _require_commutative(ctx)
-    spark = df.sparkSession
     # With the enum machinery live (not ctx.enum_disabled), the
     # reference's enum merge checks size on the CONCATENATION before
     # distinct (SchemaWithEnum.scala:57-70, pinned by
     # test_concat_size_check_precedes_distinct): neither commutative
     # nor associative, so merging partial states in task-completion
-    # order would make inferred enums depend on the scheduler. Such
-    # contexts fold their partial states in PARTITION ORDER on the
-    # driver instead of through the combine tree: deterministic for a
-    # fixed input partitioning (the reference's own Spark job folds the
-    # same merge through RDD.aggregate with no ordering guarantee at
-    # all, SchemaGuruRDD.scala:44-60).
+    # order would make inferred enums depend on the scheduler, and a
+    # tree fold would vary with the tree's shape. Such contexts skip
+    # the tree: the driver fold in PARTITION ORDER is deterministic for
+    # a fixed input partitioning (the reference's own Spark job folds
+    # the same merge through RDD.aggregate with no ordering guarantee
+    # at all, SchemaGuruRDD.scala:44-60).
     enum_on = not ctx.enum_disabled
     src = df.select(column)
     if not enum_on:
@@ -216,34 +225,26 @@ def infer_json_column(df: DataFrame, column: str, ctx: SchemaContext,
         # order-sensitive (enum-bearing) fold depend on the session's
         # parallelism instead of the input layout alone — skip it there
         src = _widen_small_scan(src)
-    raw = src.mapInPandas(_derive_partial(ctx, column), _OUT_SCHEMA)
-    raw = raw.persist()
-    violations = raw.filter(F.col("kind") == _VIOLATION_KIND) \
-                    .select(F.col("payload").alias("error"))
-
-    states = raw.filter(F.col("kind") == _STATE_KIND)
-    # intermediate tree-combine rounds executor-side; counting the (tiny,
-    # persisted) state rows also materializes the single data pass
+    raw = src.mapInPandas(_fold_task(ctx, column), _PARTIAL).persist()
+    violations = raw.filter(F.col("error").isNotNull()).select("error")
+    states = raw.filter(F.col("error").isNull())
+    # counting the (tiny, persisted) state rows also materializes the
+    # single data pass
     n = states.count()
-    if not enum_on:
-        while n > fanin:
-            n = max(1, math.ceil(n / fanin))
-            states = states.repartition(n).mapInPandas(
-                _state_combiner(ctx), _OUT_SCHEMA)
 
-    rows = states.collect()
-    if enum_on:
-        # the enum merge is order-sensitive (see above): no combine
-        # tree (a tree fold of a non-associative merge varies with its
-        # shape), one driver-side fold in partition order —
-        # P tiny state rows, so driver cost is O(partitions), same as
-        # the final fold below
-        rows = sorted(rows, key=lambda r: r["pid"])
-    acc, n_ok, n_err = ZERO, 0, 0
-    for row in rows:
-        acc = merge(acc, loads(row["payload"]), ctx)
-        n_ok += row["n_ok"]
-        n_err += row["n_err"]
+    def tree_round(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # one combine-tree round: the task's partial states fold into
+        # one, keyed by their least pid
+        rows = [r for pdf in batches for r in pdf.itertuples(index=False)]
+        acc, n_ok, n_err = _fold_partials(rows, ctx)
+        pid = min((int(r.pid) for r in rows), default=-1)
+        yield pd.DataFrame([(None, dumps(acc), n_ok, n_err, pid, None)],
+                           columns=_COLS)
+
+    while not enum_on and n > _FANIN:
+        n = math.ceil(n / _FANIN)
+        states = states.repartition(n).mapInPandas(tree_round, _PARTIAL)
+    acc, n_ok, n_err = _fold_partials(states.collect(), ctx)
     return InferResult(acc, n_ok, n_err, violations, _cached=raw)
 
 
@@ -253,14 +254,15 @@ def infer_json_column_by_key(df: DataFrame, column: str, key_col: str,
                              ) -> DataFrame:
     """Per-key (segmented) schema inference — G1/A8 of SURVEY.md §2.
 
-    Phase 1 is MAP-SIDE: each scan task folds per-key accumulators for
-    the rows it already holds and emits one tiny (key, state) row per
-    key seen — the raw documents are NEVER shuffled. (The reference's
-    RDD.groupBy ships whole groups to single tasks,
+    The data pass is MAP-SIDE (``_fold_task``): each scan task folds
+    per-key accumulators for the rows it already holds and emits one
+    tiny state row per key seen — the raw documents are NEVER shuffled.
+    (The reference's RDD.groupBy ships whole groups to single tasks,
     JsonPathExtractorRDD.scala:74; an earlier salted groupBy here still
-    shuffled every row once.) Phase 2 shuffles only the states:
-    groupBy(key) merges <= #tasks rows per key, so a mega-key costs the
-    same as any other — skew cannot concentrate data movement.
+    shuffled every row once.) Error rows are dropped before the one
+    shuffle, of the states only: groupBy(key) folds <= #tasks rows per
+    key in pid order (``_fold_partials``), so a mega-key costs the same
+    as any other — skew cannot concentrate data movement.
 
     Map-side state is O(distinct keys present in the task) — for
     segmentation-style keys (bounded cardinality) a few accumulators
@@ -271,8 +273,6 @@ def infer_json_column_by_key(df: DataFrame, column: str, key_col: str,
     where ``schema`` is the rendered JSON Schema (transforms applied).
     """
     _require_commutative(ctx)
-    part_schema = (f"{key_col} string, payload string, n_ok bigint, "
-                   "n_err bigint, pid int")
     # per-segment quantity (reference segmented mode: produce() derives
     # each segment with its own doc count, SchemaCommand.scala:118-146):
     # a tiny driver-built {key: ctx} map, shipped in the task closure
@@ -282,43 +282,8 @@ def infer_json_column_by_key(df: DataFrame, column: str, key_col: str,
         ctx_by_key = {k: replace(ctx, quantity=q)
                       for k, q in quantity_by_key.items()}
 
-    def phase1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        from schema_guru_spark.core.accumulate_batch import fold_keyed
-
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        accs: dict = {}
-        counts: dict = {}
-        for pdf in batches:
-            states, batch_counts, _ = fold_keyed(
-                pdf[column], pdf[key_col], ctx, ctx_by_key)
-            for k, st in states.items():
-                accs[k] = merge(accs.get(k, ZERO), st, ctx)
-            for k, (ok, err) in batch_counts.items():
-                c = counts.setdefault(k, [0, 0])
-                c[0] += ok
-                c[1] += err
-        if counts:
-            yield pd.DataFrame(
-                [(k, dumps(accs.get(k, ZERO)), ok, err, pid)
-                 for k, (ok, err) in counts.items()],
-                columns=[key_col, "payload", "n_ok", "n_err", "pid"])
-
-    def phase2(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        # partial states arrive in grouped-shuffle order; fold them in
-        # scan-partition order so enum-bearing contexts (order-sensitive
-        # merge, see infer_json_column) stay deterministic for a
-        # fixed input partitioning — <= #tasks rows per key, so the sort
-        # is O(tasks log tasks) on tiny rows
-        pdf = pdf.sort_values("pid")
-        acc, n_ok, n_err = ZERO, 0, 0
-        for payload, ok, err in zip(pdf["payload"], pdf["n_ok"], pdf["n_err"]):
-            acc = merge(acc, loads(payload), ctx)
-            n_ok += int(ok)
-            n_err += int(err)
-        from schema_guru_spark.core.microschema import render
+    def fold_key(key, pdf):
+        acc, n_ok, n_err = _fold_partials(pdf.itertuples(index=False), ctx)
         rendered = render(apply_transforms(acc, ctx), ctx)
         return pd.DataFrame({
             key_col: [key[0]],
@@ -329,9 +294,11 @@ def infer_json_column_by_key(df: DataFrame, column: str, key_col: str,
     src = df.select(key_col, column)
     if ctx.enum_disabled:
         # same rule as infer_json_column: enum-bearing contexts keep the
-        # input layout so the per-key pid-ordered fold in phase2 is a
-        # function of the input alone
+        # input layout so the per-key pid-ordered fold is a function of
+        # the input alone
         src = _widen_small_scan(src)
-    partial = src.mapInPandas(phase1, part_schema)
-    return partial.groupBy(key_col).applyInPandas(
-        phase2, f"{key_col} string, schema string, n_ok bigint, n_err bigint")
+    partial = src.mapInPandas(_fold_task(ctx, column, key_col, ctx_by_key),
+                              _PARTIAL)
+    return partial.filter(F.col("error").isNull()).groupBy("key") \
+        .applyInPandas(fold_key, f"{key_col} string, schema string, "
+                                 "n_ok bigint, n_err bigint")

@@ -59,6 +59,7 @@ from typing import Iterator, Optional, Sequence
 
 import pandas as pd
 import pyarrow as pa
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -138,7 +139,9 @@ def _find_layout_sidecar(df: DataFrame) -> Optional[dict]:
     (bucket=N partition dirs sit one level below the table root),
     through the Hadoop FileSystem API so any scheme the scan can read
     works. Returns None for non-file sources or layouts written without
-    a sidecar."""
+    a sidecar. A sidecar that exists but cannot be read or parsed is a
+    ``ValueError``: falling back to the bucket-range check would accept
+    a layout written under a different ``n_salts``."""
     try:
         files = df.inputFiles()
     except Exception:
@@ -146,34 +149,30 @@ def _find_layout_sidecar(df: DataFrame) -> Optional[dict]:
     if not files:
         return None
     spark = df.sparkSession
-    try:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(files[0]).getParent()
-        for _ in range(3):   # part file dir -> bucket=N -> table root
-            if p is None:
-                break
-            cand = jvm.org.apache.hadoop.fs.Path(p, _LAYOUT_SIDECAR)
-            fs = cand.getFileSystem(conf)
-            if fs.exists(cand):
-                # byte-at-a-time through the FS stream: the file is
-                # ~80 bytes, and spark.read can't see it (underscore
-                # prefix = hidden to Spark's FileIndex, by design — the
-                # sidecar must NOT be picked up as table data)
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    p = jvm.org.apache.hadoop.fs.Path(files[0]).getParent()
+    for _ in range(3):   # part file dir -> bucket=N -> table root
+        if p is None:
+            break
+        cand = jvm.org.apache.hadoop.fs.Path(p, _LAYOUT_SIDECAR)
+        fs = cand.getFileSystem(conf)
+        if fs.exists(cand):
+            # read through the FS stream: spark.read can't see it
+            # (underscore prefix = hidden to Spark's FileIndex, by
+            # design — the sidecar must NOT be picked up as table data)
+            try:
                 stream = fs.open(cand)
                 try:
-                    data = bytearray()
-                    for _ in range(65536):
-                        b = stream.read()
-                        if b == -1:
-                            break
-                        data.append(b)
+                    data = bytes(stream.readAllBytes())
                 finally:
                     stream.close()
                 return json.loads(data.decode("utf-8"))
-            p = p.getParent()
-    except Exception:
-        return None
+            except (Py4JJavaError, ValueError) as e:
+                raise ValueError(
+                    f"unreadable bucketed-layout sidecar {cand.toString()}: "
+                    f"{e}; re-materialize the layout") from e
+        p = p.getParent()
     return None
 
 

@@ -155,6 +155,39 @@ def test_cli_segmented_per_segment_quantity_and_errors(tmp_path, capsys):
     assert "pattern" in segs["big"]["properties"]["tok"]
 
 
+def test_cli_modes_report_the_same_errors(spark, tmp_path, capsys):
+    """Global and segmented (--schema-by) mode report the same error
+    lines, on stderr and under --errors-path, for a directory holding
+    top-level scalars: the JVM validity probe accepts '42' and '"s"',
+    the derive pass's gate rejects them."""
+    from schema_guru_spark.cli import main
+    src = tmp_path / "docs"
+    src.mkdir()
+    (src / "ok.json").write_text('{"event": "click", "n": 1}')
+    (src / "num.json").write_text("42")
+    (src / "str.json").write_text(' "s"')
+    (src / "broken.json").write_text("{nope")
+
+    def run(*extra):
+        assert main(["schema", str(src), "--output",
+                     str(tmp_path / "out.json"), "--cpus", "4",
+                     *extra]) == 0
+        return sorted(line for line in capsys.readouterr().err.splitlines()
+                      if line.startswith("error: "))
+
+    def written(*extra):
+        path = str(tmp_path / f"errors{len(extra)}")
+        run("--errors-path", path, *extra)
+        return sorted(r["error"] for r in spark.read.parquet(path).collect())
+
+    lines = run()
+    assert len(lines) == 3
+    assert sum("unacceptable" in line for line in lines) == 2
+    assert run("--schema-by", "$.event") == lines
+    assert written() == written("--schema-by", "$.event") == \
+        [line[len("error: "):] for line in lines]
+
+
 # --- migrations / SchemaVer ---
 
 V1 = {"type": "object", "properties": {

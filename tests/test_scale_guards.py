@@ -153,6 +153,32 @@ def test_pipeline_rejects_mismatched_bucket_layout(spark, tmp_path):
         validate_repo_table(spark, bucketed2, n_buckets=16)
 
 
+def test_pipeline_refuses_truncated_layout_sidecar(spark, tmp_path):
+    """A sidecar that exists but does not parse must be refused, not
+    treated as absent: the range-check fallback would accept this
+    layout under a different n_salts."""
+    import os
+
+    from schema_guru_spark.pipeline import (
+        materialize_bucketed, validate_repo_table)
+    from schema_guru_spark.sources.repo_table import synthesize_repo_table
+
+    path = str(tmp_path / "layout16")
+    materialize_bucketed(synthesize_repo_table(spark, 200), path,
+                         n_buckets=16, n_salts=8)
+    sidecar = os.path.join(path, "_layout.json")
+    with open(sidecar) as f:
+        text = f.read()
+    with open(sidecar, "w") as f:
+        f.write(text[: len(text) // 2])
+    crc = os.path.join(path, "._layout.json.crc")
+    if os.path.exists(crc):
+        os.remove(crc)  # a truncation by a writer that keeps no checksum
+    with pytest.raises(ValueError, match="unreadable bucketed-layout"):
+        validate_repo_table(spark, spark.read.parquet(path), n_buckets=16,
+                            n_salts=4)
+
+
 def test_pipeline_rejects_strict_ctx(spark):
     from schema_guru_spark.core.context import SchemaContext
     from schema_guru_spark.pipeline import validate_repo_table

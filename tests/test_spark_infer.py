@@ -67,13 +67,19 @@ def test_infer_by_key_total_matches(events):
     assert total == events.count()
 
 
-def test_random_corpus_spark_equals_kernel(spark, tmp_path):
+@pytest.mark.parametrize("parts", [7, 130])
+def test_random_corpus_spark_equals_kernel(spark, tmp_path, parts):
     """A 300-doc corpus covering every node kind and type collision,
     partitioned across tasks: the distributed derive -> partial merge ->
-    tree combine must render EXACTLY the schema of a driver-side kernel
-    fold (merge-order independence across partition splits included)."""
+    fold must render EXACTLY the schema of a driver-side kernel fold
+    (merge-order independence across partition splits included). At
+    130 partitions there are more partial states than the combine
+    tree's fan-in (64), so one tree round runs before the driver fold;
+    at 7 none does. The executed plans show which."""
     import json as _json
     import random
+
+    from conftest import executed_plans, last_execution_id
 
     rng = random.Random(42)
 
@@ -116,7 +122,7 @@ def test_random_corpus_spark_equals_kernel(spark, tmp_path):
 
     p = str(tmp_path / "corpus")
     spark.createDataFrame([(t,) for t in texts], "content string") \
-         .repartition(7).write.mode("overwrite").parquet(p)
+         .repartition(parts).write.mode("overwrite").parquet(p)
 
     from schema_guru_spark.core.microschema import ZERO, derive_text, merge, render
     from schema_guru_spark.core.transforms import apply_transforms
@@ -128,10 +134,15 @@ def test_random_corpus_spark_equals_kernel(spark, tmp_path):
     kernel_schema = _json.dumps(
         render(apply_transforms(acc, CTX), CTX), sort_keys=True)
 
-    res = infer_json_column(spark.read.parquet(p), "content", CTX)
+    df = spark.read.parquet(p).repartition(parts)
+    assert df.rdd.getNumPartitions() == parts
+    mark = last_execution_id(spark)
+    res = infer_json_column(df, "content", CTX)
     assert res.n_ok == 300 and res.n_err == 0
     spark_schema = _json.dumps(res.schema(CTX), sort_keys=True)
     assert spark_schema == kernel_schema
+    tree = [pl for _, pl in executed_plans(spark, mark) if "tree_round(" in pl]
+    assert bool(tree) == (parts > 64)
 
 
 def test_random_corpus_by_key_equals_kernel(spark, tmp_path):
@@ -271,6 +282,52 @@ def test_enum_infer_folds_states_in_partition_order(spark):
     sch = res.schema(ctx)
     assert sorted(sch["properties"]["e"]["enum"]) == ["p", "q", "r", "s"]
     assert res.n_ok == 5 and res.n_err == 0
+
+
+def test_enum_infer_at_130_partitions_folds_in_pid_order(spark):
+    """Above the combine tree's fan-in (64 partial states) an
+    enum-bearing context still runs no tree: the driver folds the 130
+    partition states in pid order, which equals the sequential
+    partition-order kernel fold. Three partitions carry the field 'e'
+    (K=4): p5 {x,y} ⊕ p60 {x,z} ⊕ p125 {a} keeps the enum only if
+    {a} comes last (the reversed fold tombstones, checked below), so a
+    green run proves the fold order."""
+    import json as _json
+
+    from conftest import executed_plans, last_execution_id
+    from schema_guru_spark.core.microschema import (
+        ZERO, derive_text, merge, render)
+    from schema_guru_spark.core.transforms import apply_transforms
+
+    ctx = SchemaContext.make(4)
+    parts = 130
+    enums = {5: ["x", "y"], 60: ["x", "z"], 125: ["a"]}
+    docs = [[_json.dumps({"e": v}) for v in enums[i]] if i in enums
+            else [_json.dumps({"id": i})] for i in range(parts)]
+    rdd = spark.sparkContext.parallelize(range(parts), parts) \
+        .flatMap(lambda i: [(t,) for t in docs[i]])
+    df = spark.createDataFrame(rdd, "content string")
+    assert df.rdd.getNumPartitions() == parts
+
+    def fold(partitions):
+        acc = ZERO
+        for texts in partitions:
+            part = ZERO
+            for t in texts:
+                part = merge(part, derive_text(t, ctx)[0], ctx)
+            acc = merge(acc, part, ctx)
+        return render(apply_transforms(acc, ctx), ctx)
+
+    want = fold(docs)
+    assert sorted(want["properties"]["e"]["enum"]) == ["a", "x", "y", "z"]
+    assert "enum" not in fold(docs[::-1])["properties"]["e"]
+
+    mark = last_execution_id(spark)
+    res = infer_json_column(df, "content", ctx)
+    assert res.n_ok == parts + 2 and res.n_err == 0
+    assert res.schema(ctx) == want
+    plans = [pl for _, pl in executed_plans(spark, mark)]
+    assert plans and not any("tree_round(" in pl for pl in plans)
 
 
 def test_enum_fold_is_row_order_within_partition(spark):

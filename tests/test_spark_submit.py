@@ -12,6 +12,8 @@ import sys
 import zipfile
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parent.parent
 
 
@@ -59,3 +61,46 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     assert rep["pass_rate"] > 0.9
     assert rep["constraints"]["keys_unique"] is True
     assert rep["constraints"]["n_ri_orphans"] == 0
+
+
+_SHIM_SCRIPT = """
+import importlib.util, sys
+from pyspark.sql import SparkSession
+
+def load_shim():
+    spec = importlib.util.spec_from_file_location("shim", sys.argv[1])
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+def session():
+    return (SparkSession.builder.master("local[2]")
+            .config("spark.sql.shuffle.partitions", "4")
+            .config("spark.ui.enabled", "false").getOrCreate())
+
+if sys.argv[3] == "session-first":
+    spark = session()
+    shim = load_shim()
+else:
+    shim = load_shim()
+    spark = session()
+assert shim.entry(spark).collect()[0]["n_err"] == 0
+assert shim.queries()["infer_by_event_type"](spark, sys.argv[2]).count() > 0
+"""
+
+
+@pytest.mark.parametrize("order", ["session-first", "import-first"])
+def test_shim_runs_from_any_cwd(tmp_path, sf_dir, order):
+    """The driver-contract shim loaded by file path from a foreign cwd,
+    with no PYTHONPATH: Spark's Python workers (mapInPandas in entry()
+    and in a registry query) must import the package as the driver
+    does, whether the session or the shim comes first."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    proc = subprocess.run(
+        [sys.executable, "-c", _SHIM_SCRIPT,
+         str(REPO / "__spark_entry__.py"), sf_dir, order],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True,
+        timeout=300)
+    assert proc.returncode == 0, proc.stderr[-4000:]
