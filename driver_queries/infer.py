@@ -52,7 +52,10 @@ def _encase_max_sql(mn: str, mx: str) -> str:
 # --- schema inference over events.props ------------------------------------
 
 def _props_result(spark, sf):
-    return infer_json_column(table(spark, sf, "events"), "props", CTX)
+    # callers read only the state and counters: release the cached scan
+    res = infer_json_column(table(spark, sf, "events"), "props", CTX)
+    res.unpersist()
+    return res
 
 
 def top_keys(spark, sf):
@@ -105,6 +108,7 @@ def string_annotations(spark, sf):
         F.format_string("%08x-0000-4000-8000-%012x", d, d).alias("u"),
     )).alias("doc"))
     res = infer_json_column(docs, "doc", CTX)
+    res.unpersist()
     props = res.schema(CTX).get("properties") or {}
     rows = [(k, p.get("type"), p.get("format"), p.get("pattern"),
              p.get("minLength"), p.get("maxLength"))

@@ -146,6 +146,7 @@ def main(argv=None) -> int:
         elif res.n_err:
             for row in res.violations.limit(20).collect():
                 print(f"error: {row['error']}", file=sys.stderr)
+        res.unpersist()
         dupes = res.duplicated_keys()
         for a, b in sorted(dupes):
             print(f"warning: possibly duplicated keys: {a} ~ {b}",

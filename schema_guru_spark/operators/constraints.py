@@ -193,9 +193,9 @@ def uniqueness_hashed(df: DataFrame, keys: Sequence[str], rsd: float = 0.02,
     independently-seeded 64-bit hash columns (a caller that projects
     them once and reuses the projection for several checks) — the
     distinct runs on them directly instead of hashing the hashes a
-    second time per row. ``pipeline.constraint_report`` computes the
-    same fields over such a projection, with the approximate count
-    folded into its one fused aggregate.
+    second time per row. ``pipeline.key_counts`` computes the same
+    fields from one groupBy of such a hash pair: the exact count is its
+    number of groups, and the approximate count runs over the groups.
 
     Each half is ``key_hash``, so NULL key parts compare equal at the
     same position, as in ``uniqueness_exact``.
@@ -433,8 +433,8 @@ def drift_by_partition(df: DataFrame, value_col: str, part_col: str,
 
 def drift_psi_report(df: DataFrame, value_col: str, part_col: str,
                      n_bins: int = 10) -> dict:
-    """Fast path for the constraint report: same PSI-vs-global semantics
-    as ``drift_by_partition``, but the per-(partition, bin) histogram —
+    """Fast path of ``drift_by_partition``: the same PSI-vs-global
+    semantics, but the per-(partition, bin) histogram —
     partition-cardinality, ~#parts x n_bins rows regardless of table
     size — is collected and the PSI arithmetic runs on the driver.
 
@@ -442,29 +442,21 @@ def drift_psi_report(df: DataFrame, value_col: str, part_col: str,
     frames), each a scheduling barrier that costs the same at any
     parallelism; at 1M rows that fixed latency dominated the whole
     constraint pass (~4s serial, measured). This path is one min/max
-    aggregate plus ONE groupBy shuffle of the histogram.
-    ``pipeline.constraint_report`` skips the min/max aggregate: it reads
-    the bounds off its fused aggregate and calls ``_psi_in_bounds``
-    directly.
+    aggregate plus ONE groupBy shuffle of the histogram. Its bins depend
+    on the whole column's [min, max], so its histograms do not merge
+    across tables or appends; the validation job's drift
+    (``pipeline.bucket_psi``) uses fixed log-spaced bins instead, so the
+    scan can count them and every fold can sum them.
 
-    Returns {part_value: psi} (floats, rounded 6dp like the SQL path).
+    Returns {part_value: psi} (floats, rounded 6dp like the SQL path);
+    {} when every value is NULL.
     """
-    c = F.col(value_col)
-    lo, hi = df.agg(F.min(c), F.max(c)).collect()[0]
-    return _psi_in_bounds(df, value_col, part_col, lo, hi, n_bins)
-
-
-def _psi_in_bounds(df: DataFrame, value_col: str, part_col: str,
-                   lo, hi, n_bins: int = 10) -> dict:
-    """``drift_psi_report`` given the column's non-null [lo, hi]
-    (None when every value is NULL): bin, collect the histogram, and
-    compute each partition's PSI against the global histogram on the
-    driver."""
     import math
 
+    c = F.col(value_col)
+    lo, hi = df.agg(F.min(c), F.max(c)).collect()[0]
     if lo is None:
         return {}
-    c = F.col(value_col)
     width = (hi - lo) / n_bins + 1e-12
     rows = (
         df.where(c.isNotNull())

@@ -3,43 +3,53 @@
 Over an Iceberg/parquet table (repo, path, commit, lang, content
 [, content_sha]) the job produces, resumably:
 
-  verdicts:   one row per bucket — counters, merged JSON schema of the
-              bucket's JSON content, pass/fail (distribution drift is
-              the constraint suite's job: ``constraint_report`` computes
-              per-bucket PSI over the same bucket ids)
+  verdicts:   one row per bucket — counters, the content-length
+              histogram, merged JSON schema of the bucket's JSON
+              content, pass/fail. Distribution drift (per-bucket PSI of
+              content length against the whole table) and content
+              completeness are computed on the driver from the verdict
+              rows' histograms (``constraint_summary``)
   violations: rows (bucket, repo, lang, detail) — parse errors,
               sha256 invariant mismatches, disallowed langs, all from
               the scan pass. Duplicate (repo,path,commit) keys and RI
-              orphans are only counted, by ``constraint_report``: the
+              orphans are only counted, by the constraint suite: the
               job writes no row for them (``key_violation_rows`` builds
               such rows in this shape, but the job never calls it)
 
 Scale design (the whole point):
 
   * The big-table scan NEVER shuffles content. Row-level checks
-    (sha2(content,256) == content_sha, lang allow-list) are computed as
-    native JVM columns; one ``mapInPandas`` pass then derives JSON
-    micro-schemas per doc and folds them into ONE partial row per
-    (scan task, bucket) — map-side combine. A partial row has the shape
-    of a verdict row: the five ``_COUNTERS`` as bigints and the schema
-    state as serialized text (NULL when the bucket saw no JSON doc).
-    No shuffle follows the scan: the partial rows (at most scan tasks x
-    buckets) are collected and folded per bucket on the driver
-    (``_fold_buckets``; counters sum and states merge, both commutative
-    monoids).
+    (sha2(content,256) == content_sha, lang allow-list) and the
+    content-length bin (``length_bin``) are computed as native JVM
+    columns; one ``mapInPandas`` pass then derives JSON micro-schemas
+    per doc and folds them into ONE partial row per (scan task, bucket)
+    — map-side combine. A partial row has the shape of a verdict row:
+    the five ``_COUNTERS`` as bigints, the length histogram as one
+    ``hist`` array of ``HIST_SLOTS`` bigints, and the schema state as
+    serialized text (NULL when the bucket saw no JSON doc). No shuffle
+    follows the scan: the partial rows (at most scan tasks x buckets)
+    are collected and folded per bucket on the driver
+    (``_fold_buckets``; counters and histograms sum and states merge,
+    all commutative monoids).
   * One fold serves every fan-in level. ``_fold_buckets`` folds a
     chunk's partial rows into its verdict rows, and the same function
     folds the committed deltas' verdict rows into the incremental
     cumulative view (plans/incremental.py). A new summable per-bucket
-    column is one column in that shape, summed in that one fold.
+    column is one column in that shape, summed in that one fold — the
+    length histogram is one: its bins are fixed in advance
+    (``HIST_EDGES``), so counts from any split of the rows add up to
+    the histogram of the whole.
   * Buckets are a salted hash of repo: pmod(xxhash64(repo) +
     pmod(xxhash64(path), n_salts), n_buckets) — a mega-repo (30% of the
     synthetic table) spreads over n_salts buckets instead of hot-spotting
     one task (BASELINE.json: "salted repartition by repo-hash").
-  * Key-level checks (uniqueness, referential integrity) run in
-    ``constraint_report``, a separate column-pruned query. It reads the
-    key columns and content, whose length feeds the drift and null
-    checks; only the length, never content, reaches a shuffle.
+  * Key-level checks (uniqueness, referential integrity) run in one
+    key aggregate (``key_counts``) that reads only repo, path, commit
+    and lang: a groupBy of the 128-bit key hash and one global
+    aggregate over its groups. ``run_validation`` overlaps it with the
+    scan and takes drift from the scan's verdict rows, so no constraint
+    job reads content; a standalone ``constraint_report`` builds the
+    same histogram with one ``groupBy(bucket, bin)`` aggregate.
   * Resume: buckets are processed in chunks; each finished chunk writes
     its violations and verdicts sinks, then appends to a checkpoint
     manifest (plans/checkpoint.py), in a driver-local directory. A
@@ -57,8 +67,10 @@ import json
 from dataclasses import dataclass, field
 from typing import Iterator, Optional, Sequence
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -78,15 +90,33 @@ DEFAULT_LANGS = ("json", "py", "java", "go", "md")
 _KEY = ("repo", "path", "commit")
 # the per-bucket counters of a partial row and of a verdict row
 _COUNTERS = ("n_rows", "n_json_ok", "n_json_err", "n_sha_bad", "n_lang_bad")
+
+# The content-length histogram of a partial row and of a verdict row,
+# over the content's length in UTF-8 bytes (octet_length: a field read;
+# the character count walks every byte, which measurably slowed the
+# append path). The edges are the distinct integer roundings of
+# 2^(k/2), k < 62: bin i counts the lengths with exactly i edges <=
+# length (bin 0 the empty string, the last value bin everything from
+# 2^30.5 bytes up), and slot HIST_NULL counts NULL content. Fixed edges make the histogram a
+# mergeable summary: the histograms of any split of the rows sum to the
+# histogram of the whole, at every fan-in level. Two bins per octave
+# keep each bin's relative width under 1.5x.
+HIST_EDGES = tuple(sorted({round(2 ** (k / 2)) for k in range(62)}))
+HIST_NULL = len(HIST_EDGES) + 1
+HIST_SLOTS = HIST_NULL + 1
+# pinned in an incremental checkpoint's parameters: histograms of
+# different edges do not add up
+HIST_FORMAT = f"content-bytes-sqrt2-{len(HIST_EDGES)}-edges+null"
+
 # the scan pass's three row shapes in one frame: a partial row fills
-# bucket, counters and state; a violation row fills bucket, repo, lang
-# and detail (never NULL for a violation, always NULL otherwise); a
-# task's key sketch row fills only sketch
-_SCAN_COLS = ("bucket", *_COUNTERS, "state", "repo", "lang", "detail",
-              "sketch")
+# bucket, counters, hist and state; a violation row fills bucket, repo,
+# lang and detail (never NULL for a violation, always NULL otherwise);
+# a task's key sketch row fills only sketch
+_SCAN_COLS = ("bucket", *_COUNTERS, "hist", "state", "repo", "lang",
+              "detail", "sketch")
 _SCAN_OUT = ("bucket int, " + ", ".join(f"{c} bigint" for c in _COUNTERS)
-             + ", state string, repo string, lang string, detail string, "
-               "sketch binary")
+             + ", hist array<bigint>, state string, repo string, "
+               "lang string, detail string, sketch binary")
 
 
 # bump when bucket_expr's formula changes: a layout written under a
@@ -184,6 +214,20 @@ def bucket_expr(n_buckets: int, n_salts: int):
     ).cast("int")
 
 
+def length_bin(clen: str):
+    """The histogram slot of the int column named ``clen`` (a content
+    length in bytes): the number of ``HIST_EDGES`` <= the length, or
+    ``HIST_NULL`` for NULL. One flat CASE parsed from one SQL string —
+    the same CASE built from Column calls costs ~400 py4j round trips
+    (~0.2 s a call). Give it a column computed once: each branch reads
+    it."""
+    return F.expr(
+        f"CASE WHEN {clen} IS NULL THEN {HIST_NULL} "
+        + " ".join(f"WHEN {clen} < {e} THEN {i}"
+                   for i, e in enumerate(HIST_EDGES))
+        + f" ELSE {len(HIST_EDGES)} END")
+
+
 def _scan_rows(**cols) -> pd.DataFrame:
     """A frame of ``_SCAN_OUT`` rows; the columns not given are NULL."""
     return pd.DataFrame({c: cols.get(c) for c in _SCAN_COLS})
@@ -191,10 +235,12 @@ def _scan_rows(**cols) -> pd.DataFrame:
 
 def _scan_pass(ctx: SchemaContext, max_violation_examples: int,
                key_sketch: bool = False):
-    """mapInPandas fn: per-batch vectorized flag counting + per-doc JSON
-    derivation folded into per-(task, bucket) states. Violation rows are
-    yielded as the batches find them; the task ends with one partial row
-    per bucket it saw (counters, and the serialized state or NULL).
+    """mapInPandas fn: per-batch vectorized flag and length-bin counting
+    + per-doc JSON derivation folded into per-(task, bucket) states.
+    Violation rows are yielded as the batches find them; the task ends
+    with one partial row per bucket it saw (counters, the length
+    histogram over the batches' ``hbin`` slots, and the serialized
+    state or NULL).
     With ``key_sketch`` the batches carry the key hash ``kh``, and a
     task that saw rows also ends with one row of its HyperLogLog
     registers over those hashes (``C.hll_registers``)."""
@@ -206,6 +252,7 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int,
 
         states: dict[int, dict] = {}
         counters: dict[int, dict] = {}
+        hists: dict[int, np.ndarray] = {}
         regs = np.zeros(C.HLL_M, np.uint8) if key_sketch else None
 
         def bucket_counter(b):
@@ -228,11 +275,16 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int,
             n_rows_b = np.bincount(inv)
             n_sha_b = np.bincount(inv, weights=~sha_ok)
             n_lang_b = np.bincount(inv, weights=~lang_ok)
+            # (bucket, slot) counts in one bincount over the fused index
+            hist_b = np.bincount(
+                inv * HIST_SLOTS + pdf["hbin"].to_numpy(),
+                minlength=len(ubk) * HIST_SLOTS).reshape(-1, HIST_SLOTS)
             for i, b in enumerate(ubk.tolist()):
                 c = bucket_counter(int(b))
                 c["n_rows"] += int(n_rows_b[i])
                 c["n_sha_bad"] += int(n_sha_b[i])
                 c["n_lang_bad"] += int(n_lang_b[i])
+                hists[b] = hists.get(b, 0) + hist_b[i]
 
             viol_mask = ~(sha_ok & lang_ok)
             if viol_mask.any():
@@ -272,6 +324,7 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int,
             yield _scan_rows(
                 bucket=buckets,
                 **{k: [counters[b][k] for b in buckets] for k in _COUNTERS},
+                hist=[hists[b] for b in buckets],
                 state=[dumps(states[b]) if b in states else None
                        for b in buckets])
             if key_sketch:
@@ -317,18 +370,20 @@ def verdict_summary(rows) -> dict:
 def _fold_buckets(parts: pd.DataFrame, ctx: SchemaContext,
                   max_err_rate: float = 0.0,
                   keep_state: bool = False) -> pd.DataFrame:
-    """Fold ``(bucket, *_COUNTERS, state)`` rows into one verdict row per
-    bucket, on the driver: counters summed, states merged (a NULL state
-    is the empty schema), the ``bucket_passes`` verdict and the rendered
-    schema, sorted by bucket, with the columns and dtypes of
-    ``_VERDICT_SCHEMA[_STATE]``.
+    """Fold ``(bucket, *_COUNTERS, hist, state)`` rows into one verdict
+    row per bucket, on the driver: counters and length histograms
+    summed, states merged (a NULL state is the empty schema), the
+    ``bucket_passes`` verdict and the rendered schema, sorted by bucket,
+    with the columns and dtypes of ``_VERDICT_SCHEMA[_STATE]`` (``hist``
+    a list of ``HIST_SLOTS`` ints).
 
     The input shape is the scan's partial row AND the verdict row kept
     with ``keep_state``, so one fold serves both fan-in levels: a
     chunk's scan-task partials into its verdicts (``validate_repo_table``)
     and the committed deltas' verdicts into the cumulative view
     (``plans.incremental.cumulative_report``). Folding folds equals one
-    fold, because counters and states are commutative monoids.
+    fold, because counters, histograms and states are commutative
+    monoids.
 
     There are at most (scan tasks x buckets) partial rows — a few
     hundred at test scale, ~7.8k for 16M files over 128 splits — so a
@@ -342,6 +397,13 @@ def _fold_buckets(parts: pd.DataFrame, ctx: SchemaContext,
             b = int(b)
             states[b] = merge(states.get(b, ZERO), loads(st), ctx)
     out = counters.reset_index()
+    hist = np.zeros((len(out), HIST_SLOTS), np.int64)
+    if len(parts):
+        # out is sorted by bucket: each row's position by binary search
+        np.add.at(hist, np.searchsorted(out["bucket"].to_numpy(),
+                                        parts["bucket"].to_numpy()),
+                  np.array(parts["hist"].tolist(), np.int64))
+    out["hist"] = pd.Series(hist.tolist(), dtype=object)
     accs = [states.get(int(b), ZERO) for b in out["bucket"]]
     out["schema"] = pd.Series(
         [json.dumps(render(apply_transforms(acc, ctx), ctx), sort_keys=True)
@@ -361,7 +423,7 @@ def _fold_buckets(parts: pd.DataFrame, ctx: SchemaContext,
 
 _VERDICT_SCHEMA = ("bucket int, n_rows bigint, n_json_ok bigint, "
                    "n_json_err bigint, n_sha_bad bigint, n_lang_bad bigint, "
-                   "schema string, passed boolean")
+                   "hist array<bigint>, schema string, passed boolean")
 _VERDICT_SCHEMA_STATE = _VERDICT_SCHEMA + ", state string"
 _VIOLATION_SCHEMA = "bucket int, repo string, lang string, detail string"
 # a chunk's key sketch: its row count and the merged registers of its
@@ -381,6 +443,38 @@ class ValidationResult:
     verdict_rows: pd.DataFrame
     processed_buckets: list = field(default_factory=list)
     resumed_buckets: list = field(default_factory=list)
+    # the persisted per-chunk violations of a run without a checkpoint
+    _cached: list = field(default_factory=list)
+
+    def unpersist(self) -> None:
+        """Release the cached violations. Reading ``violations``
+        afterwards still works (it re-runs the scan)."""
+        for df in self._cached:
+            df.unpersist()
+        self._cached = []
+
+
+def read_verdicts(paths: Sequence[str], schema: str) -> pd.DataFrame:
+    """The verdict rows of verdicts sinks (every chunk of each), with
+    ``hist`` as lists. A sink holding rows without a length histogram
+    is refused, named: its rows were written before the histogram
+    joined the verdict row, and folding them would drop those rows
+    from every drift figure."""
+    tables = [read_sink(p, arrow_schema(schema)) for p in paths]
+    for p, t in zip(paths, tables):
+        if t.column("hist").null_count:
+            raise ValueError(
+                f"{p}: verdict rows without a content-length histogram "
+                "(written by an older version of the validation job); "
+                "validate into a new checkpoint directory")
+    rows = pa.concat_tables(tables)
+    out = rows.to_pandas()
+    # lists, as _fold_buckets makes them; one flat array, not one Python
+    # object per count
+    out["hist"] = pd.Series(
+        pc.list_flatten(rows.column("hist")).to_numpy()
+          .reshape(-1, HIST_SLOTS).tolist(), dtype=object)
+    return out
 
 
 def validate_repo_table(
@@ -447,6 +541,9 @@ def validate_repo_table(
 
     ckpt = CheckpointManager(spark, checkpoint_dir) if checkpoint_dir else None
     done = ckpt.finished_buckets() if ckpt else set()
+    if done:
+        # refuse a checkpoint of an older verdict format before any scan
+        read_verdicts([f"{ckpt.dir}/verdicts"], _VERDICT_SCHEMA)
     remaining = [b for b in range(n_buckets) if b not in done]
     chunk_size = chunk_size or n_buckets
     key_sketch = keep_state and ckpt is not None
@@ -484,6 +581,9 @@ def validate_repo_table(
         bucketed = df.withColumn("bucket", bucket_expr(n_buckets, n_salts))
     prepared = (
         bucketed
+        # the length is computed once, in its own projection: each
+        # branch of the bin's CASE reads it
+        .withColumn("clen", F.octet_length("content"))
         # both flags are COALESCED to false: sha2(NULL)==x and
         # NULL.isin(...) are three-valued NULL, which would cross Arrow
         # as a pandas object column and crash the scan pass's bitwise
@@ -498,13 +598,15 @@ def validate_repo_table(
                     F.coalesce(F.col("lang").isin(list(allowed_langs)),
                                F.lit(False)))
         # only JSON-bearing rows' content crosses the Arrow boundary —
-        # sha/lang checks already happened JVM-side, so non-JSON content
-        # (here ~60% of bytes) is nulled before serialization to Python
+        # sha/lang checks and the length bin already happened JVM-side,
+        # so non-JSON content (here ~60% of bytes) is nulled before
+        # serialization to Python
         .select(
             "bucket", "repo", "lang",
             F.when(F.col("lang") == "json", F.col("content"))
              .otherwise(F.lit(None)).alias("content"),
             "sha_ok", "lang_ok",
+            length_bin("clen").alias("hbin"),
             *([C.key_hash(*_KEY_HASH).alias("kh")] if key_sketch else []))
     )
 
@@ -535,7 +637,7 @@ def validate_repo_table(
         # persisted scan, so later actions on the violations never
         # re-run it; the verdict rows are folded on the driver
         parts = raw.where(~is_violation).select(
-            "bucket", *_COUNTERS, "state", "sketch").toPandas()
+            "bucket", *_COUNTERS, "hist", "state", "sketch").toPandas()
         is_sketch = parts["sketch"].notna()
         verdict_rows = _fold_buckets(parts[~is_sketch], ctx, max_err_rate,
                                      keep_state=keep_state)
@@ -580,8 +682,8 @@ def validate_repo_table(
         raw.unpersist()
 
     if ckpt:
-        verdict_rows = read_sink(f"{ckpt.dir}/verdicts",
-                                 arrow_schema(verdict_schema)).to_pandas()
+        verdict_rows = read_verdicts([f"{ckpt.dir}/verdicts"],
+                                     verdict_schema)
         try:
             # chunk=N partition dirs: drop the discovered partition column
             violations_df = spark.read.schema(_VIOLATION_SCHEMA) \
@@ -602,108 +704,141 @@ def validate_repo_table(
         verdict_rows=verdict_rows,
         processed_buckets=remaining,
         resumed_buckets=sorted(done),
+        _cached=all_violations,
     )
 
 
-def constraint_report(spark: SparkSession, df: DataFrame,
-                      n_buckets: int = 64, n_salts: int = 8,
-                      repo_dims: Optional[DataFrame] = None) -> dict:
-    """Key-level constraint suite over the repo table — column-pruned
-    scans only (content read once, for its length):
+# the HLL++ screen's relative standard deviation and pass tolerance (the
+# defaults of C.uniqueness_hashed)
+_HLL_RSD, _HLL_TOLERANCE = 0.02, 0.05
 
-      uniqueness of (repo,path,commit): HLL++ screen + exact count over
-        the 128-bit key pre-hash (``C.uniqueness_hashed`` with
-        ``prehashed=True`` computes the same fields). NULL key parts
-        compare equal at the same position (``C.key_hash``), as in
-        ``C.uniqueness_exact`` and ``key_violation_rows``;
-      referential integrity: every fact repo must resolve against the
-        repo dimension via broadcast LEFT ANTI join. ``repo_dims`` is a
-        one-column (repo) DataFrame — the lakehouse catalog dim in
-        production. Without it the dimension is the table's own
-        distinct repos: every non-null repo matches itself and a NULL
-        repo never matches (NULL = NULL is not true), so the orphan
-        count IS the repo null count and no join runs;
-      drift: per-bucket PSI of content length vs global
-        (``C.drift_psi_report`` semantics);
-      completeness: per-key-column non-null fractions.
 
-    Job shape: the projection is cached, and ONE aggregate over it
-    (which also materializes the cache) computes the row count, the
-    HLL++ estimate, every null count and the content-length bounds.
-    Only the checks that need a shuffle of their own fan out from
-    there, concurrently: the exact distinct count of the key hash (its
-    own aggregate — see the Expand-plan trap in ``C.uniqueness_hll``),
-    the PSI histogram binned with the bounds already in hand, and the
-    RI anti-join when ``repo_dims`` is given.
+def key_counts(df: DataFrame, repo_dims: Optional[DataFrame] = None) -> dict:
+    """The key half of the constraint suite: ONE key aggregate that reads
+    repo, path, commit and lang, never content.
+
+    ``groupBy`` of the 128-bit key pre-hash (two independently-seeded
+    ``C.key_hash`` columns, so NULL key parts compare equal at the same
+    position, as in ``C.uniqueness_exact`` and ``key_violation_rows``),
+    then one global aggregate over the groups: the row count, the exact
+    distinct count (the number of groups), ``approx_count_distinct`` of
+    the same hash pair at the same rsd (HLL++ ignores duplicates, so
+    over the groups it reads what it reads over the rows; it is the
+    screen ``C.uniqueness_hashed(prehashed=True)`` computes) and the
+    NULL counts of the key columns and lang. One 64-bit hash would
+    expect ~27 phantom key collisions at the north rule's 10^12 rows
+    (birthday n²/2⁶⁵); the pair expects ~1.5e-15, while the shuffle
+    still carries 16 bytes a key instead of the raw strings.
+
+    Referential integrity: every fact repo must resolve against the repo
+    dimension via a broadcast LEFT ANTI join. ``repo_dims`` is a
+    one-column (repo) DataFrame — the lakehouse catalog dim in
+    production. Without it the dimension is the table's own distinct
+    repos: every non-null repo matches itself and a NULL repo never
+    matches (NULL = NULL is not true), so the orphan count IS the repo
+    null count and no join runs.
+
+    Returns ``{n_rows, n_exact_distinct, n_approx_distinct,
+    null_counts, n_ri_orphans}``, the input of ``constraint_summary``.
     """
-    # ONE pass over the table projects everything the checks need
-    # (~30 bytes/row), cached; content is read exactly once here
     key_cols = (*_KEY, "lang")
-    # 128-bit key pre-hash: two independently-seeded xxhash64 columns.
-    # One 64-bit hash expects ~27 phantom key collisions at the
-    # north-rule's 10^12 rows (birthday n²/2⁶⁵) — wide enough that the
-    # screen stays silent (~1.5e-15 expected) while still shuffling 16
-    # bytes/row instead of the raw (repo, path, commit) strings.
-    slim = (df.withColumn("bucket", bucket_expr(n_buckets, n_salts))
-              .select("bucket", "repo",
-                      F.length("content").alias("clen"),
-                      C.key_hash(0x5EED0, _KEY).alias("kh1"),
-                      C.key_hash(0x5EED1, _KEY).alias("kh2"),
-                      *[F.col(c).isNull().cast("int").alias(f"_n_{c}")
-                        for c in key_cols])
-              .persist())
-    # the hash pair as uniqueness_hashed(prehashed=True) structs it, with
-    # that function's default rsd and tolerance
-    key_hash = F.struct(F.col("kh1").alias("h1"), F.col("kh2").alias("h2"))
-    rsd, tolerance = 0.02, 0.05
-    try:
-        head = slim.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(key_hash, rsd).alias("n_approx"),
-            *[F.sum(f"_n_{c}").alias(c) for c in key_cols],
-            F.sum(F.col("clen").isNull().cast("int")).alias("content"),
-            F.min("clen").alias("lo"),
-            F.max("clen").alias("hi"),
-        ).collect()[0]
-        # sums over zero rows are NULL -> coalesce; keep the RAW null
-        # counts for the verdict (a rounded fraction of 1.0 would hide
-        # one null key in 10M rows — exactly what the check must catch)
-        null_counts = {c: int(head[c] or 0)
-                       for c in (*key_cols, "content")}
-        # the remaining checks are independent jobs over the cached
-        # projection — submit them concurrently so their fixed stage
-        # latencies overlap instead of adding up. The worker threads
-        # inherit the caller's job group, local properties and tags
-        # (pinned-thread mode keeps those per Python thread).
-        from concurrent.futures import ThreadPoolExecutor
+    groups = (df.select(C.key_hash(0x5EED0, _KEY).alias("kh1"),
+                        C.key_hash(0x5EED1, _KEY).alias("kh2"),
+                        *[F.col(c).isNull().cast("int").alias(f"_n_{c}")
+                          for c in key_cols])
+                .groupBy("kh1", "kh2")
+                .agg(F.count(F.lit(1)).alias("n"),
+                     *[F.sum(f"_n_{c}").alias(f"_n_{c}") for c in key_cols]))
+    head = groups.agg(
+        F.sum("n").alias("n"),
+        F.count(F.lit(1)).alias("n_exact"),
+        F.approx_count_distinct(
+            F.struct(F.col("kh1").alias("h1"), F.col("kh2").alias("h2")),
+            _HLL_RSD).alias("n_approx"),
+        *[F.sum(f"_n_{c}").alias(c) for c in key_cols],
+    ).collect()[0]
+    # sums over zero rows are NULL -> coalesce; the RAW null counts feed
+    # the verdict (a rounded fraction of 1.0 would hide one null key in
+    # 10M rows — exactly what the check must catch)
+    null_counts = {c: int(head[c] or 0) for c in key_cols}
+    return {
+        "n_rows": int(head["n"] or 0),
+        "n_exact_distinct": head["n_exact"],
+        "n_approx_distinct": head["n_approx"],
+        "null_counts": null_counts,
+        "n_ri_orphans": (C.referential_violations(
+            df.select("repo"), repo_dims, "repo", "repo").count()
+            if repo_dims is not None else null_counts["repo"]),
+    }
 
-        from pyspark import inheritable_thread_target
-        inherit = inheritable_thread_target(spark)
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            def submit(fn):
-                return ex.submit(inherit(fn))
 
-            f_exact = submit(
-                lambda: slim.agg(F.count_distinct(key_hash)).collect()[0][0])
-            # per-bucket PSI vs global: histogram shuffled (bounded
-            # rows), PSI math on the driver
-            f_psi = submit(
-                lambda: C._psi_in_bounds(slim, "clen", "bucket",
-                                         head["lo"], head["hi"]))
-            # referential integrity: broadcast LEFT ANTI, facts never
-            # shuffled
-            f_ri = (submit(
-                lambda: C.referential_violations(
-                    slim.select("repo"), repo_dims, "repo", "repo").count())
-                if repo_dims is not None else None)
-            n_exact = f_exact.result()
-            psi_by_bucket = f_psi.result()
-            n_orphans = (f_ri.result() if f_ri is not None
-                         else null_counts["repo"])
-    finally:
-        slim.unpersist()
+def length_hists(df: DataFrame, n_buckets: int = 64,
+                 n_salts: int = 8) -> pd.DataFrame:
+    """``(bucket, hist)`` rows, one per bucket with rows, sorted by
+    bucket: the content-length histograms the validation scan counts
+    into its verdict rows, here from one ``groupBy(bucket, bin)``
+    aggregate over the same ``length_bin`` Column."""
+    counts = (df.select(bucket_expr(n_buckets, n_salts).alias("bucket"),
+                        F.octet_length("content").alias("clen"))
+                .select("bucket", length_bin("clen").alias("bin"))
+                .groupBy("bucket", "bin").count().collect())
+    hists: dict[int, list] = {}
+    for r in counts:
+        hists.setdefault(r["bucket"], [0] * HIST_SLOTS)[r["bin"]] = r["count"]
+    buckets = sorted(hists)
+    return pd.DataFrame({"bucket": pd.Series(buckets, dtype="int32"),
+                         "hist": pd.Series([hists[b] for b in buckets],
+                                           dtype=object)})
 
-    n_rows, n_approx = head["n"], head["n_approx"]
+
+def bucket_psi(hist_rows: pd.DataFrame) -> dict:
+    """Per-bucket PSI of content length (bytes) against the whole table,
+    from ``(bucket, hist)`` rows (verdict rows or ``length_hists``), on
+    the driver: ``{bucket: psi}`` rounded to 6 decimals, for the buckets
+    with a non-NULL length.
+
+    PSI = Σ (p_b - p_g) · ln(p_b / p_g) over the bins the bucket uses,
+    with Laplace-smoothed proportions (count + 0.5) / (total + 0.5 k).
+    k is the number of bins the WHOLE table uses, not the fixed range:
+    smoothing over ~60 mostly empty bins would shrink every proportion
+    toward zero and flatten the statistic (a planted drift read 0.55-0.80
+    against a 0.23-0.47 baseline that way, 1.18 against 0.14 this way).
+    Bins absent from the bucket are skipped, as in
+    ``C.drift_by_partition``, whose statistic this is on fixed bins."""
+    if not len(hist_rows):
+        return {}
+    h = np.array(hist_rows["hist"].tolist(), np.int64)[:, :HIST_NULL]
+    glob = h.sum(axis=0)
+    gt, k = glob.sum(), np.count_nonzero(glob)
+    out = {}
+    for b, row in zip(hist_rows["bucket"].tolist(), h):
+        pt = row.sum()
+        if not pt:
+            continue
+        used = row > 0
+        pp = (row[used] + 0.5) / (pt + 0.5 * k)
+        pg = (glob[used] + 0.5) / (gt + 0.5 * k)
+        out[b] = round(float(np.sum((pp - pg) * np.log(pp / pg))), 6)
+    return out
+
+
+def constraint_summary(keys: dict, hist_rows: pd.DataFrame) -> dict:
+    """The constraint report from ``key_counts`` and per-bucket length
+    histograms (the validation scan's verdict rows, or ``length_hists``):
+
+      uniqueness of (repo,path,commit): exact distinct count, the HLL++
+        estimate, their relative gap against the tolerance, and
+        ``keys_unique``;
+      referential integrity: ``n_ri_orphans``;
+      drift: ``worst_bucket_psi``, the largest ``bucket_psi``;
+      completeness: per-column non-null fractions of the key columns and
+        lang (``key_counts``) and content (the histograms' NULL slot).
+    """
+    null_counts = {**keys["null_counts"],
+                   "content": int(sum(h[HIST_NULL]
+                                      for h in hist_rows["hist"]))}
+    n_rows, n_exact = keys["n_rows"], keys["n_exact_distinct"]
+    n_approx = keys["n_approx_distinct"]
     rel_err = abs(n_approx - n_exact) / max(n_exact, 1)
     n_total = max(n_rows, 1)
     return {
@@ -711,17 +846,35 @@ def constraint_report(spark: SparkSession, df: DataFrame,
         "n_exact_distinct": n_exact,
         "n_approx_distinct": n_approx,
         "hll_rel_err": float(rel_err),
-        "hll_ok": rel_err <= tolerance,
+        "hll_ok": rel_err <= _HLL_TOLERANCE,
         "keys_unique": n_rows == n_exact,
-        "n_ri_orphans": n_orphans,
-        "worst_bucket_psi": float(max(psi_by_bucket.values(), default=0.0)),
-        "completeness": {
-            c: round(1.0 - null_counts[c] / n_total, 6)
-            for c in (*key_cols, "content")
-        },
+        "n_ri_orphans": keys["n_ri_orphans"],
+        "worst_bucket_psi": float(max(bucket_psi(hist_rows).values(),
+                                      default=0.0)),
+        "completeness": {c: round(1.0 - n / n_total, 6)
+                         for c, n in null_counts.items()},
         "key_null_counts": {c: null_counts[c] for c in _KEY},
         "keys_complete": all(null_counts[c] == 0 for c in _KEY),
     }
+
+
+def constraint_report(spark: SparkSession, df: DataFrame,
+                      n_buckets: int = 64, n_salts: int = 8,
+                      repo_dims: Optional[DataFrame] = None) -> dict:
+    """Key-level constraint suite over the repo table, standalone
+    (``constraint_summary`` lists the checks).
+
+    Job shape: two aggregates, run one after the other. ``key_counts``
+    is one key aggregate over repo, path, commit and lang, plus the RI
+    anti-join when ``repo_dims`` is given; ``length_hists`` is one
+    ``groupBy(bucket, bin)`` aggregate, the only one that reads content.
+    ``run_validation`` runs only the key aggregate, overlapped with the
+    validation scan, and takes the histograms from the scan's verdict
+    rows; both report the same fields. ``spark`` is not used; it keeps
+    the signature callers rely on.
+    """
+    return constraint_summary(key_counts(df, repo_dims),
+                              length_hists(df, n_buckets, n_salts))
 
 
 def key_violation_rows(df: DataFrame, repo_dims: Optional[DataFrame] = None,

@@ -42,7 +42,8 @@ _COUNTERS = ("n_rows", "n_ok", "n_err")
 
 _ARROW_TYPES = {"int": pa.int32(), "bigint": pa.int64(),
                 "double": pa.float64(), "boolean": pa.bool_(),
-                "string": pa.string(), "binary": pa.binary()}
+                "string": pa.string(), "binary": pa.binary(),
+                "array<bigint>": pa.list_(pa.int64())}
 
 
 def arrow_schema(ddl: str) -> pa.Schema:

@@ -36,6 +36,9 @@ verdict rows, and this module folds those rows across deltas:
     of the deltas' serialized states — commutative, so delta order
     cannot matter; the rendered schema alone could NOT be re-merged
     (enum cutoff and range encasing are lossy);
+  * the content-length histograms sum per bucket (fixed bins), so the
+    per-bucket PSI against the whole table (``pipeline.bucket_psi``)
+    is the one a from-scratch validation reports;
   * table-wide key uniqueness uses mergeable HyperLogLog sketches
     (``operators.constraints.hll_registers``, p = 14, 16 KiB) over a
     64-bit key hash. The sketch rides the validation scan: each scan
@@ -76,7 +79,8 @@ from pyspark.sql import SparkSession
 
 from schema_guru_spark.operators import constraints as C
 from schema_guru_spark.pipeline import (_KEY_SKETCH_SCHEMA,
-                                        _VERDICT_SCHEMA_STATE,
+                                        _VERDICT_SCHEMA_STATE, HIST_FORMAT,
+                                        bucket_psi, read_verdicts,
                                         verdict_summary)
 from schema_guru_spark.plans.checkpoint import (arrow_schema, count_rows,
                                                 local_dir, read_sink)
@@ -124,8 +128,11 @@ def _run_params(n_buckets: int, n_salts: int, max_err_rate: float,
     'whole table' covers, allowed_langs changes what counts as a
     violation, max_err_rate changes each delta's recorded verdicts. All
     are pinned in table_state.json on the first commit; later runs must
-    match (ADVICE r04). So is ``key_sketch``, the format of the stored
-    key sketches: registers of different formats do not merge.
+    match (ADVICE r04). So are ``key_sketch``, the format of the stored
+    key sketches (registers of different formats do not merge), and
+    ``length_hist``, the bin edges of the verdict rows' length
+    histograms (a checkpoint from before the histogram, or with other
+    edges, is refused before any scan).
 
     The dict is compared against a JSON-round-tripped prior, so every
     value must be in JSON-canonical form already: collection-valued
@@ -146,6 +153,7 @@ def _run_params(n_buckets: int, n_salts: int, max_err_rate: float,
         "allowed_langs": sorted(allowed_langs),
         "partition_filter": canon_filter,
         "key_sketch": C.KEY_SKETCH,
+        "length_hist": HIST_FORMAT,
     }
 
 
@@ -280,18 +288,22 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
                       uniq_tolerance: float = 0.05) -> dict:
     """Exact whole-table view from the committed window chain's delta
     sinks: per-bucket counter sums + recomputed verdicts, monoid-merged
-    schema, HLL-union uniqueness vs exact summed rows. Touches only
-    checkpoint metadata (KBs), never the table, and runs no Spark job.
+    schema, length drift (per-bucket PSI of the summed histograms),
+    HLL-union uniqueness vs exact summed rows. Touches only checkpoint
+    metadata (KBs), never the table, and runs no Spark job. Verdict rows
+    without a histogram (an older format) are refused with a
+    ``ValueError``.
 
     The view is the validation job's bucket fold over the committed
     verdict sinks: their rows (<= n_deltas x n_buckets, read from the
     local ``checkpoint_dir`` with pyarrow) are the ``(bucket,
-    *_COUNTERS, state)`` shape ``pipeline._fold_buckets`` folds, so the
-    per-bucket counters, verdicts and schemas come from that one
-    function, the totals from ``pipeline.verdict_summary``, and the
-    global schema is the merge of the folded bucket states. The key
-    sketches of every committed chunk merge by element-wise max
-    (``C.hll_merge``) into one estimate (``C.hll_estimate``).
+    *_COUNTERS, hist, state)`` shape ``pipeline._fold_buckets`` folds,
+    so the per-bucket counters, histograms, verdicts and schemas come
+    from that one function, the totals from ``pipeline.verdict_summary``,
+    the drift from ``pipeline.bucket_psi``, and the global schema is the
+    merge of the folded bucket states. The key sketches of every
+    committed chunk merge by element-wise max (``C.hll_merge``) into
+    one estimate (``C.hll_estimate``).
     ``spark`` is not used; it keeps the signature callers rely on."""
     from schema_guru_spark.core.context import SchemaContext
     from schema_guru_spark.core.microschema import (loads, merge_all,
@@ -310,10 +322,10 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
 
     ctx = SchemaContext.make(0)
     folded = _fold_buckets(
-        pa.concat_tables(read_sink(os.path.join(d, "verdicts"),
-                                   arrow_schema(_VERDICT_SCHEMA_STATE))
-                         for d in dirs).to_pandas(),
+        read_verdicts([os.path.join(d, "verdicts") for d in dirs],
+                      _VERDICT_SCHEMA_STATE),
         ctx, max_err_rate, keep_state=True)
+    psi = bucket_psi(folded)
     glob = merge_all((loads(st) for st in folded["state"]), ctx)
 
     sketches = pa.concat_tables(
@@ -333,6 +345,8 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
         "n_deltas": len(dirs),
         **verdict_summary(folded.to_dict("records")),
         "uniqueness": uniq,
+        "drift": {"worst_bucket_psi": max(psi.values(), default=0.0),
+                  "bucket_psi": psi},
         "schema": render(apply_transforms(glob, ctx), ctx),
         "bucket_schemas": {int(b): json.loads(sch) for b, sch
                            in zip(folded["bucket"], folded["schema"])},

@@ -141,7 +141,7 @@ def main(argv=None) -> dict:
     args = ap.parse_args(argv)
 
     from schema_guru_spark.session import get_spark
-    from schema_guru_spark.pipeline import (constraint_report,
+    from schema_guru_spark.pipeline import (constraint_summary, key_counts,
                                             validate_repo_table,
                                             verdict_summary)
     from schema_guru_spark.sources.repo_table import synthesize_repo_table
@@ -220,8 +220,7 @@ def main(argv=None) -> dict:
                                 chunk_size=args.chunk_size,
                                 max_err_rate=args.max_err_rate)
         w.violations.count()
-        constraint_report(spark, df, n_buckets=args.buckets,
-                          n_salts=args.salts)
+        constraint_summary(key_counts(df), w.verdict_rows)
         # drop every cached plan the warm-up left behind: Spark's
         # CacheManager matches by logical plan, so the timed run would
         # otherwise read the warm-up's caches instead of recomputing
@@ -229,32 +228,33 @@ def main(argv=None) -> dict:
 
     first_job = _next_job_id(spark)
     t0 = time.perf_counter()
-    # the constraint suite and the validation scan are INDEPENDENT
-    # passes over the same table — submit the constraint jobs from a
-    # second thread so the scheduler pipelines them into the task slots
-    # the Python-bound derive pass leaves idle (the scan tasks spend
-    # most of their JVM time blocked on Arrow round-trips to the Python
-    # workers, while the constraint jobs are pure JVM). Same pattern as
-    # constraint_report's own internal fan-out; on a real cluster this
-    # is two concurrent jobs in one SparkSession, standard scheduling.
+    # the constraint suite's key aggregate and the validation scan are
+    # INDEPENDENT passes over the same table — submit the key aggregate
+    # from a second thread so the scheduler pipelines it into the task
+    # slots the Python-bound derive pass leaves idle (the scan tasks
+    # spend most of their JVM time blocked on Arrow round-trips to the
+    # Python workers, while the key aggregate is pure JVM and reads no
+    # content). Drift and content completeness come from the length
+    # histograms in the scan's verdict rows, so no constraint job reads
+    # content. On a real cluster this is two concurrent jobs in one
+    # SparkSession, standard scheduling.
     from concurrent.futures import ThreadPoolExecutor
 
-    def _grouped_constraints():
+    def _grouped_keys():
         # pinned-thread mode (Spark 3.2+ default): job-group properties
         # are per-Python-thread, so the two concurrent legs' stages are
         # attributable separately in the status store
         spark.sparkContext.setJobGroup("timed-constraints",
                                        "constraint suite (overlapped)")
         try:
-            return constraint_report(spark, df, n_buckets=args.buckets,
-                                     n_salts=args.salts)
+            return key_counts(df)
         finally:
             spark.sparkContext.setJobGroup("", "")
 
     spark.sparkContext.setJobGroup("timed-validate",
                                    "validation scan + verdicts")
     with ThreadPoolExecutor(max_workers=1) as ex:
-        f_rep = ex.submit(_grouped_constraints)
+        f_keys = ex.submit(_grouped_keys)
         res = validate_repo_table(spark, df, checkpoint_dir=args.checkpoint,
                                   n_buckets=args.buckets, n_salts=args.salts,
                                   chunk_size=args.chunk_size,
@@ -263,8 +263,9 @@ def main(argv=None) -> dict:
         # the counters here, not in another Spark job
         verdicts = res.verdict_rows.to_dict("records")
         n_violations = res.violations.count()
+        res.unpersist()
         t_validate = time.perf_counter() - t0
-        rep = f_rep.result()
+        rep = constraint_summary(f_keys.result(), res.verdict_rows)
     dt = time.perf_counter() - t0
     spark.sparkContext.setJobGroup("", "")
     task_times = _group_task_times(

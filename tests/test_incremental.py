@@ -781,6 +781,67 @@ def test_checkpoint_with_other_sketch_format_is_refused(spark, tmp_path):
         _run(spark, tp, ckpt)
 
 
+def test_checkpoint_from_before_the_histogram_is_refused(spark, tmp_path):
+    """A checkpoint whose pinned parameters lack the length-histogram
+    format (one written before the histogram joined the verdict row) is
+    refused by the parameter guard, naming length_hist, before any
+    scan."""
+    from schema_guru_spark.run_validation import _next_job_id
+    tp = str(tmp_path / "repos")
+    ckpt = str(tmp_path / "ckpt")
+    append_snapshot(tp, _vrows(10, "c1"), SCHEMA, partition_by="lang")
+    _run(spark, tp, ckpt)
+    path = os.path.join(ckpt, "table_state.json")
+    with open(path) as fh:
+        state = json.load(fh)
+    del state["params"]["length_hist"]
+    with open(path, "w") as fh:
+        json.dump(state, fh)
+    append_snapshot(tp, _vrows(10, "c2", start=10), SCHEMA,
+                    partition_by="lang")
+    lo = _next_job_id(spark)
+    with pytest.raises(ValueError, match=r"parameters \(length_hist\)"):
+        _run(spark, tp, ckpt)
+    assert _next_job_id(spark) == lo
+
+
+def test_cumulative_report_refuses_verdicts_without_histogram(spark,
+                                                              tmp_path):
+    """cumulative_report refuses a committed delta whose verdict rows
+    carry no length histogram (the format before it), naming that
+    delta's sink, instead of folding drift over part of the table."""
+    import re
+
+    import pyarrow.parquet as pq
+    from schema_guru_spark.plans.incremental import cumulative_report
+    tp = str(tmp_path / "repos")
+    ckpt = str(tmp_path / "ckpt")
+    append_snapshot(tp, _vrows(20, "c1"), SCHEMA, partition_by="lang")
+    _run(spark, tp, ckpt)
+    append_snapshot(tp, _vrows(10, "c2", start=100), SCHEMA,
+                    partition_by="lang")
+    _run(spark, tp, ckpt)
+    [old] = sorted(d for d in os.listdir(ckpt) if d.startswith("e000"))[:1]
+    sink = os.path.join(ckpt, old, "verdicts")
+    for root, _, files in os.walk(sink):
+        for f in files:
+            if f.endswith(".parquet"):
+                fp = os.path.join(root, f)
+                pq.write_table(pq.read_table(fp).drop_columns(["hist"]), fp)
+    with pytest.raises(ValueError, match=re.escape(sink)):
+        cumulative_report(spark, ckpt)
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_cumulative_drift_equals_from_scratch(spark, seed):
+    """The rounds of ``stress_fuzz_incremental.py --rounds 2 --seed 1``:
+    along each random append chain, the cumulative view (counters,
+    schema, uniqueness, and the per-bucket PSI of the summed length
+    histograms) equals a from-scratch validation of each snapshot."""
+    from stress_fuzz_incremental import run_round
+    run_round(spark, seed)
+
+
 # ---------------------------------------- driver-side cumulative fold
 
 def _fold_state(doc):
@@ -791,6 +852,16 @@ def _fold_state(doc):
 
 _FOLD_DOCS = ('{"a": 1}', '{"a": "x", "b": [1, 2]}', '[true, null]',
               '{"b": 2.5}', '{}')
+
+
+def _fold_hist(r):
+    """A verdict row's length histogram: its rows spread over two
+    slots that depend on the row, its parse errors in the NULL slot."""
+    from schema_guru_spark.pipeline import HIST_NULL, HIST_SLOTS
+    h = [0] * HIST_SLOTS
+    h[3 + r["doc"]] += r["n_rows"] - r["n_json_err"]
+    h[HIST_NULL] += r["n_json_err"]
+    return h
 
 
 def _write_chain(root, deltas):
@@ -805,15 +876,15 @@ def _write_chain(root, deltas):
         [("bucket", pa.int32())]
         + [(k, pa.int64()) for k in ("n_rows", "n_json_ok", "n_json_err",
                                      "n_sha_bad", "n_lang_bad")]
-        + [("schema", pa.string()), ("passed", pa.bool_()),
-           ("state", pa.string())])
+        + [("hist", pa.list_(pa.int64())), ("schema", pa.string()),
+           ("passed", pa.bool_()), ("state", pa.string())])
     labels = [f"e000-snap-{k}-{k + 1}" for k in range(len(deltas))]
     for label, rows in zip(labels, deltas):
         parts: dict = {}
         for r in rows:
             parts.setdefault(0 if r["bucket"] < 3 else 3, []).append(
                 {**{k: v for k, v in r.items() if k != "doc"},
-                 "schema": "{}", "passed": True,
+                 "hist": _fold_hist(r), "schema": "{}", "passed": True,
                  "state": _fold_state(_FOLD_DOCS[r["doc"]])})
         # a zero-row delta: one empty file that carries the schema
         for chunk, part in (parts or {0: []}).items():
@@ -823,6 +894,27 @@ def _write_chain(root, deltas):
                            os.path.join(d, "part-00000.parquet"))
     _save_state(root, {"table_uuid": "t", "snapshot_id": len(deltas),
                        "epoch": 0, "windows": labels})
+
+
+def _psi_reference(hists):
+    """{bucket: PSI} of per-bucket length histograms against their sum,
+    term by term: smoothing over the bins the sum uses, bins a bucket
+    does not use skipped, the NULL slot left out."""
+    import math
+
+    from schema_guru_spark.pipeline import HIST_NULL
+    glob = [sum(h[i] for h in hists.values()) for i in range(HIST_NULL)]
+    k, gt = sum(1 for g in glob if g), sum(glob)
+    out = {}
+    for b, h in hists.items():
+        pt = sum(h[:HIST_NULL])
+        if pt:
+            out[b] = round(sum(
+                ((n + 0.5) / (pt + 0.5 * k) - (g + 0.5) / (gt + 0.5 * k))
+                * math.log((n + 0.5) / (pt + 0.5 * k)
+                           / ((g + 0.5) / (gt + 0.5 * k)))
+                for n, g in zip(h, glob) if n), 6)
+    return out
 
 
 def _groupby_reference(spark, deltas, max_err_rate):
@@ -861,6 +953,12 @@ def _groupby_reference(spark, deltas, max_err_rate):
         st = loads(r[-1])
         by_bucket[r[0]] = merge(by_bucket.get(r[0], ZERO), st, ctx)
         glob = merge(glob, st, ctx)
+    hists: dict = {}
+    for r in (r for d in deltas for r in d):
+        h = _fold_hist(r)
+        hists[r["bucket"]] = [a + b for a, b in zip(
+            hists.get(r["bucket"], [0] * len(h)), h)]
+    psi = _psi_reference(hists)
     total = {k: sum(r[k] for r in per_bucket)
              for k in ("n_rows", "n_json_ok", "n_json_err", "n_sha_bad",
                        "n_lang_bad")}
@@ -874,6 +972,9 @@ def _groupby_reference(spark, deltas, max_err_rate):
         "pass_rate": (round(passed / len(per_bucket), 4)
                       if per_bucket else 1.0),
         "uniqueness": {},
+        "drift": {"worst_bucket_psi": pytest.approx(
+                      max(psi.values(), default=0.0), abs=1e-6),
+                  "bucket_psi": pytest.approx(psi, abs=1e-6)},
         "schema": render(apply_transforms(glob, ctx), ctx),
         "bucket_schemas": {b: render(apply_transforms(st, ctx), ctx)
                            for b, st in sorted(by_bucket.items())},

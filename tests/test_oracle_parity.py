@@ -235,3 +235,20 @@ def test_epoch_ntz_floor_matches_duckdb_for_pre_1970(spark, ddb):
         " (TIMESTAMP '1970-01-01 00:00:00.5'),"
         " (TIMESTAMP '2024-02-29 12:00:00.25')) AS t(ts)").fetchall()]
     assert got == want == [-1, 0, 0, 1709208000]
+
+
+def test_registry_queries_release_their_caches(spark, sf_dir):
+    """Every registry query leaves the session's CacheManager as it
+    found it (empty): a cached plan outliving its query would serve a
+    later query over the same plan stale rows if the table's files
+    changed in between."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    leaks = []
+    for name, query in [("entry", lambda s, _: entrymod.entry(s)),
+                        *QUERIES.items()]:
+        query(spark, sf_dir).collect()
+        if not cache.isEmpty():
+            leaks.append(name)
+            spark.catalog.clearCache()
+    assert not leaks, leaks

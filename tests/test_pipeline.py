@@ -569,7 +569,7 @@ def test_scan_pass_vectorized_equals_naive_reference():
     from schema_guru_spark.core.context import SchemaContext
     from schema_guru_spark.core.json_fast import loads as fast_loads
     from schema_guru_spark.core.microschema import dumps
-    from schema_guru_spark.pipeline import _scan_pass
+    from schema_guru_spark.pipeline import HIST_NULL, HIST_SLOTS, _scan_pass
 
     ctx = SchemaContext.make(0)
     doc_a = '{"k": 1}'
@@ -592,6 +592,10 @@ def test_scan_pass_vectorized_equals_naive_reference():
 
     pdf = pd.DataFrame(rows, columns=["bucket", "repo", "lang", "content",
                                       "sha_ok", "lang_ok"])
+    # the length-bin slot the scan projects JVM-side: any slots; a
+    # NULL-content row gets the NULL slot
+    pdf["hbin"] = [HIST_NULL if c is None else 7 * i % HIST_NULL
+                   for i, c in enumerate(pdf["content"])]
     # the key hash the scan projects for the key sketch: any int64s
     pdf["kh"] = np.random.default_rng(3).integers(
         -2 ** 63, 2 ** 63 - 1, len(rows), dtype=np.int64)
@@ -645,6 +649,12 @@ def test_scan_pass_vectorized_equals_naive_reference():
                     for _, r in partial.iterrows()}
     assert got_counters == ref_counters
 
+    ref_hists = {b: [0] * HIST_SLOTS for b in ref_counters}
+    for b, slot in zip(pdf["bucket"], pdf["hbin"]):
+        ref_hists[b][slot] += 1
+    assert {int(r["bucket"]): list(r["hist"])
+            for _, r in partial.iterrows()} == ref_hists
+
     got_states = {int(r["bucket"]): r["state"]
                   for _, r in partial.iterrows() if pd.notna(r["state"])}
     assert got_states == {b: dumps(s) for b, s in ref_states.items()}
@@ -674,18 +684,20 @@ def _combine_reference(ctx, max_err_rate, keep_state):
     from schema_guru_spark.core.microschema import (ZERO, dumps, loads,
                                                      merge, render)
     from schema_guru_spark.core.transforms import apply_transforms
-    from schema_guru_spark.pipeline import bucket_passes
+    from schema_guru_spark.pipeline import HIST_SLOTS, bucket_passes
 
     def fn(pdf):
         acc = ZERO
         c = {"n_rows": 0, "n_json_ok": 0, "n_json_err": 0,
              "n_sha_bad": 0, "n_lang_bad": 0}
+        hist = [0] * HIST_SLOTS
         for part in pdf.to_dict("records"):
             if part["state"] is not None:
                 acc = merge(acc, loads(part["state"]), ctx)
             for k in c:
                 c[k] += part[k]
-        row = {"bucket": int(pdf["bucket"].iloc[0]), **c,
+            hist = [a + b for a, b in zip(hist, part["hist"])]
+        row = {"bucket": int(pdf["bucket"].iloc[0]), **c, "hist": hist,
                "schema": json.dumps(render(apply_transforms(acc, ctx), ctx),
                                     sort_keys=True),
                "passed": bucket_passes(c, max_err_rate)}
@@ -701,23 +713,37 @@ _PART_DOCS = ('{"a": 1}', '{"a": "x", "b": [1, 2]}', '[true, null]',
 
 
 _PART_COLUMNS = ["bucket", "n_rows", "n_json_ok", "n_json_err",
-                 "n_sha_bad", "n_lang_bad", "state"]
+                 "n_sha_bad", "n_lang_bad", "hist", "state"]
 _PART_SCHEMA = ("bucket int, n_rows bigint, n_json_ok bigint, "
                 "n_json_err bigint, n_sha_bad bigint, n_lang_bad bigint, "
-                "state string")
+                "hist array<bigint>, state string")
+
+
+def _hist(**slots):
+    """A length histogram with the given ``s<slot>=count`` entries."""
+    from schema_guru_spark.pipeline import HIST_SLOTS
+    h = [0] * HIST_SLOTS
+    for k, n in slots.items():
+        h[int(k[1:])] = n
+    return h
 
 
 def _counter(bucket, ok=0, err=0, sha=0, lang=0, other=0):
     """A scan pass partial row with counters and no JSON state;
-    ``other`` counts non-JSON rows."""
-    return (bucket, ok + err + sha + lang + other, ok, err, sha, lang, None)
+    ``other`` counts non-JSON rows. Its rows' lengths fall in two
+    slots, one of them NULL content."""
+    from schema_guru_spark.pipeline import HIST_NULL
+    n = ok + err + sha + lang + other
+    return (bucket, n, ok, err, sha, lang,
+            _hist(**{f"s{3 + ok + 2 * err}": n - err,
+                     f"s{HIST_NULL}": err}), None)
 
 
 def _state(bucket, doc):
     """A scan pass partial row with zero counters and a state."""
     from schema_guru_spark.core.context import SchemaContext
     from schema_guru_spark.core.microschema import derive_text, dumps
-    return (bucket, 0, 0, 0, 0, 0,
+    return (bucket, 0, 0, 0, 0, 0, _hist(),
             dumps(derive_text(_PART_DOCS[doc], SchemaContext.make(0))[0]))
 
 
@@ -767,6 +793,7 @@ def test_driver_fold_equals_bucket_combine(spark, parts, max_err_rate,
            .applyInPandas(_combine_reference(ctx, max_err_rate, keep_state),
                           schema)
            .toPandas().sort_values("bucket", ignore_index=True))
+    ref["hist"] = ref["hist"].map(list)
     pd.testing.assert_frame_equal(got, ref)
     # the fold's frame rebuilds as the verdict relation unchanged
     assert [tuple(r) for r in spark.createDataFrame(got, schema).collect()] \
@@ -925,19 +952,50 @@ def law_tables(spark):
     }
 
 
+def _duckdb_psi(t) -> dict:
+    """{bucket: PSI of content length vs the whole table} over an Arrow
+    table (bucket, content), in DuckDB: bin = the number of pipeline
+    edges <= the length in UTF-8 bytes (strlen), Laplace smoothing over
+    the bins the table uses,
+    bins absent from a bucket skipped, rounded to 6 decimals."""
+    import duckdb
+
+    from schema_guru_spark.pipeline import HIST_EDGES
+    con = duckdb.connect()
+    con.register("t", t)
+    edges = "[" + ", ".join(map(str, HIST_EDGES)) + "]::BIGINT[]"
+    return dict(con.execute(f"""
+        WITH v AS (
+          SELECT bucket,
+                 len(list_filter({edges}, e -> e <= strlen(content))) AS bin
+          FROM t WHERE content IS NOT NULL),
+        pb AS (SELECT bucket, bin, count(*) AS n FROM v GROUP BY ALL),
+        g AS (SELECT bin, sum(n) AS gn FROM pb GROUP BY bin),
+        k AS (SELECT count(*) AS k, sum(gn) AS gt FROM g),
+        pt AS (SELECT bucket, sum(n) AS ptn FROM pb GROUP BY bucket),
+        p AS (
+          SELECT bucket, (n + 0.5)::DOUBLE / (ptn + 0.5 * k) AS pp,
+                 (gn + 0.5)::DOUBLE / (gt + 0.5 * k) AS pg
+          FROM pb JOIN g USING (bin) JOIN pt USING (bucket), k)
+        SELECT bucket, round(sum((pp - pg) * ln(pp / pg)), 6)
+        FROM p GROUP BY bucket""").fetchall())
+
+
 @pytest.mark.parametrize("table", ["planted_dups", "null_keys_and_content",
                                    "all_content_null", "empty"])
 def test_constraint_report_equals_standalone_operators(spark, law_tables,
                                                        table):
-    """Law: the fused constraint_report (one aggregate + a fan-out of the
-    checks that need their own shuffle) reports, field for field, what
-    the standalone operators compute over the same projection."""
+    """Law: constraint_report (one key aggregate, one histogram
+    aggregate) reports, field for field, what the standalone operators
+    compute over the same table, and its drift what an independent
+    DuckDB query computes over the same integer bin edges."""
     from schema_guru_spark.operators import constraints as C
+    from schema_guru_spark.pipeline import bucket_psi, length_hists
     nb, ns = 16, 4
     df = law_tables[table]
     key_cols = ("repo", "path", "commit", "lang")
     slim = (df.withColumn("bucket", bucket_expr(nb, ns))
-              .select("bucket", "repo", F.length("content").alias("clen"),
+              .select("bucket", "repo",
                       C.key_hash(0x5EED0, ("repo", "path", "commit"))
                        .alias("kh1"),
                       C.key_hash(0x5EED1, ("repo", "path", "commit"))
@@ -948,7 +1006,10 @@ def test_constraint_report_equals_standalone_operators(spark, law_tables,
                    *[F.sum(F.col(c).isNull().cast("int")).alias(c)
                      for c in (*key_cols, "content")]).collect()[0]
     null_counts = {c: int(nulls[c] or 0) for c in (*key_cols, "content")}
-    psi = C.drift_psi_report(slim, "clen", "bucket")
+    psi = _duckdb_psi(df.select(bucket_expr(nb, ns).alias("bucket"),
+                                "content").toArrow())
+    assert bucket_psi(length_hists(df, nb, ns)) == pytest.approx(psi,
+                                                                 abs=1e-6)
     # an external dimension that misses one repo, plus the NULL repos
     repos = sorted(r["repo"] for r in df.select("repo").distinct().collect()
                    if r["repo"] is not None)
@@ -968,7 +1029,8 @@ def test_constraint_report_equals_standalone_operators(spark, law_tables,
         "hll_ok": bool(uniq["hll_ok"]),
         "keys_unique": uniq["n_rows"] == uniq["n_exact"],
         "n_ri_orphans": ri_self,
-        "worst_bucket_psi": float(max(psi.values(), default=0.0)),
+        "worst_bucket_psi": pytest.approx(max(psi.values(), default=0.0),
+                                          abs=1e-6),
         "completeness": {c: round(1.0 - null_counts[c] / max(nulls["n"], 1),
                                   6)
                          for c in (*key_cols, "content")},
@@ -982,6 +1044,8 @@ def test_constraint_report_equals_standalone_operators(spark, law_tables,
     rep_dims = constraint_report(spark, df, n_buckets=nb, n_salts=ns,
                                  repo_dims=dims)
     assert rep_dims == {**rep, "n_ri_orphans": ri_explicit}
+    if table in ("planted_dups", "null_keys_and_content"):
+        assert len(psi) > nb // 2 and rep["worst_bucket_psi"] > 0
     if table == "planted_dups":
         assert rep["n_rows"] - rep["n_exact_distinct"] == 9
         assert ri_explicit > 0
@@ -992,6 +1056,53 @@ def test_constraint_report_equals_standalone_operators(spark, law_tables,
         assert ri_explicit > ri_self
     if table == "empty":
         assert rep["n_rows"] == 0 and rep["worst_bucket_psi"] == 0.0
+
+
+def _hists(rows):
+    return {int(b): list(h) for b, h in zip(rows["bucket"], rows["hist"])}
+
+
+@pytest.mark.parametrize("table", ["planted_dups", "null_keys_and_content",
+                                   "all_content_null", "empty"])
+def test_scan_histogram_equals_groupby_histogram(spark, law_tables, table,
+                                                 tmp_path, monkeypatch):
+    """Law: the length histograms the validation scan folds into its
+    verdict rows equal the standalone groupBy(bucket, bin) histograms
+    (``length_hists``), whether the buckets run in one chunk, in chunks
+    smaller than n_buckets, or in a checkpointed run killed after its
+    first chunk and resumed."""
+    from schema_guru_spark.pipeline import HIST_NULL, length_hists
+    nb, ns = 16, 4
+    df = law_tables[table]
+    want = _hists(length_hists(df, nb, ns))
+    kw = dict(n_buckets=nb, n_salts=ns, max_err_rate=1.0)
+    assert _hists(validate_repo_table(spark, df, **kw).verdict_rows) == want
+    assert _hists(validate_repo_table(spark, df, chunk_size=6,
+                                      **kw).verdict_rows) == want
+
+    ck = str(tmp_path / "ck")
+    record_done = CheckpointManager.record_done
+
+    def killed_after_first_chunk(self, metrics):
+        record_done(self, metrics)
+        raise RuntimeError("killed")
+
+    monkeypatch.setattr(CheckpointManager, "record_done",
+                        killed_after_first_chunk)
+    with pytest.raises(RuntimeError, match="killed"):
+        validate_repo_table(spark, df, checkpoint_dir=ck, chunk_size=6,
+                            **kw)
+    monkeypatch.setattr(CheckpointManager, "record_done", record_done)
+    res = validate_repo_table(spark, df, checkpoint_dir=ck, chunk_size=6,
+                              **kw)
+    assert res.resumed_buckets == list(range(6))
+    assert _hists(res.verdict_rows) == want
+    n = df.count()
+    assert sum(sum(h) for h in want.values()) == n
+    if table == "all_content_null":
+        assert all(h[HIST_NULL] == sum(h) for h in want.values())
+    if table == "empty":
+        assert want == {}
 
 
 @pytest.mark.parametrize("keys", [
@@ -1070,11 +1181,34 @@ def small_table(spark, tmp_path_factory):
     return p
 
 
+def _group_plans(spark, after):
+    """[(job group, [job ids], physical plan)] of the SQL executions
+    with id > ``after``; the group is the one of the execution's first
+    job (None without jobs or group)."""
+    from conftest import _sql_executions
+    sc = spark.sparkContext._jsc.sc()
+    store = sc.statusStore()
+    out = []
+    for e in _sql_executions(spark):
+        if e.executionId() <= after:
+            continue
+        it, jids = e.jobs().keysIterator(), []
+        while it.hasNext():
+            jids.append(it.next())
+        grp = None
+        if jids:
+            g = store.job(min(jids)).jobGroup()
+            grp = g.get() if g.isDefined() else None
+        out.append((grp, sorted(jids), e.physicalPlanDescription()))
+    return out
+
+
 def test_run_validation_job_count_guard(spark, small_table):
     """The validation job is bound by fixed per-job cost, so its Spark
     job count is pinned: one run_validation.main call submits at most
-    15 jobs (the fused constraint aggregate, and the per-bucket partial
-    rows folded on the driver; 31, then 17 before). No executed plan
+    10 jobs — the input's schema read, 6 for the validation scan and
+    its violations, 3 for the constraint suite's one key aggregate,
+    which reads no content (31, 17, then 15 before). No executed plan
     holds a grouped Python node: the bucket fan-in is not a Spark
     stage. The no-checkpoint verdicts are a local relation — no
     Exchange, no Python node — so later actions never re-run the
@@ -1089,9 +1223,18 @@ def test_run_validation_job_count_guard(spark, small_table):
     out = run_main(argv)
     n_jobs = _next_job_id(spark) - lo
     plans = executed_plans(spark, e0)
+    groups = [g for g, _ in _jobs_in(spark, lo, lo + n_jobs)]
+    constraint_plans = [p for g, _, p in _group_plans(spark, e0)
+                        if g == "timed-constraints"]
     spark.catalog.clearCache()
     assert out["rows"] == 3000 and out["sha_bad"] == 3
-    assert n_jobs <= 15, n_jobs
+    assert n_jobs <= 10, (n_jobs, groups)
+    # the constraint leg is the one key aggregate, and no scan of it
+    # reads content (drift comes from the scan's histograms)
+    assert groups.count("timed-constraints") <= 3, groups
+    reads = [line for p in constraint_plans for line in p.splitlines()
+             if "ReadSchema:" in line]
+    assert reads and not any("content" in r for r in reads), reads
     grouped = [i for i, p in plans if "FlatMapGroupsInPandas" in p]
     assert plans and not grouped, grouped
 
@@ -1110,8 +1253,8 @@ def test_run_validation_job_count_guard(spark, small_table):
 
 def test_run_validation_task_time_per_call(spark, small_table):
     """task_time_sec covers only the jobs of its own call (two calls in
-    one session do not accumulate), and the constraint suite's fan-out
-    jobs carry the constraint leg's job group."""
+    one session do not accumulate), and the constraint suite's key
+    aggregate jobs carry the constraint leg's job group."""
     from schema_guru_spark.run_validation import _next_job_id, main as run_main
     argv = ["--input", small_table, "--cpus", "4", "--buckets", "8",
             "--salts", "4"]
@@ -1129,3 +1272,69 @@ def test_run_validation_task_time_per_call(spark, small_table):
         # groups; the only other job is the input's schema read
         ungrouped = [g for g, _ in jobs if g not in tt]
         assert len(ungrouped) <= 1, jobs
+
+
+@pytest.fixture(scope="module")
+def holed_table(law_tables, tmp_path_factory):
+    p = str(tmp_path_factory.mktemp("holed_repo") / "t")
+    _holed(law_tables["planted_dups"]).write.parquet(p)
+    return p
+
+
+@pytest.mark.parametrize("which", ["small", "holed"])
+def test_run_validation_constraints_equal_constraint_report(
+        spark, small_table, holed_table, which, tmp_path):
+    """Law: the job's constraints — the key aggregate overlapped with
+    the scan, drift and content completeness from the scan's verdict
+    rows — equal a standalone constraint_report over the same table,
+    field for field; also when every verdict row comes back from a
+    resumed checkpoint."""
+    from schema_guru_spark.run_validation import main as run_main
+    path = small_table if which == "small" else holed_table
+    argv = ["--input", path, "--cpus", "4", "--buckets", "8",
+            "--salts", "4"]
+    want = constraint_report(spark, spark.read.parquet(path), n_buckets=8,
+                             n_salts=4)
+    assert run_main(argv)["constraints"] == want
+    ck = ["--checkpoint", str(tmp_path / "ck"), "--chunk-size", "3"]
+    run_main(argv + ck)
+    out = run_main(argv + ck)
+    assert out["resumed_buckets"] == 8
+    assert out["constraints"] == want
+    if which == "holed":
+        assert want["completeness"]["content"] < 1.0
+        assert not want["keys_complete"]
+
+
+def test_resumed_run_refuses_verdicts_without_histogram(spark, small_table,
+                                                        tmp_path):
+    """A checkpoint whose verdict rows carry no length histogram was
+    written before the histogram joined the verdict row: a resumed run
+    refuses it, naming the checkpoint, instead of reporting drift over
+    part of the table."""
+    import os
+    import re
+
+    import pyarrow.parquet as pq
+    from schema_guru_spark.run_validation import main as run_main
+    ck = str(tmp_path / "ck")
+    argv = ["--input", small_table, "--cpus", "4", "--buckets", "8",
+            "--salts", "4", "--checkpoint", ck, "--chunk-size", "4"]
+    run_main(argv)
+    for root, _, files in os.walk(os.path.join(ck, "verdicts")):
+        for f in files:
+            if f.endswith(".parquet"):
+                fp = os.path.join(root, f)
+                pq.write_table(pq.read_table(fp).drop_columns(["hist"]), fp)
+    with pytest.raises(ValueError, match=re.escape(ck)):
+        run_main(argv)
+
+
+def test_run_validation_releases_its_caches(spark, small_table):
+    """run_validation.main leaves nothing in the session's CacheManager:
+    the scan output and the violations it persists are released."""
+    from schema_guru_spark.run_validation import main as run_main
+    spark.catalog.clearCache()
+    run_main(["--input", small_table, "--cpus", "4", "--buckets", "8",
+              "--salts", "4"])
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
