@@ -10,8 +10,6 @@ window-function CDFs. Scale notes per operator inline.
 from __future__ import annotations
 
 import math
-from functools import reduce
-from operator import or_
 from typing import Sequence
 
 import numpy as np
@@ -40,24 +38,38 @@ def uniqueness_exact(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     )
 
 
-def key_hash(seed: int, keys: Sequence[str]) -> Column:
-    """64-bit xxhash64 of a key tuple under ``seed``, NULL-aware.
+def key_hash_sql(seed: int, keys: Sequence[str]) -> str:
+    """64-bit xxhash64 of a key tuple under ``seed``, NULL-aware, as SQL
+    text (``key_hash`` parses it; a projection can take it as is).
 
     ``xxhash64`` skips NULL inputs, so on its own ``(r, NULL, c)`` and
     ``(r, c, NULL)`` hash alike. The NULL positions therefore go in as
-    one more input, a bit mask that is itself NULL (skipped) when no
-    key part is NULL: NULL-free keys keep exactly the hash they always
+    one more input, a bigint bit mask that is itself NULL (skipped) when
+    no key part is NULL: NULL-free keys keep exactly the hash they always
     had, and keys that differ only in where their NULLs sit separate.
     The rule: NULL parts compare equal at the same position — the
     certain-key reading of a key with NULLs, and the one
     ``count(DISTINCT struct(keys))`` and a GROUP BY over the keys apply
     (ICDE 2019, "Entity Integrity, Referential Integrity, and Query
-    Optimization with Embedded Uniqueness Constraints")."""
-    nulls = [F.col(k).isNull() for k in keys]
-    mask = reduce(lambda acc, n: acc * 2 + n.cast("long"), nulls,
-                  F.lit(0).cast("long"))
-    return F.xxhash64(F.lit(seed), *[F.col(k) for k in keys],
-                      F.when(reduce(or_, nulls), mask))
+    Optimization with Embedded Uniqueness Constraints").
+
+    The hashes are pinned: key sketches (``KEY_SKETCH``) stored in
+    checkpoints hold them, so the text must keep every input's value
+    and type (an int seed, string keys, a bigint mask)."""
+    cols = ["`" + k.replace("`", "``") + "`" for k in keys]
+    nulls = [f"{c} IS NULL" for c in cols]
+    mask = "CAST(0 AS BIGINT)"
+    for n in nulls:
+        mask = f"({mask} * 2 + CAST({n} AS BIGINT))"
+    return (f"xxhash64({seed}, {', '.join(cols)}, "
+            f"CASE WHEN {' OR '.join(nulls)} THEN {mask} END)")
+
+
+def key_hash(seed: int, keys: Sequence[str]) -> Column:
+    """``key_hash_sql`` as a Column: one parsed expression, where the
+    same tree built from Column calls costs ~25 py4j round trips a
+    call."""
+    return F.expr(key_hash_sql(seed, keys))
 
 
 # ---------------------------------------------- mergeable key sketch

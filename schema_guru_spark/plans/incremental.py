@@ -82,8 +82,8 @@ from schema_guru_spark.pipeline import (_KEY_SKETCH_SCHEMA,
                                         _VERDICT_SCHEMA_STATE, HIST_FORMAT,
                                         bucket_psi, read_verdicts,
                                         verdict_summary)
-from schema_guru_spark.plans.checkpoint import (arrow_schema, count_rows,
-                                                local_dir, read_sink)
+from schema_guru_spark.plans.checkpoint import (arrow_schema, local_dir,
+                                                read_sink)
 from schema_guru_spark.sources.iceberg_meta import (_VALUE_SETS,
                                                     load_table_metadata)
 
@@ -256,12 +256,11 @@ def incremental_validate(
             n_buckets=n_buckets, n_salts=n_salts,
             chunk_size=chunk_size, allowed_langs=allowed_langs,
             max_err_rate=max_err_rate, keep_state=True)
-        # <= n_buckets verdict rows, already on the driver; the
-        # violation rows counted from the sink's parquet footers
+        # <= n_buckets verdict rows and the violation count (from the
+        # sink's parquet footers), already on the driver
         delta_report = {
             **verdict_summary(res.verdict_rows.to_dict("records")),
-            "n_violation_rows": count_rows(
-                os.path.join(delta_dir, "violations")),
+            "n_violation_rows": res.n_violation_rows,
             "resumed_buckets": len(res.resumed_buckets),
         }
         prior = (state.get("windows", []) if state is not None

@@ -133,7 +133,6 @@ def run_round(spark, seed: int) -> str:
             assert cum["drift"] == {
                 "worst_bucket_psi": max(psi.values(), default=0.0),
                 "bucket_psi": psi}, (seed, step, cum["drift"], psi)
-            full.unpersist()
     return (f"steps={n_steps} buckets={n_buckets} rows={start} "
             f"dup={planted_dup}")
 

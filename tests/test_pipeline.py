@@ -376,9 +376,7 @@ def test_bucket_filter_only_where_it_can_remove_rows(spark, repo_df,
     from conftest import last_execution_id
 
     def verdicts(res):
-        rows = sorted(tuple(r) for r in res.verdicts.collect())
-        res.violations.unpersist()
-        return rows
+        return sorted(tuple(r) for r in res.verdicts.collect())
 
     e0 = last_execution_id(spark)
     one = verdicts(validate_repo_table(spark, repo_df, n_buckets=N_BUCKETS))
@@ -667,6 +665,10 @@ def test_scan_pass_vectorized_equals_naive_reference():
         (1, "invalid JSON: Expecting property name enclosed in double "
             "quotes: line 1 column 2 (char 1)"),
     ])
+    # each partial row counts the violation rows yielded for its bucket
+    assert {int(r["bucket"]): int(r["n_viol"])
+            for _, r in partial.iterrows()} == \
+        {b: int((viol["bucket"] == b).sum()) for b in ref_counters}
     by_payload = dict(zip(viol["detail"], viol["repo"]))
     assert by_payload["null content"] == "r5"
     assert by_payload[
@@ -1105,6 +1107,138 @@ def test_scan_histogram_equals_groupby_histogram(spark, law_tables, table,
         assert want == {}
 
 
+@pytest.fixture(scope="module")
+def violation_table(spark, tmp_path_factory):
+    """A table with every kind of violation row, on disjoint row subsets:
+    parse errors (the synthesized ~1% truncated JSON, and NULL content
+    on JSON rows), sha mismatches (a wrong sha, a NULL sha, NULL
+    content) and disallowed langs (NULL, 'rb')."""
+    p = str(tmp_path_factory.mktemp("violation_repo") / "t")
+    k = F.pmod(F.xxhash64("path"), F.lit(13))
+    (synthesize_repo_table(spark, 1500, n_repos=6)
+        .select("repo", "path", "commit",
+                F.when(k == 1, None).when(k == 2, "rb")
+                 .otherwise(F.col("lang")).alias("lang"),
+                F.when(k != 3, F.col("content")).alias("content"),
+                F.when(k == 4, None).when(k == 5, "0" * 64)
+                 .otherwise(F.col("content_sha")).alias("content_sha"))
+        .repartition(3).write.parquet(p))
+    return p
+
+
+@pytest.mark.parametrize("cap", [1000, 2], ids=["uncapped", "capped"])
+def test_violation_count_equals_violation_rows(spark, violation_table, cap,
+                                               tmp_path, monkeypatch):
+    """Law: ``n_violation_rows`` — summed from the scan's partial rows,
+    or read from the violations sink's parquet footers — equals
+    ``violations.count()``: without a checkpoint, with a checkpoint in
+    chunks smaller than n_buckets, and in a checkpointed run killed
+    after its first chunk and resumed. With a cap of 2 the per-batch
+    cap on sha/lang rows bites; parse-error rows stay uncapped."""
+    df = spark.read.parquet(violation_table)
+    kw = dict(n_buckets=8, n_salts=4, max_err_rate=1.0,
+              max_violation_examples=cap)
+
+    def law(res):
+        assert res.n_violation_rows == res.violations.count()
+        return res.n_violation_rows
+
+    plain = validate_repo_table(spark, df, **kw)
+    n = law(plain)
+    tot = plain.verdict_rows[["n_json_err", "n_sha_bad", "n_lang_bad"]].sum()
+    assert min(tot) > 0, tot
+    # the planted subsets are disjoint: no row is both sha- and lang-bad
+    n_uncapped = int(tot.sum())
+    if cap == 2:
+        assert tot["n_json_err"] < n < n_uncapped
+    else:
+        assert n == n_uncapped
+
+    chunked = validate_repo_table(spark, df, checkpoint_dir=str(
+        tmp_path / "chunked"), chunk_size=3, **kw)
+    n_chunked = law(chunked)
+
+    ck = str(tmp_path / "resumed")
+    record_done = CheckpointManager.record_done
+
+    def killed_after_first_chunk(self, metrics):
+        record_done(self, metrics)
+        raise RuntimeError("killed")
+
+    monkeypatch.setattr(CheckpointManager, "record_done",
+                        killed_after_first_chunk)
+    with pytest.raises(RuntimeError, match="killed"):
+        validate_repo_table(spark, df, checkpoint_dir=ck, chunk_size=3, **kw)
+    monkeypatch.setattr(CheckpointManager, "record_done", record_done)
+    resumed = validate_repo_table(spark, df, checkpoint_dir=ck, chunk_size=3,
+                                  **kw)
+    assert resumed.resumed_buckets == [0, 1, 2]
+    n_resumed = law(resumed)
+    # the cap is per batch, and a chunk's bucket filter changes what a
+    # batch holds: the counts agree across chunkings only uncapped
+    if cap == 1000:
+        assert n_chunked == n_resumed == n
+
+
+def _key_hash_columns(seed, keys):
+    """``C.key_hash`` as it was built from Column calls: the reference
+    its SQL text must equal bit for bit (key sketches in existing
+    checkpoints hold these hashes)."""
+    from functools import reduce
+    from operator import or_
+    nulls = [F.col(k).isNull() for k in keys]
+    mask = reduce(lambda acc, n: acc * 2 + n.cast("long"), nulls,
+                  F.lit(0).cast("long"))
+    return F.xxhash64(F.lit(seed), *[F.col(k) for k in keys],
+                      F.when(reduce(or_, nulls), mask))
+
+
+def _bucket_expr_columns(n_buckets, n_salts):
+    """``bucket_expr`` as it was built from Column calls: the reference
+    its SQL text must equal (materialized layouts and checkpoints hold
+    its row-to-bucket membership)."""
+    return F.pmod(
+        F.xxhash64("repo") + F.pmod(F.xxhash64("path"), F.lit(n_salts)),
+        F.lit(n_buckets),
+    ).cast("int")
+
+
+_key_part = st.one_of(st.none(), st.just(""), st.text(max_size=8))
+# every NULL pattern of a three-part key, then empty and non-ASCII parts
+_KEY_PATTERNS = [tuple(None if m >> i & 1 else v
+                       for i, v in enumerate(("r", "p", "c")))
+                 for m in range(8)] + [("", "", ""), ("ü", "日本", "🙂")]
+
+
+@settings(max_examples=25, deadline=None)
+@given(rows=st.lists(st.tuples(_key_part, _key_part, _key_part),
+                     min_size=1, max_size=10),
+       n_buckets=st.sampled_from((1, 7, 64, 1024)),
+       n_salts=st.sampled_from((1, 4, 8)))
+@example(rows=_KEY_PATTERNS, n_buckets=64, n_salts=8)
+def test_sql_built_hashes_equal_column_built(spark, rows, n_buckets,
+                                             n_salts):
+    """The SQL-text ``C.key_hash`` and ``bucket_expr`` give exactly the
+    values and types the Column-built expressions gave, over NULL,
+    empty and unicode key parts, for the seeds the pipeline uses (and
+    a bigint one) and key tuples of one to three columns."""
+    from schema_guru_spark.operators import constraints as C
+    df = spark.createDataFrame(rows,
+                               "repo string, path string, commit string")
+    pairs = [(C.key_hash(seed, keys), _key_hash_columns(seed, keys))
+             for seed in (0, 0x1CEB, 0x5EED0, 0x5EED1, 2 ** 40)
+             for keys in (("repo", "path", "commit"), ("path",),
+                          ("commit", "repo"))]
+    pairs.append((bucket_expr(n_buckets, n_salts),
+                  _bucket_expr_columns(n_buckets, n_salts)))
+    out = df.select(*[c.alias(f"c{i}") for i, c in enumerate(
+        c for pair in pairs for c in pair)])
+    types = [f.dataType for f in out.schema.fields]
+    assert types[0::2] == types[1::2]
+    for r in out.collect():
+        assert list(r)[0::2] == list(r)[1::2], r
+
+
 @pytest.mark.parametrize("keys", [
     # NULLs at different positions over the same non-NULL values: two
     # distinct keys (xxhash64 alone skips the NULLs and aliases them)
@@ -1203,16 +1337,19 @@ def _group_plans(spark, after):
     return out
 
 
-def test_run_validation_job_count_guard(spark, small_table):
+def test_run_validation_job_count_guard(spark, small_table, tmp_path):
     """The validation job is bound by fixed per-job cost, so its Spark
     job count is pinned: one run_validation.main call submits at most
-    10 jobs — the input's schema read, 6 for the validation scan and
-    its violations, 3 for the constraint suite's one key aggregate,
-    which reads no content (31, 17, then 15 before). No executed plan
-    holds a grouped Python node: the bucket fan-in is not a Spark
-    stage. The no-checkpoint verdicts are a local relation — no
-    Exchange, no Python node — so later actions never re-run the
-    scan."""
+    5 jobs — the input's schema read, ONE for the validation scan
+    (the violation count rides its partial rows), and at most 3 for the
+    constraint suite's one key aggregate, which reads no content (31,
+    17, 15, then 10 before). No executed plan holds a grouped Python
+    node: the bucket fan-in is not a Spark stage. The no-checkpoint
+    verdicts are a local relation — no Exchange, no Python node — so
+    later actions never re-run the scan. With --checkpoint the
+    violation count comes from the violations sink's parquet footers:
+    the validate group runs the scan and the violations write, and a
+    resumed run none, reporting the same count."""
     from conftest import executed_plans, last_execution_id
     from schema_guru_spark.run_validation import _next_job_id, main as run_main
     argv = ["--input", small_table, "--cpus", "4", "--buckets", "8",
@@ -1228,7 +1365,8 @@ def test_run_validation_job_count_guard(spark, small_table):
                         if g == "timed-constraints"]
     spark.catalog.clearCache()
     assert out["rows"] == 3000 and out["sha_bad"] == 3
-    assert n_jobs <= 10, (n_jobs, groups)
+    assert n_jobs <= 5, (n_jobs, groups)
+    assert groups.count("timed-validate") == 1, groups
     # the constraint leg is the one key aggregate, and no scan of it
     # reads content (drift comes from the scan's histograms)
     assert groups.count("timed-constraints") <= 3, groups
@@ -1248,7 +1386,18 @@ def test_run_validation_job_count_guard(spark, small_table):
     rows = res.verdicts.collect()
     assert _next_job_id(spark) == lo   # served from the driver
     assert sum(r["n_rows"] for r in rows) == 3000
-    res.violations.unpersist()
+
+    ck = argv + ["--checkpoint", str(tmp_path / "ck")]
+    validate_jobs, counts = [], []
+    for _ in range(2):   # a first run, then one that resumes every bucket
+        lo = _next_job_id(spark)
+        counts.append(run_main(ck)["n_violation_rows"])
+        validate_jobs.append([g for g, _ in _jobs_in(
+            spark, lo, _next_job_id(spark))].count("timed-validate"))
+        spark.catalog.clearCache()
+    assert validate_jobs == [2, 0], validate_jobs
+    assert counts == [out["n_violation_rows"]] * 2, (counts, out)
+    assert out["n_violation_rows"] > 0
 
 
 def test_run_validation_task_time_per_call(spark, small_table):
@@ -1332,7 +1481,7 @@ def test_resumed_run_refuses_verdicts_without_histogram(spark, small_table,
 
 def test_run_validation_releases_its_caches(spark, small_table):
     """run_validation.main leaves nothing in the session's CacheManager:
-    the scan output and the violations it persists are released."""
+    without a checkpoint it persists nothing."""
     from schema_guru_spark.run_validation import main as run_main
     spark.catalog.clearCache()
     run_main(["--input", small_table, "--cpus", "4", "--buckets", "8",
