@@ -3,8 +3,12 @@ distribution drift (north_rule extensions; no reference counterpart,
 semantics from BASELINE.json — SURVEY.md §2 'Similarity / join-like ops'
 note).
 
-All built-in Spark: HLL++ via approx_count_distinct, broadcast anti-joins,
-window-function CDFs. Scale notes per operator inline.
+Built-in Spark — broadcast anti-joins, window-function CDFs, HLL++ via
+approx_count_distinct in the standalone uniqueness screens — plus one
+mergeable key sketch: HyperLogLog registers over ``key_hash`` values,
+folded in Python tasks (``hll_registers``) and estimated on the driver
+(``hll_estimate``); the validation job's uniqueness screen uses these.
+Scale notes per operator inline.
 """
 
 from __future__ import annotations
@@ -205,9 +209,10 @@ def uniqueness_hashed(df: DataFrame, keys: Sequence[str], rsd: float = 0.02,
     independently-seeded 64-bit hash columns (a caller that projects
     them once and reuses the projection for several checks) — the
     distinct runs on them directly instead of hashing the hashes a
-    second time per row. ``pipeline.key_counts`` computes the same
-    fields from one groupBy of such a hash pair: the exact count is its
-    number of groups, and the approximate count runs over the groups.
+    second time per row. ``pipeline.key_counts`` computes the exact
+    count from one groupBy of such a hash pair (its number of groups);
+    the pipeline's approximate count is the key sketch's
+    (``hll_registers``), not HLL++.
 
     Each half is ``key_hash``, so NULL key parts compare equal at the
     same position, as in ``uniqueness_exact``.

@@ -37,6 +37,12 @@ Scale design (the whole point):
     validation's one Spark job: nothing is cached, the violation count
     is the partial rows' ``n_viol`` sum, and the violations stay a lazy
     view of the scan.
+  * The uniqueness screen's key sketch rides the same scan: the
+    projection carries the 64-bit key hash (``C.key_hash_sql``), each
+    scan task folds it into HyperLogLog registers (``C.hll_registers``)
+    and ends with one sketch row, and the driver merges the tasks'
+    registers (element-wise max, so any split of the rows gives the
+    same registers).
   * The job is bound by fixed per-job cost, and the py4j round trips
     that build a plan from Column calls are part of it: the scan's
     projection, the bucket, the key hashes and the length bin are
@@ -57,16 +63,20 @@ Scale design (the whole point):
   * Key-level checks (uniqueness, referential integrity) run in one
     key aggregate (``key_counts``) that reads only repo, path, commit
     and lang: a groupBy of the 128-bit key hash and one global
-    aggregate over its groups. ``run_validation`` overlaps it with the
-    scan and takes drift from the scan's verdict rows, so no constraint
-    job reads content; a standalone ``constraint_report`` builds the
-    same histogram with one ``groupBy(bucket, bin)`` aggregate.
+    sum/count aggregate over its groups, all declarative. The distinct
+    estimate is the scan's key sketch, so no HLL++ aggregate runs.
+    ``run_validation`` overlaps the key aggregate with the scan and
+    takes drift and the sketch from the scan, so no constraint job
+    reads content; a standalone ``constraint_report`` builds the same
+    histogram with one ``groupBy(bucket, bin)`` aggregate and the same
+    registers with one map over the key hash (``key_sketch``).
   * Resume: buckets are processed in chunks; each finished chunk writes
-    its violations and verdicts sinks, then appends to a checkpoint
-    manifest (plans/checkpoint.py), in a driver-local directory. A
-    restart skips finished buckets entirely — the bucket filter is
-    pushed into the scan. The violation count then comes from the
-    violations sink's parquet footers, so resumed chunks count too.
+    its violations, key sketch and verdicts sinks, then appends to a
+    checkpoint manifest (plans/checkpoint.py), in a driver-local
+    directory. A restart skips finished buckets entirely — the bucket
+    filter is pushed into the scan. The violation count then comes from
+    the violations sink's parquet footers and the registers from every
+    chunk's key sketch sink, so resumed chunks count too.
 
 Reference parity: per-doc derivation and merge are the schema-guru
 semantics (core/microschema.py, cited there); violation routing replaces
@@ -76,6 +86,7 @@ the reference's errors.collect-to-driver (SchemaDerive.scala:98).
 from __future__ import annotations
 
 import json
+import os
 from dataclasses import dataclass, field
 from typing import Iterator, Optional, Sequence
 
@@ -259,8 +270,7 @@ def _scan_rows(**cols) -> pd.DataFrame:
     return pd.DataFrame({c: cols.get(c) for c in _SCAN_COLS})
 
 
-def _scan_pass(ctx: SchemaContext, max_violation_examples: int,
-               key_sketch: bool = False):
+def _scan_pass(ctx: SchemaContext, max_violation_examples: int):
     """mapInPandas fn: per-batch vectorized flag and length-bin counting
     + per-doc JSON derivation folded into per-(task, bucket) states.
     Violation rows are yielded as the batches find them: sha/lang rows
@@ -268,10 +278,8 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int,
     uncapped. The task ends with one partial row per bucket it saw
     (counters, ``n_viol`` — the violation rows it yielded for the
     bucket —, the length histogram over the batches' ``hbin`` slots,
-    and the serialized state or NULL).
-    With ``key_sketch`` the batches carry the key hash ``kh``, and a
-    task that saw rows also ends with one row of its HyperLogLog
-    registers over those hashes (``C.hll_registers``)."""
+    and the serialized state or NULL), then one row of its HyperLogLog
+    registers over the batches' key hashes ``kh`` (``C.hll_registers``)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -281,7 +289,7 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int,
         states: dict[int, dict] = {}
         counters: dict[int, dict] = {}
         hists: dict[int, np.ndarray] = {}
-        regs = np.zeros(C.HLL_M, np.uint8) if key_sketch else None
+        regs = np.zeros(C.HLL_M, np.uint8)
 
         def bucket_counter(b):
             if b not in counters:
@@ -295,8 +303,7 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int,
             # on 64-bucket batches (measured: full scan pass 12.9s vs
             # 6.0s for Arrow transfer + kernel at 8 cores / 8M rows)
             bk = pdf["bucket"].to_numpy()
-            if key_sketch:
-                C.hll_registers(pdf["kh"].to_numpy(), regs)
+            C.hll_registers(pdf["kh"].to_numpy(), regs)
             sha_ok = pdf["sha_ok"].to_numpy()
             lang_ok = pdf["lang_ok"].to_numpy()
             ubk, inv = np.unique(bk, return_inverse=True)
@@ -362,8 +369,7 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int,
                 hist=[hists[b] for b in buckets],
                 state=[dumps(states[b]) if b in states else None
                        for b in buckets])
-            if key_sketch:
-                yield _scan_rows(sketch=[regs.tobytes()])
+            yield _scan_rows(sketch=[regs.tobytes()])
 
     return fn
 
@@ -480,8 +486,30 @@ class ValidationResult:
     verdict_rows: pd.DataFrame
     # the number of rows in ``violations``, counted without a Spark job
     n_violation_rows: int
+    # the HyperLogLog registers (C.hll_registers) of every validated
+    # row's key hash (_KEY_HASH), resumed chunks' included: the
+    # uniqueness screen's distinct estimate (constraint_summary)
+    key_sketch: np.ndarray
     processed_buckets: list = field(default_factory=list)
     resumed_buckets: list = field(default_factory=list)
+
+
+def _require_key_sketches(ckpt_dir: str) -> None:
+    """Refuse a checkpoint with a finished chunk that has no key sketch
+    sink: it was written before every checkpointed run kept one, and
+    the registers of a resumed run would miss that chunk's rows. Each
+    chunk writes its key sketch before its verdicts, so a verdicts
+    chunk without a key sketch chunk is never a crash window."""
+    def chunks(sink):
+        d = os.path.join(ckpt_dir, sink)
+        return ({f for f in os.listdir(d) if f.startswith("chunk=")}
+                if os.path.isdir(d) else set())
+    missing = chunks("verdicts") - chunks("key_sketch")
+    if missing:
+        raise ValueError(
+            f"{ckpt_dir}: finished chunks {sorted(missing)} have no key "
+            "sketch (written by an older version of the validation "
+            "job); validate into a new checkpoint directory")
 
 
 def read_verdicts(paths: Sequence[str], schema: str) -> pd.DataFrame:
@@ -537,7 +565,10 @@ def validate_repo_table(
     way. ``n_violation_rows`` is the number of violation rows the result
     holds, summed from the partial rows' ``n_viol`` (or, with a
     checkpoint, from the violations sink's parquet footers): it costs no
-    Spark job.
+    Spark job. ``key_sketch`` rides the scan too: the projection gains
+    the 64-bit key hash, each scan task folds it into HyperLogLog
+    registers (``C.hll_registers``), and the result's registers are the
+    element-wise max of every task's.
 
     Without a checkpoint, the result is the verdict rows as a local
     relation (collecting it launches no Spark job) and the violations
@@ -547,21 +578,21 @@ def validate_repo_table(
     URI schemes before any scan). There each chunk's scan is persisted
     while the chunk writes, in this order: its violations sink (a Spark
     write from the persisted scan, since parse-error rows are
-    unbounded); its verdicts sink and, with ``keep_state``, its key
-    sketch, both written from the driver's rows with pyarrow; and last
-    the manifest append, the chunk's commit point, whose per-bucket
-    metrics come from the same rows. The result's verdicts are then
-    the verdicts sink's rows, resumed chunks' included, read back with
-    pyarrow into a local relation, its violations the violations sink
-    read under its known schema, and ``n_violation_rows`` the sink's
-    row count, resumed chunks' included.
+    unbounded); its key sketch sink (the chunk's row count and
+    registers) and its verdicts sink, both written from the driver's
+    rows with pyarrow; and last the manifest append, the chunk's commit
+    point, whose per-bucket metrics come from the same rows. The
+    result's verdicts are then the verdicts sink's rows, resumed
+    chunks' included, read back with pyarrow into a local relation, its
+    violations the violations sink read under its known schema,
+    ``n_violation_rows`` the sink's row count and ``key_sketch`` the
+    merge of every chunk's key sketch, resumed chunks' included. A
+    checkpoint with a finished chunk that has no length histogram or no
+    key sketch is refused before any scan (``ValueError``).
 
-    ``keep_state`` keeps what the incremental view re-merges (see
-    plans/incremental.py): each verdict row's raw schema state and,
-    with a checkpoint, one key sketch per chunk. The sketch rides the
-    scan: the projection gains the 64-bit key hash, each scan task
-    folds it into HyperLogLog registers (``C.hll_registers``), and the
-    chunk's sketch is the element-wise max of its tasks' registers.
+    ``keep_state`` keeps each verdict row's raw schema state, which the
+    incremental view re-merges (see plans/incremental.py) with the
+    chunks' key sketches.
     """
     ctx = ctx or SchemaContext.make(0)
     from schema_guru_spark.operators.infer import _require_commutative
@@ -584,11 +615,11 @@ def validate_repo_table(
     ckpt = CheckpointManager(spark, checkpoint_dir) if checkpoint_dir else None
     done = ckpt.finished_buckets() if ckpt else set()
     if done:
-        # refuse a checkpoint of an older verdict format before any scan
+        # refuse a checkpoint of an older format before any scan
         read_verdicts([f"{ckpt.dir}/verdicts"], _VERDICT_SCHEMA)
+        _require_key_sketches(ckpt.dir)
     remaining = [b for b in range(n_buckets) if b not in done]
     chunk_size = chunk_size or n_buckets
-    key_sketch = keep_state and ckpt is not None
 
     # a table written by materialize_bucketed already carries bucket as
     # a partition column — reuse it so chunk/resume filters prune at the
@@ -634,7 +665,6 @@ def validate_repo_table(
     # boundary: sha/lang checks and the length already happened
     # JVM-side, so non-JSON content (here ~60% of bytes) is nulled
     # before serialization to Python
-    kh = [f"{C.key_hash_sql(*_KEY_HASH)} AS kh"] if key_sketch else []
     prepared = df.selectExpr(
         bucket, "repo", "lang",
         "octet_length(content) AS clen",
@@ -642,10 +672,9 @@ def validate_repo_table(
          if has_sha else "true AS sha_ok"),
         f"{lang_ok} AS lang_ok",
         "CASE WHEN lang = 'json' THEN content END AS content",
-        *kh,
+        f"{C.key_hash_sql(*_KEY_HASH)} AS kh",
     ).selectExpr("bucket", "repo", "lang", "content", "sha_ok", "lang_ok",
-                 f"{length_bin_sql('clen')} AS hbin",
-                 *(["kh"] if key_sketch else []))
+                 f"{length_bin_sql('clen')} AS hbin", "kh")
 
     verdict_schema = (_VERDICT_SCHEMA_STATE if keep_state
                       else _VERDICT_SCHEMA)
@@ -659,13 +688,14 @@ def validate_repo_table(
     chunk_verdicts = []
     all_violations = []
     n_violation_rows = 0
+    sketch = np.zeros(C.HLL_M, np.uint8)
     for i in range(0, len(remaining), chunk_size):
         chunk = remaining[i:i + chunk_size]
         sub = (prepared.where(f"bucket IN ({', '.join(map(str, chunk))})")
                if len(chunk) < n_buckets or not computed_bucket
                else prepared)
-        raw = sub.mapInPandas(
-            _scan_pass(ctx, max_violation_examples, key_sketch), _SCAN_OUT)
+        raw = sub.mapInPandas(_scan_pass(ctx, max_violation_examples),
+                              _SCAN_OUT)
         if ckpt:
             # the violations write is a second action over the scan
             raw = raw.persist()
@@ -679,6 +709,7 @@ def validate_repo_table(
         is_sketch = parts["sketch"].notna()
         verdict_rows = _fold_buckets(parts[~is_sketch], ctx, max_err_rate,
                                      keep_state=keep_state)
+        chunk_sketch = C.hll_merge(parts["sketch"][is_sketch])
 
         if ckpt:
             # idempotent per-chunk sinks: each REPLACES this chunk's
@@ -689,17 +720,18 @@ def validate_repo_table(
             # converges to the same bytes.
             violations.write.mode("overwrite") \
                 .parquet(f"{ckpt.dir}/violations/chunk={chunk[0]}")
+            # the key sketch before the verdicts: a finished chunk's
+            # verdicts without a key sketch then mark an older
+            # checkpoint, never a crash (_require_key_sketches)
+            write_sink(f"{ckpt.dir}/key_sketch/chunk={chunk[0]}",
+                       pa.table({
+                           "n_rows": [int(verdict_rows["n_rows"].sum())],
+                           "sketch": [chunk_sketch.tobytes()],
+                       }, arrow_schema(_KEY_SKETCH_SCHEMA)))
             write_sink(f"{ckpt.dir}/verdicts/chunk={chunk[0]}",
                        pa.Table.from_pandas(
                            verdict_rows, arrow_schema(verdict_schema),
                            preserve_index=False))
-            if key_sketch:
-                write_sink(f"{ckpt.dir}/key_sketch/chunk={chunk[0]}",
-                           pa.table({
-                               "n_rows": [int(verdict_rows["n_rows"].sum())],
-                               "sketch": [C.hll_merge(
-                                   parts["sketch"][is_sketch]).tobytes()],
-                           }, arrow_schema(_KEY_SKETCH_SCHEMA)))
             # every bucket of the chunk is done, with or without rows;
             # to_dict("records") hands back Python scalars, so the
             # manifest's JSON metrics hold true/false, not "True"
@@ -717,11 +749,16 @@ def validate_repo_table(
             chunk_verdicts.append(verdict_rows)
             all_violations.append(violations)
             n_violation_rows += int(parts["n_viol"][~is_sketch].sum())
+            np.maximum(sketch, chunk_sketch, out=sketch)
 
     if ckpt:
         verdict_rows = read_verdicts([f"{ckpt.dir}/verdicts"],
                                      verdict_schema)
         n_violation_rows = count_rows(f"{ckpt.dir}/violations")
+        sketch = C.hll_merge(
+            read_sink(f"{ckpt.dir}/key_sketch",
+                      arrow_schema(_KEY_SKETCH_SCHEMA))
+            .column("sketch").to_pylist())
         try:
             # chunk=N partition dirs: drop the discovered partition column
             violations_df = spark.read.schema(_VIOLATION_SCHEMA) \
@@ -741,14 +778,15 @@ def validate_repo_table(
         violations=violations_df,
         verdict_rows=verdict_rows,
         n_violation_rows=n_violation_rows,
+        key_sketch=sketch,
         processed_buckets=remaining,
         resumed_buckets=sorted(done),
     )
 
 
-# the HLL++ screen's relative standard deviation and pass tolerance (the
-# defaults of C.uniqueness_hashed)
-_HLL_RSD, _HLL_TOLERANCE = 0.02, 0.05
+# the uniqueness screen's pass tolerance on the key sketch's relative
+# gap to the exact distinct count (the default of C.uniqueness_hashed)
+_HLL_TOLERANCE = 0.05
 
 
 def key_counts(df: DataFrame, repo_dims: Optional[DataFrame] = None) -> dict:
@@ -758,15 +796,15 @@ def key_counts(df: DataFrame, repo_dims: Optional[DataFrame] = None) -> dict:
     ``groupBy`` of the 128-bit key pre-hash (two independently-seeded
     ``C.key_hash`` columns, so NULL key parts compare equal at the same
     position, as in ``C.uniqueness_exact`` and ``key_violation_rows``),
-    then one global aggregate over the groups: the row count, the exact
-    distinct count (the number of groups), ``approx_count_distinct`` of
-    the same hash pair at the same rsd (HLL++ ignores duplicates, so
-    over the groups it reads what it reads over the rows; it is the
-    screen ``C.uniqueness_hashed(prehashed=True)`` computes) and the
-    NULL counts of the key columns and lang. One 64-bit hash would
-    expect ~27 phantom key collisions at the north rule's 10^12 rows
-    (birthday n²/2⁶⁵); the pair expects ~1.5e-15, while the shuffle
-    still carries 16 bytes a key instead of the raw strings.
+    then one global sum/count aggregate over the groups: the row count,
+    the exact distinct count (the number of groups) and the NULL counts
+    of the key columns and lang. Both are declarative aggregates that
+    whole-stage codegen compiles; the distinct estimate is not here but
+    in the key sketch the validation scan builds (``key_sketch`` for a
+    table on its own). One 64-bit hash would expect ~27 phantom key
+    collisions at the north rule's 10^12 rows (birthday n²/2⁶⁵); the
+    pair expects ~1.5e-15, while the shuffle still carries 16 bytes a
+    key instead of the raw strings.
 
     Referential integrity: every fact repo must resolve against the repo
     dimension via a broadcast LEFT ANTI join. ``repo_dims`` is a
@@ -776,8 +814,8 @@ def key_counts(df: DataFrame, repo_dims: Optional[DataFrame] = None) -> dict:
     matches (NULL = NULL is not true), so the orphan count IS the repo
     null count and no join runs.
 
-    Returns ``{n_rows, n_exact_distinct, n_approx_distinct,
-    null_counts, n_ri_orphans}``, the input of ``constraint_summary``.
+    Returns ``{n_rows, n_exact_distinct, null_counts, n_ri_orphans}``,
+    an input of ``constraint_summary``.
     """
     key_cols = (*_KEY, "lang")
     # the plan from SQL text: built from Column calls, the projection
@@ -792,8 +830,6 @@ def key_counts(df: DataFrame, repo_dims: Optional[DataFrame] = None) -> dict:
                      *[F.expr(f"sum(_n_{c}) AS _n_{c}") for c in key_cols]))
     head = groups.selectExpr(
         "sum(n) AS n", "count(1) AS n_exact",
-        "approx_count_distinct(struct(kh1 AS h1, kh2 AS h2), "
-        f"{_HLL_RSD}D) AS n_approx",
         *[f"sum(_n_{c}) AS `{c}`" for c in key_cols],
     ).collect()[0]
     # sums over zero rows are NULL -> coalesce; the RAW null counts feed
@@ -803,12 +839,29 @@ def key_counts(df: DataFrame, repo_dims: Optional[DataFrame] = None) -> dict:
     return {
         "n_rows": int(head["n"] or 0),
         "n_exact_distinct": head["n_exact"],
-        "n_approx_distinct": head["n_approx"],
         "null_counts": null_counts,
         "n_ri_orphans": (C.referential_violations(
             df.select("repo"), repo_dims, "repo", "repo").count()
             if repo_dims is not None else null_counts["repo"]),
     }
+
+
+def key_sketch(df: DataFrame) -> np.ndarray:
+    """The HyperLogLog registers of the table's key hash (``_KEY_HASH``)
+    — what ``validate_repo_table`` folds in its scan — from one
+    ``mapInPandas`` over that one column: each task folds its batches
+    with ``C.hll_registers`` and the driver merges the tasks'
+    registers, so one register rule serves every path."""
+    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        regs = None
+        for pdf in batches:
+            regs = C.hll_registers(pdf["kh"].to_numpy(), regs)
+        if regs is not None:
+            yield pd.DataFrame({"sketch": [regs.tobytes()]})
+
+    rows = (df.selectExpr(f"{C.key_hash_sql(*_KEY_HASH)} AS kh")
+              .mapInPandas(fold, "sketch binary").collect())
+    return C.hll_merge(r["sketch"] for r in rows)
 
 
 def length_hists(df: DataFrame, n_buckets: int = 64,
@@ -861,12 +914,16 @@ def bucket_psi(hist_rows: pd.DataFrame) -> dict:
     return out
 
 
-def constraint_summary(keys: dict, hist_rows: pd.DataFrame) -> dict:
-    """The constraint report from ``key_counts`` and per-bucket length
-    histograms (the validation scan's verdict rows, or ``length_hists``):
+def constraint_summary(keys: dict, hist_rows: pd.DataFrame,
+                       sketch: np.ndarray) -> dict:
+    """The constraint report from ``key_counts``, per-bucket length
+    histograms (the validation scan's verdict rows, or ``length_hists``)
+    and the key sketch's registers (the scan's ``key_sketch``, or
+    ``key_sketch``):
 
-      uniqueness of (repo,path,commit): exact distinct count, the HLL++
-        estimate, their relative gap against the tolerance, and
+      uniqueness of (repo,path,commit): exact distinct count, the
+        sketch's estimate (Ertl's estimator, ``C.hll_estimate``, ~0.81%
+        standard error), their relative gap against the tolerance, and
         ``keys_unique``;
       referential integrity: ``n_ri_orphans``;
       drift: ``worst_bucket_psi``, the largest ``bucket_psi``;
@@ -877,7 +934,7 @@ def constraint_summary(keys: dict, hist_rows: pd.DataFrame) -> dict:
                    "content": int(sum(h[HIST_NULL]
                                       for h in hist_rows["hist"]))}
     n_rows, n_exact = keys["n_rows"], keys["n_exact_distinct"]
-    n_approx = keys["n_approx_distinct"]
+    n_approx = round(C.hll_estimate(sketch))
     rel_err = abs(n_approx - n_exact) / max(n_exact, 1)
     n_total = max(n_rows, 1)
     return {
@@ -903,17 +960,19 @@ def constraint_report(spark: SparkSession, df: DataFrame,
     """Key-level constraint suite over the repo table, standalone
     (``constraint_summary`` lists the checks).
 
-    Job shape: two aggregates, run one after the other. ``key_counts``
+    Job shape: three passes, run one after the other. ``key_counts``
     is one key aggregate over repo, path, commit and lang, plus the RI
     anti-join when ``repo_dims`` is given; ``length_hists`` is one
-    ``groupBy(bucket, bin)`` aggregate, the only one that reads content.
-    ``run_validation`` runs only the key aggregate, overlapped with the
-    validation scan, and takes the histograms from the scan's verdict
-    rows; both report the same fields. ``spark`` is not used; it keeps
-    the signature callers rely on.
+    ``groupBy(bucket, bin)`` aggregate, the only one that reads content;
+    ``key_sketch`` is one map over the key hash. ``run_validation`` runs
+    only the key aggregate, overlapped with the validation scan, and
+    takes the histograms and the registers from the scan; both report
+    the same fields. ``spark`` is not used; it keeps the signature
+    callers rely on.
     """
     return constraint_summary(key_counts(df, repo_dims),
-                              length_hists(df, n_buckets, n_salts))
+                              length_hists(df, n_buckets, n_salts),
+                              key_sketch(df))
 
 
 def key_violation_rows(df: DataFrame, repo_dims: Optional[DataFrame] = None,

@@ -221,7 +221,7 @@ def main(argv=None) -> dict:
                                 max_err_rate=args.max_err_rate)
         # caches nothing: a run without a checkpoint persists no plan
         # the timed run could read
-        constraint_summary(key_counts(df), w.verdict_rows)
+        constraint_summary(key_counts(df), w.verdict_rows, w.key_sketch)
 
     first_job = _next_job_id(spark)
     t0 = time.perf_counter()
@@ -233,8 +233,10 @@ def main(argv=None) -> dict:
     # Python workers, while the key aggregate is pure JVM and reads no
     # content). Drift and content completeness come from the length
     # histograms in the scan's verdict rows, so no constraint job reads
-    # content. On a real cluster this is two concurrent jobs in one
-    # SparkSession, standard scheduling.
+    # content, and the uniqueness screen's key sketch rides the scan, so
+    # the key leg is declarative aggregates only (no HLL++). On a real
+    # cluster this is two concurrent jobs in one SparkSession, standard
+    # scheduling.
     from concurrent.futures import ThreadPoolExecutor
 
     def _grouped_keys():
@@ -260,7 +262,8 @@ def main(argv=None) -> dict:
         # already on the driver: no Spark job sums or counts them
         verdicts = res.verdict_rows.to_dict("records")
         t_validate = time.perf_counter() - t0
-        rep = constraint_summary(f_keys.result(), res.verdict_rows)
+        rep = constraint_summary(f_keys.result(), res.verdict_rows,
+                                 res.key_sketch)
     dt = time.perf_counter() - t0
     spark.sparkContext.setJobGroup("", "")
     task_times = _group_task_times(

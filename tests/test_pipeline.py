@@ -598,7 +598,7 @@ def test_scan_pass_vectorized_equals_naive_reference():
     pdf["kh"] = np.random.default_rng(3).integers(
         -2 ** 63, 2 ** 63 - 1, len(rows), dtype=np.int64)
     # two batches: the task's one sketch row covers both
-    out = list(_scan_pass(ctx, max_violation_examples=100, key_sketch=True)(
+    out = list(_scan_pass(ctx, max_violation_examples=100)(
         iter([pdf.iloc[:4], pdf.iloc[4:]])))
     got = pd.concat(out, ignore_index=True)
 
@@ -610,11 +610,6 @@ def test_scan_pass_vectorized_equals_naive_reference():
     assert sk.drop("sketch").isna().all()
     assert sk["sketch"] == C.hll_registers(pdf["kh"]).tobytes()
     got = got[~is_sketch]
-    # without key_sketch the same rows, and no sketch row
-    plain = pd.concat(_scan_pass(ctx, max_violation_examples=100)(
-        iter([pdf.iloc[:4], pdf.iloc[4:]])), ignore_index=True)
-    assert plain["sketch"].isna().all()
-    pd.testing.assert_frame_equal(plain, got, check_dtype=False)
 
     # naive reference: per-row fold
     ref_states: dict[int, dict] = {}
@@ -988,9 +983,13 @@ def _duckdb_psi(t) -> dict:
 def test_constraint_report_equals_standalone_operators(spark, law_tables,
                                                        table):
     """Law: constraint_report (one key aggregate, one histogram
-    aggregate) reports, field for field, what the standalone operators
-    compute over the same table, and its drift what an independent
-    DuckDB query computes over the same integer bin edges."""
+    aggregate, one key sketch) reports, field for field, what the
+    standalone operators compute over the same table, its drift what an
+    independent DuckDB query computes over the same integer bin edges,
+    and its distinct estimate that of HyperLogLog registers folded from
+    the key hashes collected on the driver."""
+    import numpy as np
+
     from schema_guru_spark.operators import constraints as C
     from schema_guru_spark.pipeline import bucket_psi, length_hists
     nb, ns = 16, 4
@@ -1004,6 +1003,12 @@ def test_constraint_report_equals_standalone_operators(spark, law_tables,
                        .alias("kh2")))
     uniq = C.uniqueness_hashed(slim, ["kh1", "kh2"],
                                prehashed=True).collect()[0]
+    # the sketch's hash, collected apart from any scan that folds it
+    hashes = np.array([r[0] for r in df.select(
+        C.key_hash(0x1CEB, ("repo", "path", "commit"))).collect()],
+        np.int64)
+    n_approx = round(C.hll_estimate(C.hll_registers(hashes)))
+    rel_err = abs(n_approx - uniq["n_exact"]) / max(uniq["n_exact"], 1)
     nulls = df.agg(F.count(F.lit(1)).alias("n"),
                    *[F.sum(F.col(c).isNull().cast("int")).alias(c)
                      for c in (*key_cols, "content")]).collect()[0]
@@ -1026,9 +1031,9 @@ def test_constraint_report_equals_standalone_operators(spark, law_tables,
     assert rep == {
         "n_rows": uniq["n_rows"],
         "n_exact_distinct": uniq["n_exact"],
-        "n_approx_distinct": uniq["n_approx"],
-        "hll_rel_err": float(uniq["rel_err"]),
-        "hll_ok": bool(uniq["hll_ok"]),
+        "n_approx_distinct": n_approx,
+        "hll_rel_err": rel_err,
+        "hll_ok": rel_err <= 0.05,
         "keys_unique": uniq["n_rows"] == uniq["n_exact"],
         "n_ri_orphans": ri_self,
         "worst_bucket_psi": pytest.approx(max(psi.values(), default=0.0),
@@ -1342,9 +1347,10 @@ def test_run_validation_job_count_guard(spark, small_table, tmp_path):
     job count is pinned: one run_validation.main call submits at most
     5 jobs — the input's schema read, ONE for the validation scan
     (the violation count rides its partial rows), and at most 3 for the
-    constraint suite's one key aggregate, which reads no content (31,
-    17, 15, then 10 before). No executed plan holds a grouped Python
-    node: the bucket fan-in is not a Spark stage. The no-checkpoint
+    constraint suite's one key aggregate, which reads no content and
+    runs no HLL++ (the key sketch rides the scan) (31, 17, 15, then 10
+    before). No executed plan holds a grouped Python node: the bucket
+    fan-in is not a Spark stage. The no-checkpoint
     verdicts are a local relation — no Exchange, no Python node — so
     later actions never re-run the scan. With --checkpoint the
     violation count comes from the violations sink's parquet footers:
@@ -1373,6 +1379,10 @@ def test_run_validation_job_count_guard(spark, small_table, tmp_path):
     reads = [line for p in constraint_plans for line in p.splitlines()
              if "ReadSchema:" in line]
     assert reads and not any("content" in r for r in reads), reads
+    # no HyperLogLogPlusPlus aggregate (a plan prints it under its SQL
+    # name)
+    hll = [p for p in constraint_plans if "approx_count_distinct" in p]
+    assert not hll, hll
     grouped = [i for i, p in plans if "FlatMapGroupsInPandas" in p]
     assert plans and not grouped, grouped
 
@@ -1487,3 +1497,117 @@ def test_run_validation_releases_its_caches(spark, small_table):
     run_main(["--input", small_table, "--cpus", "4", "--buckets", "8",
               "--salts", "4"])
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_resumed_run_refuses_chunks_without_key_sketch(spark, small_table,
+                                                       tmp_path):
+    """A checkpoint with a finished chunk that has no key sketch sink was
+    written before every checkpointed run kept one: a resumed run
+    refuses it, naming the checkpoint, before any Spark job, instead of
+    estimating distinct keys over part of the table."""
+    import re
+    import shutil
+
+    from schema_guru_spark.run_validation import _next_job_id, main as run_main
+    ck = str(tmp_path / "ck")
+    argv = ["--input", small_table, "--cpus", "4", "--buckets", "8",
+            "--salts", "4", "--checkpoint", ck, "--chunk-size", "4"]
+    run_main(argv)
+    shutil.rmtree(f"{ck}/key_sketch/chunk=4")
+    df = spark.read.parquet(small_table)
+    lo = _next_job_id(spark)
+    with pytest.raises(ValueError, match=re.escape(ck)):
+        validate_repo_table(spark, df, checkpoint_dir=ck, n_buckets=8,
+                            n_salts=4, chunk_size=4)
+    assert _next_job_id(spark) == lo
+    with pytest.raises(ValueError, match=r"chunk=4"):
+        run_main(argv)
+    spark.sparkContext.setJobGroup("", "")   # left set by the raising run
+
+
+def test_run_validation_warmup_reports_plain_run_constraints(spark,
+                                                             small_table):
+    """--warmup runs the measured section first, unmeasured; the report
+    it then gives carries a plain run's constraints."""
+    from schema_guru_spark.run_validation import main as run_main
+    argv = ["--input", small_table, "--cpus", "4", "--buckets", "8",
+            "--salts", "4"]
+    warm = run_main(argv + ["--warmup", "1"])
+    assert warm["rows"] == 3000
+    assert warm["constraints"] == run_main(argv)["constraints"]
+
+
+def test_one_distinct_estimate_everywhere(spark, tmp_path, monkeypatch):
+    """Law: the key sketch's registers do not depend on how the rows are
+    split, so every path that reports uniqueness reports the same
+    distinct estimate over the same rows, exactly: the job at 1 and 4
+    CPUs, checkpointed in chunks of 8 and 3 buckets, killed after its
+    first chunk and resumed, the standalone constraint_report, and the
+    incremental cumulative view after a base and two appends that end
+    with the same rows. The table plants duplicate keys and NULL key
+    parts (equal at the same position: one key)."""
+    import numpy as np
+
+    from schema_guru_spark.operators import constraints as C
+    from schema_guru_spark.plans.incremental import incremental_validate
+    from schema_guru_spark.run_validation import main as run_main
+    from schema_guru_spark.sources.catalog import read_table
+    from schema_guru_spark.sources.iceberg_meta import append_snapshot
+
+    schema = [("repo", "string"), ("path", "string"), ("commit", "string"),
+              ("lang", "string"), ("content", "string")]
+    rows = [{"repo": f"r{i % 7}", "path": f"p/{i}", "commit": f"c{i % 3}",
+             "lang": ("json", "py")[i % 5 == 0],
+             "content": json.dumps({"i": i})} for i in range(400)]
+    for i in range(0, 60, 6):       # NULL key parts at every position
+        rows[i][("repo", "path", "commit")[i // 6 % 3]] = None
+    rows += [dict(rows[i]) for i in range(3, 400, 40)]     # duplicates
+    rows += [{**rows[6], "content": "{}"}]   # NULL at the same position
+    tp, inc = str(tmp_path / "repos"), str(tmp_path / "inc")
+    for lo, hi in ((0, 200), (200, 330), (330, len(rows))):
+        append_snapshot(tp, rows[lo:hi], schema, partition_by="lang")
+        cum = incremental_validate(spark, tp, inc, n_buckets=8,
+                                   n_salts=4)["cumulative"]
+    assert cum["rows"] == len(rows)
+    est = {"incremental": cum["uniqueness"]["n_distinct_est"]}
+
+    argv = ["--input", tp, "--buckets", "8", "--salts", "4"]
+    for cpus in ("1", "4"):
+        est[f"cpus={cpus}"] = run_main(argv + ["--cpus", cpus])[
+            "constraints"]["n_approx_distinct"]
+    for k in ("8", "3"):
+        est[f"chunk={k}"] = run_main(argv + [
+            "--checkpoint", str(tmp_path / f"ck{k}"),
+            "--chunk-size", k])["constraints"]["n_approx_distinct"]
+
+    record_done, commits = CheckpointManager.record_done, []
+
+    def killed_after_first_chunk(self, metrics):
+        if commits:
+            raise RuntimeError("killed")
+        commits.append(1)
+        record_done(self, metrics)
+
+    killed = argv + ["--checkpoint", str(tmp_path / "killed"),
+                     "--chunk-size", "3"]
+    monkeypatch.setattr(CheckpointManager, "record_done",
+                        killed_after_first_chunk)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_main(killed)
+    spark.sparkContext.setJobGroup("", "")   # left set by the raising run
+    monkeypatch.setattr(CheckpointManager, "record_done", record_done)
+    out = run_main(killed)
+    assert out["resumed_buckets"] == 3
+    est["resumed"] = out["constraints"]["n_approx_distinct"]
+
+    df = read_table(spark, path=tp)
+    rep = constraint_report(spark, df, n_buckets=8, n_salts=4)
+    est["standalone"] = rep["n_approx_distinct"]
+    hashes = np.array([r[0] for r in df.select(
+        C.key_hash(0x1CEB, ("repo", "path", "commit"))).collect()],
+        np.int64)
+    want = round(C.hll_estimate(C.hll_registers(hashes)))
+    assert est == dict.fromkeys(est, want)
+    assert rep["n_rows"] - rep["n_exact_distinct"] == 11
+    assert all(rep["key_null_counts"].values())
+    assert rep["hll_ok"]
