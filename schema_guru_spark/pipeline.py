@@ -31,12 +31,13 @@ Scale design (the whole point):
     serialized text (NULL when the bucket saw no JSON doc) — plus
     ``n_viol``, the violation rows the task yielded for the bucket. No
     shuffle follows the scan: the partial rows (at most scan tasks x
-    buckets) are collected and folded per bucket on the driver
+    buckets) reach the driver and are folded per bucket there
     (``_fold_buckets``; counters and histograms sum and states merge,
-    all commutative monoids). Without a checkpoint that collect is the
-    validation's one Spark job: nothing is cached, the violation count
-    is the partial rows' ``n_viol`` sum, and the violations stay a lazy
-    view of the scan.
+    all commutative monoids). Either way a chunk is one Spark job and
+    nothing is cached: without a checkpoint the job collects the
+    partial rows, the violation count is their ``n_viol`` sum, and the
+    violations stay a lazy view of the scan; with one (Resume, below)
+    the job writes the scan's rows and the driver reads them back.
   * The uniqueness screen's key sketch rides the same scan: the
     projection carries the 64-bit key hash (``C.key_hash_sql``), each
     scan task folds it into HyperLogLog registers (``C.hll_registers``)
@@ -70,13 +71,16 @@ Scale design (the whole point):
     reads content; a standalone ``constraint_report`` builds the same
     histogram with one ``groupBy(bucket, bin)`` aggregate and the same
     registers with one map over the key hash (``key_sketch``).
-  * Resume: buckets are processed in chunks; each finished chunk writes
-    its violations, key sketch and verdicts sinks, then appends to a
-    checkpoint manifest (plans/checkpoint.py), in a driver-local
-    directory. A restart skips finished buckets entirely — the bucket
-    filter is pushed into the scan. The violation count then comes from
-    the violations sink's parquet footers and the registers from every
-    chunk's key sketch sink, so resumed chunks count too.
+  * Resume: buckets are processed in chunks, in a driver-local
+    checkpoint directory. A chunk's one Spark job writes every row the
+    scan yields (violation, partial and sketch rows) to its scan sink;
+    the driver reads the partial and sketch rows back
+    (``read_scan_parts``), folds them as above, writes the verdicts sink
+    and appends to a checkpoint manifest (plans/checkpoint.py). A
+    restart skips finished buckets entirely — the bucket filter is
+    pushed into the scan. The violation count and the registers then
+    come from the scan sinks of every chunk, so resumed chunks count
+    too.
 
 Reference parity: per-doc derivation and merge are the schema-guru
 semantics (core/microschema.py, cited there); violation routing replaces
@@ -103,7 +107,7 @@ from schema_guru_spark.core.microschema import ZERO, dumps, loads, merge, render
 from schema_guru_spark.core.transforms import apply_transforms
 from schema_guru_spark.operators import constraints as C
 from schema_guru_spark.plans.checkpoint import (CheckpointManager,
-                                                 arrow_schema, count_rows,
+                                                 arrow_schema,
                                                  is_missing_path, read_sink,
                                                  write_sink)
 
@@ -145,6 +149,12 @@ _SCAN_OUT = ("bucket int, "
              + ", ".join(f"{c} bigint" for c in _SCAN_COUNTERS)
              + ", hist array<bigint>, state string, repo string, "
                "lang string, detail string, sketch binary")
+# the columns of the partial and sketch rows the driver folds
+_PART_COLS = ("bucket", *_SCAN_COUNTERS, "hist", "state", "sketch")
+# pinned in an incremental checkpoint's parameters: each chunk keeps the
+# scan's rows in one scan sink (scan/chunk=N); a chain whose deltas kept
+# separate violations and key sketch sinks has none to read
+SCAN_SINK_FORMAT = "scan-rows-per-chunk"
 
 
 # bump when bucket_expr's formula changes: a layout written under a
@@ -384,8 +394,8 @@ def bucket_passes(c: dict, max_err_rate: float) -> bool:
     error fails the bucket, the reference's implicit semantics — parse
     failures are errors, SchemaDerive.scala:159-169); production corpora
     with expected dirt set a tolerance so verdicts discriminate instead
-    of failing every bucket. Either way every error row still lands in
-    the violations sink."""
+    of failing every bucket. Either way every error row is still a
+    violation row."""
     n_json = c["n_json_ok"] + c["n_json_err"]
     return (c["n_json_err"] / max(n_json, 1) <= max_err_rate
             and c["n_sha_bad"] == 0 and c["n_lang_bad"] == 0)
@@ -467,9 +477,6 @@ _VERDICT_SCHEMA = ("bucket int, n_rows bigint, n_json_ok bigint, "
                    "hist array<bigint>, schema string, passed boolean")
 _VERDICT_SCHEMA_STATE = _VERDICT_SCHEMA + ", state string"
 _VIOLATION_SCHEMA = "bucket int, repo string, lang string, detail string"
-# a chunk's key sketch: its row count and the merged registers of its
-# scan tasks (C.hll_registers over _KEY_HASH)
-_KEY_SKETCH_SCHEMA = "n_rows bigint, sketch binary"
 # the 64-bit key hash the sketch counts. Collisions only DEFLATE the
 # distinct estimate, by ~n^2/2^65 keys (~27 at 10^12 rows, 1e-11
 # relative), far below the sketch's own ~0.8% error
@@ -479,8 +486,9 @@ _KEY_HASH = (0x1CEB, _KEY)
 @dataclass
 class ValidationResult:
     verdicts: DataFrame
-    # with a checkpoint, the violations sink; without one, a lazy view
-    # of the scan: every action on it re-runs the scan
+    # with a checkpoint, a read of the violation rows in the scan sinks;
+    # without one, a lazy view of the scan: every action on it re-runs
+    # the scan
     violations: DataFrame
     # the rows ``verdicts`` was built from, already on the driver
     verdict_rows: pd.DataFrame
@@ -494,22 +502,58 @@ class ValidationResult:
     resumed_buckets: list = field(default_factory=list)
 
 
-def _require_key_sketches(ckpt_dir: str) -> None:
-    """Refuse a checkpoint with a finished chunk that has no key sketch
-    sink: it was written before every checkpointed run kept one, and
-    the registers of a resumed run would miss that chunk's rows. Each
-    chunk writes its key sketch before its verdicts, so a verdicts
-    chunk without a key sketch chunk is never a crash window."""
-    def chunks(sink):
-        d = os.path.join(ckpt_dir, sink)
+def _scan_sink(ckpt_dir: str, chunk: Optional[int] = None) -> str:
+    """A checkpoint's scan sink, or its directory for the chunk whose
+    first bucket is ``chunk``."""
+    return os.path.join(ckpt_dir, "scan",
+                        *(() if chunk is None else (f"chunk={chunk}",)))
+
+
+def read_scan_parts(ckpt_dirs: Sequence[str],
+                    columns: Sequence[str] = _PART_COLS,
+                    chunk: Optional[int] = None) -> Optional[pd.DataFrame]:
+    """The partial and sketch rows (``detail IS NULL``) of the scan
+    sinks of the checkpoint directories ``ckpt_dirs`` — every chunk's,
+    or only chunk ``chunk``'s — with the ``_SCAN_OUT`` columns
+    ``columns``, read with pyarrow on the driver. None when none of
+    them has a scan sink."""
+    full = arrow_schema(_SCAN_OUT)
+    schema = pa.schema([full.field(c) for c in (*columns, "detail")])
+    paths = [p for p in (_scan_sink(d, chunk) for d in ckpt_dirs)
+             if os.path.isdir(p)]
+    if not paths:
+        return None
+    rows = pa.concat_tables(read_sink(p, schema) for p in paths)
+    return (rows.filter(pc.is_null(rows.column("detail")))
+            .drop_columns(["detail"]).to_pandas())
+
+
+def scan_totals(parts: Optional[pd.DataFrame]) -> tuple[int, np.ndarray]:
+    """The violation count (the partial rows' ``n_viol`` sum) and the
+    merged key sketch registers of scan rows with the ``n_viol`` and
+    ``sketch`` columns; no rows for None."""
+    if parts is None:
+        return 0, C.hll_merge(())
+    # a sketch row's n_viol is NULL, which the sum skips
+    return int(parts["n_viol"].sum()), C.hll_merge(parts["sketch"].dropna())
+
+
+def _require_scan_sinks(ckpt_dir: str) -> None:
+    """Refuse a checkpoint with a finished chunk that has no scan sink:
+    it was written when the violations and the key sketch had sinks of
+    their own, and the violation count and registers of a resumed run
+    would miss that chunk's rows. Each chunk writes its scan sink
+    before its verdicts, so a verdicts chunk without a scan chunk is
+    never a crash window."""
+    def chunks(d):
         return ({f for f in os.listdir(d) if f.startswith("chunk=")}
                 if os.path.isdir(d) else set())
-    missing = chunks("verdicts") - chunks("key_sketch")
+    missing = chunks(f"{ckpt_dir}/verdicts") - chunks(_scan_sink(ckpt_dir))
     if missing:
         raise ValueError(
-            f"{ckpt_dir}: finished chunks {sorted(missing)} have no key "
-            "sketch (written by an older version of the validation "
-            "job); validate into a new checkpoint directory")
+            f"{ckpt_dir}: finished chunks {sorted(missing)} have no scan "
+            "sink (written by an older version of the validation job); "
+            "validate into a new checkpoint directory")
 
 
 def read_verdicts(paths: Sequence[str], schema: str) -> pd.DataFrame:
@@ -550,10 +594,10 @@ def validate_repo_table(
 ) -> ValidationResult:
     """Run the full validation; resumable when checkpoint_dir is set.
 
-    Per chunk of buckets, the scan's per-(task, bucket) partial rows are
-    collected once through Arrow — one Spark job — and folded on the
-    driver into the <= ``chunk_size`` verdict rows (``_fold_buckets``):
-    no shuffle and no grouped Python stage. A chunk of every bucket
+    Per chunk of buckets, the scan's per-(task, bucket) partial rows
+    reach the driver through one Spark job and are folded there into
+    the <= ``chunk_size`` verdict rows (``_fold_buckets``): no shuffle,
+    no grouped Python stage, no cache. A chunk of every bucket
     over a bucket column computed here scans without a bucket filter;
     partial or resumed chunks, and a materialized layout, filter.
 
@@ -563,36 +607,38 @@ def validate_repo_table(
     so a table's count of them depends on its split layout; parse-error
     rows are not capped. The verdict counters count every row either
     way. ``n_violation_rows`` is the number of violation rows the result
-    holds, summed from the partial rows' ``n_viol`` (or, with a
-    checkpoint, from the violations sink's parquet footers): it costs no
-    Spark job. ``key_sketch`` rides the scan too: the projection gains
-    the 64-bit key hash, each scan task folds it into HyperLogLog
-    registers (``C.hll_registers``), and the result's registers are the
-    element-wise max of every task's.
+    holds, summed from the partial rows' ``n_viol``: it costs no Spark
+    job. ``key_sketch`` rides the scan too: the projection gains the
+    64-bit key hash, each scan task folds it into HyperLogLog registers
+    (``C.hll_registers``) and ends with one sketch row, and the result's
+    registers are the element-wise max of every task's (``scan_totals``
+    gives both).
 
-    Without a checkpoint, the result is the verdict rows as a local
-    relation (collecting it launches no Spark job) and the violations
-    as a lazy view of the scan: nothing is cached, and every action on
+    Without a checkpoint, the chunk's job collects the partial and
+    sketch rows through Arrow; the result is the verdict rows as a
+    local relation (collecting it launches no Spark job) and the
+    violations as a lazy view of the scan: every action on
     ``violations`` re-runs the scan. ``checkpoint_dir`` is a
     driver-local directory (``plans.checkpoint.local_dir`` refuses other
-    URI schemes before any scan). There each chunk's scan is persisted
-    while the chunk writes, in this order: its violations sink (a Spark
-    write from the persisted scan, since parse-error rows are
-    unbounded); its key sketch sink (the chunk's row count and
-    registers) and its verdicts sink, both written from the driver's
-    rows with pyarrow; and last the manifest append, the chunk's commit
+    URI schemes before any scan). There each chunk writes, in this
+    order: its scan sink, every row the scan yields (the chunk's Spark
+    job, since parse-error rows are unbounded), whose partial and
+    sketch rows the driver reads back with pyarrow (``read_scan_parts``)
+    and folds as above; its verdicts sink, written from the folded rows
+    with pyarrow; and last the manifest append, the chunk's commit
     point, whose per-bucket metrics come from the same rows. The
     result's verdicts are then the verdicts sink's rows, resumed
     chunks' included, read back with pyarrow into a local relation, its
-    violations the violations sink read under its known schema,
-    ``n_violation_rows`` the sink's row count and ``key_sketch`` the
-    merge of every chunk's key sketch, resumed chunks' included. A
-    checkpoint with a finished chunk that has no length histogram or no
-    key sketch is refused before any scan (``ValueError``).
+    violations a read of the scan sinks' violation rows under their
+    known schema, and ``n_violation_rows`` and ``key_sketch`` the
+    ``scan_totals`` of every chunk's scan sink, resumed chunks'
+    included. A checkpoint with a finished chunk that has no length
+    histogram or no scan sink is refused before any scan
+    (``ValueError``).
 
     ``keep_state`` keeps each verdict row's raw schema state, which the
     incremental view re-merges (see plans/incremental.py) with the
-    chunks' key sketches.
+    scan sinks' key sketches.
     """
     ctx = ctx or SchemaContext.make(0)
     from schema_guru_spark.operators.infer import _require_commutative
@@ -617,7 +663,7 @@ def validate_repo_table(
     if done:
         # refuse a checkpoint of an older format before any scan
         read_verdicts([f"{ckpt.dir}/verdicts"], _VERDICT_SCHEMA)
-        _require_key_sketches(ckpt.dir)
+        _require_scan_sinks(ckpt.dir)
     remaining = [b for b in range(n_buckets) if b not in done]
     chunk_size = chunk_size or n_buckets
 
@@ -685,10 +731,7 @@ def validate_repo_table(
     # resumed chunks keep it (there it prunes files, or the chunk
     # excludes buckets)
     computed_bucket = "bucket" not in df.columns
-    chunk_verdicts = []
-    all_violations = []
-    n_violation_rows = 0
-    sketch = np.zeros(C.HLL_M, np.uint8)
+    chunk_verdicts, chunk_scans, all_violations = [], [], []
     for i in range(0, len(remaining), chunk_size):
         chunk = remaining[i:i + chunk_size]
         sub = (prepared.where(f"bucket IN ({', '.join(map(str, chunk))})")
@@ -696,38 +739,31 @@ def validate_repo_table(
                else prepared)
         raw = sub.mapInPandas(_scan_pass(ctx, max_violation_examples),
                               _SCAN_OUT)
-        if ckpt:
-            # the violations write is a second action over the scan
-            raw = raw.persist()
-
-        violations = raw.where("detail IS NOT NULL").select(
-            "bucket", "repo", "lang", "detail")
-        # the scan's one job: its partial and sketch rows, folded into
-        # the verdict rows on the driver
-        parts = raw.where("detail IS NULL").select(
-            "bucket", *_SCAN_COUNTERS, "hist", "state", "sketch").toPandas()
-        is_sketch = parts["sketch"].notna()
-        verdict_rows = _fold_buckets(parts[~is_sketch], ctx, max_err_rate,
-                                     keep_state=keep_state)
-        chunk_sketch = C.hll_merge(parts["sketch"][is_sketch])
-
+        # the chunk's one Spark job brings its partial and sketch rows
+        # to the driver, where they fold into the verdict rows
         if ckpt:
             # idempotent per-chunk sinks: each REPLACES this chunk's
             # directory rather than appending to the parent. A job
             # killed after the data sinks but before the manifest
             # append re-runs the chunk on restart — an append would
             # then duplicate every row of the chunk; a replace
-            # converges to the same bytes.
-            violations.write.mode("overwrite") \
-                .parquet(f"{ckpt.dir}/violations/chunk={chunk[0]}")
-            # the key sketch before the verdicts: a finished chunk's
-            # verdicts without a key sketch then mark an older
-            # checkpoint, never a crash (_require_key_sketches)
-            write_sink(f"{ckpt.dir}/key_sketch/chunk={chunk[0]}",
-                       pa.table({
-                           "n_rows": [int(verdict_rows["n_rows"].sum())],
-                           "sketch": [chunk_sketch.tobytes()],
-                       }, arrow_schema(_KEY_SKETCH_SCHEMA)))
+            # converges to the same bytes. The scan sink comes before
+            # the verdicts: a finished chunk's verdicts without a scan
+            # sink then mark an older checkpoint, never a crash
+            # (_require_scan_sinks)
+            raw.write.mode("overwrite").parquet(_scan_sink(ckpt.dir,
+                                                           chunk[0]))
+            parts = read_scan_parts([ckpt.dir], chunk=chunk[0])
+        else:
+            parts = raw.where("detail IS NULL").select(*_PART_COLS) \
+                .toPandas()
+            chunk_scans.append(parts[["n_viol", "sketch"]])
+            all_violations.append(raw.where("detail IS NOT NULL").select(
+                "bucket", "repo", "lang", "detail"))
+        verdict_rows = _fold_buckets(parts[parts["sketch"].isna()], ctx,
+                                     max_err_rate, keep_state=keep_state)
+
+        if ckpt:
             write_sink(f"{ckpt.dir}/verdicts/chunk={chunk[0]}",
                        pa.Table.from_pandas(
                            verdict_rows, arrow_schema(verdict_schema),
@@ -744,25 +780,18 @@ def validate_repo_table(
                       .to_dict("records")):
                 metrics[m["bucket"]] = m
             ckpt.record_done(metrics.values())
-            raw.unpersist()
         else:
             chunk_verdicts.append(verdict_rows)
-            all_violations.append(violations)
-            n_violation_rows += int(parts["n_viol"][~is_sketch].sum())
-            np.maximum(sketch, chunk_sketch, out=sketch)
 
     if ckpt:
         verdict_rows = read_verdicts([f"{ckpt.dir}/verdicts"],
                                      verdict_schema)
-        n_violation_rows = count_rows(f"{ckpt.dir}/violations")
-        sketch = C.hll_merge(
-            read_sink(f"{ckpt.dir}/key_sketch",
-                      arrow_schema(_KEY_SKETCH_SCHEMA))
-            .column("sketch").to_pylist())
+        scan = read_scan_parts([ckpt.dir], ("n_viol", "sketch"))
         try:
             # chunk=N partition dirs: drop the discovered partition column
             violations_df = spark.read.schema(_VIOLATION_SCHEMA) \
-                .parquet(f"{ckpt.dir}/violations").drop("chunk")
+                .parquet(_scan_sink(ckpt.dir)) \
+                .where("detail IS NOT NULL").drop("chunk")
         except AnalysisException as exc:
             if not is_missing_path(exc):
                 raise
@@ -770,8 +799,10 @@ def validate_repo_table(
     else:
         from functools import reduce
         verdict_rows = pd.concat(chunk_verdicts, ignore_index=True)
+        scan = pd.concat(chunk_scans, ignore_index=True)
         violations_df = reduce(DataFrame.unionByName, all_violations)
     verdict_rows = verdict_rows.sort_values("bucket", ignore_index=True)
+    n_violation_rows, sketch = scan_totals(scan)
 
     return ValidationResult(
         verdicts=spark.createDataFrame(verdict_rows, verdict_schema),
@@ -978,8 +1009,8 @@ def constraint_report(spark: SparkSession, df: DataFrame,
 def key_violation_rows(df: DataFrame, repo_dims: Optional[DataFrame] = None,
                        n_buckets: int = 64, n_salts: int = 8,
                        max_examples: int = 1000) -> DataFrame:
-    """Key-level violation ROWS, same shape as the scan-pass violations
-    sink (bucket, repo, lang, detail):
+    """Key-level violation ROWS, same shape as the scan pass's violation
+    rows, ``ValidationResult.violations`` (bucket, repo, lang, detail):
 
       duplicate (repo, path, commit) tuples  -> detail 'duplicate key: ...'
       RI orphans vs the repo dimension       -> detail 'ri orphan repo'
@@ -988,13 +1019,13 @@ def key_violation_rows(df: DataFrame, repo_dims: Optional[DataFrame] = None,
     at ``max_examples`` per kind — violation EXAMPLES for humans; the
     full counts live in constraint_report. The GROUP BY treats NULL key
     parts as equal at the same position — the rule ``constraint_report``
-    applies through ``C.key_hash`` — so the sink and the verdict agree.
+    applies through ``C.key_hash`` — so the rows and the verdict agree.
     """
     # group by EXACTLY the uniqueness key (repo, path, commit) — the
     # same tuple constraint_report's screen hashes. lang is reported as
     # an example attribute (min = deterministic pick), NOT part of the
     # key: two rows sharing the key but differing in lang ARE a
-    # duplicate and must surface here, or the sink would contradict a
+    # duplicate and must surface here, or the rows would contradict a
     # keys_unique=False verdict. bucket = f(repo, path) is constant
     # within a key group, so grouping by it adds no key semantics.
     dup = (df.withColumn("bucket", bucket_expr(n_buckets, n_salts))

@@ -10,13 +10,15 @@ engine; no reference counterpart (the reference has no checkpointing).
 
 A checkpoint directory is a DRIVER-LOCAL path (a plain path or a
 ``file:`` URI; ``local_dir`` refuses any other scheme). The tables the
-driver already holds — the manifest rows, and the chunk sinks
+driver already holds — the manifest rows, and the verdicts sink
 ``validate_repo_table`` writes from its folded verdict rows — are
 written and read here with pyarrow, not through Spark jobs. Each file
 is written under a hidden temporary name and renamed into place, so a
 reader (this module's, or Spark's, which also skips hidden names)
-never sees half a file. Only the violations sink, whose parse-error
-rows are unbounded, is written by Spark from the persisted scan.
+never sees half a file. Only the scan sink, every row the scan pass
+yields (its parse-error rows are unbounded), is written by Spark: it
+is the chunk's one Spark job, and the driver reads its partial and
+sketch rows back with ``read_sink``.
 """
 
 from __future__ import annotations
@@ -95,25 +97,14 @@ def write_sink(directory: str, table: pa.Table) -> None:
             os.remove(os.path.join(directory, f))
 
 
-def _dataset(path: str, schema: Optional[pa.Schema] = None):
-    # every parquet file under path, chunk=N directories included;
-    # hidden and _-prefixed names (temporaries, Spark's _SUCCESS and
-    # .crc files) are skipped
-    return ds.dataset(path, schema=schema, format="parquet")
-
-
 def read_sink(path: str, schema: pa.Schema) -> pa.Table:
     """Every row of a sink directory (all its chunk partitions) with
-    the columns of ``schema``; no rows when it does not exist."""
+    the columns of ``schema``; no rows when it does not exist. Hidden
+    and _-prefixed names (temporaries, Spark's _SUCCESS and .crc files)
+    are skipped."""
     if not os.path.isdir(path):
         return schema.empty_table()
-    return _dataset(path, schema).to_table()
-
-
-def count_rows(path: str) -> int:
-    """Rows of a sink directory, from its parquet footers alone; 0 when
-    it does not exist."""
-    return _dataset(path).count_rows() if os.path.isdir(path) else 0
+    return ds.dataset(path, schema=schema, format="parquet").to_table()
 
 
 class CheckpointManager:

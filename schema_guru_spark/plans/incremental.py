@@ -42,15 +42,17 @@ verdict rows, and this module folds those rows across deltas:
   * table-wide key uniqueness uses mergeable HyperLogLog sketches
     (``operators.constraints.hll_registers``, p = 14, 16 KiB) over a
     64-bit key hash. The sketch rides the validation scan: each scan
-    task folds its rows' key hashes into registers, and every chunk of
-    a delta stores one ``(n_rows, sketch)`` row next to its verdicts,
-    so a resumed delta still covers all its chunks. The cumulative
-    estimate is Ertl's estimator over the element-wise max of every
-    committed chunk sketch, against the exact summed row count — the
-    north_star's "HLL vs exact count" check, made incremental.
-    (Per-delta exact distincts do not sum; sketches do.) The register
-    format is pinned in ``params`` (``key_sketch``), so a checkpoint
-    holding sketches of another format is refused, not misread.
+    task folds its rows' key hashes into registers and ends with one
+    sketch row, which every chunk of a delta keeps in its scan sink
+    next to its verdicts, so a resumed delta still covers all its
+    chunks. The cumulative estimate is Ertl's estimator over the
+    element-wise max of every committed scan task's sketch, against
+    the exact summed row count — the north_star's "HLL vs exact count"
+    check, made incremental. (Per-delta exact distincts do not sum;
+    sketches do.) The register format and the scan sink layout are
+    pinned in ``params`` (``key_sketch``, ``scan_sink``), so a
+    checkpoint holding sketches of another format, or keeping them in
+    another sink, is refused before any scan, not misread.
 
 The cumulative view reads only checkpoint files, with pyarrow on the
 driver: it runs no Spark job, and checkpoint dirs are driver-local
@@ -74,16 +76,14 @@ import os
 import time
 from typing import Any, Optional, Sequence
 
-import pyarrow as pa
 from pyspark.sql import SparkSession
 
 from schema_guru_spark.operators import constraints as C
-from schema_guru_spark.pipeline import (_KEY_SKETCH_SCHEMA,
-                                        _VERDICT_SCHEMA_STATE, HIST_FORMAT,
-                                        bucket_psi, read_verdicts,
-                                        verdict_summary)
-from schema_guru_spark.plans.checkpoint import (arrow_schema, local_dir,
-                                                read_sink)
+from schema_guru_spark.pipeline import (_VERDICT_SCHEMA_STATE, HIST_FORMAT,
+                                        SCAN_SINK_FORMAT, bucket_psi,
+                                        read_scan_parts, read_verdicts,
+                                        scan_totals, verdict_summary)
+from schema_guru_spark.plans.checkpoint import local_dir
 from schema_guru_spark.sources.iceberg_meta import (_VALUE_SETS,
                                                     load_table_metadata)
 
@@ -129,10 +129,12 @@ def _run_params(n_buckets: int, n_salts: int, max_err_rate: float,
     violation, max_err_rate changes each delta's recorded verdicts. All
     are pinned in table_state.json on the first commit; later runs must
     match (ADVICE r04). So are ``key_sketch``, the format of the stored
-    key sketches (registers of different formats do not merge), and
+    key sketches (registers of different formats do not merge),
     ``length_hist``, the bin edges of the verdict rows' length
     histograms (a checkpoint from before the histogram, or with other
-    edges, is refused before any scan).
+    edges, is refused before any scan), and ``scan_sink``, the sink that
+    keeps each chunk's sketches and violation count (a chain from
+    before the scan sink is refused before any scan).
 
     The dict is compared against a JSON-round-tripped prior, so every
     value must be in JSON-canonical form already: collection-valued
@@ -154,6 +156,7 @@ def _run_params(n_buckets: int, n_salts: int, max_err_rate: float,
         "partition_filter": canon_filter,
         "key_sketch": C.KEY_SKETCH,
         "length_hist": HIST_FORMAT,
+        "scan_sink": SCAN_SINK_FORMAT,
     }
 
 
@@ -257,7 +260,7 @@ def incremental_validate(
             chunk_size=chunk_size, allowed_langs=allowed_langs,
             max_err_rate=max_err_rate, keep_state=True)
         # <= n_buckets verdict rows and the violation count (from the
-        # sink's parquet footers), already on the driver
+        # scan sinks' partial rows), already on the driver
         delta_report = {
             **verdict_summary(res.verdict_rows.to_dict("records")),
             "n_violation_rows": res.n_violation_rows,
@@ -300,9 +303,11 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
     so the per-bucket counters, histograms, verdicts and schemas come
     from that one function, the totals from ``pipeline.verdict_summary``,
     the drift from ``pipeline.bucket_psi``, and the global schema is the
-    merge of the folded bucket states. The key sketches of every
-    committed chunk merge by element-wise max (``C.hll_merge``) into
-    one estimate (``C.hll_estimate``).
+    merge of the folded bucket states. The key sketches in the scan
+    sinks of the committed deltas (``pipeline.read_scan_parts``) merge
+    by element-wise max (``pipeline.scan_totals``) into one estimate
+    (``C.hll_estimate``), against the folded row count; a chain without
+    scan sinks reports no uniqueness block.
     ``spark`` is not used; it keeps the signature callers rely on."""
     from schema_guru_spark.core.context import SchemaContext
     from schema_guru_spark.core.microschema import (loads, merge_all,
@@ -327,14 +332,11 @@ def cumulative_report(spark: SparkSession, checkpoint_dir: str,
     psi = bucket_psi(folded)
     glob = merge_all((loads(st) for st in folded["state"]), ctx)
 
-    sketches = pa.concat_tables(
-        read_sink(os.path.join(d, "key_sketch"),
-                  arrow_schema(_KEY_SKETCH_SCHEMA)) for d in dirs)
+    scan = read_scan_parts(dirs, ("n_viol", "sketch"))
     uniq: dict[str, Any] = {}
-    if sketches.num_rows:
-        n_rows = sum(sketches.column("n_rows").to_pylist())
-        est = round(C.hll_estimate(
-            C.hll_merge(sketches.column("sketch").to_pylist())))
+    if scan is not None:
+        n_rows = int(folded["n_rows"].sum())
+        est = round(C.hll_estimate(scan_totals(scan)[1]))
         gap = abs(n_rows - est) / max(n_rows, 1)
         uniq = {"n_rows": n_rows, "n_distinct_est": est,
                 "rel_gap": round(gap, 6),

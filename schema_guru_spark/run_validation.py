@@ -252,20 +252,24 @@ def main(argv=None) -> dict:
 
     spark.sparkContext.setJobGroup("timed-validate",
                                    "validation scan + verdicts")
-    with ThreadPoolExecutor(max_workers=1) as ex:
-        f_keys = ex.submit(_grouped_keys)
-        res = validate_repo_table(spark, df, checkpoint_dir=args.checkpoint,
-                                  n_buckets=args.buckets, n_salts=args.salts,
-                                  chunk_size=args.chunk_size,
-                                  max_err_rate=args.max_err_rate)
-        # at most n_buckets verdict rows and the violation count,
-        # already on the driver: no Spark job sums or counts them
-        verdicts = res.verdict_rows.to_dict("records")
-        t_validate = time.perf_counter() - t0
-        rep = constraint_summary(f_keys.result(), res.verdict_rows,
-                                 res.key_sketch)
-    dt = time.perf_counter() - t0
-    spark.sparkContext.setJobGroup("", "")
+    try:
+        with ThreadPoolExecutor(max_workers=1) as ex:
+            f_keys = ex.submit(_grouped_keys)
+            res = validate_repo_table(
+                spark, df, checkpoint_dir=args.checkpoint,
+                n_buckets=args.buckets, n_salts=args.salts,
+                chunk_size=args.chunk_size, max_err_rate=args.max_err_rate)
+            # at most n_buckets verdict rows and the violation count,
+            # already on the driver: no Spark job sums or counts them
+            verdicts = res.verdict_rows.to_dict("records")
+            t_validate = time.perf_counter() - t0
+            rep = constraint_summary(f_keys.result(), res.verdict_rows,
+                                     res.key_sketch)
+        dt = time.perf_counter() - t0
+    finally:
+        # also when the scan raises: later jobs of the session's thread
+        # must not run under the measured group
+        spark.sparkContext.setJobGroup("", "")
     task_times = _group_task_times(
         spark, ("timed-validate", "timed-constraints"), first_job)
     summary = verdict_summary(verdicts)

@@ -619,13 +619,12 @@ def test_params_pin_canonicalizes_collection_filters(spark, tmp_path):
 
 def test_incremental_append_job_count_flat(spark, tmp_path):
     """An append's validation cost is fixed: every incremental_validate
-    of a chain runs the same number of Spark jobs, at most 2 — the scan
-    (its partial and key-sketch rows collected through Arrow, the delta
-    read under its known schema) and the violations write — none of
-    them a grouped Python stage. The verdicts, the chunk key sketch and
-    the manifest are written and read on the driver, and
-    cumulative_report runs no Spark job however many deltas are
-    committed."""
+    of a chain runs the same number of Spark jobs, at most 1 — the
+    scan's write to its scan sink (the delta read under its known
+    schema), not a grouped Python stage. The scan sink's partial and
+    key-sketch rows are read back, and the verdicts and the manifest
+    written and read, on the driver, and cumulative_report runs no
+    Spark job however many deltas are committed."""
     from conftest import executed_plans, last_execution_id
     from schema_guru_spark.plans.incremental import cumulative_report
     from schema_guru_spark.run_validation import _next_job_id
@@ -652,7 +651,7 @@ def test_incremental_append_job_count_flat(spark, tmp_path):
         cum = cumulative_report(spark, ckpt)
         cum_jobs.append(_next_job_id(spark) - lo)
         assert cum == rep["cumulative"]
-    assert max(append_jobs) <= 2, append_jobs
+    assert max(append_jobs) <= 1, append_jobs
     assert append_jobs[0] == append_jobs[2], append_jobs
     assert max(cum_jobs) == 0, cum_jobs
 
@@ -710,16 +709,15 @@ def test_sketch_estimate_within_4_sigma(n):
 
 
 def _delta_sketch(ckpt):
-    """The merged key sketch and row count of the one delta of
-    ``ckpt``."""
-    from schema_guru_spark.operators.constraints import hll_merge
-    from schema_guru_spark.pipeline import _KEY_SKETCH_SCHEMA
-    from schema_guru_spark.plans.checkpoint import arrow_schema, read_sink
+    """The row count, the merged key sketch and the number of scan sink
+    chunks of the one delta of ``ckpt``."""
+    from schema_guru_spark.pipeline import read_scan_parts, scan_totals
     [delta] = [d for d in os.listdir(ckpt) if d.startswith("e000")]
-    t = read_sink(os.path.join(ckpt, delta, "key_sketch"),
-                  arrow_schema(_KEY_SKETCH_SCHEMA))
-    return (sum(t.column("n_rows").to_pylist()),
-            hll_merge(t.column("sketch").to_pylist()).tobytes(), t.num_rows)
+    d = os.path.join(ckpt, delta)
+    parts = read_scan_parts([d], ("n_rows", "n_viol", "sketch"))
+    return (int(parts["n_rows"].sum()), scan_totals(parts)[1].tobytes(),
+            len([c for c in os.listdir(os.path.join(d, "scan"))
+                 if c.startswith("chunk=")]))
 
 
 def test_resumed_delta_sketch_equals_one_chunk_run(spark, tmp_path,
@@ -801,6 +799,37 @@ def test_checkpoint_from_before_the_histogram_is_refused(spark, tmp_path):
                     partition_by="lang")
     lo = _next_job_id(spark)
     with pytest.raises(ValueError, match=r"parameters \(length_hist\)"):
+        _run(spark, tp, ckpt)
+    assert _next_job_id(spark) == lo
+
+
+def test_chain_without_scan_sinks_is_refused(spark, tmp_path):
+    """A chain whose deltas kept their violations and key sketches in
+    sinks of their own, not in a scan sink, pins no ``scan_sink`` in its
+    parameters: the next incremental_validate refuses it, naming the
+    checkpoint directory, before any Spark job, instead of reporting a
+    uniqueness block without those deltas' sketches."""
+    import re
+    import shutil
+
+    from schema_guru_spark.run_validation import _next_job_id
+    tp = str(tmp_path / "repos")
+    ckpt = str(tmp_path / "ckpt")
+    append_snapshot(tp, _vrows(10, "c1"), SCHEMA, partition_by="lang")
+    _run(spark, tp, ckpt)
+    [delta] = [d for d in os.listdir(ckpt) if d.startswith("e000")]
+    shutil.rmtree(os.path.join(ckpt, delta, "scan"))
+    path = os.path.join(ckpt, "table_state.json")
+    with open(path) as fh:
+        state = json.load(fh)
+    del state["params"]["scan_sink"]
+    with open(path, "w") as fh:
+        json.dump(state, fh)
+    append_snapshot(tp, _vrows(10, "c2", start=10), SCHEMA,
+                    partition_by="lang")
+    lo = _next_job_id(spark)
+    with pytest.raises(ValueError, match=re.escape(ckpt)
+                       + r".*parameters \(scan_sink\)"):
         _run(spark, tp, ckpt)
     assert _next_job_id(spark) == lo
 

@@ -336,7 +336,9 @@ def test_crash_between_sink_and_manifest_does_not_duplicate(spark, repo_df,
                                                             tmp_path):
     """Kill window: data sinks written, manifest append lost. On
     restart the chunk re-runs; the per-chunk OVERWRITE sink must
-    converge instead of appending duplicates."""
+    converge instead of appending duplicates. The violation count and
+    the key sketch come from the rewritten scan sinks, so they equal
+    the first run's too."""
     import shutil
     ck = str(tmp_path / "ckpt3")
     res1 = validate_repo_table(spark, repo_df, checkpoint_dir=ck,
@@ -349,6 +351,9 @@ def test_crash_between_sink_and_manifest_does_not_duplicate(spark, repo_df,
                                n_buckets=N_BUCKETS, chunk_size=3)
     assert res2.verdicts.count() == n_verd == N_BUCKETS
     assert res2.violations.count() == n_viol
+    assert res2.n_violation_rows == res1.n_violation_rows == n_viol
+    assert res2.key_sketch.tobytes() == res1.key_sketch.tobytes()
+    assert res1.key_sketch.any()
     # one verdict row per bucket, not two
     per_bucket = res2.verdicts.groupBy("bucket").count().collect()
     assert all(r["count"] == 1 for r in per_bucket)
@@ -1135,7 +1140,7 @@ def violation_table(spark, tmp_path_factory):
 def test_violation_count_equals_violation_rows(spark, violation_table, cap,
                                                tmp_path, monkeypatch):
     """Law: ``n_violation_rows`` — summed from the scan's partial rows,
-    or read from the violations sink's parquet footers — equals
+    collected or read back from the scan sinks — equals
     ``violations.count()``: without a checkpoint, with a checkpoint in
     chunks smaller than n_buckets, and in a checkpointed run killed
     after its first chunk and resumed. With a cap of 2 the per-batch
@@ -1353,9 +1358,9 @@ def test_run_validation_job_count_guard(spark, small_table, tmp_path):
     fan-in is not a Spark stage. The no-checkpoint
     verdicts are a local relation — no Exchange, no Python node — so
     later actions never re-run the scan. With --checkpoint the
-    violation count comes from the violations sink's parquet footers:
-    the validate group runs the scan and the violations write, and a
-    resumed run none, reporting the same count."""
+    validate group runs one job, the scan's write to its scan sink,
+    whose partial rows the driver reads back for the violation count,
+    and a resumed run none, reporting the same count."""
     from conftest import executed_plans, last_execution_id
     from schema_guru_spark.run_validation import _next_job_id, main as run_main
     argv = ["--input", small_table, "--cpus", "4", "--buckets", "8",
@@ -1405,7 +1410,7 @@ def test_run_validation_job_count_guard(spark, small_table, tmp_path):
         validate_jobs.append([g for g, _ in _jobs_in(
             spark, lo, _next_job_id(spark))].count("timed-validate"))
         spark.catalog.clearCache()
-    assert validate_jobs == [2, 0], validate_jobs
+    assert validate_jobs == [1, 0], validate_jobs
     assert counts == [out["n_violation_rows"]] * 2, (counts, out)
     assert out["n_violation_rows"] > 0
 
@@ -1489,22 +1494,27 @@ def test_resumed_run_refuses_verdicts_without_histogram(spark, small_table,
         run_main(argv)
 
 
-def test_run_validation_releases_its_caches(spark, small_table):
+def test_run_validation_releases_its_caches(spark, small_table, tmp_path):
     """run_validation.main leaves nothing in the session's CacheManager:
-    without a checkpoint it persists nothing."""
+    it persists nothing, with a checkpoint or without one."""
     from schema_guru_spark.run_validation import main as run_main
+    argv = ["--input", small_table, "--cpus", "4", "--buckets", "8",
+            "--salts", "4"]
     spark.catalog.clearCache()
-    run_main(["--input", small_table, "--cpus", "4", "--buckets", "8",
-              "--salts", "4"])
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    for extra in ([], ["--checkpoint", str(tmp_path / "ck"),
+                       "--chunk-size", "3"]):
+        run_main(argv + extra)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_resumed_run_refuses_chunks_without_key_sketch(spark, small_table,
                                                        tmp_path):
-    """A checkpoint with a finished chunk that has no key sketch sink was
-    written before every checkpointed run kept one: a resumed run
-    refuses it, naming the checkpoint, before any Spark job, instead of
-    estimating distinct keys over part of the table."""
+    """A checkpoint with a finished chunk that has no scan sink, where
+    the chunk's key sketch and violation count live, was written when
+    they had sinks of their own: a resumed run refuses it, naming the
+    checkpoint, before any Spark job, instead of estimating distinct
+    keys over part of the table. A raising run leaves no job group
+    set."""
     import re
     import shutil
 
@@ -1513,7 +1523,7 @@ def test_resumed_run_refuses_chunks_without_key_sketch(spark, small_table,
     argv = ["--input", small_table, "--cpus", "4", "--buckets", "8",
             "--salts", "4", "--checkpoint", ck, "--chunk-size", "4"]
     run_main(argv)
-    shutil.rmtree(f"{ck}/key_sketch/chunk=4")
+    shutil.rmtree(f"{ck}/scan/chunk=4")
     df = spark.read.parquet(small_table)
     lo = _next_job_id(spark)
     with pytest.raises(ValueError, match=re.escape(ck)):
@@ -1522,7 +1532,7 @@ def test_resumed_run_refuses_chunks_without_key_sketch(spark, small_table,
     assert _next_job_id(spark) == lo
     with pytest.raises(ValueError, match=r"chunk=4"):
         run_main(argv)
-    spark.sparkContext.setJobGroup("", "")   # left set by the raising run
+    assert not spark.sparkContext.getLocalProperty("spark.jobGroup.id")
 
 
 def test_run_validation_warmup_reports_plain_run_constraints(spark,
@@ -1594,7 +1604,7 @@ def test_one_distinct_estimate_everywhere(spark, tmp_path, monkeypatch):
                         killed_after_first_chunk)
     with pytest.raises(RuntimeError, match="killed"):
         run_main(killed)
-    spark.sparkContext.setJobGroup("", "")   # left set by the raising run
+    assert not spark.sparkContext.getLocalProperty("spark.jobGroup.id")
     monkeypatch.setattr(CheckpointManager, "record_done", record_done)
     out = run_main(killed)
     assert out["resumed_buckets"] == 3
