@@ -61,7 +61,6 @@ def entry(spark: SparkSession) -> DataFrame:
     counters."""
     events = _t(spark, "/root/testdata/sf0.001", "events")
     res = infer_json_column(events, "props", CTX)
-    res.unpersist()   # only the state and counters are read
     rendered = json.dumps(res.schema(CTX), sort_keys=True)
     dupes = json.dumps(sorted(res.duplicated_keys()))
     return spark.createDataFrame(

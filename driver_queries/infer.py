@@ -51,19 +51,12 @@ def _encase_max_sql(mn: str, mx: str) -> str:
 
 # --- schema inference over events.props ------------------------------------
 
-def _props_result(spark, sf):
-    # callers read only the state and counters: release the cached scan
-    res = infer_json_column(table(spark, sf, "events"), "props", CTX)
-    res.unpersist()
-    return res
-
-
 def top_keys(spark, sf):
     # the merged schema's top-level property set must equal DuckDB's
     # independent union of JSON object keys, and the ok/err counters
     # must match its json_valid accounting — pins P1/P2 routing and the
     # A5 object key-union merge without the full recursive render in SQL
-    res = _props_result(spark, sf)
+    res = infer_json_column(table(spark, sf, "events"), "props", CTX)
     keys = sorted((res.schema(CTX).get("properties") or {}).keys())
     return spark.createDataFrame(
         [(res.n_ok, res.n_err, ",".join(keys))],
@@ -108,7 +101,6 @@ def string_annotations(spark, sf):
         F.format_string("%08x-0000-4000-8000-%012x", d, d).alias("u"),
     )).alias("doc"))
     res = infer_json_column(docs, "doc", CTX)
-    res.unpersist()
     props = res.schema(CTX).get("properties") or {}
     rows = [(k, p.get("type"), p.get("format"), p.get("pattern"),
              p.get("minLength"), p.get("maxLength"))
@@ -164,7 +156,7 @@ def numeric_bounds(spark, sf):
     # pins derivation (D9) + integer merge (A3) + T1 encasing THROUGH
     # the distributed engine: the rendered property's type/min/max must
     # equal the SQL-side encasing of the observed json_extract range
-    res = _props_result(spark, sf)
+    res = infer_json_column(table(spark, sf, "events"), "props", CTX)
     k = (res.schema(CTX).get("properties") or {}).get("k", {})
     return spark.createDataFrame(
         [(k.get("type"), k.get("minimum"), k.get("maximum"))],
@@ -230,7 +222,7 @@ BY_TYPE_KEYS = f"""
 # (SURVEY.md §2 A1/A8)
 
 def props_schema(spark, sf):
-    res = _props_result(spark, sf)
+    res = infer_json_column(table(spark, sf, "events"), "props", CTX)
     rendered = json.dumps(res.schema(CTX), sort_keys=True)
     return spark.createDataFrame(
         [(rendered, res.n_ok, res.n_err)],

@@ -141,12 +141,13 @@ def main(argv=None) -> int:
         if args.vendor and args.name:
             schema = describe(schema, args.vendor, args.name,
                               args.schemaver)
+        # the error rows are a lazy view of the inference scan: reading
+        # them scans again, as the --schema-by branch's error pass does
         if args.errors_path and res.n_err:
             res.violations.write.mode("overwrite").parquet(args.errors_path)
         elif res.n_err:
             for row in res.violations.limit(20).collect():
                 print(f"error: {row['error']}", file=sys.stderr)
-        res.unpersist()
         dupes = res.duplicated_keys()
         for a, b in sorted(dupes):
             print(f"warning: possibly duplicated keys: {a} ~ {b}",

@@ -4,10 +4,11 @@ semantics from BASELINE.json — SURVEY.md §2 'Similarity / join-like ops'
 note).
 
 Built-in Spark — broadcast anti-joins, window-function CDFs, HLL++ via
-approx_count_distinct in the standalone uniqueness screens — plus one
-mergeable key sketch: HyperLogLog registers over ``key_hash`` values,
-folded in Python tasks (``hll_registers``) and estimated on the driver
-(``hll_estimate``); the validation job's uniqueness screen uses these.
+approx_count_distinct in the standalone uniqueness screen
+(``uniqueness_hashed``) — plus one mergeable key sketch: HyperLogLog
+registers over ``key_hash`` values, folded in Python tasks
+(``hll_registers``) and estimated on the driver (``hll_estimate``); the
+validation job's uniqueness screen uses these.
 Scale notes per operator inline.
 """
 
@@ -28,8 +29,8 @@ def uniqueness_exact(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     count(distinct struct) is a two-stage hash aggregate with partial
     combine; no collect. The struct is never NULL, so NULL key parts
     compare equal at the same position (the ``key_hash`` rule). At
-    100 TB prefer ``uniqueness_hll`` as the cheap screen and this as the
-    confirmation pass.
+    100 TB prefer ``uniqueness_hashed`` as the cheap screen and this as
+    the confirmation pass.
     """
     kc = F.struct(*[F.col(k) for k in keys])
     return df.agg(
@@ -161,40 +162,16 @@ def _hll_tau(x: float) -> float:
             return z / 3.0
 
 
-def _distinct_screen(df: DataFrame, key: Column, rsd: float,
-                     tolerance: float) -> DataFrame:
-    """Exact vs HLL++ distinct count of ``key``: one row (n_rows,
-    n_exact, n_approx, rel_err, hll_ok)."""
-    # NEVER put count_distinct and approx_count_distinct in one agg: the
-    # mixed distinct/non-distinct plan goes through Expand and runs ~15x
-    # slower (measured 40.8s vs 2.6+2.4s on 8M rows). Two aggregates,
-    # 1-row crossJoin.
-    exact = df.agg(F.count(F.lit(1)).alias("n_rows"),
-                   F.count_distinct(key).alias("n_exact"))
-    approx = df.agg(F.approx_count_distinct(key, rsd).alias("n_approx"))
-    rel_err = (F.abs(F.col("n_approx") - F.col("n_exact")) /
-               F.greatest(F.col("n_exact"), F.lit(1)))
-    return exact.crossJoin(approx).select(
-        "n_rows", "n_exact", "n_approx", rel_err.alias("rel_err"),
-        (rel_err <= tolerance).alias("hll_ok"))
-
-
-def uniqueness_hll(df: DataFrame, keys: Sequence[str], rsd: float = 0.02,
-                   tolerance: float = 0.05) -> DataFrame:
-    """HLL++ vs exact uniqueness screen (north_rule): the approx and the
-    exact distinct count of the key tuple, the relative gap and a pass
-    flag. NULL key parts compare equal at the same position."""
-    return _distinct_screen(df, F.struct(*[F.col(k) for k in keys]),
-                            rsd, tolerance)
-
-
 def uniqueness_hashed(df: DataFrame, keys: Sequence[str], rsd: float = 0.02,
                       tolerance: float = 0.05,
                       prehashed: bool = False) -> DataFrame:
-    """Scale path for the uniqueness screen: pre-hash the key tuple to a
-    128-bit pair of independently-seeded xxhash64 columns so the
-    distinct aggregate shuffles 16 bytes/row instead of the raw key
-    strings (~10x less exchange volume on path-like keys).
+    """HLL++ vs exact uniqueness screen (north_rule): one row (n_rows,
+    n_exact, n_approx, rel_err, hll_ok) — the exact and the approx
+    distinct count of the key tuple, their relative gap and a pass
+    flag. The key tuple is pre-hashed to a 128-bit pair of
+    independently-seeded xxhash64 columns so the distinct aggregate
+    shuffles 16 bytes/row instead of the raw key strings (~10x less
+    exchange volume on path-like keys).
 
     Width matters at the north-rule's 10¹²-row target: a single 64-bit
     hash has birthday expectation ~n²/2⁶⁵ ≈ 27 phantom collisions at
@@ -229,7 +206,18 @@ def uniqueness_hashed(df: DataFrame, keys: Sequence[str], rsd: float = 0.02,
         # first-lane mixing
         h = F.struct(key_hash(0x5EED0, keys).alias("h1"),
                      key_hash(0x5EED1, keys).alias("h2"))
-    return _distinct_screen(df, h, rsd, tolerance)
+    # NEVER put count_distinct and approx_count_distinct in one agg: the
+    # mixed distinct/non-distinct plan goes through Expand and runs ~15x
+    # slower (measured 40.8s vs 2.6+2.4s on 8M rows). Two aggregates,
+    # 1-row crossJoin.
+    exact = df.agg(F.count(F.lit(1)).alias("n_rows"),
+                   F.count_distinct(h).alias("n_exact"))
+    approx = df.agg(F.approx_count_distinct(h, rsd).alias("n_approx"))
+    rel_err = (F.abs(F.col("n_approx") - F.col("n_exact")) /
+               F.greatest(F.col("n_exact"), F.lit(1)))
+    return exact.crossJoin(approx).select(
+        "n_rows", "n_exact", "n_approx", rel_err.alias("rel_err"),
+        (rel_err <= tolerance).alias("hll_ok"))
 
 
 def duplicate_key_rows(df: DataFrame, keys: Sequence[str]) -> DataFrame:

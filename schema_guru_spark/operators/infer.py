@@ -16,7 +16,10 @@ SQL aggregate (no recursive types), so the idiomatic Spark shape is:
      (partition) order through one function, ``_fold_partials``, in
      every context: on the driver, and, only above 64 partial states
      (inputs past about 2 GB at 32 MB splits) and only for enum-free
-     contexts, first in combine-tree rounds on the executors. At 1000
+     contexts, first in combine-tree rounds on the executors. The
+     number of states is the scan's partition count, read from the
+     plan, so the rounds are planned before the action that runs the
+     pass and collects the states; nothing is cached. At 1000
      executors / 100k partitions the state rows total a few MB — the
      combine is never the bottleneck; the single data pass is.
 
@@ -133,24 +136,15 @@ def _fold_partials(rows, ctx: SchemaContext) -> tuple[dict, int, int]:
 
 @dataclass
 class InferResult:
-    """Merged schema state + counters + violations as a DataFrame sink."""
+    """Merged schema state + counters + the parse/derive error rows.
+
+    ``violations`` (one ``error`` column) is a lazy view of the scan:
+    every action on it re-runs the scan."""
 
     state: dict
     n_ok: int
     n_err: int
     violations: DataFrame
-    # the persisted mapInPandas output the violations DataFrame reads
-    # from; callers that are done with violations release it via
-    # unpersist() — a per-micro-batch caller (run_incremental_inference)
-    # would otherwise leak one cached RDD per batch, forever
-    _cached: Optional[DataFrame] = None
-
-    def unpersist(self) -> None:
-        """Release the cached scan output backing ``violations``.
-        Reading ``violations`` afterwards still works (recomputes)."""
-        if self._cached is not None:
-            self._cached.unpersist()
-            self._cached = None
 
     def schema(self, ctx: SchemaContext) -> dict:
         """Final JSON Schema (transform passes applied, SchemaGuru.scala:74-78)."""
@@ -160,6 +154,23 @@ class InferResult:
         """Levenshtein near-duplicate warning over the merged tree
         (SchemaGuruRDD.scala:99)."""
         return get_duplicates(extract_keys(self.state))
+
+
+def _num_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s physical plan, read without running a
+    job. Under AQE it is the count of the plan before adaptive
+    execution, which may coalesce partitions: ``df.rdd`` would run the
+    plan's shuffle stages to learn the final count, and a later action
+    on a plan built over ``df`` would run them again."""
+    try:
+        # private JVM API (tested against Spark 4.1.x); the public
+        # probe below is the fallback on a Spark upgrade
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.inputPlan()
+        return plan.execute().getNumPartitions()
+    except Exception:  # plan API unavailable -> the public probe
+        return df.rdd.getNumPartitions()
 
 
 def _widen_small_scan(src: DataFrame) -> DataFrame:
@@ -182,13 +193,13 @@ def _widen_small_scan(src: DataFrame) -> DataFrame:
     except Exception:  # stats API unavailable -> keep the plan as-is
         return src
     # cheap size check FIRST: tiny inputs (the common small-SF case)
-    # skip the .rdd partition-count probe entirely — converting the
-    # plan to an RDD costs a plan compilation. Worst case a single
+    # skip the partition-count probe entirely — converting the plan
+    # to an RDD costs a plan compilation. Worst case a single
     # split carries all bytes, so anything <= the per-task threshold
     # can never need widening.
     if total_bytes <= 8 * 1024 * 1024:
         return src
-    n_parts = src.rdd.getNumPartitions()
+    n_parts = _num_partitions(src)
     if n_parts < par and total_bytes // max(n_parts, 1) > 8 * 1024 * 1024:
         return src.repartition(par)
     return src
@@ -205,6 +216,16 @@ def infer_json_column(df: DataFrame, column: str,
     combine-tree rounds on the executors, each shrinking the count by
     ``_FANIN``x through the same fold (at 32 MB splits, only inputs
     above about 2 GB have that many states).
+
+    Global inference emits exactly one state row per scan task, so the
+    number of states is the scan's partition count, which the plan
+    gives (``_num_partitions``); the rounds are planned without a job
+    and one action collects the states: one Spark job when no round
+    runs and the source has no shuffle. Under AQE the plan's count can exceed the tasks that run,
+    which at worst starts a round that was not needed; an enum-free
+    fold is the same through a tree or on the driver. Nothing is
+    cached: ``violations`` is a lazy view of the scan, and every action
+    on it re-runs the scan.
     """
     _require_commutative(ctx)
     # With the enum machinery live (not ctx.enum_disabled), the
@@ -225,12 +246,10 @@ def infer_json_column(df: DataFrame, column: str,
         # order-sensitive (enum-bearing) fold depend on the session's
         # parallelism instead of the input layout alone — skip it there
         src = _widen_small_scan(src)
-    raw = src.mapInPandas(_fold_task(ctx, column), _PARTIAL).persist()
+    raw = src.mapInPandas(_fold_task(ctx, column), _PARTIAL)
     violations = raw.filter(F.col("error").isNotNull()).select("error")
     states = raw.filter(F.col("error").isNull())
-    # counting the (tiny, persisted) state rows also materializes the
-    # single data pass
-    n = states.count()
+    n = _num_partitions(src)   # one state row per scan task
 
     def tree_round(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # one combine-tree round: the task's partial states fold into
@@ -245,7 +264,7 @@ def infer_json_column(df: DataFrame, column: str,
         n = math.ceil(n / _FANIN)
         states = states.repartition(n).mapInPandas(tree_round, _PARTIAL)
     acc, n_ok, n_err = _fold_partials(states.collect(), ctx)
-    return InferResult(acc, n_ok, n_err, violations, _cached=raw)
+    return InferResult(acc, n_ok, n_err, violations)
 
 
 def infer_json_column_by_key(df: DataFrame, column: str, key_col: str,

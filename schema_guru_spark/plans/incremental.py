@@ -188,7 +188,10 @@ def incremental_validate(
     if on_nonappend not in ("error", "rebase"):
         raise ValueError(f"on_nonappend={on_nonappend!r}: "
                          "expected 'error' or 'rebase'")
-    allowed_langs = tuple(allowed_langs or DEFAULT_LANGS)
+    # None takes the defaults; an empty list allows no language, as in
+    # validate_repo_table
+    allowed_langs = tuple(DEFAULT_LANGS if allowed_langs is None
+                          else allowed_langs)
     checkpoint_dir = local_dir(checkpoint_dir)
 
     meta = load_table_metadata(table_path)

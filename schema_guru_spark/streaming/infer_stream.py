@@ -8,9 +8,10 @@ Two shapes:
 
   * ``run_incremental_inference`` — global evolving schema via
     ``foreachBatch``: each micro-batch computes its partial state with
-    the batch engine (same operators/infer.py path, same plans), then
-    merges into a driver-persisted cumulative state (tiny JSON). Restart
-    reuses both the stream checkpoint AND the persisted state.
+    the batch engine (same operators/infer.py path, same plans,
+    nothing cached), then merges into a cumulative state file on the
+    driver (tiny JSON). Restart reuses both the stream
+    checkpoint AND the state file.
   * ``keyed_schema_stream`` — per-key evolving schema via
     ``applyInPandasWithState``: custom stateful operator keeping each
     key's merged micro-schema state + counters in the state store,
@@ -131,15 +132,10 @@ def run_incremental_inference(stream_df: DataFrame, column: str,
                 "checkpoint was reset. Restore it, or start a fresh "
                 "state_path.")
         res = infer_json_column(batch_df, column, ctx)
-        try:
-            merged = merge(prev, res.state, ctx)
-            store.write(merged, ok + res.n_ok, err + res.n_err, batch_id,
-                        checkpoint_dir=ckpt)
-            write_schema(merged)
-        finally:
-            # one cached scan per micro-batch would otherwise accumulate
-            # in executor storage for the stream's whole lifetime
-            res.unpersist()
+        merged = merge(prev, res.state, ctx)
+        store.write(merged, ok + res.n_ok, err + res.n_err, batch_id,
+                    checkpoint_dir=ckpt)
+        write_schema(merged)
 
     writer = (stream_df.writeStream
               .foreachBatch(process)

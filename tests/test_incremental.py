@@ -514,6 +514,28 @@ def test_partition_filter_on_unpartitioned_column(spark, tmp_path):
     assert r2["cumulative"]["rows"] == 20
 
 
+def test_empty_allow_list_allows_no_language(spark, tmp_path):
+    """An empty allow-list allows nothing, as validate_repo_table
+    documents: every delta row counts as lang_bad, the same count a
+    from-scratch validation with allowed_langs=() gives, and the
+    params pin records the empty list, not the defaults."""
+    from schema_guru_spark.pipeline import validate_repo_table
+    from schema_guru_spark.plans.incremental import incremental_validate
+    tp = str(tmp_path / "repos")
+    ckpt = str(tmp_path / "ckpt")
+    append_snapshot(tp, _vrows(12, "c1", langs=("json", "py")), SCHEMA)
+    rep = incremental_validate(spark, tp, ckpt, n_buckets=N_BUCKETS,
+                               allowed_langs=[])
+    full = validate_repo_table(spark, read_iceberg(spark, tp),
+                               n_buckets=N_BUCKETS, allowed_langs=())
+    n_lang_bad = sum(r["n_lang_bad"] for r in full.verdict_rows
+                     .to_dict("records"))
+    assert rep["delta"]["lang_bad"] == rep["delta"]["rows"] == 12
+    assert n_lang_bad == 12
+    with open(os.path.join(ckpt, "table_state.json")) as f:
+        assert json.load(f)["params"]["allowed_langs"] == []
+
+
 def test_zero_row_delta_is_vacuously_passing(spark, tmp_path):
     """A delta whose partition filter removes every file must not
     crash the sketch union or report a failing pass_rate."""

@@ -1,6 +1,7 @@
 """Distributed schema inference over real parquet (sf0.001 events.props)."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,6 +38,26 @@ def test_infer_matches_driver_side_merge(events):
     texts = [r["props"] for r in events.select("props").collect()]
     seq = merge_all([derive_text(t, CTX)[0] for t in texts], CTX)
     assert dumps(res.state) == dumps(seq)
+
+
+def test_infer_runs_one_job_and_caches_nothing(spark, sf_dir):
+    """Global inference over a scan of at most 64 partitions is ONE
+    Spark job: the plan gives the number of partial states (one per
+    scan task), so no job counts them before the collect. Nothing is
+    cached, so the caller has nothing to release, and the error rows
+    stay readable as a lazy view of the scan."""
+    from schema_guru_spark.run_validation import _next_job_id
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    events = spark.read.parquet(f"{sf01}/events.parquet")
+    assert events.rdd.getNumPartitions() <= 64
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    lo = _next_job_id(spark)
+    res = infer_json_column(events, "props", CTX)
+    assert _next_job_id(spark) - lo == 1
+    assert cache.isEmpty()
+    assert res.n_ok + res.n_err == events.count()
+    assert res.violations.count() == res.n_err
 
 
 def test_infer_error_routing(spark):
