@@ -146,7 +146,11 @@ def main(argv=None) -> int:
         if args.errors_path and res.n_err:
             res.violations.write.mode("overwrite").parquet(args.errors_path)
         elif res.n_err:
-            for row in res.violations.limit(20).collect():
+            # a limit the rows cannot reach would widen its scan over
+            # several jobs, each deriving again: collect them in one
+            rows = (res.violations.collect() if res.n_err <= 20
+                    else res.violations.limit(20).collect())
+            for row in rows:
                 print(f"error: {row['error']}", file=sys.stderr)
         dupes = res.duplicated_keys()
         for a, b in sorted(dupes):

@@ -158,7 +158,9 @@ def decode_avi_rgb(data: bytes):
     walk(12, 8 + riff_size)
     if width is None or us_per_frame is None:
         raise ValueError("missing avih header")
-    out = np.empty((len(frames), height, width, 3), dtype=np.uint8)
+    # every frame is checked against the header's dimensions before an
+    # array is sized by them: a corrupt header raises, never allocates
+    imgs = []
     if compression == MJPG_FOURCC:
         for i, (start, size) in enumerate(frames):
             img = decode_jpeg(data[start:start + size])
@@ -166,7 +168,7 @@ def decode_avi_rgb(data: bytes):
                 raise ValueError(
                     f"MJPG frame {i} decoded to {img.shape}, header says "
                     f"({height}, {width}, 3)")
-            out[i] = img                             # JPEG is top-down RGB
+            imgs.append(img)                         # JPEG is top-down RGB
     else:
         stride = (width * 3 + 3) & ~3
         for i, (start, size) in enumerate(frames):
@@ -175,6 +177,8 @@ def decode_avi_rgb(data: bytes):
             raw = np.frombuffer(data[start:start + stride * height],
                                 dtype=np.uint8).reshape(height, stride)
             bgr = raw[:, : width * 3].reshape(height, width, 3)
-            out[i] = bgr[::-1, :, ::-1]              # un-flip, BGR->RGB
+            imgs.append(bgr[::-1, :, ::-1])          # un-flip, BGR->RGB
+    out = (np.stack(imgs) if imgs
+           else np.empty((0, height, width, 3), dtype=np.uint8))
     fps = round(1_000_000 / us_per_frame) if us_per_frame else 0
     return out, fps

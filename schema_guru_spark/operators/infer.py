@@ -17,8 +17,8 @@ SQL aggregate (no recursive types), so the idiomatic Spark shape is:
      every context: on the driver, and, only above 64 partial states
      (inputs past about 2 GB at 32 MB splits) and only for enum-free
      contexts, first in combine-tree rounds on the executors. The
-     number of states is the scan's partition count, read from the
-     plan, so the rounds are planned before the action that runs the
+     number of states is the scan's partition count, known without a
+     job, so the rounds are planned before the action that runs the
      pass and collects the states; nothing is cached. At 1000
      executors / 100k partitions the state rows total a few MB — the
      combine is never the bottleneck; the single data pass is.
@@ -156,31 +156,18 @@ class InferResult:
         return get_duplicates(extract_keys(self.state))
 
 
-def _num_partitions(df: DataFrame) -> int:
-    """Partition count of ``df``'s physical plan, read without running a
-    job. Under AQE it is the count of the plan before adaptive
-    execution, which may coalesce partitions: ``df.rdd`` would run the
-    plan's shuffle stages to learn the final count, and a later action
-    on a plan built over ``df`` would run them again."""
-    try:
-        # private JVM API (tested against Spark 4.1.x); the public
-        # probe below is the fallback on a Spark upgrade
-        plan = df._jdf.queryExecution().executedPlan()
-        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            plan = plan.inputPlan()
-        return plan.execute().getNumPartitions()
-    except Exception:  # plan API unavailable -> the public probe
-        return df.rdd.getNumPartitions()
-
-
-def _widen_small_scan(src: DataFrame) -> DataFrame:
+def _widen_small_scan(src: DataFrame,
+                      n_parts: int) -> tuple[DataFrame, int]:
     """A small input can plan fewer scan tasks than the session has
     cores, serializing the Python derive pass. Widen it ONLY when a
     task would carry substantial bytes: for tiny inputs the extra
     exchange + per-task scheduling costs more than single-task derive
     (measured 0.4s single-task vs 1.0s repartitioned on a 2 MB file),
     while at production scale the scan already has >> cores splits and
-    neither branch fires — no shuffle is ever added there."""
+    neither branch fires — no shuffle is ever added there.
+
+    ``n_parts`` is ``src``'s partition count; returns the source to scan
+    and its partition count (the session's parallelism when widened)."""
     spark = src.sparkSession
     par = spark.sparkContext.defaultParallelism
     try:
@@ -191,18 +178,10 @@ def _widen_small_scan(src: DataFrame) -> DataFrame:
             src._jdf.queryExecution().optimizedPlan().stats()
                .sizeInBytes())
     except Exception:  # stats API unavailable -> keep the plan as-is
-        return src
-    # cheap size check FIRST: tiny inputs (the common small-SF case)
-    # skip the partition-count probe entirely — converting the plan
-    # to an RDD costs a plan compilation. Worst case a single
-    # split carries all bytes, so anything <= the per-task threshold
-    # can never need widening.
-    if total_bytes <= 8 * 1024 * 1024:
-        return src
-    n_parts = _num_partitions(src)
+        return src, n_parts
     if n_parts < par and total_bytes // max(n_parts, 1) > 8 * 1024 * 1024:
-        return src.repartition(par)
-    return src
+        return src.repartition(par), par
+    return src, n_parts
 
 
 def infer_json_column(df: DataFrame, column: str,
@@ -218,14 +197,12 @@ def infer_json_column(df: DataFrame, column: str,
     above about 2 GB have that many states).
 
     Global inference emits exactly one state row per scan task, so the
-    number of states is the scan's partition count, which the plan
-    gives (``_num_partitions``); the rounds are planned without a job
-    and one action collects the states: one Spark job when no round
-    runs and the source has no shuffle. Under AQE the plan's count can exceed the tasks that run,
-    which at worst starts a round that was not needed; an enum-free
-    fold is the same through a tree or on the driver. Nothing is
-    cached: ``violations`` is a lazy view of the scan, and every action
-    on it re-runs the scan.
+    number of states is the scan's partition count
+    (``df.rdd.getNumPartitions()``, which runs no job on a plain scan);
+    the rounds are planned without a job and one action collects the
+    states: one Spark job when no round runs. Nothing is cached:
+    ``violations`` is a lazy view of the scan, and every action on it
+    re-runs the scan.
     """
     _require_commutative(ctx)
     # With the enum machinery live (not ctx.enum_disabled), the
@@ -239,17 +216,16 @@ def infer_json_column(df: DataFrame, column: str,
     # a fixed input partitioning (the reference's own Spark job folds
     # the same merge through RDD.aggregate with no ordering guarantee
     # at all, SchemaGuruRDD.scala:44-60).
-    enum_on = not ctx.enum_disabled
     src = df.select(column)
-    if not enum_on:
+    n = 0   # enum-bearing contexts: no tree round
+    if ctx.enum_disabled:
         # widening repartitions rows round-robin, which would make an
         # order-sensitive (enum-bearing) fold depend on the session's
         # parallelism instead of the input layout alone — skip it there
-        src = _widen_small_scan(src)
+        src, n = _widen_small_scan(src, src.rdd.getNumPartitions())
     raw = src.mapInPandas(_fold_task(ctx, column), _PARTIAL)
     violations = raw.filter(F.col("error").isNotNull()).select("error")
     states = raw.filter(F.col("error").isNull())
-    n = _num_partitions(src)   # one state row per scan task
 
     def tree_round(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # one combine-tree round: the task's partial states fold into
@@ -260,7 +236,7 @@ def infer_json_column(df: DataFrame, column: str,
         yield pd.DataFrame([(None, dumps(acc), n_ok, n_err, pid, None)],
                            columns=_COLS)
 
-    while not enum_on and n > _FANIN:
+    while n > _FANIN:   # n: partial state rows
         n = math.ceil(n / _FANIN)
         states = states.repartition(n).mapInPandas(tree_round, _PARTIAL)
     acc, n_ok, n_err = _fold_partials(states.collect(), ctx)
@@ -315,7 +291,7 @@ def infer_json_column_by_key(df: DataFrame, column: str, key_col: str,
         # same rule as infer_json_column: enum-bearing contexts keep the
         # input layout so the per-key pid-ordered fold is a function of
         # the input alone
-        src = _widen_small_scan(src)
+        src = _widen_small_scan(src, src.rdd.getNumPartitions())[0]
     partial = src.mapInPandas(_fold_task(ctx, column, key_col, ctx_by_key),
                               _PARTIAL)
     return partial.filter(F.col("error").isNull()).groupBy("key") \

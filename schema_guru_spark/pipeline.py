@@ -92,8 +92,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
-from functools import cached_property, reduce
-from typing import Callable, Iterator, Optional, Sequence
+from typing import Iterator, Optional, Sequence
 
 import numpy as np
 import pandas as pd
@@ -486,7 +485,12 @@ _KEY_HASH = (0x1CEB, _KEY)
 
 @dataclass
 class ValidationResult:
-    # the verdict rows, already on the driver
+    verdicts: DataFrame
+    # with a checkpoint, a read of the violation rows in the scan sinks;
+    # without one, a lazy view of the scan: every action on it re-runs
+    # the scan
+    violations: DataFrame
+    # the rows ``verdicts`` was built from, already on the driver
     verdict_rows: pd.DataFrame
     # the number of rows in ``violations``, counted without a Spark job
     n_violation_rows: int
@@ -494,25 +498,8 @@ class ValidationResult:
     # row's key hash (_KEY_HASH), resumed chunks' included: the
     # uniqueness screen's distinct estimate (constraint_summary)
     key_sketch: np.ndarray
-    # build ``verdicts`` and ``violations`` at their first read: the
-    # validation job reads neither
-    _verdicts: Callable[[], DataFrame]
-    _violations: Callable[[], DataFrame]
     processed_buckets: list = field(default_factory=list)
     resumed_buckets: list = field(default_factory=list)
-
-    @cached_property
-    def verdicts(self) -> DataFrame:
-        """``verdict_rows`` as a local relation: collecting it launches
-        no Spark job."""
-        return self._verdicts()
-
-    @cached_property
-    def violations(self) -> DataFrame:
-        """With a checkpoint, a read of the violation rows in the scan
-        sinks; without one, a lazy view of the scan: every action on it
-        re-runs the scan."""
-        return self._violations()
 
 
 def _scan_sink(ckpt_dir: str, chunk: Optional[int] = None) -> str:
@@ -627,11 +614,10 @@ def validate_repo_table(
     registers are the element-wise max of every task's (``scan_totals``
     gives both).
 
-    The result's ``verdicts`` and ``violations`` DataFrames are built
-    at their first read. Without a checkpoint, the chunk's job collects
-    the partial and sketch rows through Arrow; the result is the
-    verdict rows as a local relation (collecting it launches no Spark
-    job) and the violations as a lazy view of the scan: every action on
+    Without a checkpoint, the chunk's job collects the partial and
+    sketch rows through Arrow; the result is the verdict rows as a
+    local relation (collecting it launches no Spark job) and the
+    violations as a lazy view of the scan: every action on
     ``violations`` re-runs the scan. ``checkpoint_dir`` is a
     driver-local directory (``plans.checkpoint.local_dir`` refuses other
     URI schemes before any scan). There each chunk writes, in this
@@ -745,7 +731,7 @@ def validate_repo_table(
     # resumed chunks keep it (there it prunes files, or the chunk
     # excludes buckets)
     computed_bucket = "bucket" not in df.columns
-    chunk_verdicts, chunk_scans, raws = [], [], []
+    chunk_verdicts, chunk_scans, all_violations = [], [], []
     for i in range(0, len(remaining), chunk_size):
         chunk = remaining[i:i + chunk_size]
         sub = (prepared.where(f"bucket IN ({', '.join(map(str, chunk))})")
@@ -772,7 +758,8 @@ def validate_repo_table(
             parts = raw.where("detail IS NULL").select(*_PART_COLS) \
                 .toPandas()
             chunk_scans.append(parts[["n_viol", "sketch"]])
-            raws.append(raw)
+            all_violations.append(raw.where("detail IS NOT NULL").select(
+                "bucket", "repo", "lang", "detail"))
         verdict_rows = _fold_buckets(parts[parts["sketch"].isna()], ctx,
                                      max_err_rate, keep_state=keep_state)
 
@@ -800,32 +787,26 @@ def validate_repo_table(
         verdict_rows = read_verdicts([f"{ckpt.dir}/verdicts"],
                                      verdict_schema)
         scan = read_scan_parts([ckpt.dir], ("n_viol", "sketch"))
-
-        def violations() -> DataFrame:
-            try:
-                # chunk=N partition dirs: drop the discovered partition
-                # column
-                return spark.read.schema(_VIOLATION_SCHEMA) \
-                    .parquet(_scan_sink(ckpt.dir)) \
-                    .where("detail IS NOT NULL").drop("chunk")
-            except AnalysisException as exc:
-                if not is_missing_path(exc):
-                    raise
-                return spark.createDataFrame([], _VIOLATION_SCHEMA)
+        try:
+            # chunk=N partition dirs: drop the discovered partition column
+            violations_df = spark.read.schema(_VIOLATION_SCHEMA) \
+                .parquet(_scan_sink(ckpt.dir)) \
+                .where("detail IS NOT NULL").drop("chunk")
+        except AnalysisException as exc:
+            if not is_missing_path(exc):
+                raise
+            violations_df = spark.createDataFrame([], _VIOLATION_SCHEMA)
     else:
+        from functools import reduce
         verdict_rows = pd.concat(chunk_verdicts, ignore_index=True)
         scan = pd.concat(chunk_scans, ignore_index=True)
-
-        def violations() -> DataFrame:
-            return reduce(DataFrame.unionByName, (
-                raw.where("detail IS NOT NULL").select(
-                    "bucket", "repo", "lang", "detail") for raw in raws))
+        violations_df = reduce(DataFrame.unionByName, all_violations)
     verdict_rows = verdict_rows.sort_values("bucket", ignore_index=True)
     n_violation_rows, sketch = scan_totals(scan)
 
     return ValidationResult(
-        _verdicts=lambda: spark.createDataFrame(verdict_rows, verdict_schema),
-        _violations=violations,
+        verdicts=spark.createDataFrame(verdict_rows, verdict_schema),
+        violations=violations_df,
         verdict_rows=verdict_rows,
         n_violation_rows=n_violation_rows,
         key_sketch=sketch,

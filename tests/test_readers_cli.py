@@ -188,6 +188,33 @@ def test_cli_modes_report_the_same_errors(spark, tmp_path, capsys):
         [line[len("error: "):] for line in lines]
 
 
+def test_cli_prints_few_errors_in_one_job(spark, tmp_path, capsys):
+    """Global mode reads its error rows, a lazy view of the inference
+    scan, in one job when there are at most 20: a limit the rows cannot
+    reach would widen over the scan's partitions in several jobs, each
+    deriving again. Printing them costs what writing them does: the
+    quantity count (2 jobs under AQE), the inference pass, the read."""
+    from schema_guru_spark.cli import main
+    from schema_guru_spark.run_validation import _next_job_id
+    src = tmp_path / "docs"
+    src.mkdir()
+    for i in range(40):
+        (src / f"d{i}.json").write_text(json.dumps({"n": i}))
+    (src / "bad.json").write_text("{nope")
+    assert read_json_dir(spark, str(src)).rdd.getNumPartitions() > 1
+
+    def jobs(*extra):
+        argv = ["schema", str(src), "--output", str(tmp_path / "out.json"),
+                "--cpus", "4", *extra]
+        assert main(argv) == 0   # warm
+        lo = _next_job_id(spark)
+        assert main(argv) == 0
+        return _next_job_id(spark) - lo
+
+    assert jobs() == jobs("--errors-path", str(tmp_path / "errors")) == 4
+    assert capsys.readouterr().err.count("error: invalid JSON") == 2
+
+
 # --- migrations / SchemaVer ---
 
 V1 = {"type": "object", "properties": {

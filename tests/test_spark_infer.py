@@ -263,15 +263,29 @@ def test_widen_small_scan_falls_back_on_stats_api_change(spark, monkeypatch):
             raise RuntimeError("stats API removed in this Spark version")
 
     monkeypatch.setattr(df, "_jdf", _Boom(), raising=False)
-    out = _widen_small_scan(df)
-    assert out is df  # plan unchanged, no exception escaped
+    out, n = _widen_small_scan(df, 1)
+    assert out is df and n == 1  # plan unchanged, no exception escaped
 
 
 def test_widen_small_scan_noop_on_tiny_input(spark):
     from schema_guru_spark.operators.infer import _widen_small_scan
 
     df = spark.range(100).selectExpr("cast(id as string) as content")
-    assert _widen_small_scan(df) is df  # < 8 MiB: never widened
+    out, n = _widen_small_scan(df, 1)
+    assert out is df and n == 1  # < 8 MiB: never widened
+
+
+def test_widen_small_scan_reports_the_widened_count(spark):
+    # the widened source's partition count sizes the combine tree, so
+    # it is the session's parallelism, known without running a job
+    from schema_guru_spark.operators.infer import _widen_small_scan
+
+    df = spark.range(10_000_000, numPartitions=1) \
+        .selectExpr("cast(id as string) as content")   # ~200 MB by stats
+    par = spark.sparkContext.defaultParallelism
+    assert par > 1
+    out, n = _widen_small_scan(df, 1)
+    assert out is not df and n == par
 
 
 def test_enum_infer_folds_states_in_partition_order(spark):
