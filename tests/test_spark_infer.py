@@ -42,8 +42,9 @@ def test_infer_matches_driver_side_merge(events):
 
 def test_infer_runs_one_job_and_caches_nothing(spark, sf_dir):
     """Global inference over a scan of at most 64 partitions is ONE
-    Spark job: the plan gives the number of partial states (one per
-    scan task), so no job counts them before the collect. Nothing is
+    Spark job: the scan's partition count is the number of partial
+    states (one per scan task), so no job counts them before the
+    collect. Nothing is
     cached, so the caller has nothing to release, and the error rows
     stay readable as a lazy view of the scan."""
     from schema_guru_spark.run_validation import _next_job_id
