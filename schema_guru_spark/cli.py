@@ -102,11 +102,20 @@ def main(argv=None) -> int:
         keyed = docs.withColumn(
             "segment",
             normalize_segment_key(F.get_json_object("content", args.schema_by)))
+        # the reference prints parse errors after segmented output
+        # (SchemaCommand.scala:127-130). The probe accepts top-level
+        # scalars, which the derive pass's gate rejects, so every row
+        # that is not plainly an object or array goes to the error pass
+        # below, which yields at most one message per such row
+        bad = ~parse_ok | ~F.col("content").rlike(r"^\s*[\[{]")
         # per-segment quantity (reference: produce(key, someJsons) gets
-        # that segment's own count, SchemaCommand.scala:118-122)
-        qmap = {r["segment"]: r["n"] for r in
-                keyed.filter(parse_ok).groupBy("segment")
-                     .agg(F.count("*").alias("n")).collect()}
+        # that segment's own count, SchemaCommand.scala:118-122), and
+        # the bad rows counted in the same aggregate
+        counts = (keyed.groupBy("segment")
+                       .agg(F.count_if(parse_ok).alias("n"),
+                            F.count_if(bad).alias("n_bad")).collect())
+        qmap = {r["segment"]: r["n"] for r in counts if r["n"]}
+        n_bad = sum(r["n_bad"] for r in counts)
         out = infer_json_column_by_key(keyed, "content", "segment", ctx,
                                        quantity_by_key=qmap)
         rows = out.collect()
@@ -118,20 +127,8 @@ def main(argv=None) -> int:
                                args.schemaver)
             result[r["segment"]] = sch
         payload = json.dumps(result, indent=2, sort_keys=True)
-        # the reference prints parse errors after segmented output
-        # (SchemaCommand.scala:127-130); route them like the global path
-        # (--errors-path as parquet, else stderr, capped). The probe
-        # accepts top-level scalars, which the derive pass's gate
-        # rejects, so every row that is not plainly an object or array
-        # goes to the Python pass too
-        bad = docs.filter(~parse_ok
-                          | ~F.col("content").rlike(r"^\s*[\[{]"))
-        violations = _parse_error_messages(bad, ctx)
-        if args.errors_path and not violations.isEmpty():
-            violations.write.mode("overwrite").parquet(args.errors_path)
-        else:
-            for row in violations.limit(20).collect():
-                print(f"error: {row['error']}", file=sys.stderr)
+        _report_errors(_parse_error_messages(docs.filter(bad), ctx),
+                       n_bad, args.errors_path)
     else:
         ctx = SchemaContext.make(args.enum_cardinality, enum_sets,
                                  quantity=docs.filter(parse_ok).count(),
@@ -143,15 +140,7 @@ def main(argv=None) -> int:
                               args.schemaver)
         # the error rows are a lazy view of the inference scan: reading
         # them scans again, as the --schema-by branch's error pass does
-        if args.errors_path and res.n_err:
-            res.violations.write.mode("overwrite").parquet(args.errors_path)
-        elif res.n_err:
-            # a limit the rows cannot reach would widen its scan over
-            # several jobs, each deriving again: collect them in one
-            rows = (res.violations.collect() if res.n_err <= 20
-                    else res.violations.limit(20).collect())
-            for row in rows:
-                print(f"error: {row['error']}", file=sys.stderr)
+        _report_errors(res.violations, res.n_err, args.errors_path)
         dupes = res.duplicated_keys()
         for a, b in sorted(dupes):
             print(f"warning: possibly duplicated keys: {a} ~ {b}",
@@ -166,6 +155,23 @@ def main(argv=None) -> int:
     return 0
 
 
+def _report_errors(violations, n_max: int, errors_path) -> None:
+    """Write the error rows (one ``error`` column) to ``errors_path`` as
+    parquet, else print at most 20 of them to stderr. ``n_max`` bounds
+    their count, and nothing is read when it is 0. Up to 20 rows are
+    read in one plain collect: a limit the rows cannot reach would
+    widen its scan over several jobs, each deriving again."""
+    if not n_max:
+        return
+    if errors_path:
+        violations.write.mode("overwrite").parquet(errors_path)
+        return
+    rows = (violations.collect() if n_max <= 20
+            else violations.limit(20).collect())
+    for row in rows:
+        print(f"error: {row['error']}", file=sys.stderr)
+
+
 def _parse_error_messages(bad, ctx):
     """Violation messages of the rows in ``bad`` that are not JSON
     objects or arrays, from the derive pass's own kernel
@@ -175,7 +181,9 @@ def _parse_error_messages(bad, ctx):
     import pandas as pd
 
     from schema_guru_spark.core.accumulate_batch import fold_keyed
+    from schema_guru_spark.worker import worker_fn
 
+    @worker_fn
     def fn(batches):
         for pdf in batches:
             errors = fold_keyed(pdf["content"], None, ctx)[2]

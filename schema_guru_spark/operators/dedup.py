@@ -29,6 +29,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from schema_guru_spark.functions import bind_once
+from schema_guru_spark.worker import worker_fn
 from pyspark.sql import DataFrame, Window, functions as F
 
 def _hash_family(n: int) -> np.ndarray:
@@ -92,6 +93,7 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     the n_hashes mins are one vectorized (H x S) broadcast per doc."""
     seeds = _hash_family(n_hashes)
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             sigs = []
@@ -412,6 +414,7 @@ def embedding_near_duplicates(df: DataFrame, id_col: str, vec_col: str,
         r = np.random.RandomState(0xA11CE)
         return r.standard_normal((dim, n_planes))
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         planes = None
         shifts = np.arange(r_planes, dtype=np.int64)

@@ -46,6 +46,7 @@ from schema_guru_spark.core.microschema import (
     ZERO, dumps, loads, merge, render)
 from schema_guru_spark.core.transforms import apply_transforms, extract_keys
 from schema_guru_spark.core.levenshtein import get_duplicates
+from schema_guru_spark.worker import worker_fn
 
 # one partial row per (task, key) state, or per failing document
 # (``error`` not NULL); global inference has the one key None
@@ -86,6 +87,7 @@ def _fold_task(ctx: SchemaContext, column: str,
     inference (one key, None), which emits its state row even for an
     empty task."""
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
@@ -227,6 +229,7 @@ def infer_json_column(df: DataFrame, column: str,
     violations = raw.filter(F.col("error").isNotNull()).select("error")
     states = raw.filter(F.col("error").isNull())
 
+    @worker_fn
     def tree_round(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # one combine-tree round: the task's partial states fold into
         # one, keyed by their least pid
@@ -277,6 +280,7 @@ def infer_json_column_by_key(df: DataFrame, column: str, key_col: str,
         ctx_by_key = {k: replace(ctx, quantity=q)
                       for k, q in quantity_by_key.items()}
 
+    @worker_fn
     def fold_key(key, pdf):
         acc, n_ok, n_err = _fold_partials(pdf.itertuples(index=False), ctx)
         rendered = render(apply_transforms(acc, ctx), ctx)

@@ -46,6 +46,7 @@ from schema_guru_spark.operators.jpeg import (
     encode_jpeg_progressive,
 )
 from schema_guru_spark.operators.wav import decode_wav, encode_wav
+from schema_guru_spark.worker import worker_fn
 
 MEDIA_META = T.StructType([
     T.StructField("kind", T.StringType()),
@@ -99,6 +100,7 @@ def attach_png_media(df: DataFrame, id_col: str) -> DataFrame:
     through all five predictors ((id + y) % 5) so the decoder's every
     branch is exercised. Arrow-batched; encoding is per-row numpy."""
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             medias = []
@@ -148,6 +150,7 @@ def attach_jpeg_media(df: DataFrame, id_col: str) -> DataFrame:
     encoding (Huffman entropy coding, DCT, quantization) of the
     deterministic flat-block pattern. Arrow-batched."""
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             medias = []
@@ -175,6 +178,7 @@ def attach_progressive_jpeg_media(df: DataFrame, id_col: str) -> DataFrame:
     bit-exact, so the same analytic oracle pins the whole progressive
     path: multi-scan marker walk, EOB-run decode, DC/AC refinement."""
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             medias = []
@@ -213,6 +217,7 @@ def attach_wav_media(df: DataFrame, id_col: str) -> DataFrame:
     """REAL WAV media column: each row carries an actual PCM-encoded WAV
     of the deterministic test pattern. Arrow-batched."""
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             medias = []
@@ -244,6 +249,7 @@ def decode_audio_features(df: DataFrame, media_col: str = "media",
                   "sample_rate int, duration_ms int, "
                   "mean_abs double, rms double")
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -285,6 +291,7 @@ def attach_avi_media(df: DataFrame, id_col: str) -> DataFrame:
     """REAL video media column: each row carries an actual uncompressed
     24-bit RGB AVI of the deterministic test pattern. Arrow-batched."""
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             medias = []
@@ -336,6 +343,7 @@ def attach_mjpeg_media(df: DataFrame, id_col: str) -> DataFrame:
     Motion-JPEG AVI (every frame an independent baseline JPEG) of the
     deterministic flat-block pattern. Arrow-batched."""
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             medias = []
@@ -374,6 +382,7 @@ def decode_video_features(df: DataFrame, media_col: str = "media",
                   "height int, mean_r double, mean_g double, "
                   "mean_b double")
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -445,6 +454,7 @@ def decode_and_featurize(df: DataFrame, media_col: str = "media",
                   f"mean_r double, mean_g double, mean_b double, "
                   f"thumb array<int>")
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []

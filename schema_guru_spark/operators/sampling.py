@@ -58,6 +58,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import DoubleType, FloatType
 
+from schema_guru_spark.worker import worker_fn
+
 # sampling decisions hash through md5 over "<salt>:<id>" — the salt
 # decorrelates this operator's keep set from every other md5-keyed
 # decision in the pipeline (dedup digests, fingerprints)
@@ -383,6 +385,7 @@ def topk_by_score(scored: DataFrame, strata_col: str, id_col: str,
         *[c for c in scored.columns
           if c not in (id_col, strata_col, score_col)])
 
+    @worker_fn
     def part_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: list[pd.DataFrame] = []
         n = 0

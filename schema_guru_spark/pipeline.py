@@ -44,11 +44,17 @@ Scale design (the whole point):
     and ends with one sketch row, and the driver merges the tasks'
     registers (element-wise max, so any split of the rows gives the
     same registers).
-  * The job is bound by fixed per-job cost, and the py4j round trips
-    that build a plan from Column calls are part of it: the scan's
-    projection, the bucket, the key hashes and the length bin are
-    parsed from SQL text (``bucket_sql``, ``C.key_hash_sql``,
-    ``length_bin_sql``), one call each.
+  * The job is bound by fixed per-job and per-task cost. The py4j
+    round trips that build a plan from Column calls are part of it: the
+    scan's projection, the bucket, the key hashes and the length bin
+    are parsed from SQL text (``bucket_sql``, ``C.key_hash_sql``,
+    ``length_bin_sql``), one call each. So is the set-up of each
+    Python worker task: before Python 3.12 a reused worker re-read the
+    central directory of every zip on its import path (~26k entries,
+    0.1-0.45 s) before each scan task started, more than the task's own
+    kernel work; every worker function runs through ``worker_fn``
+    (worker.py), which drops those importers so the next task has
+    nothing to re-read.
   * One fold serves every fan-in level. ``_fold_buckets`` folds a
     chunk's partial rows into its verdict rows, and the same function
     folds the committed deltas' verdict rows into the incremental
@@ -110,6 +116,7 @@ from schema_guru_spark.plans.checkpoint import (CheckpointManager,
                                                  arrow_schema,
                                                  is_missing_path, read_sink,
                                                  write_sink)
+from schema_guru_spark.worker import worker_fn
 
 DEFAULT_LANGS = ("json", "py", "java", "go", "md")
 
@@ -291,6 +298,7 @@ def _scan_pass(ctx: SchemaContext, max_violation_examples: int):
     and the serialized state or NULL), then one row of its HyperLogLog
     registers over the batches' key hashes ``kh`` (``C.hll_registers``)."""
 
+    @worker_fn
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -883,6 +891,7 @@ def key_sketch(df: DataFrame) -> np.ndarray:
     ``mapInPandas`` over that one column: each task folds its batches
     with ``C.hll_registers`` and the driver merges the tasks'
     registers, so one register rule serves every path."""
+    @worker_fn
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         regs = None
         for pdf in batches:

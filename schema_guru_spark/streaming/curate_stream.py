@@ -49,6 +49,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 from schema_guru_spark.operators.textstats import (
     _curation_signals_df, _distinct_ngrams, _verdict_cols,
 )
+from schema_guru_spark.worker import worker_fn
 
 
 def benchmark_gram_hashes(bench: DataFrame, text_col: str,
@@ -92,6 +93,7 @@ def streaming_curation(stream: DataFrame, text_col: str, id_col: str,
             np.ascontiguousarray(bench_hashes, dtype=np.int64))
 
         @pandas_udf("boolean")
+        @worker_fn
         def _probe(ghash: Iterator[pd.Series]) -> Iterator[pd.Series]:
             bench = bc.value
             for s in ghash:

@@ -33,6 +33,7 @@ from schema_guru_spark.core.microschema import (
     ZERO, dumps, loads, merge, render,
 )
 from schema_guru_spark.core.transforms import apply_transforms
+from schema_guru_spark.worker import worker_fn
 
 
 class IncrementalSchemaState:
@@ -151,6 +152,7 @@ _OUT_SCHEMA = "key string, schema string, n_ok bigint, n_err bigint"
 
 
 def _keyed_state_fn(ctx: SchemaContext, column: str):
+    @worker_fn
     def fn(key: Tuple[str], pdfs: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
         from schema_guru_spark.core.accumulate_batch import fold_keyed

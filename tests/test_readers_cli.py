@@ -215,6 +215,39 @@ def test_cli_prints_few_errors_in_one_job(spark, tmp_path, capsys):
     assert capsys.readouterr().err.count("error: invalid JSON") == 2
 
 
+def test_cli_schema_by_prints_few_errors_in_one_job(spark, tmp_path, capsys):
+    """Segmented mode counts the rows its error pass reads in the
+    aggregate that builds the per-segment quantities, so it reads at
+    most 20 messages with one plain collect and writes them without
+    first asking whether there are any: the quantity aggregate and the
+    keyed inference (2 jobs each under AQE), then the error read."""
+    from schema_guru_spark.cli import main
+    from schema_guru_spark.run_validation import _next_job_id
+    src = tmp_path / "docs"
+    src.mkdir()
+    for i in range(40):
+        (src / f"d{i}.json").write_text(
+            json.dumps({"event": f"e{i % 3}", "n": i}))
+    (src / "bad.json").write_text("{nope")
+    (src / "num.json").write_text("42")
+    assert read_json_dir(spark, str(src)).rdd.getNumPartitions() > 1
+
+    def jobs(*extra):
+        argv = ["schema", str(src), "--schema-by", "$.event", "--output",
+                str(tmp_path / "out.json"), "--cpus", "4", *extra]
+        assert main(argv) == 0   # warm
+        lo = _next_job_id(spark)
+        assert main(argv) == 0
+        return _next_job_id(spark) - lo
+
+    errors = str(tmp_path / "errors")
+    assert jobs() == jobs("--errors-path", errors) == 5
+    err = capsys.readouterr().err
+    assert err.count("error: invalid JSON") == 2
+    assert err.count("error: ") == 4
+    assert len(spark.read.parquet(errors).collect()) == 2
+
+
 # --- migrations / SchemaVer ---
 
 V1 = {"type": "object", "properties": {
